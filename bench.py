@@ -454,13 +454,15 @@ def main() -> None:
 
     # sf0.01 timings of the UNPUBLISHED rotation-pool members (additive —
     # "value"/"queries" are exactly the headline totals as before); a guard
-    # failure degrades to an empty map rather than failing the bench
+    # failure does not fail the bench: it publishes an empty map plus
+    # "guards_error" with the return code and the tail of the run's stderr
     guards: dict[str, float] = {}
     guards_sf_dir = None
+    guards_error = None
     proc = subprocess.run(
         [sys.executable, os.path.abspath(__file__), "--guards"],
         stdout=subprocess.PIPE,
-        stderr=subprocess.DEVNULL,
+        stderr=subprocess.PIPE,
         text=True,
     )
     glines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
@@ -468,23 +470,24 @@ def main() -> None:
         gout = json.loads(glines[-1])
         guards = gout.get("guards", {})
         guards_sf_dir = gout.get("guards_sf_dir")
+    else:
+        guards_error = {"returncode": proc.returncode, "stderr_tail": proc.stderr[-2048:]}
 
     total = round(sum(timings.values()), 3)
-    print(
-        json.dumps(
-            {
-                "metric": "headline_total",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "families": families,
-                "guards": guards,
-                "guards_sf_dir": guards_sf_dir,
-                "protocol": "family-steady",
-                "sf": sf,
-            }
-        )
-    )
+    record = {
+        "metric": "headline_total",
+        "value": total,
+        "unit": "sec",
+        "queries": timings,
+        "families": families,
+        "guards": guards,
+        "guards_sf_dir": guards_sf_dir,
+        "protocol": "family-steady",
+        "sf": sf,
+    }
+    if guards_error is not None:
+        record["guards_error"] = guards_error
+    print(json.dumps(record))
 
 
 if __name__ == "__main__":

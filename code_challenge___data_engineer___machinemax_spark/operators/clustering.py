@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .similarity import cosine, label_centroids_df
+from .skew import _drop_hot_keys
 
 
 def connected_components(
@@ -367,14 +368,7 @@ def semantic_pairs_from_assigned(
     (stores.py:ensure_semantic_kmeans_store) feeds it directly: SemDeDup
     clusters once per corpus snapshot, then serves every dedup threshold
     from the stored assignment without re-running the k-means rounds."""
-    if max_cluster_size is not None:
-        hot = (
-            aq.groupBy("centroid_id")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") > max_cluster_size)
-            .select("centroid_id")
-        )
-        aq = aq.join(F.broadcast(hot), "centroid_id", "left_anti")
+    aq = _drop_hot_keys(aq, ["centroid_id"], max_cluster_size)
     a = aq.select(
         F.col("centroid_id"), F.col(id_col).alias("id_a"), F.col("qv").alias("__qa")
     )

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
+from .skew import _drop_hot_keys
 
 
 def normalize_text(col: Column | str) -> Column:
@@ -235,18 +236,19 @@ def lsh_candidate_pairs(
 
     Plan shape: signatures -> explode band keys (md5 of rows_per_band
     consecutive components) -> self-join on (band, band_key) -> distinct
-    pairs. The join key is small and uniformly distributed; hot buckets
-    (boilerplate docs) are the one skew risk.
+    pairs (:func:`_band_candidates`). The join key is small and uniformly
+    distributed; hot buckets (boilerplate docs) are the one skew risk.
 
     ``max_bucket_size`` is the skew guard for that risk: a band-bucket with
     B rows generates B^2 join output, and at 100 TB one boilerplate bucket
     (cookie banners, licence headers) can dominate the whole stage. Buckets
     above the cap are dropped BEFORE the self-join via a broadcast anti-join
     on the (tiny, partially-aggregated) hot-key list — deterministic,
-    bounded pair generation. A true near-dup pair usually still surfaces
-    through its other, non-boilerplate bands (OR amplification); exact
-    dedup upstream is the right tool for the identical-text mass in a hot
-    bucket. AQE skew-join remains on for moderate skew below the cap.
+    bounded pair generation (``skew._drop_hot_keys``). A true near-dup pair
+    usually still surfaces through its other, non-boilerplate bands (OR
+    amplification); exact dedup upstream is the right tool for the
+    identical-text mass in a hot bucket. AQE skew-join remains on for
+    moderate skew below the cap.
 
     The banded signature frame ((id, band, band_key) — docs x bands rows
     of short keys) is localCheckpoint'd before it fans out into the hot
@@ -261,29 +263,89 @@ def lsh_candidate_pairs(
     deployment should swap operator-internal pins to
     ``persist(StorageLevel.MEMORY_AND_DISK)`` + a materializing action
     (recomputable lineage survives executor loss) or a reliable
-    ``checkpoint()`` to cluster storage. The same note applies to the
-    tokenize/tf pins in ``search.bm25_rank``/``tfidf_rank``.
+    ``checkpoint()`` to cluster storage. The note covers every
+    operator-internal pin in this package.
     """
     banded = band_rows(df, id_col, text_col, num_hashes, bands).localCheckpoint()
-    if max_bucket_size is not None:
-        hot = (
-            banded.groupBy("band", "band_key")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") > max_bucket_size)
-            .select("band", "band_key")
-        )
-        banded = banded.join(F.broadcast(hot), ["band", "band_key"], "left_anti")
-    a = banded.alias("a")
-    b = banded.alias("b")
+    return _band_candidates(banded, id_col, max_bucket_size)
+
+
+def _band_candidates(
+    banded: DataFrame, id_col: str, max_bucket_size: int | None
+) -> DataFrame:
+    """Distinct (id_a < id_b) pairs sharing a (band, band_key) bucket of an
+    ``(id, band, band_key)`` frame, after the hot-bucket drop."""
+    banded = _drop_hot_keys(banded, ["band", "band_key"], max_bucket_size)
+    a = banded.select(F.col(id_col).alias("id_a"), "band", "band_key")
+    b = banded.select(F.col(id_col).alias("id_b"), "band", "band_key")
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        a.join(b, ["band", "band_key"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
         .distinct()
+    )
+
+
+def _minhash_pairs(
+    banded: DataFrame,
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    threshold: float,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """The one read path of the MinHash band layout: candidate pairs from
+    an ``(id, band, band_key)`` frame — built in-plan by
+    :func:`near_dup_pairs` or read from the persisted L4 band store
+    (plans/dedup_queries.py::near_dup_pairs_minhash_from_store) — verified
+    with exact token-set Jaccard >= ``threshold`` against ``docs``."""
+    cand = _band_candidates(banded, id_col, max_bucket_size)
+    return _jaccard_verify(cand, docs, docs, id_col, text_col, threshold)
+
+
+def _jaccard_verify(
+    cand: DataFrame,
+    docs_a: DataFrame,
+    docs_b: DataFrame,
+    id_col: str,
+    text_col: str,
+    threshold: float,
+) -> DataFrame:
+    """Exact-Jaccard verify of (id_a, id_b) candidates, id_a from
+    ``docs_a`` and id_b from ``docs_b``: (id_a, id_b, jaccard) rows with
+    the 6-place rounded Jaccard >= ``threshold``.
+
+    The tokenize is PRUNED to candidate documents via a semi-join on the
+    candidate id set instead of tokenizing both corpora. That id set's
+    size is DUP-RATE-DEPENDENT (a large corpus fraction on
+    boilerplate-heavy crawls when invoked without a bucket cap), so the
+    semi-join carries no forced broadcast hint: AQE broadcasts when it
+    measures small and degrades to a shuffle join — instead of an 8
+    GB-limit hard failure — when it is not (VERDICT r8). ``cand`` is
+    pinned at the fan-out: it feeds the verify join AND both id-set arms,
+    and unpinned the plan tree re-derives it per consumer (the band source
+    scanned ~3x per candidate build; rule 3, SCALE.md round-7 audit)."""
+    cand = cand.localCheckpoint()
+    ids = (
+        cand.select(F.col("id_a").alias(id_col))
+        .unionAll(cand.select(F.col("id_b").alias(id_col)))
+        .distinct()
+    )
+
+    def toks(docs: DataFrame, side: str) -> DataFrame:
+        return (
+            docs.join(ids, id_col, "left_semi").select(
+                F.col(id_col).alias(f"id_{side}"),
+                F.array_distinct(tokenize(text_col)).alias(f"__t{side}"),
+            )
+        )
+
+    return (
+        cand.join(toks(docs_a, "a"), "id_a")
+        .join(toks(docs_b, "b"), "id_b")
+        .withColumn("jaccard", F.round(jaccard_arrays(F.col("__ta"), F.col("__tb")), 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -310,22 +372,15 @@ def near_dup_pairs(
     bands: int = 4,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """LSH candidates verified with exact Jaccard >= threshold.
+    """LSH candidates verified with exact Jaccard >= threshold: the pinned
+    in-plan banding fed to the shared band-layout read path
+    (:func:`_minhash_pairs`).
 
     Pass ``max_bucket_size`` at scale to bound hot-bucket pair generation
     (see :func:`lsh_candidate_pairs`); the default None keeps candidate
     generation exhaustive, which is what the DuckDB oracle twin mirrors."""
-    cand = lsh_candidate_pairs(df, id_col, text_col, num_hashes, bands, max_bucket_size)
-    toks = F.array_distinct(tokenize(text_col))
-    left = df.select(F.col(id_col).alias("id_a"), toks.alias("__ta"))
-    right = df.select(F.col(id_col).alias("id_b"), toks.alias("__tb"))
-    return (
-        cand.join(left, "id_a")
-        .join(right, "id_b")
-        .withColumn("jaccard", F.round(jaccard_arrays(F.col("__ta"), F.col("__tb")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    banded = band_rows(df, id_col, text_col, num_hashes, bands).localCheckpoint()
+    return _minhash_pairs(banded, df, id_col, text_col, threshold, max_bucket_size)
 
 
 def cross_dup_pairs(
@@ -343,7 +398,7 @@ def cross_dup_pairs(
     equi-join A-bands against B-bands on (band, band_key), so no A x A or
     B x B candidate is ever generated or verified (the self-join variant
     :func:`near_dup_pairs` pays for both). Candidates get the same exact
-    token-set Jaccard >= ``threshold`` verification.
+    token-set Jaccard >= ``threshold`` verification (:func:`_jaccard_verify`).
 
     ``max_bucket_size`` caps the B-side (by convention the big training
     split) band buckets exactly like :func:`lsh_candidate_pairs`'s hot
@@ -360,25 +415,9 @@ def cross_dup_pairs(
     b = band_rows(df_b, id_col, text_col, num_hashes, bands).select(
         F.col(id_col).alias("id_b"), "band", "band_key"
     )
-    if max_bucket_size is not None:
-        hot = (
-            b.groupBy("band", "band_key")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") > max_bucket_size)
-            .select("band", "band_key")
-        )
-        b = b.join(F.broadcast(hot), ["band", "band_key"], "left_anti")
+    b = _drop_hot_keys(b, ["band", "band_key"], max_bucket_size)
     cand = a.join(b, ["band", "band_key"]).select("id_a", "id_b").distinct()
-    toks = F.array_distinct(tokenize(text_col))
-    left = df_a.select(F.col(id_col).alias("id_a"), toks.alias("__ta"))
-    right = df_b.select(F.col(id_col).alias("id_b"), toks.alias("__tb"))
-    return (
-        cand.join(left, "id_a")
-        .join(right, "id_b")
-        .withColumn("jaccard", F.round(jaccard_arrays(F.col("__ta"), F.col("__tb")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_verify(cand, df_a, df_b, id_col, text_col, threshold)
 
 
 def prefix_filter_pairs(
@@ -441,14 +480,7 @@ def prefix_filter_pairs(
         .filter(F.col("__pos") <= prefix_len)
         .select(id_col, "__sz", "__tok")
     )
-    if max_token_bucket is not None:
-        hot = (
-            prefix.groupBy("__tok")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") > max_token_bucket)
-            .select("__tok")
-        )
-        prefix = prefix.join(F.broadcast(hot), "__tok", "left_anti")
+    prefix = _drop_hot_keys(prefix, ["__tok"], max_token_bucket)
     a = prefix.select(
         F.col(id_col).alias("id_a"), F.col("__sz").alias("__sza"), "__tok"
     )
@@ -771,41 +803,18 @@ def simhash_cross_pairs(
     fingerprints, never re-fingerprint (or self-join) the corpus. Output
     one row per (batch id, corpus id) pair within ``max_hamming``.
 
-    Same pigeonhole recall as :func:`simhash_pairs_from_fingerprints`;
-    no ``id_a < id_b`` constraint because the two sides are disjoint
-    sets by construction (callers split on the id domain)."""
-    band_bits = bits // bands
-    mask = (1 << band_bits) - 1
-
-    def _banded(fp: DataFrame) -> DataFrame:
-        vals = F.array(
-            *[
-                F.shiftright(F.col("simhash"), b * band_bits).bitwiseAND(F.lit(mask))
-                for b in range(bands)
-            ]
-        )
-        return fp.select(
-            F.col(id_col), F.col("simhash"), F.posexplode(vals).alias("band", "band_val")
-        )
-
-    a = _banded(fp_batch).alias("a")
-    b = _banded(fp_corpus).alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_val") == F.col("b.band_val")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("batch_id"),
-            F.col(f"b.{id_col}").alias("corpus_id"),
-            F.col("a.simhash").alias("__fa"),
-            F.col("b.simhash").alias("__fb"),
-        )
-        .distinct()
-        .withColumn("hamming", hamming64(F.col("__fa"), F.col("__fb")))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("batch_id", "corpus_id", "hamming")
+    Same banding and pigeonhole recall as
+    :func:`simhash_pairs_from_fingerprints`; no ``id_a < id_b`` constraint
+    because the two sides are disjoint sets by construction (callers split
+    on the id domain)."""
+    return _simhash_band_pairs(
+        _simhash_bands(fp_batch, id_col, bits, bands),
+        _simhash_bands(fp_corpus, id_col, bits, bands),
+        id_col,
+        max_hamming,
+        ordered=False,
+    ).select(
+        F.col("id_a").alias("batch_id"), F.col("id_b").alias("corpus_id"), "hamming"
     )
 
 
@@ -825,10 +834,23 @@ def simhash_pairs_from_fingerprints(
     pipeline — runs once when documents land; pair generation against the
     persisted fingerprint table is then pure int-key work (arithmetic band
     projection -> equi-join -> bit_count), and incremental dedup of a new
-    batch is fingerprint-the-batch + band-join batch-vs-store, never
-    re-fingerprinting the corpus. ``tests/test_dedup.py`` pins equality
-    with the full pipeline; SCALE.md measures the A/B.
+    batch is fingerprint-the-batch + band-join batch-vs-store
+    (:func:`simhash_cross_pairs`), never re-fingerprinting the corpus.
+    ``tests/test_dedup.py`` pins equality with the full pipeline; SCALE.md
+    measures the A/B.
     """
+    banded = _drop_hot_keys(
+        _simhash_bands(fp, id_col, bits, bands), ["band", "band_val"], max_bucket_size
+    )
+    return _simhash_band_pairs(banded, banded, id_col, max_hamming, ordered=True)
+
+
+def _simhash_bands(fp: DataFrame, id_col: str, bits: int, bands: int) -> DataFrame:
+    """(id, simhash, band, band_val) rows: ``bands`` arithmetic slices of
+    ``bits/bands`` consecutive fingerprint bits. The fingerprint rides the
+    banding so the verify needs no joins back to the fingerprint table (8
+    extra bytes per banded row vs two corpus-sized equi-joins after
+    candidate generation)."""
     band_bits = bits // bands
     mask = (1 << band_bits) - 1
     band_vals = F.array(
@@ -837,29 +859,29 @@ def simhash_pairs_from_fingerprints(
             for b in range(bands)
         ]
     )
-    # carry the fingerprint through the banding so the verify step needs no
-    # joins back to the fingerprint table (8 extra bytes per banded row vs
-    # two corpus-sized equi-joins after candidate generation)
-    banded = fp.select(
+    return fp.select(
         F.col(id_col), F.col("simhash"), F.posexplode(band_vals).alias("band", "band_val")
     )
-    if max_bucket_size is not None:
-        hot = (
-            banded.groupBy("band", "band_val")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") > max_bucket_size)
-            .select("band", "band_val")
-        )
-        banded = banded.join(F.broadcast(hot), ["band", "band_val"], "left_anti")
-    a = banded.alias("a")
-    b = banded.alias("b")
+
+
+def _simhash_band_pairs(
+    banded_a: DataFrame,
+    banded_b: DataFrame,
+    id_col: str,
+    max_hamming: int,
+    ordered: bool,
+) -> DataFrame:
+    """(id_a, id_b, hamming) for rows sharing a band, within
+    ``max_hamming``; ``ordered`` adds ``id_a < id_b`` (the self-join)."""
+    a = banded_a.alias("a")
+    b = banded_b.alias("b")
+    cond = (F.col("a.band") == F.col("b.band")) & (
+        F.col("a.band_val") == F.col("b.band_val")
+    )
+    if ordered:
+        cond = cond & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        a.join(b, cond)
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),

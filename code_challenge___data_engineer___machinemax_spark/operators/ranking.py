@@ -49,6 +49,45 @@ _LOCAL = "__rank_local"
 _OFFSET = "__rank_offset"
 
 
+def _range_offsets(
+    df: DataFrame,
+    order: list[Column],
+    num_partitions: int | None,
+    part_total: Column,
+    local: Column,
+    out_col: str,
+) -> tuple[DataFrame, int]:
+    """The two-pass plan both helpers share: range-repartition on the
+    order keys, collect the per-partition ``part_total`` aggregate (≤P
+    rows — metadata, not data), prefix-sum it on the driver into offsets,
+    and broadcast-join them back as ``out_col = offset[pid] + local``,
+    where ``local`` is an aggregate run as a running window within each
+    partition. Returns the frame and the grand total of ``part_total``."""
+    spark = df.sparkSession
+    p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    parts = (
+        df.repartitionByRange(p, *order)
+        .withColumn(_PID, F.spark_partition_id())
+        .localCheckpoint(eager=False)
+    )
+    # Driver-side prefix sum; the eager aggregate job also materializes
+    # the checkpoint pin.
+    totals = dict(parts.groupBy(_PID).agg(part_total).collect())
+    acc, rows = 0, []
+    for pid in sorted(totals):
+        rows.append((pid, acc))
+        acc += int(totals[pid] or 0)
+    offsets = spark.createDataFrame(rows or [(0, 0)], f"{_PID} int, {_OFFSET} bigint")
+    window = W.partitionBy(_PID).orderBy(*order).rowsBetween(W.unboundedPreceding, 0)
+    out = (
+        parts.withColumn(_LOCAL, local.over(window))
+        .join(F.broadcast(offsets), _PID)
+        .withColumn(out_col, (F.col(_OFFSET) + F.col(_LOCAL)).cast("bigint"))
+        .drop(_PID, _LOCAL, _OFFSET)
+    )
+    return out, acc
+
+
 def global_row_number(
     df: DataFrame,
     order: list[Column],
@@ -63,31 +102,12 @@ def global_row_number(
     ``total_col`` (needed by ntile arithmetic) for free — it falls out of
     the same offsets frame.
     """
-    spark = df.sparkSession
-    p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    parts = (
-        df.repartitionByRange(p, *order)
-        .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
-    # ≤P (pid, count) rows — partition metadata, not data. Driver-side
-    # prefix sum; the eager count job also materializes the checkpoint pin.
-    counts = dict(parts.groupBy(_PID).count().collect())
-    total = sum(counts.values())
-    acc, rows = 0, []
-    for pid in sorted(counts):
-        rows.append((pid, acc))
-        acc += counts[pid]
-    offsets = spark.createDataFrame(rows or [(0, 0)], f"{_PID} int, {_OFFSET} bigint")
-    local = F.row_number().over(W.partitionBy(_PID).orderBy(*order))
-    out = (
-        parts.withColumn(_LOCAL, local)
-        .join(F.broadcast(offsets), _PID)
-        .withColumn(rank_col, (F.col(_OFFSET) + F.col(_LOCAL)).cast("bigint"))
+    out, total = _range_offsets(
+        df, order, num_partitions, F.count("*"), F.row_number(), rank_col
     )
     if total_col is not None:
         out = out.withColumn(total_col, F.lit(total).cast("bigint"))
-    return out.drop(_PID, _LOCAL, _OFFSET)
+    return out
 
 
 def ntile_from_rank(rank: Column, total: Column, n_tiles: int) -> Column:
@@ -118,38 +138,15 @@ def global_prefix_sum(
     single-partition window: the cumulative-distribution twin of
     ``global_row_number``.
 
-    Same two-pass plan: range-repartition on the order keys, per-partition
-    window cumsum keyed BY PARTITION ID, then per-partition TOTALS (≤P
-    rows — metadata, not data) are collected, prefix-summed on the driver
-    and broadcast-joined back as offsets. ``SUM(v) OVER (ORDER BY ...)``
-    semantics, bit-identical, with every window bounded at ~n/P rows.
-    Exclusive prefix = ``cumsum - value`` at the call site when needed.
+    Same two-pass plan, with per-partition SUMS as the offsets.
+    ``SUM(v) OVER (ORDER BY ...)`` semantics, bit-identical, with every
+    window bounded at ~n/P rows. Exclusive prefix = ``cumsum - value`` at
+    the call site when needed.
     """
-    spark = df.sparkSession
-    p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    parts = (
-        df.repartitionByRange(p, *order)
-        .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint(eager=False)
+    out, _ = _range_offsets(
+        df, order, num_partitions, F.sum(value_col), F.sum(value_col), cumsum_col
     )
-    sums = {
-        r[0]: r[1]
-        for r in parts.groupBy(_PID).agg(F.sum(value_col).alias("s")).collect()
-    }
-    acc, rows = 0, []
-    for pid in sorted(sums):
-        rows.append((pid, acc))
-        acc += int(sums[pid] or 0)
-    offsets = spark.createDataFrame(rows or [(0, 0)], f"{_PID} int, {_OFFSET} bigint")
-    local = F.sum(value_col).over(
-        W.partitionBy(_PID).orderBy(*order).rowsBetween(W.unboundedPreceding, 0)
-    )
-    return (
-        parts.withColumn(_LOCAL, local)
-        .join(F.broadcast(offsets), _PID)
-        .withColumn(cumsum_col, (F.col(_OFFSET) + F.col(_LOCAL)).cast("bigint"))
-        .drop(_PID, _LOCAL, _OFFSET)
-    )
+    return out
 
 
 def scalable_ntile(

@@ -58,22 +58,29 @@ def keyword_search(df: DataFrame, keyword: str, text_col: str = "text") -> DataF
     )
 
 
+def _analyzed_keyword_search(
+    df: DataFrame, keyword: str, text_col: str, analyze_py, tokenize_col
+) -> DataFrame:
+    """OR-overlap of the driver-side analyzed query tokens (``analyze_py``
+    per token) with the data-side analyzed token array (``tokenize_col``).
+    No ``contains`` pre-guard: an analyzed token ('fly' from 'flies',
+    'cafe' from 'café') need not be a substring of the raw text, so the
+    guard would drop true hits."""
+    toks = sorted({analyze_py(t) for t in query_tokens(keyword)})
+    if not toks:
+        return df.limit(0)
+    return df.filter(
+        F.arrays_overlap(tokenize_col(text_col), F.array(*[F.lit(t) for t in toks]))
+    )
+
+
 def keyword_search_stemmed(df: DataFrame, keyword: str, text_col: str = "text") -> DataFrame:
     """Stemmed keyword search: S-stem both the query tokens and the data
     tokens, then OR-overlap — analyzer parity with Mongo ``$text``'s English
     stemming (the one semantic the plain :func:`keyword_search` documents as
     a deviation; reference api.py:22-26). 'queries joins' matches documents
-    containing 'query' or 'join'.
-
-    No ``contains`` pre-guard here: a stem ('fly' from 'flies') need not be
-    a substring of the original text, so the guard would drop true hits.
-    """
-    toks = sorted({s_stem_py(t) for t in query_tokens(keyword)})
-    if not toks:
-        return df.limit(0)
-    return df.filter(
-        F.arrays_overlap(tokenize_stemmed(text_col), F.array(*[F.lit(t) for t in toks]))
-    )
+    containing 'query' or 'join'."""
+    return _analyzed_keyword_search(df, keyword, text_col, s_stem_py, tokenize_stemmed)
 
 
 def keyword_search_folded(df: DataFrame, keyword: str, text_col: str = "text") -> DataFrame:
@@ -81,16 +88,10 @@ def keyword_search_folded(df: DataFrame, keyword: str, text_col: str = "text") -
     tokens (driver-side) and the data tokens, then OR-overlap — the second
     half of Mongo ``$text`` analyzer parity ($text is diacritic-insensitive
     by default; s_stem covers the stemming half). 'cafe' matches 'café' and
-    vice versa. No ``contains`` pre-guard: the folded token need not be a
-    substring of the raw text."""
+    vice versa."""
     from ..functions.text import fold_accents_py, tokenize_folded
 
-    toks = sorted({fold_accents_py(t) for t in query_tokens(keyword)})
-    if not toks:
-        return df.limit(0)
-    return df.filter(
-        F.arrays_overlap(tokenize_folded(text_col), F.array(*[F.lit(t) for t in toks]))
-    )
+    return _analyzed_keyword_search(df, keyword, text_col, fold_accents_py, tokenize_folded)
 
 
 def build_inverted_index(
@@ -117,6 +118,25 @@ def _token_bucket(token) -> "F.Column":
     (letters/digits), '_' otherwise. Driver-computable for pruning."""
     first = F.substring(token, 1, 1)
     return F.when(first.rlike("[a-z0-9]"), first).otherwise(F.lit("_"))
+
+
+def _token_buckets_py(toks: list[str]) -> list[str]:
+    """The driver-side copy of :func:`_token_bucket` for a probe's tokens:
+    EXACTLY the column rule — ASCII [a-z0-9] keeps its first char,
+    everything else (incl. non-ASCII letters: 'über', '日本') buckets under
+    '_'. Python's Unicode-aware isalnum() here would probe bucket 'ü' while
+    the postings live under '_' — silent zero hits."""
+    return sorted(
+        {t[0] if t[0] in "0123456789abcdefghijklmnopqrstuvwxyz" else "_" for t in toks}
+    )
+
+
+def _probe_postings(spark, path: str, toks: list[str]) -> DataFrame:
+    """The pruned read of a token-bucketed posting layout: partition
+    pruning on the bucket + token equality, both pushed to the scan."""
+    return spark.read.parquet(path).filter(
+        F.col("bucket").isin(_token_buckets_py(toks)) & F.col("token").isin(toks)
+    )
 
 
 def materialize_inverted_index(
@@ -167,19 +187,7 @@ def search_with_materialized_index(
         toks = sorted({s_stem_py(t) for t in toks})
     if not toks:
         return df.limit(0)
-    # EXACTLY the column-side _token_bucket rule: ASCII [a-z0-9] keeps its
-    # first char, everything else (incl. non-ASCII letters: 'über', '日本')
-    # buckets under '_'. Python's Unicode-aware isalnum() here would probe
-    # bucket 'ü' while the postings live under '_' — silent zero hits.
-    prefixes = sorted(
-        {t[0] if t[0] in "0123456789abcdefghijklmnopqrstuvwxyz" else "_" for t in toks}
-    )
-    index = spark.read.parquet(index_path)
-    hits = (
-        index.filter(F.col("bucket").isin(prefixes) & F.col("token").isin(toks))
-        .select(key_col)
-        .distinct()
-    )
+    hits = _probe_postings(spark, index_path, toks).select(key_col).distinct()
     return df.join(F.broadcast(hits), key_col, "left_semi")
 
 
@@ -266,37 +274,9 @@ def bm25_rank_from_index(
         return spark.range(0).select(
             F.col("id").alias(key_col), F.lit(0.0).alias("bm25")
         )
-    prefixes = sorted(
-        {t[0] if t[0] in "0123456789abcdefghijklmnopqrstuvwxyz" else "_" for t in toks}
-    )
-    postings = spark.read.parquet(_os.path.join(index_path, "postings")).filter(
-        F.col("bucket").isin(prefixes) & F.col("token").isin(toks)
-    )
+    postings = _probe_postings(spark, _os.path.join(index_path, "postings"), toks)
     stats = spark.read.parquet(_os.path.join(index_path, "stats"))
-    # the layout holds exactly ONE row per (document, token) — see
-    # materialize_bm25_index's groupBy — so count(*) IS the distinct doc
-    # frequency, without countDistinct's two-phase expand over the probe
-    dfreq = postings.groupBy("token").agg(F.count("*").alias("df"))
-    scored = (
-        postings.join(F.broadcast(dfreq), "token")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "idf",
-            F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0),
-        )
-        .withColumn(
-            "term_score",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))),
-        )
-    )
-    return (
-        scored.groupBy(key_col)
-        .agg(F.round(F.sum("term_score"), 6).alias("bm25"))
-        .orderBy(F.desc("bm25"), F.asc(key_col))
-        .limit(k)
-    )
+    return _top_k(_bm25_term_scores(postings, stats, k1, b), key_col, "bm25", k)
 
 
 def bm25_batch_rank_from_index(
@@ -341,29 +321,9 @@ def bm25_batch_rank_from_index(
             F.lit(0.0).alias("bm25"),
             F.col("id").cast("int").alias("rk"),
         )
-    prefixes = sorted(
-        {t[0] if t[0] in "0123456789abcdefghijklmnopqrstuvwxyz" else "_" for t in toks}
-    )
-    postings = spark.read.parquet(_os.path.join(index_path, "postings")).filter(
-        F.col("bucket").isin(prefixes) & F.col("token").isin(toks)
-    )
+    postings = _probe_postings(spark, _os.path.join(index_path, "postings"), toks)
     stats = spark.read.parquet(_os.path.join(index_path, "stats"))
-    # one row per (doc, token) in the layout => count(*) IS the doc freq
-    dfreq = postings.groupBy("token").agg(F.count("*").alias("df"))
-    term = (
-        postings.join(F.broadcast(dfreq), "token")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "idf",
-            F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0),
-        )
-        .withColumn(
-            "term_score",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))),
-        )
-    )
+    term = _bm25_term_scores(postings, stats, k1, b)
     qmap = spark.createDataFrame(qmap_rows, "qid int, token string")
     scored = (
         term.join(F.broadcast(qmap), "token")
@@ -393,70 +353,18 @@ def bm25_rank(
     reference's unordered Mongo cursor, api.py:26-35).
 
     Plan shape: explode tokens once -> per-(doc, token) tf for query tokens
-    only -> join tiny (token, df) and scalar (N, avgdl) aggregates, both
-    broadcast -> score + top-k. Scale: the posting explode is the same work
-    as index construction; everything after operates on matched rows only.
+    only, with the matched docs' lengths (:func:`_doc_len_and_tf`) -> join
+    tiny (token, df) and scalar (N, avgdl) aggregates, both broadcast ->
+    score (:func:`_bm25_term_scores`, the index paths' formula) + top-k.
+    Scale: the posting explode is the same work as index construction;
+    everything after operates on matched rows only.
     """
     toks = query_tokens(keyword)
     if not toks:
         return df.limit(0)
-
-    # doc length is a per-row array size — never explode the full corpus
-    # just to count it (the explode+groupBy costs a corpus-sized shuffle);
-    # and filter the token array BEFORE explode so only query-token
-    # occurrences generate rows (~|toks|/|vocab| of the corpus).
-    with_dl = df.select(F.col(key_col), tokenize(text_col).alias("__toks")).withColumn(
-        "dl", F.size("__toks")
-    )
-    # pin the two with_dl projections: doc_len (two int columns per doc)
-    # and the match-bounded tf — un-pinned, corpus stats / dfreq /
-    # doc_len_matched each re-ran the tokenize scan (the plan is a tree;
-    # 5 scans measured). Materializing 16-byte doc rows once beats
-    # re-tokenizing the corpus per branch; the production path is
-    # bm25_rank_from_index, which stores these tables outright.
-    # Executor-loss caveat: localCheckpoint blocks are non-replicated and
-    # non-recomputable — see dedup.lsh_candidate_pairs's availability
-    # note for the multi-executor alternative (persist + action).
-    doc_len = with_dl.select(key_col, "dl").localCheckpoint()
+    doc_len, rows = _doc_len_and_tf(df, key_col, text_col, toks)
     corpus = doc_len.agg(F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"))
-
-    matched = with_dl.select(
-        F.col(key_col),
-        F.explode(F.filter("__toks", lambda t: t.isin(toks))).alias("token"),
-    )
-    tf = matched.groupBy(key_col, "token").agg(F.count("*").alias("tf")).localCheckpoint()
-    dfreq = tf.groupBy("token").agg(F.countDistinct(key_col).alias("df"))
-
-    # restrict doc lengths to MATCHED docs before joining: unrestricted,
-    # Catalyst broadcasts the corpus-sized doc_len on local size estimates
-    # (the SCALE.md estimate trap) — semi-joined it is match-bounded at any
-    # scale. No broadcast hint on the matched-id side: a high-df query token
-    # makes the matched set itself corpus-scale, so forcing the broadcast
-    # reintroduces the OOM hazard; AQE picks broadcast when the runtime size
-    # is actually small (round-2 advice).
-    doc_len_matched = doc_len.join(tf.select(key_col).distinct(), key_col, "left_semi")
-
-    scored = (
-        tf.join(F.broadcast(dfreq), "token")
-        .join(doc_len_matched, key_col)
-        .crossJoin(F.broadcast(corpus))
-        .withColumn(
-            "idf",
-            F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0),
-        )
-        .withColumn(
-            "term_score",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))),
-        )
-    )
-    return (
-        scored.groupBy(key_col)
-        .agg(F.round(F.sum("term_score"), 6).alias("bm25"))
-        .orderBy(F.desc("bm25"), F.asc(key_col))
-        .limit(k)
-    )
+    return _top_k(_bm25_term_scores(rows, corpus, k1, b), key_col, "bm25", k)
 
 
 def tfidf_rank(
@@ -469,48 +377,103 @@ def tfidf_rank(
     """TF-IDF-ranked keyword search: score = Σ_t (tf_t / dl) · idf_t with
     the smoothed idf = ln((1+N)/(1+df_t)) + 1 (sklearn's convention — no
     division-by-zero, never negative). The linear sibling of bm25_rank
-    (same plan shape: one token explode, tiny broadcast aggregates, top-k);
+    (same pinned tf/doc-length build, tiny broadcast aggregates, top-k);
     BM25 saturates tf, TF-IDF stays proportional.
     """
     toks = query_tokens(keyword)
     if not toks:
         return df.limit(0)
+    doc_len, rows = _doc_len_and_tf(df, key_col, text_col, toks)
+    corpus = doc_len.agg(F.count("*").alias("n_docs"))
+    scored = _with_df_and_stats(rows, corpus).withColumn(
+        "term_score",
+        (F.col("tf") / F.col("dl"))
+        * (F.log((1 + F.col("n_docs")) / (1 + F.col("df"))) + 1.0),
+    )
+    return _top_k(scored, key_col, "tfidf", k)
 
-    # same no-full-explode shape as bm25_rank: per-row dl, pre-filtered
-    # token explode
+
+def _doc_len_and_tf(
+    df: DataFrame, key_col: str, text_col: str, toks: list[str]
+) -> tuple[DataFrame, DataFrame]:
+    """The in-memory twin of the L2 BM25 layout: (key, dl) for every
+    document, and the match-bounded ``(key, token, tf, dl)`` posting rows
+    of the query tokens — the rows :func:`bm25_rank_from_index` reads from
+    ``postings/``.
+
+    Doc length is a per-row array size — never explode the full corpus
+    just to count it (the explode+groupBy costs a corpus-sized shuffle);
+    and the token array is filtered BEFORE explode so only query-token
+    occurrences generate rows (~|toks|/|vocab| of the corpus).
+
+    The two projections are pinned: doc_len (two int columns per doc) and
+    the match-bounded tf — un-pinned, corpus stats / dfreq /
+    doc_len_matched each re-ran the tokenize scan (the plan is a tree; 5
+    scans measured). Materializing 16-byte doc rows once beats
+    re-tokenizing the corpus per branch; the production path is
+    bm25_rank_from_index, which stores these tables outright.
+    Executor-loss caveat: localCheckpoint blocks are non-replicated and
+    non-recomputable — see dedup.lsh_candidate_pairs's availability note
+    for the multi-executor alternative (persist + action)."""
     with_dl = df.select(F.col(key_col), tokenize(text_col).alias("__toks")).withColumn(
         "dl", F.size("__toks")
     )
-    # same doc_len/tf pins as bm25_rank (tree re-tokenization)
     doc_len = with_dl.select(key_col, "dl").localCheckpoint()
-    corpus = doc_len.agg(F.count("*").alias("n_docs"))
-
     matched = with_dl.select(
         F.col(key_col),
         F.explode(F.filter("__toks", lambda t: t.isin(toks))).alias("token"),
     )
     tf = matched.groupBy(key_col, "token").agg(F.count("*").alias("tf")).localCheckpoint()
-    dfreq = tf.groupBy("token").agg(F.countDistinct(key_col).alias("df"))
-
-    # match-bounded doc lengths, no forced broadcast (same rationale as
-    # bm25_rank: the matched set is unbounded for high-df tokens; let AQE
-    # decide from the runtime size)
+    # restrict doc lengths to MATCHED docs before joining: unrestricted,
+    # Catalyst broadcasts the corpus-sized doc_len on local size estimates
+    # (the SCALE.md estimate trap) — semi-joined it is match-bounded at any
+    # scale. No broadcast hint on the matched-id side: a high-df query token
+    # makes the matched set itself corpus-scale, so forcing the broadcast
+    # reintroduces the OOM hazard; AQE picks broadcast when the runtime size
+    # is actually small (round-2 advice).
     doc_len_matched = doc_len.join(tf.select(key_col).distinct(), key_col, "left_semi")
+    return doc_len, tf.join(doc_len_matched, key_col)
 
-    scored = (
-        tf.join(F.broadcast(dfreq), "token")
-        .join(doc_len_matched, key_col)
-        .crossJoin(F.broadcast(corpus))
+
+def _with_df_and_stats(rows: DataFrame, stats: DataFrame) -> DataFrame:
+    """Attach each token's document frequency ``df`` and the one-row
+    corpus ``stats`` to ``(key, token, tf, dl)`` posting rows. The rows
+    hold exactly ONE row per (document, token) — the layout's groupBy, or
+    :func:`_doc_len_and_tf`'s — so count(*) IS the distinct doc frequency,
+    without countDistinct's two-phase expand."""
+    dfreq = rows.groupBy("token").agg(F.count("*").alias("df"))
+    return rows.join(F.broadcast(dfreq), "token").crossJoin(F.broadcast(stats))
+
+
+def _bm25_term_scores(
+    rows: DataFrame, stats: DataFrame, k1: float, b: float
+) -> DataFrame:
+    """The one BM25 formula: ``term_score`` per ``(key, token, tf, dl)``
+    posting row, given the one-row ``(n_docs, avgdl)`` stats. Every BM25
+    entry point scores through it, so in-memory, single-probe and batched
+    scores are the same doubles."""
+    return (
+        _with_df_and_stats(rows, stats)
+        .withColumn(
+            "idf",
+            F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0),
+        )
         .withColumn(
             "term_score",
-            (F.col("tf") / F.col("dl"))
-            * (F.log((1 + F.col("n_docs")) / (1 + F.col("df"))) + 1.0),
+            F.col("idf")
+            * (F.col("tf") * (k1 + 1))
+            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))),
         )
     )
+
+
+def _top_k(scored: DataFrame, key_col: str, score_col: str, k: int) -> DataFrame:
+    """Per-key sum of ``term_score`` rounded to 6 places, top ``k`` by
+    score with key ties ascending."""
     return (
         scored.groupBy(key_col)
-        .agg(F.round(F.sum("term_score"), 6).alias("tfidf"))
-        .orderBy(F.desc("tfidf"), F.asc(key_col))
+        .agg(F.round(F.sum("term_score"), 6).alias(score_col))
+        .orderBy(F.desc(score_col), F.asc(key_col))
         .limit(k)
     )
 
@@ -522,12 +485,7 @@ def keyword_search_analyzed(df: DataFrame, keyword: str, text_col: str = "text")
     parity in one predicate. 'cafés' matches 'cafe', 'CAFÉ', 'cafes'."""
     from ..functions.text import analyze_token_py, tokenize_analyzed
 
-    toks = sorted({analyze_token_py(t) for t in query_tokens(keyword)})
-    if not toks:
-        return df.limit(0)
-    return df.filter(
-        F.arrays_overlap(tokenize_analyzed(text_col), F.array(*[F.lit(t) for t in toks]))
-    )
+    return _analyzed_keyword_search(df, keyword, text_col, analyze_token_py, tokenize_analyzed)
 
 
 def phrase_search(

@@ -15,6 +15,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .skew import _drop_hot_keys
+
 
 def dot(a: Column, b: Column) -> Column:
     """Dot product of two array columns, accumulated in double, in order
@@ -210,14 +212,7 @@ def srp_near_dup_pairs(
     banded = df.select(
         F.col(id_col), F.posexplode(buckets_udf(F.col(vec_col))).alias("__t", "__bucket")
     )
-    if max_bucket_size is not None:
-        hot = (
-            banded.groupBy("__t", "__bucket")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") > max_bucket_size)
-            .select("__t", "__bucket")
-        )
-        banded = banded.join(F.broadcast(hot), ["__t", "__bucket"], "left_anti")
+    banded = _drop_hot_keys(banded, ["__t", "__bucket"], max_bucket_size)
     a = banded.alias("a")
     b = banded.alias("b")
     cand = (

@@ -10,6 +10,9 @@ runtime; these are the explicit escape hatches for pathological keys:
   skew-proof equi-join when the build side fits in memory anyway (the
   broadcast hint usually wins; this is for when the probe side's hot key
   must still spread across partitions for the downstream stage).
+- ``_drop_hot_keys``: the bounded-pair-generation guard every bucketed
+  self-join calls before it fans out (MinHash/SimHash/SRP band buckets,
+  prefix-filter tokens, k-means clusters).
 """
 
 from __future__ import annotations
@@ -66,3 +69,22 @@ def salted_broadcast_left(
         )
     )
     return big_s.join(small_s, [key, "__salt"]).drop("__salt")
+
+
+def _drop_hot_keys(df: DataFrame, keys: list[str], cap: int | None) -> DataFrame:
+    """Drop every row whose ``keys`` group holds more than ``cap`` rows.
+
+    A bucket of B rows makes B^2 self-join output, so one boilerplate
+    bucket can dominate a whole pair-generation stage at scale. The hot
+    list is a partially-aggregated count — tiny by construction — and is
+    broadcast into a left-anti join, so the guard is deterministic and adds
+    no shuffle of the big side. ``cap=None`` returns ``df`` unchanged."""
+    if cap is None:
+        return df
+    hot = (
+        df.groupBy(*keys)
+        .agg(F.count("*").alias("__n"))
+        .filter(F.col("__n") > cap)
+        .select(*keys)
+    )
+    return df.join(F.broadcast(hot), keys, "left_anti")

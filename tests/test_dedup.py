@@ -632,10 +632,15 @@ def test_dedup_membership_joins_carry_no_forced_broadcast(spark, sf_dir):
 def test_cross_dup_pairs_match_self_join_cross_split_subset(spark, sf_dir):
     """The cross-set LSH join must find EXACTLY the cross-split subset of
     the full self-join near-dup pairs (same banding, same verify): no
-    candidate lost by banding the splits separately, none invented."""
+    candidate lost by banding the splits separately, none invented. The
+    same holds for the SimHash cross join against the fingerprint
+    self-join."""
     from code_challenge___data_engineer___machinemax_spark.operators.dedup import (
         cross_dup_pairs,
         near_dup_pairs,
+        simhash,
+        simhash_cross_pairs,
+        simhash_pairs_from_fingerprints,
     )
     from code_challenge___data_engineer___machinemax_spark.tables import load_table
 
@@ -660,6 +665,21 @@ def test_cross_dup_pairs_match_self_join_cross_split_subset(spark, sf_dir):
         ).collect()
     }
     assert got == expected
+
+    fp = simhash(d, "doc_id", "text").localCheckpoint()
+    expected_sh = set()
+    for r in simhash_pairs_from_fingerprints(fp).collect():
+        if r.id_a % 10 == 0 and r.id_b % 10 != 0:
+            expected_sh.add((r.id_a, r.id_b, r.hamming))
+        elif r.id_b % 10 == 0 and r.id_a % 10 != 0:
+            expected_sh.add((r.id_b, r.id_a, r.hamming))
+    got_sh = {
+        (r.batch_id, r.corpus_id, r.hamming)
+        for r in simhash_cross_pairs(
+            fp.filter("doc_id % 10 = 0"), fp.filter("doc_id % 10 != 0")
+        ).collect()
+    }
+    assert got_sh == expected_sh and expected_sh
 
 
 def test_cross_dup_hot_bucket_cap_bounds_candidates(spark):

@@ -57,17 +57,32 @@ def test_materialized_index_non_ascii_tokens(spark, tmp_path):
         (3, "plain ascii words"),
         (4, "mixed über 日本 doc"),
     ]
+    from code_challenge___data_engineer___machinemax_spark.operators.search import (
+        bm25_batch_rank_from_index,
+        bm25_rank_from_index,
+        materialize_bm25_index,
+    )
+
     d = spark.createDataFrame(rows, "doc_id long, text string")
     path = str(tmp_path / "inv_index_unicode")
     materialize_inverted_index(d, "doc_id", path)
-    for kw, want in [("über", {1, 4}), ("日本", {2, 4}), ("plain", {3})]:
+    # the BM25 layout's probes share the same bucket rule
+    bm25_path = str(tmp_path / "bm25_index_unicode")
+    materialize_bm25_index(d, "doc_id", bm25_path)
+    cases = [("über", {1, 4}), ("日本", {2, 4}), ("plain", {3})]
+    for kw, want in cases:
         brute = {r.doc_id for r in keyword_search(d, kw).collect()}
         indexed = {
             r.doc_id
             for r in search_with_materialized_index(spark, d, path, "doc_id", kw).collect()
         }
+        ranked = {r.doc_id for r in bm25_rank_from_index(spark, bm25_path, kw).collect()}
         assert brute == want, kw
         assert indexed == want, kw
+        assert ranked == want, kw
+    batch = bm25_batch_rank_from_index(spark, bm25_path, [kw for kw, _ in cases]).collect()
+    for qid, (kw, want) in enumerate(cases):
+        assert {r.doc_id for r in batch if r.qid == qid} == want, kw
 
 
 def test_query_tokens_underscore_is_separator(spark):
