@@ -20,9 +20,11 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.search import keyword_search
 from ..schemas import ARTICLE
+from ..tables import read_parquet
 
 _PROJECTION = [f.name for f in ARTICLE.fields]  # api.py:27-35 field order
 
@@ -50,7 +52,7 @@ class ArticleStore:
         writer.parquet(self.path)
 
     def _raw(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        return read_parquet(self.spark, self.path)
 
     def latest(self, as_of_version: int | None = None) -> DataFrame:
         """One row per url, newest version wins. ``as_of_version`` reads the
@@ -96,19 +98,23 @@ class ArticleStore:
     def search_ranked(self, keyword: str, ranker: str = "bm25", k: int = 10) -> DataFrame:
         """Relevance-ranked search: the reference's unordered Mongo cursor
         (api.py:26-35) upgraded with a score column + top-k ordering.
-        ``ranker``: 'bm25' (saturating) or 'tfidf' (linear)."""
-        from ..operators.search import bm25_rank, tfidf_rank
+        ``ranker``: 'bm25' (saturating) or 'tfidf' (linear); the score
+        column is named after it. A missing/empty store or a keyword with
+        no tokens returns no rows under the same columns."""
+        from ..operators.search import bm25_rank, query_tokens, tfidf_rank
 
-        if not self.exists():
-            return self.spark.createDataFrame([], ARTICLE)
         rank_fn = {"bm25": bm25_rank, "tfidf": tfidf_rank}[ranker]
+        if not self.exists() or not query_tokens(keyword):
+            # nullable like the parquet read the non-empty path projects
+            fields = [T.StructField(f.name, f.dataType) for f in ARTICLE.fields]
+            fields.append(T.StructField(ranker, T.DoubleType()))
+            return self.spark.createDataFrame([], T.StructType(fields))
         latest = self.latest()
         scores = rank_fn(latest, "url", keyword, k=k)
-        score_col = scores.columns[-1]
         return (
             latest.join(scores, "url")
-            .select(*_PROJECTION, score_col)
-            .orderBy(F.desc(score_col), F.asc("url"))
+            .select(*_PROJECTION, ranker)
+            .orderBy(F.desc(ranker), F.asc("url"))
         )
 
     def exists(self) -> bool:

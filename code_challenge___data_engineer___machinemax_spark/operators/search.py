@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import s_stem_py, tokenize, tokenize_stemmed
+from ..tables import read_parquet
 
 
 def query_tokens(keyword: str) -> list[str]:
@@ -134,7 +135,7 @@ def _token_buckets_py(toks: list[str]) -> list[str]:
 def _probe_postings(spark, path: str, toks: list[str]) -> DataFrame:
     """The pruned read of a token-bucketed posting layout: partition
     pruning on the bucket + token equality, both pushed to the scan."""
-    return spark.read.parquet(path).filter(
+    return read_parquet(spark, path).filter(
         F.col("bucket").isin(_token_buckets_py(toks)) & F.col("token").isin(toks)
     )
 
@@ -275,7 +276,7 @@ def bm25_rank_from_index(
             F.col("id").alias(key_col), F.lit(0.0).alias("bm25")
         )
     postings = _probe_postings(spark, _os.path.join(index_path, "postings"), toks)
-    stats = spark.read.parquet(_os.path.join(index_path, "stats"))
+    stats = read_parquet(spark, _os.path.join(index_path, "stats"))
     return _top_k(_bm25_term_scores(postings, stats, k1, b), key_col, "bm25", k)
 
 
@@ -322,7 +323,7 @@ def bm25_batch_rank_from_index(
             F.col("id").cast("int").alias("rk"),
         )
     postings = _probe_postings(spark, _os.path.join(index_path, "postings"), toks)
-    stats = spark.read.parquet(_os.path.join(index_path, "stats"))
+    stats = read_parquet(spark, _os.path.join(index_path, "stats"))
     term = _bm25_term_scores(postings, stats, k1, b)
     qmap = spark.createDataFrame(qmap_rows, "qid int, token string")
     scored = (

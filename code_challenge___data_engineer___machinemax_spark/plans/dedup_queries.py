@@ -17,7 +17,7 @@ from ..operators.dedup import (
     prefix_filter_pairs,
     simhash,
 )
-from ..tables import load_table
+from ..tables import load_table, read_parquet
 from .registry import query
 
 
@@ -215,7 +215,7 @@ def simhash_near_dup_pairs_from_store_q(spark: SparkSession, sf_dir: str) -> Dat
     from ..stores import ensure_simhash_store
 
     fp_path = ensure_simhash_store(spark, sf_dir, bits=60)
-    fp = spark.read.parquet(fp_path)
+    fp = read_parquet(spark, fp_path)
     return simhash_pairs_from_fingerprints(
         fp, "doc_id", bits=60, bands=4, max_hamming=3
     )
@@ -275,7 +275,7 @@ def simhash_incremental_admission(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..stores import ensure_simhash_store
 
     fp_path = ensure_simhash_store(spark, sf_dir, bits=60)
-    corpus_fp = spark.read.parquet(fp_path).filter(F.col("doc_id") % 10 != 7)
+    corpus_fp = read_parquet(spark, fp_path).filter(F.col("doc_id") % 10 != 7)
     d = load_table(spark, sf_dir, "documents")
     batch = d.filter(F.col("doc_id") % 10 == 7)
     batch_fp = simhash(batch, "doc_id", "text", 60, spread=True).localCheckpoint()
@@ -1037,7 +1037,7 @@ def near_dup_pairs_minhash_from_store(spark: SparkSession, sf_dir: str) -> DataF
 
     path = ensure_minhash_band_store(spark, sf_dir, num_hashes=8, bands=4)
     d = load_table(spark, sf_dir, "documents")
-    return _minhash_pairs(spark.read.parquet(path), d, "doc_id", "text", 0.5)
+    return _minhash_pairs(read_parquet(spark, path), d, "doc_id", "text", 0.5)
 
 
 @query(
@@ -1533,9 +1533,9 @@ def doc_containment_pairs_from_store(spark: SparkSession, sf_dir: str) -> DataFr
 
     t = 0.8
     path = ensure_containment_postings_store(spark, sf_dir, threshold=t)
-    toks = spark.read.parquet(_os.path.join(path, "toks"))
-    occ = spark.read.parquet(_os.path.join(path, "occ"))
-    prefix = spark.read.parquet(_os.path.join(path, "prefix"))
+    toks = read_parquet(spark, _os.path.join(path, "toks"))
+    occ = read_parquet(spark, _os.path.join(path, "occ"))
+    prefix = read_parquet(spark, _os.path.join(path, "prefix"))
     cand = containment_candidates_from_rows(prefix, occ, "doc_id", t)
     return containment_verify(cand, toks, "doc_id", t)
 
@@ -1707,7 +1707,7 @@ def near_dup_sampling_weights_from_store(
     from ..stores import ensure_neardup_cluster_store
 
     path = ensure_neardup_cluster_store(spark, sf_dir)
-    mem = spark.read.parquet(path)
+    mem = read_parquet(spark, path)
     d = load_table(spark, sf_dir, "documents")
     return (
         d.select("doc_id")
@@ -1755,7 +1755,7 @@ def cluster_aware_split_from_store(spark: SparkSession, sf_dir: str) -> DataFram
     from .pipeline_queries import hash_split_bucket
 
     path = ensure_neardup_cluster_store(spark, sf_dir)
-    mem = spark.read.parquet(path)
+    mem = read_parquet(spark, path)
     d = load_table(spark, sf_dir, "documents")
     bucketed = (
         d.select("doc_id")

@@ -26,7 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tables import load_table
+from ..tables import load_table, read_parquet
 from .registry import query
 
 
@@ -39,7 +39,7 @@ def _stored_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..stores import ensure_copurchase_store
 
     path = ensure_copurchase_store(spark, sf_dir)
-    return spark.read.parquet(os.path.join(path, "basket_edges"))
+    return read_parquet(spark, os.path.join(path, "basket_edges"))
 
 # Shared oracle fragments for the co-purchase graph. _EDGES_RAW_SQL is
 # the support->=2 canonical edge list with its weight; _EDGES_SQL caps it

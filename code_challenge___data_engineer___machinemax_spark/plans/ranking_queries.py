@@ -11,7 +11,7 @@ from ..operators.clustering import dedup_clusters, kmeans_lite
 from ..operators.dedup import near_dup_pairs
 from ..operators.search import bm25_rank
 from ..operators.similarity import cosine_topk
-from ..tables import load_table
+from ..tables import load_table, read_parquet
 from .registry import query
 
 
@@ -346,7 +346,7 @@ def semantic_dedup_pairs_from_store(spark: SparkSession, sf_dir: str) -> DataFra
     from ..stores import ensure_semantic_kmeans_store
 
     store = ensure_semantic_kmeans_store(spark, sf_dir)
-    aq = spark.read.parquet(_os.path.join(store, "assigned"))
+    aq = read_parquet(spark, _os.path.join(store, "assigned"))
     return semantic_pairs_from_assigned(aq, "vec_id")
 
 

@@ -23,7 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..tables import load_table
+from ..tables import load_table, read_parquet
 from .registry import query
 
 # lift = pair_n * N / (n_a * n_b), trunc-scaled to e6. The two int64
@@ -342,8 +342,8 @@ def item_item_similarity_from_store(spark: SparkSession, sf_dir: str) -> DataFra
     from ..stores import ensure_copurchase_store
 
     path = ensure_copurchase_store(spark, sf_dir)
-    co = spark.read.parquet(os.path.join(path, "edges"))
-    counts = spark.read.parquet(os.path.join(path, "counts"))
+    co = read_parquet(spark, os.path.join(path, "edges"))
+    counts = read_parquet(spark, os.path.join(path, "counts"))
     return _item_item_report(co, counts)
 
 
@@ -654,9 +654,9 @@ def recsys_hitrate_eval_from_store(spark: SparkSession, sf_dir: str) -> DataFram
     from ..stores import ensure_copurchase_store
 
     path = ensure_copurchase_store(spark, sf_dir)
-    lastpick = spark.read.parquet(os.path.join(path, "eval_lastpick"))
-    train = spark.read.parquet(os.path.join(path, "eval_train"))
-    co = spark.read.parquet(os.path.join(path, "eval_edges"))
+    lastpick = read_parquet(spark, os.path.join(path, "eval_lastpick"))
+    train = read_parquet(spark, os.path.join(path, "eval_train"))
+    co = read_parquet(spark, os.path.join(path, "eval_edges"))
     return _hitrate_report(lastpick, train, co)
 
 

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..operators.similarity import ann_topk_lsh, cosine, cosine_topk, l2_norm
-from ..tables import load_table
+from ..tables import load_table, read_parquet
 from .registry import get as _get_registered
 from .registry import query
 
@@ -296,7 +296,7 @@ def ivf_topk_from_store_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = ensure_ivf_store(spark, sf_dir)
     import os as _os
 
-    centroids = spark.read.parquet(_os.path.join(store, "centroids"))
+    centroids = read_parquet(spark, _os.path.join(store, "centroids"))
     q = _query_df(spark, sf_dir)
     probe_rows = (
         q.crossJoin(F.broadcast(centroids))
@@ -308,7 +308,7 @@ def ivf_topk_from_store_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probes = [r.centroid_id for r in probe_rows]
     cand = (
-        spark.read.parquet(_os.path.join(store, "assigned"))
+        read_parquet(spark, _os.path.join(store, "assigned"))
         .filter(F.col("centroid_id").isin(probes))
         .filter(F.col("vec_id") != 0)
     )
@@ -721,8 +721,8 @@ def pq_adc_topk_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..stores import ensure_pq_store
 
     store = ensure_pq_store(spark, sf_dir)
-    codebook = spark.read.parquet(_os.path.join(store, "codebook"))
-    codes = spark.read.parquet(_os.path.join(store, "codes"))
+    codebook = read_parquet(spark, _os.path.join(store, "codebook"))
+    codes = read_parquet(spark, _os.path.join(store, "codes"))
     qparts = pq_components(
         load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0),
         "embedding",
@@ -1570,8 +1570,8 @@ def ivf_pq_residual_topk_from_store(spark: SparkSession, sf_dir: str) -> DataFra
     from ..stores import ensure_pq_residual_store
 
     store = ensure_pq_residual_store(spark, sf_dir)
-    coarse = spark.read.parquet(_os.path.join(store, "coarse"))
-    rcode = spark.read.parquet(_os.path.join(store, "rcodebook"))
+    coarse = read_parquet(spark, _os.path.join(store, "coarse"))
+    rcode = read_parquet(spark, _os.path.join(store, "rcodebook"))
     qparts = pq_components(
         load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0),
         "embedding",
@@ -1602,7 +1602,7 @@ def ivf_pq_residual_topk_from_store(spark: SparkSession, sf_dir: str) -> DataFra
         .groupBy("list_id", "m", "code_id")
         .agg(F.sum(rdiff * rdiff).alias("d"))
     )
-    rcodes = spark.read.parquet(_os.path.join(store, "rcodes")).filter(
+    rcodes = read_parquet(spark, _os.path.join(store, "rcodes")).filter(
         F.col("list_id").isin(probes)
     )
     return (
@@ -1659,8 +1659,8 @@ def pq_adc_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..stores import ensure_pq_store
 
     store = ensure_pq_store(spark, sf_dir)
-    codebook = spark.read.parquet(_os.path.join(store, "codebook"))
-    codes = spark.read.parquet(_os.path.join(store, "codes"))
+    codebook = read_parquet(spark, _os.path.join(store, "codebook"))
+    codes = read_parquet(spark, _os.path.join(store, "codes"))
     qparts = pq_components(
         load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0),
         "embedding",
@@ -1768,7 +1768,7 @@ def ivf_batch_topk_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..stores import ensure_ivf_store
 
     store = ensure_ivf_store(spark, sf_dir)
-    centroids = spark.read.parquet(_os.path.join(store, "centroids"))
+    centroids = read_parquet(spark, _os.path.join(store, "centroids"))
     e = load_table(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
@@ -1786,7 +1786,7 @@ def ivf_batch_topk_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("qid", "centroid_id")
     )
     probes = sorted({r.centroid_id for r in qtop.collect()})
-    cand = spark.read.parquet(_os.path.join(store, "assigned")).filter(
+    cand = read_parquet(spark, _os.path.join(store, "assigned")).filter(
         F.col("centroid_id").isin(probes)
     )
     scored = (
@@ -1829,7 +1829,7 @@ def ivf_topk_serving_with_tombstones(
     from ..stores import ensure_ivf_store
 
     store = ensure_ivf_store(spark, sf_dir)
-    centroids = spark.read.parquet(_os.path.join(store, "centroids"))
+    centroids = read_parquet(spark, _os.path.join(store, "centroids"))
     q = _query_df(spark, sf_dir)
     probe_rows = (
         q.crossJoin(F.broadcast(centroids))
@@ -1841,7 +1841,7 @@ def ivf_topk_serving_with_tombstones(
     )
     probes = [r.centroid_id for r in probe_rows]
     cand = (
-        spark.read.parquet(_os.path.join(store, "assigned"))
+        read_parquet(spark, _os.path.join(store, "assigned"))
         .filter(F.col("centroid_id").isin(probes))
         .filter(F.col("vec_id") != 0)
         .join(F.broadcast(tombstones.select("vec_id")), "vec_id", "left_anti")
@@ -2028,7 +2028,7 @@ def ivf_recall_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..stores import ensure_ivf_store
 
     store = ensure_ivf_store(spark, sf_dir)
-    centroids = spark.read.parquet(_os.path.join(store, "centroids"))
+    centroids = read_parquet(spark, _os.path.join(store, "centroids"))
     q = _query_df(spark, sf_dir)
     clist_rows = (
         q.crossJoin(F.broadcast(centroids))
@@ -2054,7 +2054,7 @@ def ivf_recall_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nprobe_df = spark.createDataFrame([(1,), (2,), (4,)], "nprobe int")
     cand = (
-        spark.read.parquet(_os.path.join(store, "assigned"))
+        read_parquet(spark, _os.path.join(store, "assigned"))
         .filter(F.col("centroid_id").isin(probes))
         .filter(F.col("vec_id") != 0)
         .join(F.broadcast(probe_map), "centroid_id")
@@ -2337,7 +2337,7 @@ def binary_quant_hamming_topk_from_store(spark: SparkSession, sf_dir: str) -> Da
     from ..stores import ensure_binary_sig_store
 
     path = ensure_binary_sig_store(spark, sf_dir)
-    sigs = spark.read.parquet(path).filter(F.col("vec_id") != 0)
+    sigs = read_parquet(spark, path).filter(F.col("vec_id") != 0)
     e = load_table(spark, sf_dir, "embeddings")
     corpus = e.filter(F.col("vec_id") != 0)
     return binary_hamming_topk(
@@ -2423,7 +2423,7 @@ def binary_rerank_depth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..stores import ensure_binary_sig_store
 
     path = ensure_binary_sig_store(spark, sf_dir)
-    sigs = spark.read.parquet(path).filter(F.col("vec_id") != 0)
+    sigs = read_parquet(spark, path).filter(F.col("vec_id") != 0)
     q = _query_df(spark, sf_dir).withColumn("__qsig", binary_signature("__qvec"))
     cand_rows = (
         sigs.crossJoin(F.broadcast(q.select("__qsig")))
@@ -2533,7 +2533,7 @@ def ivf_tombstone_compaction_report(spark: SparkSession, sf_dir: str) -> DataFra
     base = ensure_ivf_store(spark, sf_dir)
     compacted = ensure_compacted_ivf_store(spark, sf_dir, modulus=7)
     before = (
-        spark.read.parquet(_os.path.join(base, "assigned"))
+        read_parquet(spark, _os.path.join(base, "assigned"))
         .groupBy("centroid_id")
         .agg(
             F.count("*").cast("bigint").alias("n_before"),
@@ -2543,7 +2543,7 @@ def ivf_tombstone_compaction_report(spark: SparkSession, sf_dir: str) -> DataFra
         )
     )
     after = (
-        spark.read.parquet(_os.path.join(compacted, "assigned"))
+        read_parquet(spark, _os.path.join(compacted, "assigned"))
         .groupBy("centroid_id")
         .agg(F.count("*").cast("bigint").alias("n_after"))
     )
@@ -2622,7 +2622,7 @@ def binary_hamming_batch_topk_from_store(spark: SparkSession, sf_dir: str) -> Da
         F.col("embedding").alias("__qvec"),
         binary_signature("embedding").alias("__qsig"),
     )
-    sigs = spark.read.parquet(path).filter(F.col("vec_id") >= 5)
+    sigs = read_parquet(spark, path).filter(F.col("vec_id") >= 5)
     hcand = (
         sigs.crossJoin(F.broadcast(queries.select("qid", "__qsig")))
         .withColumn("hamming", hamming_distance(F.col("__sig"), F.col("__qsig")))

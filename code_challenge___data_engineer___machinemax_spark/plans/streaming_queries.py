@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from ..functions.text import tokenize, tokenize_sql
 from ..streaming.events import read_event_stream, stream_upsert_to_store
 from ..streaming.ingest import dedup_ingest_stream
-from ..tables import load_table
+from ..tables import load_table, read_parquet
 from .feature_queries import psi_contrib_sql
 from .registry import query
 
@@ -85,7 +85,7 @@ def streamed_corpus_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_ingest_stream(spark, landing, store)
 
     state = (
-        spark.read.parquet(os.path.join(store, "corpus"))
+        read_parquet(spark, os.path.join(store, "corpus"))
         .select("fingerprint", "doc_id")
         .localCheckpoint()  # pin rows before the temp store is removed
     )
@@ -402,7 +402,7 @@ def streamed_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     near_dedup_ingest_stream(spark, landing, store)
 
     state = (
-        spark.read.parquet(os.path.join(store, "corpus"))
+        read_parquet(spark, os.path.join(store, "corpus"))
         .select("doc_id", "source", "n_chars")
         .localCheckpoint()
     )
@@ -1527,7 +1527,7 @@ def streamed_vector_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector_admission_stream(spark, landing, store)
 
     state = (
-        spark.read.parquet(os.path.join(store, "corpus"))
+        read_parquet(spark, os.path.join(store, "corpus"))
         .select("vec_id", "label")
         .localCheckpoint()
     )

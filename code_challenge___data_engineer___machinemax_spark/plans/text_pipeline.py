@@ -21,7 +21,7 @@ from ..functions.text import shingles_sql
 shingles_sql2 = shingles_sql("text", 2)
 from ..operators.dedup import text_digest
 from ..operators.ranking import scalable_ntile
-from ..tables import load_table
+from ..tables import load_table, read_parquet
 from .registry import query
 
 # Tiny per-language stopword lists for the n-gram/stopword language heuristic.
@@ -607,7 +607,7 @@ def doc_overlap_winnowing_from_store(spark: SparkSession, sf_dir: str) -> DataFr
     from ..stores import ensure_winnowing_store
 
     path = ensure_winnowing_store(spark, sf_dir)
-    fps = spark.read.parquet(path)
+    fps = read_parquet(spark, path)
     a = fps.alias("a")
     b = fps.alias("b")
     return (

@@ -34,25 +34,18 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tables import load_table
+from .tables import file_signature, load_table, read_parquet
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _source_signature(sf_dir: str, table: str) -> str:
-    """Short content signature of a source table: file names + sizes +
-    mtimes. Cheap (os.stat only) and changes whenever the driver
-    regenerates testdata, invalidating any store built from the old data."""
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    h = hashlib.sha256()
-    if os.path.isdir(path):
-        for name in sorted(os.listdir(path)):
-            st = os.stat(os.path.join(path, name))
-            h.update(f"{name}:{st.st_size}:{st.st_mtime_ns};".encode())
-    else:
-        st = os.stat(path)
-        h.update(f"{os.path.basename(path)}:{st.st_size}:{st.st_mtime_ns};".encode())
-    return h.hexdigest()[:12]
+    """Short content signature of a source table: its data files' names,
+    sizes and mtimes (:func:`tables.file_signature`). Cheap (os.stat only)
+    and changes whenever the driver regenerates testdata, invalidating any
+    store built from the old data."""
+    files = file_signature(os.path.join(sf_dir, f"{table}.parquet"))
+    return hashlib.sha256(repr(files).encode()).hexdigest()[:12]
 
 
 def store_root() -> str:
@@ -174,7 +167,7 @@ def ensure_ivf_store(spark: SparkSession, sf_dir: str) -> str:
         e = load_table(spark, sf_dir, "embeddings")
         centroids = label_centroids_df(e, "embedding", "label")
         centroids.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-        assigned = ivf_assign(e, spark.read.parquet(os.path.join(path, "centroids")),
+        assigned = ivf_assign(e, read_parquet(spark, os.path.join(path, "centroids")),
                               "embedding", id_col="vec_id")
         assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(
             os.path.join(path, "assigned")
@@ -198,11 +191,11 @@ def ensure_compacted_ivf_store(
     base = ensure_ivf_store(spark, sf_dir)
     path = _store_path(sf_dir, "embeddings", f"l3_ivf_compact_m{modulus}")
     if not _ready(path):
-        spark.read.parquet(os.path.join(base, "centroids")).write.mode(
+        read_parquet(spark, os.path.join(base, "centroids")).write.mode(
             "overwrite"
         ).parquet(os.path.join(path, "centroids"))
         (
-            spark.read.parquet(os.path.join(base, "assigned"))
+            read_parquet(spark, os.path.join(base, "assigned"))
             .filter((F.col("vec_id") % modulus) != 0)
             .write.mode("overwrite")
             .partitionBy("centroid_id")
@@ -272,7 +265,7 @@ def srp_store_candidates(
     """Probe the L3 bucket table: a literal ``(t, bucket)`` disjunction the
     scan can prune on (partition filter on ``t``, min/max row-group skip on
     the sorted ``bucket``), then distinct candidate ids."""
-    store = spark.read.parquet(store_path)
+    store = read_parquet(spark, store_path)
     cond = None
     for t, b in probes:
         leg = (F.col("t") == F.lit(t)) & (F.col("bucket") == F.lit(b))
@@ -447,7 +440,7 @@ def ensure_containment_postings_store(
         toks.write.mode("overwrite").parquet(os.path.join(path, "toks"))
         occ = toks.select("doc_id", "__sz", F.explode("__toks").alias("__tok"))
         occ.write.mode("overwrite").parquet(os.path.join(path, "occ"))
-        occ_stored = spark.read.parquet(os.path.join(path, "occ"))
+        occ_stored = read_parquet(spark, os.path.join(path, "occ"))
         containment_probe_prefix(occ_stored, "doc_id", threshold).write.mode(
             "overwrite"
         ).parquet(os.path.join(path, "prefix"))
@@ -496,7 +489,7 @@ def ensure_pq_residual_store(spark: SparkSession, sf_dir: str) -> str:
         coarse.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(path, "coarse")
         )
-        coarse_r = spark.read.parquet(os.path.join(path, "coarse"))
+        coarse_r = read_parquet(spark, os.path.join(path, "coarse"))
         cdiff = F.col("qv") - F.col("lv")
         cdist = (
             parts.filter(F.col("vec_id") != 0)
@@ -525,7 +518,7 @@ def ensure_pq_residual_store(spark: SparkSession, sf_dir: str) -> str:
         rcode.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(path, "rcodebook")
         )
-        rcode_r = spark.read.parquet(os.path.join(path, "rcodebook"))
+        rcode_r = read_parquet(spark, os.path.join(path, "rcodebook"))
         rdiff = F.col("rv") - F.col("cv")
         rdists = (
             rparts.join(F.broadcast(rcode_r), ["m", "pos"])
@@ -593,7 +586,7 @@ def ensure_copurchase_store(spark: SparkSession, sf_dir: str) -> str:
         _last_pick(ol).write.mode("overwrite").parquet(
             os.path.join(path, "eval_lastpick")
         )
-        lastpick = spark.read.parquet(os.path.join(path, "eval_lastpick"))
+        lastpick = read_parquet(spark, os.path.join(path, "eval_lastpick"))
         (
             ol.join(lastpick, "u")
             .filter(F.col("i") != F.col("held"))
@@ -602,7 +595,7 @@ def ensure_copurchase_store(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(os.path.join(path, "eval_train"))
         )
-        train = spark.read.parquet(os.path.join(path, "eval_train"))
+        train = read_parquet(spark, os.path.join(path, "eval_train"))
         _cooccurrence(train).write.mode("overwrite").parquet(
             os.path.join(path, "eval_edges")
         )

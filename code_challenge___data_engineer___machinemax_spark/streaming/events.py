@@ -16,6 +16,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..tables import read_parquet
+
 
 def read_event_stream(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1
@@ -38,7 +40,7 @@ def read_event_stream(
     link = f"{stage}/events.parquet"
     if not os.path.exists(link):
         os.symlink(src, link)
-    batch_schema = spark.read.parquet(src).schema
+    batch_schema = read_parquet(spark, src).schema
     stream = (
         spark.readStream.schema(batch_schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)

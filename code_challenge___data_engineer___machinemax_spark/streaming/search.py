@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.search import keyword_search
+from ..tables import read_parquet
 
 
 def stream_article_matches(
@@ -19,7 +20,7 @@ def stream_article_matches(
 ) -> DataFrame:
     """readStream over the article store, filtered to keyword matches.
     Append-mode rows are live search hits; aggregate downstream as needed."""
-    schema = spark.read.parquet(store_path).schema
+    schema = read_parquet(spark, store_path).schema
     stream = spark.readStream.schema(schema).parquet(store_path)
     return keyword_search(stream, keyword)
 
@@ -47,7 +48,7 @@ def maintain_inverted_index(
     """
     from ..operators.search import append_to_inverted_index
 
-    schema = spark.read.parquet(store_path).schema
+    schema = read_parquet(spark, store_path).schema
     stream = spark.readStream.schema(schema).parquet(store_path)
 
     def index_batch(batch_df: DataFrame, batch_id: int) -> None:

@@ -1,6 +1,8 @@
 """Isolated steady-state timing for named queries: fresh session, family
 warm-up discipline of bench.py (table footers + pandas-UDF pool), run 0
-discarded, N timed runs printed. Usage:
+discarded, N timed runs printed with the Spark jobs each one started,
+split into build (while the DataFrame is built: schema inference, offset
+collects, eager pins) and collect. Usage:
 
     python scripts/time_query.py <query> [n_runs]
 """
@@ -20,6 +22,11 @@ from code_challenge___data_engineer___machinemax_spark.session import get_spark
 from code_challenge___data_engineer___machinemax_spark.tables import TABLES, load_table
 
 
+def _job_count(sc, group: str) -> int:
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def main() -> None:
     name = sys.argv[1]
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 3
@@ -30,12 +37,19 @@ def main() -> None:
         load_table(spark, sf_dir, t).limit(1).collect()
     spark.sparkContext.setJobDescription(f"timed: {name}")
     q(spark, sf_dir).collect()  # run 0: codegen/scan warm
-    times = []
-    for _ in range(n):
+    sc = spark.sparkContext
+    times, jobs = [], []
+    for i in range(n):
+        build, collect = f"{name}-build-{i}", f"{name}-collect-{i}"
         t0 = time.perf_counter()
-        q(spark, sf_dir).collect()
+        sc.setJobGroup(build, f"timed: {name} build")
+        df = q(spark, sf_dir)
+        sc.setJobGroup(collect, f"timed: {name} collect")
+        df.collect()
         times.append(round(time.perf_counter() - t0, 3))
+        jobs.append((_job_count(sc, build), _job_count(sc, collect)))
     print(f"{name}: {times} min={min(times)}")
+    print(f"{name} jobs (build, collect): {jobs}")
 
 
 if __name__ == "__main__":

@@ -186,6 +186,19 @@ def test_store_roundtrip_update_search(spark, tmp_path, result):
     assert old[0].text == "Hello bold world. Second para."
 
 
+@pytest.mark.parametrize("ranker", ["bm25", "tfidf"])
+def test_search_ranked_same_columns_on_empty_store(spark, tmp_path, result, ranker):
+    store = ArticleStore(spark, str(tmp_path / "articles"))
+    empty = store.search_ranked("bold", ranker=ranker)
+    assert empty.collect() == []
+    store.append(result.articles, version=1)
+    ranked = store.search_ranked("bold", ranker=ranker)
+    assert [r.url for r in ranked.collect()] == [f"{BASE}/a1"]
+    assert empty.schema == ranked.schema
+    assert ranked.columns[-1] == ranker
+    assert store.search_ranked("", ranker=ranker).schema == ranked.schema
+
+
 def test_bfs_frontier_order_golden(result):
     """Pin the BFS round structure itself (reference index.py:121-142's
     order of discovery), not just depth/no-refetch: per-round 'tries'

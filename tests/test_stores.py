@@ -7,11 +7,16 @@ regenerated source table must never serve a stale store."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from code_challenge___data_engineer___machinemax_spark import plans
+from code_challenge___data_engineer___machinemax_spark import plans, tables
+from code_challenge___data_engineer___machinemax_spark.crawl.ingest import ArticleStore
+from code_challenge___data_engineer___machinemax_spark.schemas import ARTICLE
 from code_challenge___data_engineer___machinemax_spark.stores import (
     _source_signature,
     ensure_copurchase_store,
@@ -21,7 +26,7 @@ from code_challenge___data_engineer___machinemax_spark.stores import (
     srp_query_buckets,
     srp_store_candidates,
 )
-from code_challenge___data_engineer___machinemax_spark.tables import load_table
+from code_challenge___data_engineer___machinemax_spark.tables import load_table, read_parquet
 
 from tests.test_plans import explain_text
 
@@ -556,3 +561,113 @@ def test_prune_stale_stores_removes_only_orphans(spark, tmp_path, monkeypatch):
     assert pruned == [old]
     assert not os.path.exists(old)
     assert os.path.isdir(new) and os.path.isdir(keep)
+
+
+# -- tables.read_parquet: the one parquet read ------------------------------
+
+
+def _jobs(spark, group: str, build):
+    """``build()``'s result and the number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_parquet_repeat_read_starts_no_job(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.range(5).write.parquet(path)
+    first, n_first = _jobs(spark, f"{tmp_path.name}-first", lambda: read_parquet(spark, path))
+    again, n_again = _jobs(spark, f"{tmp_path.name}-again", lambda: read_parquet(spark, path))
+    assert n_first >= 1  # the inferring read: the counter does see jobs
+    assert n_again == 0
+    assert again.schema == first.schema
+    assert _rows(again) == _rows(first) == [(i,) for i in range(5)]
+
+
+def test_read_parquet_overwrite_returns_new_schema(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.range(3).write.parquet(path)
+    assert read_parquet(spark, path).columns == ["id"]
+    spark.range(3).selectExpr("id", "CAST(id AS STRING) AS s").write.mode("overwrite").parquet(path)
+    df = read_parquet(spark, path)
+    assert df.schema == spark.read.parquet(path).schema
+    assert _rows(df) == [(0, "0"), (1, "1"), (2, "2")]
+
+
+def test_article_store_append_is_seen_by_next_search(spark, tmp_path):
+    store = ArticleStore(spark, str(tmp_path / "articles"))
+
+    def article(text):
+        return spark.createDataFrame([("https://a.test/1", "t", None, None, None, None, text)], ARTICLE)
+
+    for version, text in enumerate(["alpha", "beta", "gamma"], 1):
+        store.append(article(text), version=version)
+    assert [r.text for r in store.search("gamma").collect()] == ["gamma"]
+    store.append(article("delta"), version=4)
+    assert store.search("gamma").collect() == []
+    assert [r.text for r in store.search("delta").collect()] == ["delta"]
+
+
+def _schema_or_condition(read):
+    try:
+        return read().schema
+    except AnalysisException as e:
+        return e.getCondition()
+
+
+def test_read_parquet_reinfers_when_nanos_as_long_flips(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(pa.table({"ts": pa.array([1_000_000_001], pa.timestamp("ns"))}), path)
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    try:
+        spark.conf.set(conf, "true")
+        assert isinstance(read_parquet(spark, path).schema["ts"].dataType, T.LongType)
+        spark.conf.set(conf, "false")
+        plain = _schema_or_condition(lambda: spark.read.parquet(path))
+        assert plain == "PARQUET_TYPE_ILLEGAL"  # TIMESTAMP(NANOS) without the conf
+        assert _schema_or_condition(lambda: read_parquet(spark, path)) == plain
+        spark.conf.set(conf, "true")
+        assert read_parquet(spark, path).collect()[0].ts == 1_000_000_001
+    finally:
+        spark.conf.set(conf, "true")
+
+
+def test_read_parquet_missing_path_raises_spark_error(spark, tmp_path):
+    path = str(tmp_path / "missing")
+    with pytest.raises(AnalysisException) as plain:
+        spark.read.parquet(path)
+    with pytest.raises(AnalysisException) as ours:
+        read_parquet(spark, path)
+    assert ours.value.getCondition() == plain.value.getCondition() == "PATH_NOT_FOUND"
+    assert ours.value.getMessageParameters() == plain.value.getMessageParameters()
+
+
+def test_one_parquet_read_primitive():
+    """Every parquet read in the package goes through tables.read_parquet,
+    so none pays a schema-inference job per call. The one exception is the
+    multi-directory snapshot read in txn.py; the mergeSchema read in
+    plans/layout_queries.py is ``.read.option(...)`` and not matched."""
+    pkg = os.path.dirname(tables.__file__)
+    allowed = {("txn.py", "return spark.read.parquet(*dirs)")}
+    found = []
+    for root, _, names in os.walk(pkg):
+        for name in sorted(n for n in names if n.endswith(".py")):
+            rel = os.path.relpath(os.path.join(root, name), pkg)
+            if rel == "tables.py":
+                continue
+            with open(os.path.join(root, name)) as f:
+                src = f.read()
+            lines = src.splitlines()
+            for m in re.finditer(r"\.read\s*\.\s*parquet\(", src):
+                line = src.count("\n", 0, m.start()) + 1
+                if (rel, lines[line - 1].strip()) not in allowed:
+                    found.append(f"{rel}:{line}: {lines[line - 1].strip()}")
+    assert not found, "use tables.read_parquet:\n" + "\n".join(found)
