@@ -233,23 +233,6 @@ def token_count(col: Column | str) -> Column:
     return F.size(tokenize(col))
 
 
-def word_stats(col: Column | str) -> dict[str, Column]:
-    """Quality-scoring signal columns for a text column (length, token count,
-    mean token length, punctuation ratio, uppercase ratio)."""
-    c = F.col(col) if isinstance(col, str) else col
-    toks = tokenize(c)
-    n_chars = F.length(c)
-    n_tokens = F.size(toks)
-    return {
-        "n_chars": n_chars,
-        "n_tokens": n_tokens,
-        "mean_token_len": F.when(n_tokens > 0, F.aggregate(toks, F.lit(0), lambda a, t: a + F.length(t)) / n_tokens),
-        "punct_ratio": F.when(
-            n_chars > 0, F.length(F.regexp_replace(c, r"[\p{L}\p{N}\s]+", "")) / n_chars
-        ),
-    }
-
-
 def shingles(col: Column | str, k: int = 3) -> Column:
     """k-token shingles (n-grams of tokens) as an array of strings, the input
     unit for MinHash/Jaccard near-dup detection. Pure built-ins.

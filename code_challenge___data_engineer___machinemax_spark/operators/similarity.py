@@ -68,20 +68,6 @@ def hyperplane(plane: int, dim: int) -> list[float]:
     ]
 
 
-def srp_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Sign-random-projection bucket key: one bit per hyperplane (sign of the
-    projection), packed into a long."""
-    bits = [
-        F.when(dot(vec_col, F.array(*[F.lit(c) for c in p])) >= 0, F.lit(1 << i).cast("bigint"))
-        .otherwise(F.lit(0).cast("bigint"))
-        for i, p in enumerate(planes)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
 def _srp_buckets_udf(tables: list[list[list[float]]]):
     """Vectorized SRP bucketing: one (n, dim) @ (dim, T*P) matmul per Arrow
     batch, bits packed into one long per table."""

@@ -291,18 +291,31 @@ def ivf_topk_from_store_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side (planning metadata, like query tokens), and scans ONLY
     those partitions — `PartitionFilters [centroid_id IN (...)]` — before
     rescoring. Same oracle as `ivf_topk`."""
+    q = _query_df(spark, sf_dir)
+    _, cand = _ivf_store_probe(spark, sf_dir, q, nprobe=3)
+    return _ivf_rescore_topk(cand, q, k=10)
+
+
+def _ivf_store_probe(
+    spark: SparkSession, sf_dir: str, q: DataFrame, nprobe: int
+) -> tuple[list[int], DataFrame]:
+    """Coarse probe of the persisted L3 IVF layout for the one-row query
+    frame ``q``: rank the stored codebook by cosine to the query
+    (centroid_id breaks ties), collect the ``nprobe`` nearest list ids
+    driver-side (planning metadata, like query tokens), and scan ONLY
+    those partitions — `PartitionFilters [centroid_id IN (...)]`. Returns
+    the list ids in rank order and the candidate rows (query excluded)."""
+    import os as _os
+
     from ..stores import ensure_ivf_store
 
     store = ensure_ivf_store(spark, sf_dir)
-    import os as _os
-
     centroids = read_parquet(spark, _os.path.join(store, "centroids"))
-    q = _query_df(spark, sf_dir)
     probe_rows = (
         q.crossJoin(F.broadcast(centroids))
         .withColumn("__d", cosine(F.col("__qvec"), F.col("cvec")))
         .orderBy(F.desc("__d"), F.asc("centroid_id"))
-        .limit(3)
+        .limit(nprobe)
         .select("centroid_id")
         .collect()
     )
@@ -312,12 +325,18 @@ def ivf_topk_from_store_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("centroid_id").isin(probes))
         .filter(F.col("vec_id") != 0)
     )
+    return probes, cand
+
+
+def _ivf_rescore_topk(cand: DataFrame, q: DataFrame, k: int) -> DataFrame:
+    """Exact cosine rescoring of probed candidates against the broadcast
+    query; top-``k`` by (cosine desc, vec_id)."""
     return (
         cand.crossJoin(F.broadcast(q))
         .withColumn("cosine", F.round(cosine(F.col("embedding"), F.col("__qvec")), 6))
         .select("vec_id", "cosine")
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(10)
+        .limit(k)
     )
 
 
@@ -1824,35 +1843,10 @@ def ivf_topk_serving_with_tombstones(
     tests/test_similarity.py asserts the BroadcastExchange + LeftAnti in
     the physical plan and the never-surface/backfill behavior under an
     arbitrary planted delete set)."""
-    import os as _os
-
-    from ..stores import ensure_ivf_store
-
-    store = ensure_ivf_store(spark, sf_dir)
-    centroids = read_parquet(spark, _os.path.join(store, "centroids"))
     q = _query_df(spark, sf_dir)
-    probe_rows = (
-        q.crossJoin(F.broadcast(centroids))
-        .withColumn("__d", cosine(F.col("__qvec"), F.col("cvec")))
-        .orderBy(F.desc("__d"), F.asc("centroid_id"))
-        .limit(3)
-        .select("centroid_id")
-        .collect()
-    )
-    probes = [r.centroid_id for r in probe_rows]
-    cand = (
-        read_parquet(spark, _os.path.join(store, "assigned"))
-        .filter(F.col("centroid_id").isin(probes))
-        .filter(F.col("vec_id") != 0)
-        .join(F.broadcast(tombstones.select("vec_id")), "vec_id", "left_anti")
-    )
-    return (
-        cand.crossJoin(F.broadcast(q))
-        .withColumn("cosine", F.round(cosine(F.col("embedding"), F.col("__qvec")), 6))
-        .select("vec_id", "cosine")
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
+    _, cand = _ivf_store_probe(spark, sf_dir, q, nprobe=3)
+    live = cand.join(F.broadcast(tombstones.select("vec_id")), "vec_id", "left_anti")
+    return _ivf_rescore_topk(live, q, k)
 
 
 @query(
@@ -2023,26 +2017,12 @@ def ivf_recall_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates. The exact arm is one corpus pass (TakeOrderedAndProject
     top-10) — the calibration cost you pay once per tuning run, on a
     sampled query set in production."""
-    import os as _os
-
-    from ..stores import ensure_ivf_store
-
-    store = ensure_ivf_store(spark, sf_dir)
-    centroids = read_parquet(spark, _os.path.join(store, "centroids"))
     q = _query_df(spark, sf_dir)
-    clist_rows = (
-        q.crossJoin(F.broadcast(centroids))
-        .withColumn("__d", cosine(F.col("__qvec"), F.col("cvec")))
-        .orderBy(F.desc("__d"), F.asc("centroid_id"))
-        .limit(4)
-        .select("centroid_id")
-        .collect()
-    )
+    probes, cand = _ivf_store_probe(spark, sf_dir, q, nprobe=4)
     probe_map = spark.createDataFrame(
-        [(r.centroid_id, i + 1) for i, r in enumerate(clist_rows)],
+        [(c, i + 1) for i, c in enumerate(probes)],
         "centroid_id int, list_rank int",
     )
-    probes = [r.centroid_id for r in clist_rows]
     e = load_table(spark, sf_dir, "embeddings")
     exact10 = (
         e.filter(F.col("vec_id") != 0)
@@ -2054,10 +2034,7 @@ def ivf_recall_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nprobe_df = spark.createDataFrame([(1,), (2,), (4,)], "nprobe int")
     cand = (
-        read_parquet(spark, _os.path.join(store, "assigned"))
-        .filter(F.col("centroid_id").isin(probes))
-        .filter(F.col("vec_id") != 0)
-        .join(F.broadcast(probe_map), "centroid_id")
+        cand.join(F.broadcast(probe_map), "centroid_id")
         .crossJoin(F.broadcast(q))
         .withColumn("cos", cosine(F.col("embedding"), F.col("__qvec")))
         .join(F.broadcast(nprobe_df), F.col("list_rank") <= F.col("nprobe"))

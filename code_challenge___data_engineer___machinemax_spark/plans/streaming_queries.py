@@ -10,6 +10,20 @@ Reference parity: the reference's pipeline is also incremental (crawl ->
 Mongo upsert, index.py:117-129); these queries are the engine's equivalent
 discipline under the same correctness gate as the batch operators.
 
+How a query replays its table (streaming/replay.py, the one harness):
+- ``scratch_dir`` gives the query a temp directory that is removed when
+  the query returns OR raises; results are pinned (``localCheckpoint``)
+  inside the block, before the directory goes.
+- ``stage_waves`` / ``stage_wave`` write each wave (a deterministic filter
+  of the table: id parity, a time cut) as ONE file in ``landing/``, and
+  ``wave_stream`` reads them with ``maxFilesPerTrigger=1``, so each wave is
+  one micro-batch and cross-batch state merges are really exercised. The
+  ingest twins (``streamed_corpus_state`` and the two admission queries)
+  instead stage a wave and drain the ingest stream once per wave.
+- ``run_to_memory`` drains the stream into a memory table and returns it;
+  ``drain`` is the same start/processAllAvailable/stop for foreachBatch
+  sinks. Both stop the stream even when a batch raises.
+
 Determinism notes (the reason these CAN be oracle-checked):
 - streamed_corpus_state: the ingest's within-batch survivor is min-doc_id
   (window, not dropDuplicates), and wave membership is a pure function of
@@ -23,33 +37,75 @@ Determinism notes (the reason these CAN be oracle-checked):
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize, tokenize_sql
 from ..streaming.events import read_event_stream, stream_upsert_to_store
-from ..streaming.ingest import dedup_ingest_stream
-from ..tables import load_table, read_parquet
+from ..streaming.ingest import CORPUS_SCHEMA, dedup_ingest_stream
+from ..streaming.replay import (
+    read_or_empty,
+    run_to_memory,
+    scratch_dir,
+    stage_wave,
+    stage_waves,
+    wave_stream,
+)
+from ..tables import load_table
 from .feature_queries import psi_contrib_sql
 from .registry import query
 
 _DIGEST_SQL = "md5(trim(regexp_replace(lower(text), '[^\\p{L}\\p{N}]+', ' ', 'g')))"
 
 
-def _export_jsonl_wave(df: DataFrame, landing: str, name: str) -> None:
-    """Write one ingest wave as a single JSONL file in the landing dir (the
-    file stream source reads top-level files; coalesce(1) keeps one file per
-    wave so wave boundaries == batch boundaries)."""
-    tmp = os.path.join(landing, f"__stage_{name}")
-    df.coalesce(1).write.mode("overwrite").json(tmp)
-    part = glob.glob(os.path.join(tmp, "part-*"))[0]
-    shutil.move(part, os.path.join(landing, f"{name}.jsonl"))
-    shutil.rmtree(tmp, ignore_errors=True)
+def _event_waves(spark: SparkSession, sf_dir: str, base: str) -> tuple[str, DataFrame]:
+    """Stage events as two parquet waves (event_id parity — deterministic
+    membership) under ``base``; returns the landing dir and the events
+    table (its schema is the stream's)."""
+    ev = load_table(spark, sf_dir, "events")
+    landing = stage_waves(
+        [ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)],
+        os.path.join(base, "landing"),
+    )
+    return landing, ev
+
+
+def _event_wave_stream(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
+    landing, ev = _event_waves(spark, sf_dir, base)
+    return wave_stream(spark, landing, ev.schema)
+
+
+def _document_wave_stream(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
+    """Documents as two disjoint JSON waves (evens, then odds) under ``base``."""
+    docs = load_table(spark, sf_dir, "documents")
+    landing = stage_waves(
+        [docs.filter(F.col("doc_id") % 2 == 0), docs.filter(F.col("doc_id") % 2 == 1)],
+        os.path.join(base, "landing"),
+        "json",
+    )
+    return wave_stream(spark, landing, docs.schema, "json")
+
+
+def _hourly_windows(events: DataFrame) -> DataFrame:
+    """Tumbling 1-hour windows per event_type under a 2-hour watermark:
+    exact counts and the scaled-integer value sum."""
+    return (
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(F.expr("CAST(value * 1e6 AS BIGINT)")).alias("v_e6"),
+        )
+        .select(
+            F.col("win.start").alias("win_start"),
+            F.col("win.end").alias("win_end"),
+            "event_type",
+            "n",
+            "v_e6",
+        )
+    )
 
 
 @query(
@@ -72,55 +128,20 @@ def streamed_corpus_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving doc is the min even doc_id if the group reached wave 1, else
     the min doc_id (wave-2-only group). Each wave is one micro-batch (one
     landing file per wave, all files available at start of each drain)."""
-    base = tempfile.mkdtemp(prefix="ccdem_streamed_corpus_")
-    landing = os.path.join(base, "landing")
-    store = os.path.join(base, "store")
-    os.makedirs(landing)
-
-    docs = load_table(spark, sf_dir, "documents")
-    _export_jsonl_wave(docs.filter(F.col("doc_id") % 2 == 0), landing, "wave1")
-    dedup_ingest_stream(spark, landing, store)
-    # wave 2: every document — odd ids are new, even ids are re-delivered
-    _export_jsonl_wave(docs, landing, "wave2")
-    dedup_ingest_stream(spark, landing, store)
-
-    state = (
-        read_parquet(spark, os.path.join(store, "corpus"))
-        .select("fingerprint", "doc_id")
-        .localCheckpoint()  # pin rows before the temp store is removed
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return state
-
-
-def _stage_event_waves(spark: SparkSession, sf_dir: str, base: str) -> str:
-    """Stage events as two parquet wave-files (event_id parity) in a landing
-    dir; with maxFilesPerTrigger=1 each wave is one micro-batch, so the
-    stream's cross-batch state merge is actually exercised (a single source
-    file would collapse the run to one batch). Parity membership keeps the
-    staging deterministic."""
-    ev = load_table(spark, sf_dir, "events")
-    landing = os.path.join(base, "landing")
-    os.makedirs(landing)
-    for i, wave in enumerate(
-        [ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)]
-    ):
-        stage = os.path.join(base, f"__w{i}")
-        wave.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(landing, f"wave{i}.parquet"))
-        shutil.rmtree(stage, ignore_errors=True)
-    return landing
-
-
-def _event_wave_stream(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
-    landing = _stage_event_waves(spark, sf_dir, base)
-    schema = load_table(spark, sf_dir, "events").schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
+    with scratch_dir("ccdem_streamed_corpus_") as base:
+        landing = os.path.join(base, "landing")
+        store = os.path.join(base, "store")
+        docs = load_table(spark, sf_dir, "documents")
+        stage_wave(docs.filter(F.col("doc_id") % 2 == 0), landing, "wave1", "json")
+        dedup_ingest_stream(spark, landing, store)
+        # wave 2: every document — odd ids are new, even ids are re-delivered
+        stage_wave(docs, landing, "wave2", "json")
+        dedup_ingest_stream(spark, landing, store)
+        return (
+            read_or_empty(spark, os.path.join(store, "corpus"), CORPUS_SCHEMA)
+            .select("fingerprint", "doc_id")
+            .localCheckpoint()  # pin rows before the temp store is removed
+        )
 
 
 @query(
@@ -153,21 +174,12 @@ def streamed_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session_end = last event + gap, Spark's session_window end; an exactly-
     gap-spaced event MERGES — verified — hence the strict '>' in the gap
     test). The streaming twin of the oracle-green batch `event_sessions`."""
-    from ..streaming.events import run_to_memory, session_windows
+    from ..streaming.events import session_windows
 
-    base = tempfile.mkdtemp(prefix="ccdem_streamed_sessions_")
-    stream = _event_wave_stream(spark, sf_dir, base)
-    sess = session_windows(stream, gap="30 minutes")
-    run_to_memory(sess, "ccdem_streamed_sessions", "complete")
-    out = (
-        spark.sql(
-            "SELECT user_id, session_start, session_end, n_events "
-            "FROM ccdem_streamed_sessions"
-        )
-        .localCheckpoint()
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+    with scratch_dir("ccdem_streamed_sessions_") as base:
+        stream = _event_wave_stream(spark, sf_dir, base)
+        sess = session_windows(stream, gap="30 minutes")
+        return run_to_memory(sess, "ccdem_streamed_sessions", "complete").localCheckpoint()
 
 
 @query(
@@ -190,24 +202,20 @@ def streamed_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     display-only and excluded here)."""
     from pyspark.sql import Window as W
 
-    from ..streaming.events import run_to_memory, user_running_totals
+    from ..streaming.events import user_running_totals
 
-    base = tempfile.mkdtemp(prefix="ccdem_streamed_totals_")
-    stream = _event_wave_stream(spark, sf_dir, base)
-    totals = user_running_totals(stream)
-    run_to_memory(totals, "ccdem_streamed_totals", "update")
-    emitted = spark.sql(
-        "SELECT user_id, n_events, value_e6 FROM ccdem_streamed_totals"
-    )
-    w = W.partitionBy("user_id").orderBy(F.desc("n_events"))
-    out = (
-        emitted.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .localCheckpoint()
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+    with scratch_dir("ccdem_streamed_totals_") as base:
+        stream = _event_wave_stream(spark, sf_dir, base)
+        emitted = run_to_memory(
+            user_running_totals(stream), "ccdem_streamed_totals", "update"
+        ).select("user_id", "n_events", "value_e6")
+        w = W.partitionBy("user_id").orderBy(F.desc("n_events"))
+        return (
+            emitted.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+            .localCheckpoint()
+        )
 
 
 @query(
@@ -237,29 +245,10 @@ def streamed_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     would NOT match). The withWatermark call is kept to pin that complete
     mode ignores it — the append-mode eviction path is exercised by
     tests/test_streaming.py's late-data test instead."""
-    base = tempfile.mkdtemp(prefix="ccdem_streamed_hourly_")
-    stream = _event_wave_stream(spark, sf_dir, base)
-    agg = (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.expr("CAST(value * 1e6 AS BIGINT)")).alias("v_e6"),
-        )
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "event_type",
-            "n",
-            "v_e6",
-        )
-    )
-    from ..streaming.events import run_to_memory
-
-    run_to_memory(agg, "ccdem_streamed_hourly", "complete")
-    out = spark.sql("SELECT * FROM ccdem_streamed_hourly").localCheckpoint()
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+    with scratch_dir("ccdem_streamed_hourly_") as base:
+        stream = _event_wave_stream(spark, sf_dir, base)
+        agg = _hourly_windows(stream)
+        return run_to_memory(agg, "ccdem_streamed_hourly", "complete").localCheckpoint()
 
 
 @query(
@@ -278,17 +267,10 @@ def streamed_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle is the equivalent one-pass batch aggregation."""
     from ..streaming.events import read_state_store
 
-    base = tempfile.mkdtemp(prefix="ccdem_streamed_rollup_")
-    store = os.path.join(base, "store")
-    stream = read_event_stream(spark, sf_dir)
-    stream_upsert_to_store(stream, store)
-    state = (
-        read_state_store(spark, store)
-        .select("event_type", "n", "v_e6")
-        .localCheckpoint()
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return state
+    with scratch_dir("ccdem_streamed_rollup_") as base:
+        store = os.path.join(base, "store")
+        stream_upsert_to_store(read_event_stream(spark, sf_dir), store)
+        return read_state_store(spark, store).select("event_type", "n", "v_e6").localCheckpoint()
 
 
 def _near_dedup_oracle_sql() -> str:
@@ -390,24 +372,19 @@ def streamed_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch-by-epoch in closed-form SQL (recursive-CTE components)."""
     from ..streaming.ingest import near_dedup_ingest_stream
 
-    base = tempfile.mkdtemp(prefix="ccdem_streamed_neardup_")
-    landing = os.path.join(base, "landing")
-    store = os.path.join(base, "store")
-    os.makedirs(landing)
-
-    docs = load_table(spark, sf_dir, "documents")
-    _export_jsonl_wave(docs.filter(F.col("doc_id") % 2 == 0), landing, "wave1")
-    near_dedup_ingest_stream(spark, landing, store)
-    _export_jsonl_wave(docs, landing, "wave2")
-    near_dedup_ingest_stream(spark, landing, store)
-
-    state = (
-        read_parquet(spark, os.path.join(store, "corpus"))
-        .select("doc_id", "source", "n_chars")
-        .localCheckpoint()
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return state
+    with scratch_dir("ccdem_streamed_neardup_") as base:
+        landing = os.path.join(base, "landing")
+        store = os.path.join(base, "store")
+        docs = load_table(spark, sf_dir, "documents")
+        stage_wave(docs.filter(F.col("doc_id") % 2 == 0), landing, "wave1", "json")
+        near_dedup_ingest_stream(spark, landing, store)
+        stage_wave(docs, landing, "wave2", "json")
+        near_dedup_ingest_stream(spark, landing, store)
+        return (
+            read_or_empty(spark, os.path.join(store, "corpus"), CORPUS_SCHEMA)
+            .select("doc_id", "source", "n_chars")
+            .localCheckpoint()
+        )
 
 
 @query(
@@ -434,47 +411,29 @@ def streamed_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrival order, so the final complete-mode state is bit-identical to the
     one-pass batch aggregation (double sums would re-associate and drift).
     """
-    from ..streaming.events import run_to_memory
-
     li = load_table(spark, sf_dir, "lineitem")
-    base = tempfile.mkdtemp(prefix="ccdem_streamed_q1_")
-    landing = os.path.join(base, "landing")
-    os.makedirs(landing)
-    for i, wave in enumerate(
-        [li.filter(F.col("l_orderkey") % 2 == 0), li.filter(F.col("l_orderkey") % 2 == 1)]
-    ):
-        stage = os.path.join(base, f"__w{i}")
-        wave.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(landing, f"wave{i}.parquet"))
-        shutil.rmtree(stage, ignore_errors=True)
-
-    stream = (
-        spark.readStream.schema(li.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
     price = F.col("l_extendedprice")
     disc_price = price * (1 - F.col("l_discount"))
-    agg = (
-        stream.filter(
-            F.col("l_shipdate") <= F.lit("2000-01-01 00:00:00").cast("timestamp")
+    with scratch_dir("ccdem_streamed_q1_") as base:
+        landing = stage_waves(
+            [li.filter(F.col("l_orderkey") % 2 == 0), li.filter(F.col("l_orderkey") % 2 == 1)],
+            os.path.join(base, "landing"),
         )
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.col("l_quantity").cast("decimal(20,4)")).cast("double").alias("sum_qty"),
-            F.sum(price.cast("decimal(20,4)")).cast("double").alias("sum_base_price"),
-            F.sum(disc_price.cast("decimal(24,6)")).cast("double").alias("sum_disc_price"),
-            F.sum((disc_price * (1 + F.col("l_tax"))).cast("decimal(24,6)"))
-            .cast("double")
-            .alias("sum_charge"),
-            F.count("*").alias("count_order"),
+        agg = (
+            wave_stream(spark, landing, li.schema)
+            .filter(F.col("l_shipdate") <= F.lit("2000-01-01 00:00:00").cast("timestamp"))
+            .groupBy("l_returnflag", "l_linestatus")
+            .agg(
+                F.sum(F.col("l_quantity").cast("decimal(20,4)")).cast("double").alias("sum_qty"),
+                F.sum(price.cast("decimal(20,4)")).cast("double").alias("sum_base_price"),
+                F.sum(disc_price.cast("decimal(24,6)")).cast("double").alias("sum_disc_price"),
+                F.sum((disc_price * (1 + F.col("l_tax"))).cast("decimal(24,6)"))
+                .cast("double")
+                .alias("sum_charge"),
+                F.count("*").alias("count_order"),
+            )
         )
-    )
-    run_to_memory(agg, "streamed_q1_state", "complete")
-    state = spark.sql("SELECT * FROM streamed_q1_state").localCheckpoint()
-    shutil.rmtree(base, ignore_errors=True)
-    return state
+        return run_to_memory(agg, "streamed_q1_state", "complete").localCheckpoint()
 
 
 @query(
@@ -523,16 +482,11 @@ def streamed_append_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: this is the production shape for late-tolerant rollups — state
     is bounded by the watermark horizon (open windows only), eviction is
     what bounds it, and emitted rows are written exactly once."""
-    from ..streaming.events import run_to_memory
-
     e = load_table(spark, sf_dir, "events")
     max_ts = e.agg(F.max("ts")).collect()[0][0]
     cutoff = F.lit(max_ts.replace(minute=0, second=0, microsecond=0)) - F.expr(
         "interval 72 hours"
     )
-    base = tempfile.mkdtemp(prefix="ccdem_streamed_append_")
-    landing = os.path.join(base, "landing")
-    os.makedirs(landing)
     mid = F.lit(max_ts.replace(minute=0, second=0, microsecond=0)) - F.expr(
         "interval 36 hours"
     )
@@ -545,37 +499,10 @@ def streamed_append_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter((F.col("ts") >= cutoff) & (F.col("ts") < mid)),
         e.filter((F.col("ts") < cutoff) & (F.col("event_id") % 7 == 0)),
     ]
-    for i, wave in enumerate(waves):
-        stage = os.path.join(base, f"__w{i}")
-        wave.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(landing, f"wave{i}.parquet"))
-        shutil.rmtree(stage, ignore_errors=True)
-
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-    agg = (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.expr("CAST(value * 1e6 AS BIGINT)")).alias("v_e6"),
-        )
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "event_type",
-            "n",
-            "v_e6",
-        )
-    )
-    run_to_memory(agg, "ccdem_streamed_append", "append")
-    out = spark.sql("SELECT * FROM ccdem_streamed_append").localCheckpoint()
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+    with scratch_dir("ccdem_streamed_append_") as base:
+        landing = stage_waves(waves, os.path.join(base, "landing"))
+        agg = _hourly_windows(wave_stream(spark, landing, e.schema))
+        return run_to_memory(agg, "ccdem_streamed_append", "append").localCheckpoint()
 
 
 @query(
@@ -630,40 +557,20 @@ def streamed_session_windows_append(spark: SparkSession, sf_dir: str) -> DataFra
     Scale: state is bounded by OPEN sessions only (eviction is the
     bound); emitted rows are written exactly once — unlike complete mode,
     whose state and re-emission grow with the corpus."""
-    from ..streaming.events import run_to_memory, session_windows
+    from ..streaming.events import session_windows
 
     e = load_table(spark, sf_dir, "events")
     max_ts = e.agg(F.max("ts")).collect()[0][0]
     mid = F.lit(max_ts.replace(minute=0, second=0, microsecond=0)) - F.expr(
         "interval 36 hours"
     )
-    base = tempfile.mkdtemp(prefix="ccdem_streamed_sess_append_")
-    landing = os.path.join(base, "landing")
-    os.makedirs(landing)
-    waves = [e.filter(F.col("ts") < mid), e.filter(F.col("ts") >= mid)]
-    for i, wave in enumerate(waves):
-        stage = os.path.join(base, f"__w{i}")
-        wave.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(landing, f"wave{i}.parquet"))
-        shutil.rmtree(stage, ignore_errors=True)
-
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-    sess = session_windows(stream, gap="30 minutes")
-    run_to_memory(sess, "ccdem_streamed_sess_append", "append")
-    out = (
-        spark.sql(
-            "SELECT user_id, session_start, session_end, n_events "
-            "FROM ccdem_streamed_sess_append"
+    with scratch_dir("ccdem_streamed_sess_append_") as base:
+        landing = stage_waves(
+            [e.filter(F.col("ts") < mid), e.filter(F.col("ts") >= mid)],
+            os.path.join(base, "landing"),
         )
-        .localCheckpoint()
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        sess = session_windows(wave_stream(spark, landing, e.schema), gap="30 minutes")
+        return run_to_memory(sess, "ccdem_streamed_sess_append", "append").localCheckpoint()
 
 
 @query(
@@ -686,32 +593,15 @@ def streamed_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     health report). Distinct-valued card columns (sources, digests) are
     deliberately absent — distinct aggregates aren't streamable; the
     batch dataset_card_report carries those."""
-    base = tempfile.mkdtemp(prefix="ccdem_streamed_card_")
-    landing = os.path.join(base, "landing")
-    os.makedirs(landing)
-    docs = load_table(spark, sf_dir, "documents")
-    _export_jsonl_wave(docs.filter(F.col("doc_id") % 2 == 0), landing, "wave1")
-    _export_jsonl_wave(docs.filter(F.col("doc_id") % 2 == 1), landing, "wave2")
-    from ..streaming.events import run_to_memory
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(landing)
-    )
-    card = stream.agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum(F.coalesce(F.size(tokenize("text")), F.lit(0)))
-        .cast("bigint").alias("n_tokens"),
-        F.sum(F.col("text").isNull().cast("int")).cast("bigint").alias("n_null_text"),
-        F.sum((F.col("lang") == "en").cast("int")).cast("bigint").alias("n_en"),
-    )
-    run_to_memory(card, "ccdem_streamed_card", "complete")
-    out = spark.sql(
-        "SELECT n_docs, n_tokens, n_null_text, n_en FROM ccdem_streamed_card"
-    ).localCheckpoint()
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+    with scratch_dir("ccdem_streamed_card_") as base:
+        card = _document_wave_stream(spark, sf_dir, base).agg(
+            F.count("*").cast("bigint").alias("n_docs"),
+            F.sum(F.coalesce(F.size(tokenize("text")), F.lit(0)))
+            .cast("bigint").alias("n_tokens"),
+            F.sum(F.col("text").isNull().cast("int")).cast("bigint").alias("n_null_text"),
+            F.sum((F.col("lang") == "en").cast("int")).cast("bigint").alias("n_en"),
+        )
+        return run_to_memory(card, "ccdem_streamed_card", "complete").localCheckpoint()
 
 
 @query(
@@ -738,23 +628,18 @@ def streamed_segment_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the dimension broadcasts per batch (or bucket-joins via L1 when
     the profile table outgrows broadcast); stream state is bounded by the
     (segment x type) domain, KB-sized forever."""
-    base = tempfile.mkdtemp(prefix="ccdem_streamed_enrich_")
-    stream = _event_wave_stream(spark, sf_dir, base)
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    agg = (
-        stream.join(F.broadcast(cust), cust.c_custkey == stream.user_id + 1)
-        .groupBy("c_mktsegment", "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.expr("CAST(value * 1e6 AS BIGINT)")).alias("v_e6"),
+    with scratch_dir("ccdem_streamed_enrich_") as base:
+        stream = _event_wave_stream(spark, sf_dir, base)
+        cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+        agg = (
+            stream.join(F.broadcast(cust), cust.c_custkey == stream.user_id + 1)
+            .groupBy("c_mktsegment", "event_type")
+            .agg(
+                F.count("*").alias("n"),
+                F.sum(F.expr("CAST(value * 1e6 AS BIGINT)")).alias("v_e6"),
+            )
         )
-    )
-    from ..streaming.events import run_to_memory
-
-    run_to_memory(agg, "ccdem_streamed_enrich", "complete")
-    out = spark.sql("SELECT * FROM ccdem_streamed_enrich").localCheckpoint()
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        return run_to_memory(agg, "ccdem_streamed_enrich", "complete").localCheckpoint()
 
 
 @query(
@@ -788,39 +673,32 @@ def streamed_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
     to bound state (evicting exactly the rows that can no longer match the
     1-hour range — the range condition is what lets Spark compute that
     bound per side)."""
-    from ..streaming.events import purchases_with_recent_view, run_to_memory
+    from ..streaming.events import purchases_with_recent_view
 
-    base = tempfile.mkdtemp(prefix="ccdem_streamed_attr_")
-    landing = _stage_event_waves(spark, sf_dir, base)
-    schema = load_table(spark, sf_dir, "events").schema
+    with scratch_dir("ccdem_streamed_attr_") as base:
+        landing, ev = _event_waves(spark, sf_dir, base)
 
-    def side(event_type: str) -> DataFrame:
+        def side(event_type: str) -> DataFrame:
+            return wave_stream(spark, landing, ev.schema).filter(
+                F.col("event_type") == event_type
+            )
+
+        # the operator's predicate (v_ts in [p_ts - 1h, p_ts]) is algebraically
+        # the attribution window (p_ts in [v_ts, v_ts + 1h])
+        pairs = purchases_with_recent_view(
+            side("purchase"), side("view"), horizon="1 hour", watermark="90 days"
+        )
         return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-            .filter(F.col("event_type") == event_type)
+            run_to_memory(pairs, "ccdem_streamed_attr", "append")
+            .groupBy(F.col("p_user").alias("user_id"))
+            .agg(
+                F.count("*").alias("n_pairs"),
+                F.max(
+                    F.unix_micros("p_ts") - F.unix_micros("v_ts")
+                ).cast("bigint").alias("max_gap_us"),
+            )
+            .localCheckpoint()
         )
-
-    # the operator's predicate (v_ts in [p_ts - 1h, p_ts]) is algebraically
-    # the attribution window (p_ts in [v_ts, v_ts + 1h])
-    pairs = purchases_with_recent_view(
-        side("purchase"), side("view"), horizon="1 hour", watermark="90 days"
-    )
-    run_to_memory(pairs, "ccdem_streamed_attr", "append")
-    out = (
-        spark.sql("SELECT * FROM ccdem_streamed_attr")
-        .groupBy(F.col("p_user").alias("user_id"))
-        .agg(
-            F.count("*").alias("n_pairs"),
-            F.max(
-                F.unix_micros("p_ts") - F.unix_micros("v_ts")
-            ).cast("bigint").alias("max_gap_us"),
-        )
-        .localCheckpoint()
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return out
 
 
 @query(
@@ -853,7 +731,6 @@ def python_stream_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Companion to `python_datasource_rollup` (same API, batch reader with
     partition planning + filter pushdown)."""
     from ..sources.pyds import register_synthetic_source
-    from ..streaming.events import run_to_memory
 
     register_synthetic_source(spark)
     sdf = (
@@ -870,9 +747,8 @@ def python_stream_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n"),
         F.sum("value_e6").cast("bigint").alias("v"),
     )
-    run_to_memory(agg, "ccdem_pystream_rollup", "complete")
     return (
-        spark.sql("SELECT * FROM ccdem_pystream_rollup")
+        run_to_memory(agg, "ccdem_pystream_rollup", "complete")
         .groupBy("event_type")
         .agg(
             F.sum("n").cast("bigint").alias("n"),
@@ -927,21 +803,15 @@ def streamed_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch projection over the finished 10-row state against the
     broadcast reference — per-bin shared-expression contributions over
     exact int64 counts, trunc-scaled."""
-    base = tempfile.mkdtemp(prefix="ccdem_streamed_psi_")
-    stream = _event_wave_stream(spark, sf_dir, base)
-    live_agg = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.expr("LEAST(CAST(value AS BIGINT) DIV 50, 9)").alias("bin")
+    with scratch_dir("ccdem_streamed_psi_") as base:
+        live_agg = (
+            _event_wave_stream(spark, sf_dir, base)
+            .filter(F.col("event_type") == "purchase")
+            .select(F.expr("LEAST(CAST(value AS BIGINT) DIV 50, 9)").alias("bin"))
+            .groupBy("bin")
+            .agg(F.count("*").cast("bigint").alias("n_live"))
         )
-        .groupBy("bin")
-        .agg(F.count("*").cast("bigint").alias("n_live"))
-    )
-    from ..streaming.events import run_to_memory
-
-    run_to_memory(live_agg, "ccdem_streamed_psi", "complete")
-    live = spark.sql("SELECT * FROM ccdem_streamed_psi").localCheckpoint()
-    shutil.rmtree(base, ignore_errors=True)
+        live = run_to_memory(live_agg, "ccdem_streamed_psi", "complete").localCheckpoint()
 
     e = load_table(spark, sf_dir, "events")
     ref = (
@@ -1030,65 +900,51 @@ def streamed_unconverted_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     them directly. Scale: join state is bounded by the watermark horizon
     per side; the per-user rollup is a cheap batch replay of the append
     log (the production shape for attribution pipelines)."""
-    from ..streaming.events import run_to_memory
-
     e = load_table(spark, sf_dir, "events")
     max_ts = e.agg(F.max("ts")).collect()[0][0]
     t1 = F.lit(max_ts) - F.expr("interval 20 days")
     t2 = F.lit(max_ts) - F.expr("interval 10 days")
-    base = tempfile.mkdtemp(prefix="ccdem_streamed_outer_")
-    landing = os.path.join(base, "landing")
-    os.makedirs(landing)
     waves = [
         e.filter(F.col("ts") < t1),
         e.filter((F.col("ts") >= t1) & (F.col("ts") < t2)),
         e.filter(F.col("ts") >= t2),
     ]
-    for i, wave in enumerate(waves):
-        stage = os.path.join(base, f"__w{i}")
-        wave.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(landing, f"wave{i}.parquet"))
-        shutil.rmtree(stage, ignore_errors=True)
+    with scratch_dir("ccdem_streamed_outer_") as base:
+        landing = stage_waves(waves, os.path.join(base, "landing"))
 
-    def side(event_type: str, pfx: str) -> DataFrame:
-        return (
-            spark.readStream.schema(e.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-            .filter(F.col("event_type") == event_type)
-            .select(
-                F.col("user_id").alias(f"{pfx}_user"),
-                F.col("ts").alias(f"{pfx}_ts"),
-                F.col("event_id").alias(f"{pfx}_id"),
+        def side(event_type: str, pfx: str) -> DataFrame:
+            return (
+                wave_stream(spark, landing, e.schema)
+                .filter(F.col("event_type") == event_type)
+                .select(
+                    F.col("user_id").alias(f"{pfx}_user"),
+                    F.col("ts").alias(f"{pfx}_ts"),
+                    F.col("event_id").alias(f"{pfx}_id"),
+                )
+                .withWatermark(f"{pfx}_ts", "2 hours")
             )
-            .withWatermark(f"{pfx}_ts", "2 hours")
-        )
 
-    joined = side("view", "v").join(
-        side("purchase", "p"),
-        F.expr(
-            "p_user = v_user AND p_ts >= v_ts"
-            " AND p_ts <= v_ts + interval 1 hour"
-        ),
-        "leftOuter",
-    )
-    run_to_memory(joined, "ccdem_streamed_outer", "append")
-    out = (
-        spark.sql("SELECT * FROM ccdem_streamed_outer")
-        .groupBy(F.col("v_user").alias("user_id"))
-        .agg(
-            F.sum(
-                F.when(F.col("p_ts").isNotNull(), 1).otherwise(0)
-            ).cast("bigint").alias("n_pairs"),
-            F.sum(
-                F.when(F.col("p_ts").isNull(), 1).otherwise(0)
-            ).cast("bigint").alias("n_unconverted"),
+        joined = side("view", "v").join(
+            side("purchase", "p"),
+            F.expr(
+                "p_user = v_user AND p_ts >= v_ts"
+                " AND p_ts <= v_ts + interval 1 hour"
+            ),
+            "leftOuter",
         )
-        .localCheckpoint()
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        return (
+            run_to_memory(joined, "ccdem_streamed_outer", "append")
+            .groupBy(F.col("v_user").alias("user_id"))
+            .agg(
+                F.sum(
+                    F.when(F.col("p_ts").isNotNull(), 1).otherwise(0)
+                ).cast("bigint").alias("n_pairs"),
+                F.sum(
+                    F.when(F.col("p_ts").isNull(), 1).otherwise(0)
+                ).cast("bigint").alias("n_unconverted"),
+            )
+            .localCheckpoint()
+        )
 
 
 def _cms_oracle() -> str:
@@ -1114,25 +970,21 @@ def streamed_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     that never buffers raw events."""
     from .sketch_queries import _CMS_D, _CMS_W
 
-    base = tempfile.mkdtemp(prefix="ccdem_streamed_cms_")
-    stream = _event_wave_stream(spark, sf_dir, base)
     rows = F.explode(F.array(*[F.lit(str(r)) for r in range(_CMS_D)])).alias("r")
 
     def bucket(key: F.Column) -> F.Column:
         cell = F.md5(F.concat(F.col("r"), F.lit(":"), key.cast("string")))
         return F.conv(F.substring(cell, 1, 8), 16, 10).cast("bigint") % _CMS_W
 
-    cells_agg = (
-        stream.select("user_id", rows)
-        .select("r", bucket(F.col("user_id")).alias("bucket"))
-        .groupBy("r", "bucket")
-        .agg(F.count("*").alias("c"))
-    )
-    from ..streaming.events import run_to_memory
-
-    run_to_memory(cells_agg, "ccdem_streamed_cms", "complete")
-    cells = spark.sql("SELECT * FROM ccdem_streamed_cms").localCheckpoint()
-    shutil.rmtree(base, ignore_errors=True)
+    with scratch_dir("ccdem_streamed_cms_") as base:
+        cells_agg = (
+            _event_wave_stream(spark, sf_dir, base)
+            .select("user_id", rows)
+            .select("r", bucket(F.col("user_id")).alias("bucket"))
+            .groupBy("r", "bucket")
+            .agg(F.count("*").alias("c"))
+        )
+        cells = run_to_memory(cells_agg, "ccdem_streamed_cms", "complete").localCheckpoint()
 
     e = load_table(spark, sf_dir, "events")
     probes = (
@@ -1189,39 +1041,22 @@ def streamed_mask_rate_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the ingest-time guardrail a training pipeline runs while data
     lands: a mask rate drifting off the 15% contract flags a tokenizer or
     id-assignment regression in the producing job."""
-    base = tempfile.mkdtemp(prefix="ccdem_streamed_mask_")
-    landing = os.path.join(base, "landing")
-    os.makedirs(landing)
-    docs = load_table(spark, sf_dir, "documents")
-    _export_jsonl_wave(docs.filter(F.col("doc_id") % 2 == 0), landing, "wave1")
-    _export_jsonl_wave(docs.filter(F.col("doc_id") % 2 == 1), landing, "wave2")
-    from ..streaming.events import run_to_memory
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(landing)
-    )
-    pos = stream.select(
-        "doc_id", F.posexplode(tokenize("text")).alias("p", "tok")
-    ).select("doc_id", F.col("p").cast("bigint").alias("p"))
     h = F.conv(
         F.substring(F.md5(F.concat_ws(":", F.col("doc_id"), F.col("p"))), 1, 15),
         16,
         10,
     ).cast("bigint")
-    marked = pos.select(F.when(h % 100 < 15, 1).otherwise(0).alias("m"))
-    agg = marked.agg(
-        F.count("*").cast("bigint").alias("total_tokens"),
-        F.sum("m").cast("bigint").alias("masked_tokens"),
-        F.expr("SUM(m) * 1000000 div COUNT(*)").cast("bigint").alias("mask_rate_e6"),
-    )
-    run_to_memory(agg, "ccdem_streamed_mask", "complete")
-    out = spark.sql(
-        "SELECT total_tokens, masked_tokens, mask_rate_e6 FROM ccdem_streamed_mask"
-    ).localCheckpoint()
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+    with scratch_dir("ccdem_streamed_mask_") as base:
+        pos = _document_wave_stream(spark, sf_dir, base).select(
+            "doc_id", F.posexplode(tokenize("text")).alias("p", "tok")
+        ).select("doc_id", F.col("p").cast("bigint").alias("p"))
+        marked = pos.select(F.when(h % 100 < 15, 1).otherwise(0).alias("m"))
+        agg = marked.agg(
+            F.count("*").cast("bigint").alias("total_tokens"),
+            F.sum("m").cast("bigint").alias("masked_tokens"),
+            F.expr("SUM(m) * 1000000 div COUNT(*)").cast("bigint").alias("mask_rate_e6"),
+        )
+        return run_to_memory(agg, "ccdem_streamed_mask", "complete").localCheckpoint()
 
 
 @query(
@@ -1270,26 +1105,19 @@ def streamed_quantile_sketch_monitor(spark: SparkSession, sf_dir: str) -> DataFr
     law, with the micro-batch boundary as the shard. The p50/p90/p99
     read (cumulative counts over the finished state) runs batch-side;
     values are positive cents so floor == trunc cross-engine."""
-    base = tempfile.mkdtemp(prefix="ccdem_streamed_qsk_")
-    stream = _event_wave_stream(spark, sf_dir, base)
-    sk_agg = (
-        stream.select(
-            "event_type",
-            F.expr(
-                "CAST(floor(CAST(value AS DOUBLE) * 100) AS BIGINT) div 1600"
-            ).alias("bin"),
+    with scratch_dir("ccdem_streamed_qsk_") as base:
+        sk_agg = (
+            _event_wave_stream(spark, sf_dir, base)
+            .select(
+                "event_type",
+                F.expr(
+                    "CAST(floor(CAST(value AS DOUBLE) * 100) AS BIGINT) div 1600"
+                ).alias("bin"),
+            )
+            .groupBy("event_type", "bin")
+            .agg(F.count("*").alias("cnt"))
         )
-        .groupBy("event_type", "bin")
-        .agg(F.count("*").alias("cnt"))
-    )
-    from ..streaming.events import run_to_memory
-
-    run_to_memory(sk_agg, "ccdem_streamed_qsk", "complete")
-    sk = (
-        spark.sql("SELECT event_type, bin, CAST(cnt AS BIGINT) AS cnt FROM ccdem_streamed_qsk")
-        .localCheckpoint()
-    )
-    shutil.rmtree(base, ignore_errors=True)
+        sk = run_to_memory(sk_agg, "ccdem_streamed_qsk", "complete").localCheckpoint()
 
     from pyspark.sql import Window as W
 
@@ -1350,43 +1178,28 @@ def streamed_taxonomy_tag_monitor(spark: SparkSession, sf_dir: str) -> DataFrame
     rows-only check; batch==stream equality is the value pin)."""
     from .text_pipeline import _TAXONOMY
 
-    base = tempfile.mkdtemp(prefix="ccdem_streamed_tax_")
-    landing = os.path.join(base, "landing")
-    os.makedirs(landing)
-    docs = load_table(spark, sf_dir, "documents")
-    _export_jsonl_wave(docs.filter(F.col("doc_id") % 2 == 0), landing, "wave1")
-    _export_jsonl_wave(docs.filter(F.col("doc_id") % 2 == 1), landing, "wave2")
-    from ..streaming.events import run_to_memory
-
     dict_df = spark.createDataFrame(
         [(t, topic) for topic, ts in _TAXONOMY.items() for t in ts],
         "token string, topic string",
     )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(landing)
-    )
-    tok = stream.select(
-        "doc_id", "source", F.explode(tokenize("text")).alias("token")
-    )
-    state = (
-        tok.join(F.broadcast(dict_df), "token")
-        .groupBy("source", "topic", "doc_id")
-        .agg(F.count("*").cast("bigint").alias("n_occ"))
-    )
-    run_to_memory(state, "ccdem_streamed_tax", "complete")
-    out = spark.sql(
-        """
-        SELECT source, topic,
-               CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(n_occ) AS BIGINT) AS n_occurrences
-        FROM ccdem_streamed_tax
-        GROUP BY source, topic
-        """
-    ).localCheckpoint()
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+    with scratch_dir("ccdem_streamed_tax_") as base:
+        tok = _document_wave_stream(spark, sf_dir, base).select(
+            "doc_id", "source", F.explode(tokenize("text")).alias("token")
+        )
+        state = (
+            tok.join(F.broadcast(dict_df), "token")
+            .groupBy("source", "topic", "doc_id")
+            .agg(F.count("*").cast("bigint").alias("n_occ"))
+        )
+        return (
+            run_to_memory(state, "ccdem_streamed_tax", "complete")
+            .groupBy("source", "topic")
+            .agg(
+                F.count("*").cast("bigint").alias("n_docs"),
+                F.sum("n_occ").cast("bigint").alias("n_occurrences"),
+            )
+            .localCheckpoint()
+        )
 
 
 def _vector_admission_oracle_sql(radius: int = 3) -> str:
@@ -1496,12 +1309,7 @@ def streamed_vector_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     stronger than the LSH twin's oracle, which must model banding.
     Emits the admitted (vec_id, label) corpus: exactly the originals,
     every mutant rejected through one of the two paths."""
-    from ..streaming.ingest import vector_admission_stream
-
-    base = tempfile.mkdtemp(prefix="ccdem_streamed_vecadm_")
-    landing = os.path.join(base, "landing")
-    store = os.path.join(base, "store")
-    os.makedirs(landing)
+    from ..streaming.ingest import ADMITTED_VECTOR_SCHEMA, vector_admission_stream
 
     e = load_table(spark, sf_dir, "embeddings")
     flip2 = F.expr("transform(embedding, (v, i) -> IF(i < 2, -v, v))")
@@ -1521,15 +1329,15 @@ def streamed_vector_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(mut_even)
         .unionByName(mut_odd)
     )
-    _export_jsonl_wave(e.filter(F.col("vec_id") % 2 == 0), landing, "wave1")
-    vector_admission_stream(spark, landing, store)
-    _export_jsonl_wave(wave2, landing, "wave2")
-    vector_admission_stream(spark, landing, store)
-
-    state = (
-        read_parquet(spark, os.path.join(store, "corpus"))
-        .select("vec_id", "label")
-        .localCheckpoint()
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return state
+    with scratch_dir("ccdem_streamed_vecadm_") as base:
+        landing = os.path.join(base, "landing")
+        store = os.path.join(base, "store")
+        stage_wave(e.filter(F.col("vec_id") % 2 == 0), landing, "wave1", "json")
+        vector_admission_stream(spark, landing, store)
+        stage_wave(wave2, landing, "wave2", "json")
+        vector_admission_stream(spark, landing, store)
+        return (
+            read_or_empty(spark, os.path.join(store, "corpus"), ADMITTED_VECTOR_SCHEMA)
+            .select("vec_id", "label")
+            .localCheckpoint()
+        )

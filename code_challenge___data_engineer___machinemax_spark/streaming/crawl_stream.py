@@ -29,7 +29,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from ..crawl.extract import (
     admission_filter,
@@ -40,6 +39,7 @@ from ..crawl.extract import (
     resolve_url,
 )
 from ..crawl.fetcher import FetchFn, fetch_stage
+from .replay import read_or_empty
 
 _FRONTIER_SCHEMA = "url string, depth int"
 
@@ -52,13 +52,6 @@ class StreamCrawlResult:
     # op 30 journal (reference index.py:215-235), streaming form: events are
     # appended per micro-batch to a parquet sink; round = the URL's depth.
     journal: DataFrame | None = None
-
-
-def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    try:
-        return spark.read.schema(schema).parquet(path)
-    except AnalysisException:
-        return spark.createDataFrame([], schema)
 
 
 def crawl_stream(
@@ -111,7 +104,7 @@ def crawl_stream(
         batch = batch_df.filter(F.col("depth") < max_depth).groupBy("url").agg(
             F.min("depth").alias("depth")
         )
-        visited = _read_or_empty(sess, visited_dir, "url string")
+        visited = read_or_empty(sess, visited_dir, "url string")
         # dedup-before-fetch; materialize so the visited append below can't
         # feed back into this batch's own anti-join
         fresh = batch.join(visited, "url", "left_anti").localCheckpoint()
@@ -162,20 +155,20 @@ def crawl_stream(
         while stable < 2:
             query.processAllAvailable()
             time.sleep(0.1)  # let a just-written self-feed file land
-            n = _read_or_empty(spark, visited_dir, "url string").count()
+            n = read_or_empty(spark, visited_dir, "url string").count()
             stable = stable + 1 if n == prev else 0
             prev = n
     finally:
         query.stop()
 
-    articles = _read_or_empty(
+    articles = read_or_empty(
         spark, articles_dir,
         "url string, title string, description string, author string, "
         "section string, keywords string, text string",
     )
-    visited = _read_or_empty(spark, visited_dir, "url string")
-    failures = _read_or_empty(spark, failures_dir, "url string, error string")
-    journal = _read_or_empty(spark, journal_dir, _JOURNAL_SCHEMA)
+    visited = read_or_empty(spark, visited_dir, "url string")
+    failures = read_or_empty(spark, failures_dir, "url string, error string")
+    journal = read_or_empty(spark, journal_dir, _JOURNAL_SCHEMA)
     stats = {
         "pages_found": visited.count(),
         "articles": articles.count(),

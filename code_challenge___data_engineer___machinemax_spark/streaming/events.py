@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..tables import read_parquet
+from .replay import drain
 
 
 def read_event_stream(
@@ -175,11 +176,7 @@ def stream_upsert_to_store(
     writer = events.writeStream.outputMode("update").foreachBatch(merge)
     if checkpoint_location:
         writer = writer.option("checkpointLocation", checkpoint_location)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(writer)
 
 
 #: hash-bucket fanout of the state store layout. At 100 TB of state this is
@@ -313,22 +310,6 @@ def purchases_with_recent_view(
             f"p_user = v_user AND v_ts >= p_ts - INTERVAL {horizon} AND v_ts <= p_ts"
         ),
     ).select("p_user", "p_ts", "purchase_id", "v_ts", "view_id")
-
-
-def run_to_memory(df: DataFrame, name: str, output_mode: str) -> None:
-    """Drive a finite file-stream to completion into an in-memory table
-    (spark.sql(f'SELECT * FROM {name}') afterwards)."""
-    q = (
-        df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def type_running_totals_tws(events: DataFrame) -> DataFrame:

@@ -28,17 +28,17 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from ..operators.dedup import text_digest
 from ..sources.jsonl import DOCUMENT_SCHEMA
+from .replay import drain, read_or_empty
 
-
-def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    try:
-        return spark.read.schema(schema).parquet(path)
-    except AnalysisException:
-        return spark.createDataFrame([], schema)
+#: the ``corpus/`` table of the two document ingests
+CORPUS_SCHEMA = (
+    "doc_id long, text string, lang string, source string, n_chars long, fingerprint string"
+)
+#: the ``corpus/`` table of :func:`vector_admission_stream`
+ADMITTED_VECTOR_SCHEMA = "vec_id long, label int"
 
 
 def dedup_ingest_stream(spark: SparkSession, landing_dir: str, store_dir: str) -> dict[str, int]:
@@ -75,7 +75,7 @@ def dedup_ingest_stream(spark: SparkSession, landing_dir: str, store_dir: str) -
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        seen = _read_or_empty(sess, fp_dir, "fingerprint string")
+        seen = read_or_empty(sess, fp_dir, "fingerprint string")
         # materialize so the fingerprint append below can't feed back into
         # this batch's own anti-join (same discipline as the crawl stream's
         # visited table, crawl_stream.py)
@@ -96,27 +96,18 @@ def dedup_ingest_stream(spark: SparkSession, landing_dir: str, store_dir: str) -
         fresh.write.mode("append").parquet(corpus_dir)
         fresh.select("fingerprint").write.mode("append").parquet(fp_dir)
 
-    stream = spark.readStream.schema(DOCUMENT_SCHEMA).json(landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(process)
+    drain(
+        spark.readStream.schema(DOCUMENT_SCHEMA)
+        .json(landing_dir)
+        .writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
-    corpus = _read_or_empty(spark, corpus_dir, _CORPUS_SCHEMA)
+    corpus = read_or_empty(spark, corpus_dir, CORPUS_SCHEMA)
     return {
         "corpus_docs": corpus.count(),
         "distinct_fingerprints": corpus.select("fingerprint").distinct().count(),
     }
-
-
-_CORPUS_SCHEMA = (
-    "doc_id long, text string, lang string, source string, n_chars long, fingerprint string"
-)
 
 
 def corpus_view(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -130,7 +121,7 @@ def corpus_view(spark: SparkSession, store_dir: str) -> DataFrame:
     exactly-once view)."""
     from pyspark.sql import Window as W
 
-    corpus = _read_or_empty(spark, os.path.join(store_dir, "corpus"), _CORPUS_SCHEMA)
+    corpus = read_or_empty(spark, os.path.join(store_dir, "corpus"), CORPUS_SCHEMA)
     w = W.partitionBy("fingerprint").orderBy(F.asc("doc_id"), F.asc("source"))
     return (
         corpus.withColumn("__rn", F.row_number().over(w))
@@ -202,7 +193,7 @@ def near_dedup_ingest_stream(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        seen_digests = _read_or_empty(sess, digest_dir, "fingerprint string")
+        seen_digests = read_or_empty(sess, digest_dir, "fingerprint string")
         fresh = batch.join(seen_digests, "fingerprint", "left_anti").localCheckpoint()
         if not fresh.take(1):
             return
@@ -213,7 +204,7 @@ def near_dedup_ingest_stream(
             .localCheckpoint()
         )
         touched = [r.bucket for r in banded.select("bucket").distinct().collect()]
-        seen_bands = _read_or_empty(
+        seen_bands = read_or_empty(
             sess, bands_dir, "band int, band_key string, bucket int"
         )
         if touched:
@@ -251,18 +242,14 @@ def near_dedup_ingest_stream(
         admitted.select("fingerprint").write.mode("append").parquet(digest_dir)
         banded.write.partitionBy("bucket").mode("append").parquet(bands_dir)
 
-    stream = spark.readStream.schema(DOCUMENT_SCHEMA).json(landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(process)
+    drain(
+        spark.readStream.schema(DOCUMENT_SCHEMA)
+        .json(landing_dir)
+        .writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
-    corpus = _read_or_empty(spark, corpus_dir, _CORPUS_SCHEMA)
+    corpus = read_or_empty(spark, corpus_dir, CORPUS_SCHEMA)
     return {"corpus_docs": corpus.count()}
 
 
@@ -333,7 +320,7 @@ def vector_admission_stream(
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         sess = batch_df.sparkSession
-        seen = _read_or_empty(sess, seen_dir, "vec_id long")
+        seen = read_or_empty(sess, seen_dir, "vec_id long")
         fresh = (
             batch_df.filter(F.col("embedding").isNotNull())
             .join(seen, "vec_id", "left_anti")
@@ -343,10 +330,10 @@ def vector_admission_stream(
         if not fresh.take(1):
             return
         new_bands = band_rows(fresh).localCheckpoint()
-        hist_bands = _read_or_empty(
+        hist_bands = read_or_empty(
             sess, bands_dir, "vec_id long, band_id int, band_val long"
         ).select(F.col("vec_id").alias("__old"), "band_id", "band_val")
-        hist_sigs = _read_or_empty(
+        hist_sigs = read_or_empty(
             sess, sigs_dir, "vec_id long, __sig array<bigint>"
         ).select(F.col("vec_id").alias("__old"), F.col("__sig").alias("__osig"))
         rejected = (
@@ -400,18 +387,12 @@ def vector_admission_stream(
         new_bands.write.mode("append").parquet(bands_dir)
         fresh.select("vec_id").write.mode("append").parquet(seen_dir)
 
-    stream = spark.readStream.schema(
-        "vec_id long, embedding array<float>, label int"
-    ).json(landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(process)
+    drain(
+        spark.readStream.schema("vec_id long, embedding array<float>, label int")
+        .json(landing_dir)
+        .writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
-    corpus = _read_or_empty(spark, corpus_dir, "vec_id long, label int")
+    corpus = read_or_empty(spark, corpus_dir, ADMITTED_VECTOR_SCHEMA)
     return {"admitted": corpus.count()}

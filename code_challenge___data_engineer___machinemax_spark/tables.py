@@ -134,10 +134,6 @@ def _ltz(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(
     spark: SparkSession, sf_dir: str, suffix: str = "", replace: bool = True
 ) -> list[str]:

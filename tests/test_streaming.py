@@ -8,10 +8,10 @@ from pyspark.sql import functions as F
 from code_challenge___data_engineer___machinemax_spark.streaming.events import (
     dedup_stream,
     read_event_stream,
-    run_to_memory,
     user_running_totals,
     windowed_counts,
 )
+from code_challenge___data_engineer___machinemax_spark.streaming.replay import run_to_memory
 from code_challenge___data_engineer___machinemax_spark.tables import load_table
 
 
@@ -78,10 +78,8 @@ def test_append_mode_watermark_drops_late_rows(spark, tmp_path):
     import datetime as dt
     import os
 
-    from code_challenge___data_engineer___machinemax_spark.streaming.events import (
-        run_to_memory,
-        windowed_counts,
-    )
+    from code_challenge___data_engineer___machinemax_spark.streaming.events import windowed_counts
+    from code_challenge___data_engineer___machinemax_spark.streaming.replay import run_to_memory
 
     base = dt.datetime(2024, 1, 1, 0, 0, 0)
     schema = "event_id long, user_id long, event_type string, value double, ts timestamp"
@@ -139,10 +137,8 @@ def test_append_session_windows_merge_finalize_and_boundary(spark, tmp_path):
     import os
     import shutil
 
-    from code_challenge___data_engineer___machinemax_spark.streaming.events import (
-        run_to_memory,
-        session_windows,
-    )
+    from code_challenge___data_engineer___machinemax_spark.streaming.events import session_windows
+    from code_challenge___data_engineer___machinemax_spark.streaming.replay import run_to_memory
 
     base = dt.datetime(2024, 1, 1, 8, 0, 0)
     schema = "event_id long, user_id long, event_type string, value double, ts timestamp"

@@ -12,10 +12,10 @@ from code_challenge___data_engineer___machinemax_spark.crawl.ingest import Artic
 from code_challenge___data_engineer___machinemax_spark.schemas import ARTICLE
 from code_challenge___data_engineer___machinemax_spark.streaming.events import (
     read_event_stream,
-    run_to_memory,
     session_windows,
     stream_upsert_to_store,
 )
+from code_challenge___data_engineer___machinemax_spark.streaming.replay import run_to_memory
 from code_challenge___data_engineer___machinemax_spark.tables import load_table
 
 
@@ -471,9 +471,7 @@ def test_transform_with_state_totals_or_gate(spark, sf_dir):
 
     import shutil, tempfile
 
-    from code_challenge___data_engineer___machinemax_spark.streaming.events import (
-        run_to_memory,
-    )
+    from code_challenge___data_engineer___machinemax_spark.streaming.replay import run_to_memory
     from pyspark.sql import functions as F
 
     base = tempfile.mkdtemp(prefix="ccdem_tws_test_")
