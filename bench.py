@@ -2,7 +2,8 @@
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
 Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric": "...", "value": N, "unit": "sec", "queries": {...},
+   "families": {...}, "ingest": {...}, "sf": ...}
 
 Protocol (round 6): per-family fresh-session measurement. The r5 bench ran
 all 62 headline queries in ONE JVM; the driver's published numbers then
@@ -18,12 +19,15 @@ ASYNC unpersist then ran inside the NEXT timed region.
 So the published protocol now matches the steady-state protocol the
 isolated forensics used: the parent process (no Spark) runs each query
 FAMILY in its own subprocess with a fresh JVM, family-appropriate warm-up
-(tables, the pandas-UDF worker pool, the family's persisted stores — all
-untimed), and an explicit post-warm-up settle (JVM GC + drain pause) so
-no cleanup bleeds into the timed region. Family sessions are small
+(tables, the pandas-UDF worker pool — untimed), the family's persisted
+store builds, and an explicit post-warm-up settle (JVM GC + drain pause)
+so no cleanup bleeds into the timed region. Family sessions are small
 (3-13 queries), so no query sits on an hour of accumulated session state.
-Store layouts are disk-persisted and signature-keyed (stores.py), so
-priming in one family session is visible to the next.
+
+Ingest is its own layer: each run points SPARK_GRAFT_STORE_DIR at a fresh
+directory (removed at exit), so every family's ``ensure_*`` builds run
+cold, each timed on its own and published under "ingest" beside the
+query map; the *_from_store queries then time the read path only.
 
 Each query is executed twice and the SECOND run is published — the same
 discard-run-0 discipline every SCALE.md isolated A/B since r4 has used
@@ -42,8 +46,10 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
+import tempfile
 import time
 
 # module-level so the pandas-UDF type hints (stringified by
@@ -124,18 +130,8 @@ FAMILIES: list[tuple[str, list[str]]] = [
         "dedup",
         [
             "minhash_signatures",
-            # round-9 rebalance (VERDICT r8 #4, the graphrec pattern): the
-            # four self-contained pair emitters each have a published L4
-            # *_from_store twin (or, for CDC, a pure ingest-guard role) —
-            # the *_from_store read paths are the family headline, the
-            # emitters rebuild banding/fingerprinting purely as ingest
-            # regression guards. ONE stays in the timed bench per round
-            # (round-robin over _DEDUP_GUARD_ROTATION below — round 10
-            # advances to index 1, near_dup_pairs_minhash); the other
-            # three run as sf0.01 timed guards in
-            # tests/test_ingest_guards.py plus the full oracle parity
-            # sweep. Coverage unchanged; only the publication tier moved
-            # (COVERAGE.md dedup notes).
+            # the *_from_store read paths are the family headline; their
+            # store builds are timed as this family's "ingest" layer
             "near_dup_pairs_minhash",
             "near_dup_pairs_minhash_from_store",
             "doc_overlap_winnowing_from_store",
@@ -195,14 +191,7 @@ FAMILIES: list[tuple[str, list[str]]] = [
             "ann_topk_lsh_from_store",
             "ann_recall_eval",
             "pq_adc_topk_from_store",
-            # round-9 rebalance (VERDICT r8 #5): the three self-contained
-            # encode+probe paths (pq_adc_topk, ivf_pq_topk,
-            # ivf_pq_residual_topk) all have published L3/L7 store twins —
-            # ONE stays in the timed bench per round (round-robin over
-            # _VECTOR_GUARD_ROTATION below — round 10 advances to index 1,
-            # ivf_pq_residual_topk); the other two run as sf0.01 timed
-            # guards in tests/test_ingest_guards.py plus the oracle parity
-            # sweep.
+            # the self-contained residual IVF-PQ encode + probe
             "ivf_pq_residual_topk",
             # round-8: the L7 residual layout read path (coarse assign +
             # residual encode ran at ingest; the probe is partition-pruned
@@ -236,18 +225,9 @@ FAMILIES: list[tuple[str, list[str]]] = [
         "graphrec",
         [
             "association_rules",
-            # round-8 rebalance (VERDICT r7 #6): the five *_from_store
-            # read paths are the family headline — they are the plans a
-            # deployment serves off the L9 layout. The five self-contained
-            # twins each rebuild the basket join purely as ingest
-            # regression guards; ONE stays in the timed bench per round
-            # (round-robin over _GRAPHREC_GUARD_ROTATION below — round 8
-            # published item_item_similarity; round 9 recsys_hitrate_eval;
-            # round 10 advances to index 2, triangle_participation) and
-            # the other four run as sf0.01 timed guards in
-            # tests/test_ingest_guards.py plus the full oracle parity
-            # sweep. Coverage is unchanged; only the publication tier
-            # moved (COVERAGE.md graphrec notes).
+            # the five *_from_store read paths are the family headline —
+            # the plans a deployment serves off the L9 layout, whose build
+            # is timed as this family's "ingest" layer
             "triangle_participation",
             "item_item_similarity_from_store",
             "recsys_hitrate_eval_from_store",
@@ -271,8 +251,9 @@ FAMILIES: list[tuple[str, list[str]]] = [
 # flat view of the headline set (scripts/run_scale_sweep.py iterates it)
 HEADLINE: list[str] = [q for _, _members in FAMILIES for q in _members]
 
-# persisted-store primers per family (ingest-time work a production
-# deployment does once when data lands — warm-up, never timed)
+# persisted-store primers per family: the ingest-time work a production
+# deployment does once when data lands. Each build is timed on its own and
+# published under "ingest"; none is inside a query's timed region.
 _FAMILY_STORES: dict[str, list[str]] = {
     "search": ["ensure_bm25_index_store"],
     "dedup": [
@@ -291,37 +272,6 @@ _FAMILY_STORES: dict[str, list[str]] = {
     ],
     "graphrec": ["ensure_copurchase_store"],
 }
-
-# Round-robin pools for each family's ONE timed self-contained ingest
-# guard (VERDICT r7 #6 for graphrec; VERDICT r8 #4/#5 extend the same
-# rebalance to dedup and vector): per round, exactly one member of each
-# pool is published in the timed bench (advance the index by one per
-# round); the rest run as sf0.01 timed guards in
-# tests/test_ingest_guards.py, and ALL stay in the oracle parity sweep.
-_GRAPHREC_GUARD_ROTATION: list[str] = [
-    "item_item_similarity",      # round 8
-    "recsys_hitrate_eval",       # round 9
-    "triangle_participation",    # round 10 (in bench above)
-    "adamic_adar_links",
-    "label_propagation_seeded",
-]
-_DEDUP_GUARD_ROTATION: list[str] = [
-    "doc_overlap_winnowing",     # round 9
-    "near_dup_pairs_minhash",    # round 10 (in bench above)
-    "cdc_chunk_dedup_report",
-    "simhash_near_dup_pairs",
-]
-_VECTOR_GUARD_ROTATION: list[str] = [
-    "ivf_pq_topk",               # round 9
-    "ivf_pq_residual_topk",      # round 10 (in bench above)
-    "pq_adc_topk",
-]
-GUARD_ROTATIONS: dict[str, list[str]] = {
-    "graphrec": _GRAPHREC_GUARD_ROTATION,
-    "dedup": _DEDUP_GUARD_ROTATION,
-    "vector": _VECTOR_GUARD_ROTATION,
-}
-
 
 def _settle(spark, seconds: float = 1.5) -> None:
     """Drain warm-up debris before the timed region: collect Python refs,
@@ -370,14 +320,17 @@ def _run_family(name: str) -> None:
         _warm("id")
     ).collect()
 
-    # Prime this family's persisted layouts (DEPLOY.md L2/L3/L4) — the
-    # *_from_store entries then measure the probe/pair-gen read path,
-    # which is the plan a 100 TB deployment actually runs.
-    if name in _FAMILY_STORES:
-        from code_challenge___data_engineer___machinemax_spark import stores
+    # Build this family's persisted layouts (DEPLOY.md L2-L10) into the
+    # run's empty store dir, timing each build — the *_from_store entries
+    # then measure the probe/pair-gen read path, which is the plan a
+    # 100 TB deployment actually runs.
+    from code_challenge___data_engineer___machinemax_spark import stores
 
-        for fn in _FAMILY_STORES[name]:
-            getattr(stores, fn)(spark, sf_dir)
+    ingest: dict[str, float] = {}
+    for fn in _FAMILY_STORES.get(name, []):
+        t0 = time.perf_counter()
+        getattr(stores, fn)(spark, sf_dir)
+        ingest[fn] = round(time.perf_counter() - t0, 3)
 
     _settle(spark)
 
@@ -388,43 +341,7 @@ def _run_family(name: str) -> None:
         queries[qname](spark, sf_dir).collect()  # run 1: steady state
         timings[qname] = round(time.perf_counter() - t0, 3)
 
-    print(json.dumps({"family": name, "queries": timings}))
-
-
-def _run_guards() -> None:
-    """Round-11 (VERDICT r10 #7 — guard-rotation visibility): time every
-    rotation-pool member NOT published in this round's headline bench at
-    sf0.01 (the same tier tests/test_ingest_guards.py ceilings), so the
-    round-robin that moves a heavy self-contained ingest query out of the
-    timed bench can be audited round-over-round instead of trusted. Same
-    discipline as the families: fresh JVM, untimed warm-up, run 0
-    discarded. Published additively under a "guards" key — the one-line
-    JSON contract and the "queries" map are untouched."""
-    from code_challenge___data_engineer___machinemax_spark import plans
-    from code_challenge___data_engineer___machinemax_spark.session import get_spark
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    guard_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
-    if not os.path.isdir(guard_dir):
-        guard_dir = sf_dir  # no sf0.01 sibling: fall back to the bench SF
-    spark = get_spark("ccdem-bench-guards")
-    queries = plans.all_queries()
-    tier2 = sorted(
-        {q for pool in GUARD_ROTATIONS.values() for q in pool} - set(HEADLINE)
-    )
-    queries["point_lookup_order"](spark, guard_dir).collect()
-    from code_challenge___data_engineer___machinemax_spark.tables import TABLES, load_table
-
-    for t in TABLES:
-        load_table(spark, guard_dir, t).limit(1).collect()
-    _settle(spark)
-    timings: dict[str, float] = {}
-    for qname in tier2:
-        queries[qname](spark, guard_dir).collect()  # run 0: codegen warm
-        t0 = time.perf_counter()
-        queries[qname](spark, guard_dir).collect()
-        timings[qname] = round(time.perf_counter() - t0, 3)
-    print(json.dumps({"guards": timings, "guards_sf_dir": guard_dir}))
+    print(json.dumps({"family": name, "queries": timings, "ingest": ingest}))
 
 
 def main() -> None:
@@ -433,45 +350,33 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     families: dict[str, float] = {}
-    for name, members in FAMILIES:
-        out = None
-        for _attempt in (1, 2):  # one retry absorbs a flaky JVM start
-            proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--family", name],
-                stdout=subprocess.PIPE,
-                stderr=subprocess.DEVNULL,
-                text=True,
-            )
-            lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
-            if proc.returncode == 0 and lines:
-                out = json.loads(lines[-1])
-                break
-        if out is None:
-            raise RuntimeError(f"bench family {name!r} failed twice")
-        assert set(out["queries"]) == set(members), name
-        timings.update(out["queries"])
-        families[name] = round(sum(out["queries"].values()), 3)
-
-    # sf0.01 timings of the UNPUBLISHED rotation-pool members (additive —
-    # "value"/"queries" are exactly the headline totals as before); a guard
-    # failure does not fail the bench: it publishes an empty map plus
-    # "guards_error" with the return code and the tail of the run's stderr
-    guards: dict[str, float] = {}
-    guards_sf_dir = None
-    guards_error = None
-    proc = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--guards"],
-        stdout=subprocess.PIPE,
-        stderr=subprocess.PIPE,
-        text=True,
-    )
-    glines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
-    if proc.returncode == 0 and glines:
-        gout = json.loads(glines[-1])
-        guards = gout.get("guards", {})
-        guards_sf_dir = gout.get("guards_sf_dir")
-    else:
-        guards_error = {"returncode": proc.returncode, "stderr_tail": proc.stderr[-2048:]}
+    ingest: dict[str, float] = {}
+    # every run builds its stores cold in its own directory, so "ingest"
+    # always times a full build and no store outlives the run
+    store_dir = tempfile.mkdtemp(prefix="ccdem-bench-stores-")
+    os.environ["SPARK_GRAFT_STORE_DIR"] = store_dir
+    try:
+        for name, members in FAMILIES:
+            out = None
+            for _attempt in (1, 2):  # one retry absorbs a flaky JVM start
+                proc = subprocess.run(
+                    [sys.executable, os.path.abspath(__file__), "--family", name],
+                    stdout=subprocess.PIPE,
+                    stderr=subprocess.DEVNULL,
+                    text=True,
+                )
+                lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
+                if proc.returncode == 0 and lines:
+                    out = json.loads(lines[-1])
+                    break
+            if out is None:
+                raise RuntimeError(f"bench family {name!r} failed twice")
+            assert set(out["queries"]) == set(members), name
+            timings.update(out["queries"])
+            families[name] = round(sum(out["queries"].values()), 3)
+            ingest.update(out["ingest"])
+    finally:
+        shutil.rmtree(store_dir, ignore_errors=True)
 
     total = round(sum(timings.values()), 3)
     record = {
@@ -480,20 +385,15 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "families": families,
-        "guards": guards,
-        "guards_sf_dir": guards_sf_dir,
+        "ingest": ingest,
         "protocol": "family-steady",
         "sf": sf,
     }
-    if guards_error is not None:
-        record["guards_error"] = guards_error
     print(json.dumps(record))
 
 
 if __name__ == "__main__":
     if len(sys.argv) == 3 and sys.argv[1] == "--family":
         _run_family(sys.argv[2])
-    elif len(sys.argv) == 2 and sys.argv[1] == "--guards":
-        _run_guards()
     else:
         main()

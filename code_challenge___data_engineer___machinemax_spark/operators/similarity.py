@@ -56,6 +56,22 @@ def cosine_topk(
     )
 
 
+def rescore_topk(
+    df: DataFrame, cand_ids: DataFrame, query: DataFrame, id_col: str, vec_col: str, k: int
+) -> DataFrame:
+    """Exact cosine top-k over the rows of ``df`` whose id is in
+    ``cand_ids`` — the rescoring tail of every candidate-generating ANN
+    probe (in-plan LSH, multiprobe, the L3 store probe). ``query`` is the
+    1-row ``__qvec`` frame, broadcast; ties break on the id."""
+    cand = df.join(cand_ids, id_col, "left_semi").crossJoin(F.broadcast(query))
+    return (
+        cand.withColumn("cosine", F.round(cosine(F.col(vec_col), F.col("__qvec")), 6))
+        .select(id_col, "cosine")
+        .orderBy(F.desc("cosine"), F.asc(id_col))
+        .limit(k)
+    )
+
+
 def hyperplane(plane: int, dim: int) -> list[float]:
     """Deterministic pseudo-random hyperplane components in [-1, 1).
 
@@ -84,6 +100,35 @@ def _srp_buckets_udf(tables: list[list[list[float]]]):
         return pd.Series(list(vals))
 
     return buckets
+
+
+def srp_planes(n_planes: int = 8, n_tables: int = 8, dim: int = 64) -> list[list[list[float]]]:
+    """The SRP hyperplane set, (T, P, D): plane ``i`` of hash table ``t``
+    is the :func:`hyperplane` numbered ``t * 1009 + i``. Every SRP
+    bucketing (the corpus band rows, the L3 store, the driver-side query
+    buckets) uses this one set, so their buckets agree."""
+    return [
+        [hyperplane(t * 1009 + i, dim) for i in range(n_planes)] for t in range(n_tables)
+    ]
+
+
+def srp_band_rows(
+    df: DataFrame,
+    vec_col: str,
+    *keep: str,
+    n_planes: int = 8,
+    n_tables: int = 8,
+    dim: int = 64,
+    names: tuple[str, str] = ("__t", "__bucket"),
+) -> DataFrame:
+    """One ``(*keep, t, bucket)`` row per (row, hash table): the vector's
+    bucket in each of the ``n_tables`` tables from one Arrow-batched numpy
+    matmul (:func:`_srp_buckets_udf`), posexploded. A JVM expression tree
+    with 64 literal-array dot products per row is codegen poison (measured
+    13 s -> ~1 s on 5k x 64-dim); this is the vectorized-UDF slot the hot
+    path earns. Deterministic: the same :func:`srp_planes` everywhere."""
+    buckets = _srp_buckets_udf(srp_planes(n_planes, n_tables, dim))
+    return df.select(*keep, F.posexplode(buckets(F.col(vec_col))).alias(*names))
 
 
 def ivf_assign(
@@ -191,12 +236,8 @@ def srp_near_dup_pairs(
     (dedup.lsh_candidate_pairs): at 100 TB a degenerate bucket (zero
     vectors, spam clusters) otherwise generates B^2 join output.
     """
-    tables = [
-        [hyperplane(t * 1009 + i, dim) for i in range(n_planes)] for t in range(n_tables)
-    ]
-    buckets_udf = _srp_buckets_udf(tables)
-    banded = df.select(
-        F.col(id_col), F.posexplode(buckets_udf(F.col(vec_col))).alias("__t", "__bucket")
+    banded = srp_band_rows(
+        df, vec_col, id_col, n_planes=n_planes, n_tables=n_tables, dim=dim
     )
     banded = _drop_hot_keys(banded, ["__t", "__bucket"], max_bucket_size)
     a = banded.alias("a")
@@ -264,30 +305,15 @@ def ann_topk_lsh(
     (table, bucket) join replaces the full scan: ~n·T/2^n_planes candidate
     rows instead of n scored vectors.
     """
-    tables = [
-        [hyperplane(t * 1009 + i, dim) for i in range(n_planes)] for t in range(n_tables)
-    ]
-    # All T*P projections in one Arrow-batched numpy matmul: a JVM expression
-    # tree with 64 literal-array dot products per row is codegen poison
-    # (measured 13s -> ~1s on 5k x 64-dim); this is the vectorized-Pandas-UDF
-    # slot the hot path earns. Deterministic: same hyperplanes both sides.
-    buckets_udf = _srp_buckets_udf(tables)
-    banded = df.select(
-        F.col(id_col), F.posexplode(buckets_udf(F.col(vec_col))).alias("__t", "__bucket")
-    )
-    qb = query.select(F.posexplode(buckets_udf(F.col("__qvec"))).alias("__t", "__bucket"))
+    shape = {"n_planes": n_planes, "n_tables": n_tables, "dim": dim}
+    banded = srp_band_rows(df, vec_col, id_col, **shape)
+    qb = srp_band_rows(query, "__qvec", **shape)
     cand_ids = (
         banded.join(F.broadcast(qb), ["__t", "__bucket"], "inner")
         .select(id_col)
         .distinct()
     )
-    cand = df.join(cand_ids, id_col, "left_semi").crossJoin(F.broadcast(query))
-    return (
-        cand.withColumn("cosine", F.round(cosine(F.col(vec_col), F.col("__qvec")), 6))
-        .select(id_col, "cosine")
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+    return rescore_topk(df, cand_ids, query, id_col, vec_col, k)
 
 
 # --- product quantization (PQ) -------------------------------------------
@@ -514,18 +540,9 @@ def ann_topk_lsh_multiprobe(
     one Arrow-batched matmul, equi-join on (table, bucket), distinct,
     rescore) — the ONLY change is the broadcast probe frame growing from
     T rows to T x (1 + P)."""
-    tables = [
-        [hyperplane(t * 1009 + i, dim) for i in range(n_planes)]
-        for t in range(n_tables)
-    ]
-    buckets_udf = _srp_buckets_udf(tables)
-    banded = df.select(
-        F.col(id_col),
-        F.posexplode(buckets_udf(F.col(vec_col))).alias("__t", "__bucket"),
-    )
-    qb = query.select(
-        F.posexplode(buckets_udf(F.col("__qvec"))).alias("__t", "__b0")
-    )
+    shape = {"n_planes": n_planes, "n_tables": n_tables, "dim": dim}
+    banded = srp_band_rows(df, vec_col, id_col, **shape)
+    qb = srp_band_rows(query, "__qvec", **shape, names=("__t", "__b0"))
     # probe 0 = the exact bucket; probe i = flip hyperplane i-1's bit
     probes = qb.select(
         "__t",
@@ -541,13 +558,7 @@ def ann_topk_lsh_multiprobe(
         .select(id_col)
         .distinct()
     )
-    cand = df.join(cand_ids, id_col, "left_semi").crossJoin(F.broadcast(query))
-    return (
-        cand.withColumn("cosine", F.round(cosine(F.col(vec_col), F.col("__qvec")), 6))
-        .select(id_col, "cosine")
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+    return rescore_topk(df, cand_ids, query, id_col, vec_col, k)
 
 
 def binary_signature(vec_col: str) -> Column:

@@ -18,6 +18,7 @@ from ..operators.dedup import (
     simhash,
 )
 from ..tables import load_table, read_parquet
+from .registry import get as _get_registered
 from .registry import query
 
 
@@ -1137,23 +1138,37 @@ def near_dup_sampling_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     tracks a planted dup rate). Exact integer weights (1e6 DIV size) so
     the oracle replays bit-identically."""
     d = load_table(spark, sf_dir, "documents")
+    return _sampling_weights(d, _closure_membership(d))
+
+
+def _closure_membership(d: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id, cluster_size) for every document in at least
+    one verified near-dup pair: the converged closure (`_closure_labels`)
+    with each cluster's size. ``ensure_neardup_cluster_store`` persists
+    exactly this frame."""
     labels = _closure_labels(d)
-    sizes = labels.groupBy("lbl").agg(F.count("*").cast("bigint").alias("n"))
-    mem = labels.join(sizes, "lbl").select(
-        F.col("node").alias("doc_id"),
-        F.col("lbl").alias("__cluster"),
-        F.col("n").alias("__size"),
+    sizes = labels.groupBy("lbl").agg(F.count("*").cast("bigint").alias("cluster_size"))
+    return labels.join(sizes, "lbl").select(
+        F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id"), "cluster_size"
     )
+
+
+def _sampling_weights(d: DataFrame, mem: DataFrame) -> DataFrame:
+    """SoftDeDup readout of a cluster membership ``mem`` (doc_id,
+    cluster_id, cluster_size): every document of ``d``, a document in no
+    pair as its own cluster of one, weighted 1e6 DIV cluster size."""
     return (
         d.select("doc_id")
         .join(mem, "doc_id", "left")
         .select(
             "doc_id",
-            F.coalesce("__cluster", "doc_id").alias("cluster_id"),
-            F.coalesce("__size", F.lit(1)).cast("bigint").alias("cluster_size"),
-            F.expr("CAST(1000000 DIV COALESCE(__size, 1) AS BIGINT)").alias(
-                "weight_ppm"
-            ),
+            F.coalesce("cluster_id", "doc_id").alias("cluster_id"),
+            F.coalesce("cluster_size", F.lit(1))
+            .cast("bigint")
+            .alias("cluster_size"),
+            F.expr(
+                "CAST(1000000 DIV COALESCE(cluster_size, 1) AS BIGINT)"
+            ).alias("weight_ppm"),
         )
     )
 
@@ -1302,20 +1317,25 @@ def cluster_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation to the fixpoint, and tests/test_dedup.py pins the
     leakage invariant with BOTH clique-shaped and 8-hop-chain-shaped
     planted clusters: no cluster straddles two splits."""
+    d = load_table(spark, sf_dir, "documents")
+    mem = _closure_labels(d).select(
+        F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id")
+    )
+    return _cluster_split(d, mem)
+
+
+def _cluster_split(d: DataFrame, mem: DataFrame) -> DataFrame:
+    """The cluster-aware split readout of a membership ``mem`` (doc_id,
+    cluster_id, ...): every document of ``d`` keyed by its cluster (a
+    document in no pair by itself), md5-bucketed 80/10/10, one row per
+    split."""
     from .pipeline_queries import hash_split_bucket
 
-    d = load_table(spark, sf_dir, "documents")
-    labels = _closure_labels(d)
-    mem = labels.select(F.col("node").alias("doc_id"), F.col("lbl"))
-    doc_cluster = (
+    bucketed = (
         d.select("doc_id")
-        .join(mem, "doc_id", "left")
-        .select(
-            "doc_id", F.coalesce("lbl", "doc_id").alias("cluster_id")
-        )
-    )
-    bucketed = doc_cluster.withColumn(
-        "bucket", hash_split_bucket(F.col("cluster_id"))
+        .join(mem.select("doc_id", "cluster_id"), "doc_id", "left")
+        .select("doc_id", F.coalesce("cluster_id", "doc_id").alias("cluster_id"))
+        .withColumn("bucket", hash_split_bucket(F.col("cluster_id")))
     )
     split = (
         F.when(F.col("bucket") < 80, "train")
@@ -1498,18 +1518,7 @@ def doc_containment_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the self-contained twin's oracle verbatim: the L4 postings layout
     # caches the deterministic tokenize/explode/df/prefix stages, and the
     # pruning is lossless, so the verified pair set is identical
-    oracle=f"""
-    WITH t AS MATERIALIZED (
-        SELECT doc_id, list_distinct({tokenize_sql('text')}) AS toks
-        FROM documents
-    ), nz AS (SELECT *, len(toks) AS sz FROM t WHERE len(toks) > 0)
-    SELECT a.doc_id AS id_sub, b.doc_id AS id_super,
-           ROUND(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-                 / a.sz, 6) AS containment
-    FROM nz a JOIN nz b ON a.doc_id <> b.doc_id
-    WHERE ROUND(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-                / a.sz, 6) >= 0.8
-    """,
+    oracle=_get_registered("doc_containment_pairs").oracle,
 )
 def doc_containment_pairs_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`doc_containment_pairs` over the persisted L4 containment postings
@@ -1708,41 +1717,13 @@ def near_dup_sampling_weights_from_store(
 
     path = ensure_neardup_cluster_store(spark, sf_dir)
     mem = read_parquet(spark, path)
-    d = load_table(spark, sf_dir, "documents")
-    return (
-        d.select("doc_id")
-        .join(mem, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("cluster_id", "doc_id").alias("cluster_id"),
-            F.coalesce("cluster_size", F.lit(1))
-            .cast("bigint")
-            .alias("cluster_size"),
-            F.expr(
-                "CAST(1000000 DIV COALESCE(cluster_size, 1) AS BIGINT)"
-            ).alias("weight_ppm"),
-        )
-    )
+    return _sampling_weights(load_table(spark, sf_dir, "documents"), mem)
 
 
 @query(
     "cluster_aware_split_from_store",
     # the self-contained twin's oracle verbatim (store caches the closure)
-    oracle=_cluster_membership_sql() + """
-    SELECT CASE WHEN bucket < 80 THEN 'train'
-                WHEN bucket < 90 THEN 'val'
-                ELSE 'test' END AS split,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(COUNT(DISTINCT cluster_id) AS BIGINT) AS n_clusters,
-           CAST(SUM(bucket) AS BIGINT) AS bucket_sum
-    FROM (
-        SELECT cluster_id,
-               CAST(('0x' || substring(md5(CAST(cluster_id AS VARCHAR)), 1, 8))
-                    AS BIGINT) % 100 AS bucket
-        FROM doc_cluster
-    )
-    GROUP BY 1
-    """,
+    oracle=_get_registered("cluster_aware_split").oracle,
 )
 def cluster_aware_split_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`cluster_aware_split` over the persisted L4 cluster membership —
@@ -1752,31 +1733,10 @@ def cluster_aware_split_from_store(spark: SparkSession, sf_dir: str) -> DataFram
     The md5 in THIS plan is the split hash (one per document), never the
     shingle signature family. Same oracle as the self-contained twin."""
     from ..stores import ensure_neardup_cluster_store
-    from .pipeline_queries import hash_split_bucket
 
     path = ensure_neardup_cluster_store(spark, sf_dir)
     mem = read_parquet(spark, path)
-    d = load_table(spark, sf_dir, "documents")
-    bucketed = (
-        d.select("doc_id")
-        .join(mem.select("doc_id", "cluster_id"), "doc_id", "left")
-        .select("doc_id", F.coalesce("cluster_id", "doc_id").alias("cluster_id"))
-        .withColumn("bucket", hash_split_bucket(F.col("cluster_id")))
-    )
-    split = (
-        F.when(F.col("bucket") < 80, "train")
-        .when(F.col("bucket") < 90, "val")
-        .otherwise("test")
-    )
-    return (
-        bucketed.withColumn("split", split)
-        .groupBy("split")
-        .agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.countDistinct("cluster_id").cast("bigint").alias("n_clusters"),
-            F.sum("bucket").cast("bigint").alias("bucket_sum"),
-        )
-    )
+    return _cluster_split(load_table(spark, sf_dir, "documents"), mem)
 
 
 @query(

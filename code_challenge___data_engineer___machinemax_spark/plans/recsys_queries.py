@@ -240,6 +240,17 @@ def _last_pick(ol: DataFrame) -> DataFrame:
     )
 
 
+def _train_matrix(ol: DataFrame, lastpick: DataFrame) -> DataFrame:
+    """The leave-last-out training matrix: distinct (u, i) over each
+    customer's history minus every occurrence of their held item."""
+    return (
+        ol.join(lastpick, "u")
+        .filter(F.col("i") != F.col("held"))
+        .select("u", "i")
+        .distinct()
+    )
+
+
 def _item_item_report(co: DataFrame, counts: DataFrame) -> DataFrame:
     """Scoring tail shared by item_item_similarity and its _from_store
     twin: cosine over exact counts, stack() mirroring, top-3 window over
@@ -626,13 +637,7 @@ def recsys_hitrate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint pins each at its small post-reduction size: per-user
     # picks, distinct (u, i) pairs, and the floored co-count matrix.
     lastpick = _last_pick(ol).localCheckpoint()
-    train = (
-        ol.join(lastpick, "u")
-        .filter(F.col("i") != F.col("held"))
-        .select("u", "i")
-        .distinct()
-        .localCheckpoint()
-    )
+    train = _train_matrix(ol, lastpick).localCheckpoint()
     co = _cooccurrence(train).localCheckpoint()
     return _hitrate_report(lastpick, train, co)
 

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..operators.similarity import ann_topk_lsh, cosine, cosine_topk, l2_norm
+from ..operators.similarity import ann_topk_lsh, cosine, cosine_topk, l2_norm, rescore_topk
 from ..tables import load_table, read_parquet
 from .registry import get as _get_registered
 from .registry import query
@@ -154,23 +154,9 @@ def ann_topk_lsh_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_topk_lsh_from_store",
-    oracle=f"""
-    WITH {_SRP_BUCKETS_SQL},
-    qb AS (SELECT DISTINCT t, bucket FROM buckets WHERE vec_id = 0),
-    cand AS (
-      SELECT DISTINCT b.vec_id
-      FROM buckets b JOIN qb USING (t, bucket)
-      WHERE b.vec_id <> 0
-    ),
-    q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0)
-    SELECT e.vec_id,
-           ROUND({_DOT_SQL.format(a='e.embedding', b='qvec')}
-                 / (sqrt({_DOT_SQL.format(a='e.embedding', b='e.embedding')})
-                    * sqrt({_DOT_SQL.format(a='qvec', b='qvec')})), 6) AS cosine
-    FROM embeddings e JOIN cand USING (vec_id) CROSS JOIN q
-    ORDER BY cosine DESC, vec_id
-    LIMIT 10
-    """,
+    # the self-contained twin's oracle verbatim: identical hyperplanes, so
+    # identical candidates and scores
+    oracle=_get_registered("ann_topk_lsh").oracle,
 )
 def ann_topk_lsh_from_store_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`ann_topk_lsh` probing the persisted L3 SRP bucket table (DEPLOY.md
@@ -191,15 +177,7 @@ def ann_topk_lsh_from_store_query(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("vec_id") != 0
     )
     e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
-    cand = e.join(cand_ids, "vec_id", "left_semi").crossJoin(
-        F.broadcast(_query_df(spark, sf_dir))
-    )
-    return (
-        cand.withColumn("cosine", F.round(cosine(F.col("embedding"), F.col("__qvec")), 6))
-        .select("vec_id", "cosine")
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(10)
-    )
+    return rescore_topk(e, cand_ids, _query_df(spark, sf_dir), "vec_id", "embedding", 10)
 
 
 @query("embedding_near_dup_pairs", oracle=None)
@@ -545,16 +523,10 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a SAMPLE of queries (5 here), so its cost is bounded by the sample,
     not the corpus squared; at 100 TB the same plan holds with the sample
     broadcast unchanged."""
-    from ..operators.similarity import _srp_buckets_udf, hyperplane
+    from ..operators.similarity import srp_band_rows
 
     e = load_table(spark, sf_dir, "embeddings")
-    tables = [
-        [hyperplane(t * 1009 + i, 64) for i in range(8)] for t in range(8)
-    ]
-    buckets_udf = _srp_buckets_udf(tables)
-    buckets = e.select(
-        "vec_id", F.posexplode(buckets_udf(F.col("embedding"))).alias("__t", "__bucket")
-    )
+    buckets = srp_band_rows(e, "embedding", "vec_id")
     qb = buckets.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), "__t", "__bucket"
     )
@@ -641,16 +613,42 @@ _PQ_ORACLE_PREFIX = """
 """
 
 
-def _pq_codebook_and_parts(spark: SparkSession, sf_dir: str):
+def _pq_parts(e: DataFrame) -> DataFrame:
+    """The fixed-point subspace components (vec_id, m, pos, qv) of the
+    ``embeddings`` rows ``e``: M=8 subspaces of 8 dims, scale 1e4."""
     from ..operators.similarity import pq_components
 
-    e = load_table(spark, sf_dir, "embeddings")
-    parts = pq_components(e, "embedding", "vec_id", sub_dim=8, scale=10000)
+    return pq_components(e, "embedding", "vec_id", sub_dim=8, scale=10000)
+
+
+def _pq_query_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The components of the query vector (vec_id = 0) alone."""
+    return _pq_parts(load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0))
+
+
+def _pq_index(spark: SparkSession, sf_dir: str):
+    """The PQ build that ``ensure_pq_store`` persists and the self-contained
+    PQ queries run in-plan: the components of every vector, the codebook
+    (codeword j of every subspace = the components of vec_id j, j in 1..16,
+    as ``code_id, m, pos, cv``) and each corpus vector's code (the query
+    vector 0 excluded). Returns ``(parts, codebook, codes)``."""
+    from ..operators.similarity import pq_assign
+
+    parts = _pq_parts(load_table(spark, sf_dir, "embeddings"))
     codebook = (
         parts.filter(F.col("vec_id").between(1, 16))
         .select(F.col("vec_id").alias("code_id"), "m", "pos", F.col("qv").alias("cv"))
     )
-    return parts, codebook
+    codes = pq_assign(parts.filter(F.col("vec_id") != 0), codebook, "vec_id")
+    return parts, codebook, codes
+
+
+def _pq_query_table(qparts: DataFrame, codebook: DataFrame) -> DataFrame:
+    """The query's ADC distance table (m, code_id, d): its squared distance
+    to every codeword of every subspace (M x K rows)."""
+    from ..operators.similarity import pq_subspace_distances
+
+    return pq_subspace_distances(qparts, codebook, "vec_id").select("m", "code_id", "d")
 
 
 @query(
@@ -673,11 +671,7 @@ def pq_code_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output is M x K rows regardless of corpus size. Production stores
     the codes column (M bytes/vector, 32x smaller than the float vector);
     this histogram is its GROUP BY."""
-    from ..operators.similarity import pq_assign
-
-    parts, codebook = _pq_codebook_and_parts(spark, sf_dir)
-    corpus = parts.filter(F.col("vec_id") != 0)
-    codes = pq_assign(corpus, codebook, "vec_id")
+    _, _, codes = _pq_index(spark, sf_dir)
     return codes.groupBy("m", "code_id").agg(F.count("*").alias("n_vectors"))
 
 
@@ -709,14 +703,9 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     production the codes table is the IVF-partitioned store's payload
     (DEPLOY.md L3), so ADC runs after partition pruning."""
     from ..operators.similarity import pq_adc_topk as adc_topk
-    from ..operators.similarity import pq_assign, pq_subspace_distances
 
-    parts, codebook = _pq_codebook_and_parts(spark, sf_dir)
-    corpus = parts.filter(F.col("vec_id") != 0)
-    codes = pq_assign(corpus, codebook, "vec_id")
-    qtab = pq_subspace_distances(
-        parts.filter(F.col("vec_id") == 0), codebook, "vec_id"
-    ).select("m", "code_id", "d")
+    parts, codebook, codes = _pq_index(spark, sf_dir)
+    qtab = _pq_query_table(parts.filter(F.col("vec_id") == 0), codebook)
     return adc_topk(codes, qtab, "vec_id", k=10)
 
 
@@ -736,22 +725,12 @@ def pq_adc_topk_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
     from ..operators.similarity import pq_adc_topk as adc_topk
-    from ..operators.similarity import pq_components, pq_subspace_distances
     from ..stores import ensure_pq_store
 
     store = ensure_pq_store(spark, sf_dir)
     codebook = read_parquet(spark, _os.path.join(store, "codebook"))
     codes = read_parquet(spark, _os.path.join(store, "codes"))
-    qparts = pq_components(
-        load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0),
-        "embedding",
-        "vec_id",
-        sub_dim=8,
-        scale=10000,
-    )
-    qtab = pq_subspace_distances(qparts, codebook, "vec_id").select(
-        "m", "code_id", "d"
-    )
+    qtab = _pq_query_table(_pq_query_parts(spark, sf_dir), codebook)
     return adc_topk(codes, qtab, "vec_id", k=10)
 
 
@@ -1362,9 +1341,8 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the IVF-PQ result equals the full ADC ranking restricted to probed
     lists."""
     from ..operators.similarity import pq_adc_topk as adc_topk
-    from ..operators.similarity import pq_assign, pq_subspace_distances
 
-    parts, codebook = _pq_codebook_and_parts(spark, sf_dir)
+    parts, codebook, codes = _pq_index(spark, sf_dir)
     coarse = parts.filter(F.col("vec_id").between(1, 8)).select(
         F.col("vec_id").alias("list_id"), "m", "pos", F.col("qv").alias("lv")
     )
@@ -1388,12 +1366,8 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(2)
         .collect()
     ]
-    corpus = parts.filter(F.col("vec_id") != 0)
-    codes = pq_assign(corpus, codebook, "vec_id")
     cand = cassign.filter(F.col("list_id").isin(probes)).select("vec_id")
-    qtab = pq_subspace_distances(
-        parts.filter(F.col("vec_id") == 0), codebook, "vec_id"
-    ).select("m", "code_id", "d")
+    qtab = _pq_query_table(parts.filter(F.col("vec_id") == 0), codebook)
     return adc_topk(codes.join(cand, "vec_id", "left_semi"), qtab, "vec_id", k=10)
 
 
@@ -1493,10 +1467,34 @@ def ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (localCheckpoint) and feeds both quantizers; at deployment the
     residual codes live in the L3/L7 partitioned store exactly like the
     non-residual variant's."""
-    from ..operators.similarity import pq_components
+    parts = _pq_parts(load_table(spark, sf_dir, "embeddings")).localCheckpoint()
+    coarse, cdist, rcode, rcodes = _pq_residual_index(parts)
+    qprobe = (
+        cdist.filter(F.col("vec_id") == 0)
+        .orderBy("d", "list_id")
+        .limit(2)
+        .select("list_id")
+    )
+    qtab = _residual_query_table(
+        parts.filter(F.col("vec_id") == 0),
+        coarse.join(F.broadcast(qprobe), "list_id", "left_semi"),
+        rcode,
+    )
+    return _residual_adc_topk(
+        rcodes.join(F.broadcast(qprobe), "list_id", "left_semi"), qtab
+    )
 
-    e = load_table(spark, sf_dir, "embeddings")
-    parts = pq_components(e, "embedding", "vec_id", sub_dim=8, scale=10000).localCheckpoint()
+
+def _pq_residual_index(parts: DataFrame):
+    """The residual IVF-PQ build over the pinned components ``parts``,
+    shared by ``ivf_pq_residual_topk`` and ``ensure_pq_residual_store``:
+    the coarse codebook (list_id, m, pos, lv) = the components of vectors
+    1-8; every vector's squared distance to every list (vec_id, list_id,
+    d), pinned; each corpus vector's residual against its nearest list
+    (ties to the lower list_id); the residual codebook (code_id, m, pos,
+    cv) = the residuals of vectors 1-16; and each corpus vector's residual
+    code (vec_id, m, code_id, list_id). Returns
+    ``(coarse, cdist, rcode, rcodes)``."""
     coarse = parts.filter(F.col("vec_id").between(1, 8)).select(
         F.col("vec_id").alias("list_id"), "m", "pos", F.col("qv").alias("lv")
     )
@@ -1514,16 +1512,10 @@ def ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("__rn") == 1)
         .select("vec_id", "list_id")
     )
-    qprobe = (
-        cdist.filter(F.col("vec_id") == 0)
-        .orderBy("d", "list_id")
-        .limit(2)
-        .select("list_id")
-    )
     rparts = (
         parts.join(cassign, "vec_id")
         .join(F.broadcast(coarse), ["list_id", "m", "pos"])
-        .select("vec_id", "m", "pos", (F.col("qv") - F.col("lv")).alias("rv"))
+        .select("vec_id", "list_id", "m", "pos", (F.col("qv") - F.col("lv")).alias("rv"))
         .localCheckpoint()
     )
     rcode = rparts.filter(F.col("vec_id").between(1, 16)).select(
@@ -1532,30 +1524,40 @@ def ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rdiff = F.col("rv") - F.col("cv")
     rdists = (
         rparts.join(F.broadcast(rcode), ["m", "pos"])
-        .groupBy("vec_id", "m", "code_id")
+        .groupBy("vec_id", "list_id", "m", "code_id")
         .agg(F.sum(rdiff * rdiff).alias("d"))
     )
     w2 = W.partitionBy("vec_id", "m").orderBy("d", "code_id")
-    rassign = (
+    rcodes = (
         rdists.withColumn("__rn", F.row_number().over(w2))
         .filter(F.col("__rn") == 1)
-        .select("vec_id", "m", "code_id")
+        .select("vec_id", "m", "code_id", "list_id")
     )
-    qres = (
-        parts.filter(F.col("vec_id") == 0)
-        .crossJoin(F.broadcast(qprobe))
-        .join(F.broadcast(coarse), ["list_id", "m", "pos"])
-        .select("list_id", "m", "pos", (F.col("qv") - F.col("lv")).alias("rv"))
+    return coarse, cdist, rcode, rcodes
+
+
+def _residual_query_table(
+    qparts: DataFrame, coarse: DataFrame, rcode: DataFrame
+) -> DataFrame:
+    """The query's per-list residual ADC tables (list_id, m, code_id, d):
+    its residual against each list in ``coarse`` (the probed lists only),
+    squared-distanced to every residual codeword."""
+    rdiff = F.col("rv") - F.col("cv")
+    qres = qparts.join(F.broadcast(coarse), ["m", "pos"]).select(
+        "list_id", "m", "pos", (F.col("qv") - F.col("lv")).alias("rv")
     )
-    qtab = (
+    return (
         qres.join(F.broadcast(rcode), ["m", "pos"])
         .groupBy("list_id", "m", "code_id")
         .agg(F.sum(rdiff * rdiff).alias("d"))
     )
+
+
+def _residual_adc_topk(rcodes: DataFrame, qtab: DataFrame) -> DataFrame:
+    """ADC top-10 over the probed lists' residual codes: per vector, the
+    sum of its M table lookups in its own list's table."""
     return (
-        rassign.join(cassign, "vec_id")
-        .join(F.broadcast(qprobe), "list_id", "left_semi")
-        .join(F.broadcast(qtab), ["list_id", "m", "code_id"])
+        rcodes.join(F.broadcast(qtab), ["list_id", "m", "code_id"])
         .groupBy("vec_id")
         .agg(F.sum("d").cast("bigint").alias("adc_dist"))
         .orderBy("adc_dist", "vec_id")
@@ -1585,19 +1587,12 @@ def ivf_pq_residual_topk_from_store(spark: SparkSession, sf_dir: str) -> DataFra
     vector. Same oracle as `ivf_pq_residual_topk`."""
     import os as _os
 
-    from ..operators.similarity import pq_components
     from ..stores import ensure_pq_residual_store
 
     store = ensure_pq_residual_store(spark, sf_dir)
     coarse = read_parquet(spark, _os.path.join(store, "coarse"))
     rcode = read_parquet(spark, _os.path.join(store, "rcodebook"))
-    qparts = pq_components(
-        load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0),
-        "embedding",
-        "vec_id",
-        sub_dim=8,
-        scale=10000,
-    ).localCheckpoint()
+    qparts = _pq_query_parts(spark, sf_dir).localCheckpoint()
     cdiff = F.col("qv") - F.col("lv")
     probe_rows = (
         qparts.join(F.broadcast(coarse), ["m", "pos"])
@@ -1609,28 +1604,13 @@ def ivf_pq_residual_topk_from_store(spark: SparkSession, sf_dir: str) -> DataFra
         .collect()
     )
     probes = [r.list_id for r in probe_rows]
-    qres = (
-        qparts.join(
-            F.broadcast(coarse.filter(F.col("list_id").isin(probes))), ["m", "pos"]
-        )
-        .select("list_id", "m", "pos", (F.col("qv") - F.col("lv")).alias("rv"))
-    )
-    rdiff = F.col("rv") - F.col("cv")
-    qtab = (
-        qres.join(F.broadcast(rcode), ["m", "pos"])
-        .groupBy("list_id", "m", "code_id")
-        .agg(F.sum(rdiff * rdiff).alias("d"))
+    qtab = _residual_query_table(
+        qparts, coarse.filter(F.col("list_id").isin(probes)), rcode
     )
     rcodes = read_parquet(spark, _os.path.join(store, "rcodes")).filter(
         F.col("list_id").isin(probes)
     )
-    return (
-        rcodes.join(F.broadcast(qtab), ["list_id", "m", "code_id"])
-        .groupBy("vec_id")
-        .agg(F.sum("d").cast("bigint").alias("adc_dist"))
-        .orderBy("adc_dist", "vec_id")
-        .limit(10)
-    )
+    return _residual_adc_topk(rcodes, qtab)
 
 
 @query(
@@ -1674,22 +1654,12 @@ def pq_adc_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
     from ..operators.similarity import pq_adc_topk as adc_topk
-    from ..operators.similarity import pq_components, pq_subspace_distances
     from ..stores import ensure_pq_store
 
     store = ensure_pq_store(spark, sf_dir)
     codebook = read_parquet(spark, _os.path.join(store, "codebook"))
     codes = read_parquet(spark, _os.path.join(store, "codes"))
-    qparts = pq_components(
-        load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0),
-        "embedding",
-        "vec_id",
-        sub_dim=8,
-        scale=10000,
-    )
-    qtab = pq_subspace_distances(qparts, codebook, "vec_id").select(
-        "m", "code_id", "d"
-    )
+    qtab = _pq_query_table(_pq_query_parts(spark, sf_dir), codebook)
     shortlist = adc_topk(codes, qtab, "vec_id", k=50).select("vec_id")
     e = load_table(spark, sf_dir, "embeddings")
     return (

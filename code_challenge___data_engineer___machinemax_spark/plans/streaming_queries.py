@@ -20,9 +20,10 @@ How a query replays its table (streaming/replay.py, the one harness):
   one micro-batch and cross-batch state merges are really exercised. The
   ingest twins (``streamed_corpus_state`` and the two admission queries)
   instead stage a wave and drain the ingest stream once per wave.
-- ``run_to_memory`` drains the stream into a memory table and returns it;
-  ``drain`` is the same start/processAllAvailable/stop for foreachBatch
-  sinks. Both stop the stream even when a batch raises.
+- ``run_to_memory`` drains the stream into a memory table and returns its
+  rows pinned, dropping the table; ``drain`` is the same
+  start/processAllAvailable/stop for foreachBatch sinks. Both stop the
+  stream even when a batch raises.
 
 Determinism notes (the reason these CAN be oracle-checked):
 - streamed_corpus_state: the ingest's within-batch survivor is min-doc_id
@@ -179,7 +180,7 @@ def streamed_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     with scratch_dir("ccdem_streamed_sessions_") as base:
         stream = _event_wave_stream(spark, sf_dir, base)
         sess = session_windows(stream, gap="30 minutes")
-        return run_to_memory(sess, "ccdem_streamed_sessions", "complete").localCheckpoint()
+        return run_to_memory(sess, "ccdem_streamed_sessions", "complete")
 
 
 @query(
@@ -214,7 +215,6 @@ def streamed_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             emitted.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
-            .localCheckpoint()
         )
 
 
@@ -248,7 +248,7 @@ def streamed_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     with scratch_dir("ccdem_streamed_hourly_") as base:
         stream = _event_wave_stream(spark, sf_dir, base)
         agg = _hourly_windows(stream)
-        return run_to_memory(agg, "ccdem_streamed_hourly", "complete").localCheckpoint()
+        return run_to_memory(agg, "ccdem_streamed_hourly", "complete")
 
 
 @query(
@@ -269,7 +269,7 @@ def streamed_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with scratch_dir("ccdem_streamed_rollup_") as base:
         store = os.path.join(base, "store")
-        stream_upsert_to_store(read_event_stream(spark, sf_dir), store)
+        stream_upsert_to_store(read_event_stream(spark, sf_dir, base), store)
         return read_state_store(spark, store).select("event_type", "n", "v_e6").localCheckpoint()
 
 
@@ -433,7 +433,7 @@ def streamed_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count("*").alias("count_order"),
             )
         )
-        return run_to_memory(agg, "streamed_q1_state", "complete").localCheckpoint()
+        return run_to_memory(agg, "streamed_q1_state", "complete")
 
 
 @query(
@@ -502,7 +502,7 @@ def streamed_append_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     with scratch_dir("ccdem_streamed_append_") as base:
         landing = stage_waves(waves, os.path.join(base, "landing"))
         agg = _hourly_windows(wave_stream(spark, landing, e.schema))
-        return run_to_memory(agg, "ccdem_streamed_append", "append").localCheckpoint()
+        return run_to_memory(agg, "ccdem_streamed_append", "append")
 
 
 @query(
@@ -570,7 +570,7 @@ def streamed_session_windows_append(spark: SparkSession, sf_dir: str) -> DataFra
             os.path.join(base, "landing"),
         )
         sess = session_windows(wave_stream(spark, landing, e.schema), gap="30 minutes")
-        return run_to_memory(sess, "ccdem_streamed_sess_append", "append").localCheckpoint()
+        return run_to_memory(sess, "ccdem_streamed_sess_append", "append")
 
 
 @query(
@@ -601,7 +601,7 @@ def streamed_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("text").isNull().cast("int")).cast("bigint").alias("n_null_text"),
             F.sum((F.col("lang") == "en").cast("int")).cast("bigint").alias("n_en"),
         )
-        return run_to_memory(card, "ccdem_streamed_card", "complete").localCheckpoint()
+        return run_to_memory(card, "ccdem_streamed_card", "complete")
 
 
 @query(
@@ -639,7 +639,7 @@ def streamed_segment_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.expr("CAST(value * 1e6 AS BIGINT)")).alias("v_e6"),
             )
         )
-        return run_to_memory(agg, "ccdem_streamed_enrich", "complete").localCheckpoint()
+        return run_to_memory(agg, "ccdem_streamed_enrich", "complete")
 
 
 @query(
@@ -697,7 +697,6 @@ def streamed_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
                     F.unix_micros("p_ts") - F.unix_micros("v_ts")
                 ).cast("bigint").alias("max_gap_us"),
             )
-            .localCheckpoint()
         )
 
 
@@ -755,7 +754,6 @@ def python_stream_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("v").cast("bigint").alias("total_value_e6"),
             F.count("*").cast("bigint").alias("n_users"),
         )
-        .localCheckpoint()
     )
 
 
@@ -811,7 +809,7 @@ def streamed_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("bin")
             .agg(F.count("*").cast("bigint").alias("n_live"))
         )
-        live = run_to_memory(live_agg, "ccdem_streamed_psi", "complete").localCheckpoint()
+        live = run_to_memory(live_agg, "ccdem_streamed_psi", "complete")
 
     e = load_table(spark, sf_dir, "events")
     ref = (
@@ -943,7 +941,6 @@ def streamed_unconverted_views(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.when(F.col("p_ts").isNull(), 1).otherwise(0)
                 ).cast("bigint").alias("n_unconverted"),
             )
-            .localCheckpoint()
         )
 
 
@@ -984,7 +981,7 @@ def streamed_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("r", "bucket")
             .agg(F.count("*").alias("c"))
         )
-        cells = run_to_memory(cells_agg, "ccdem_streamed_cms", "complete").localCheckpoint()
+        cells = run_to_memory(cells_agg, "ccdem_streamed_cms", "complete")
 
     e = load_table(spark, sf_dir, "events")
     probes = (
@@ -1056,7 +1053,7 @@ def streamed_mask_rate_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("m").cast("bigint").alias("masked_tokens"),
             F.expr("SUM(m) * 1000000 div COUNT(*)").cast("bigint").alias("mask_rate_e6"),
         )
-        return run_to_memory(agg, "ccdem_streamed_mask", "complete").localCheckpoint()
+        return run_to_memory(agg, "ccdem_streamed_mask", "complete")
 
 
 @query(
@@ -1117,7 +1114,7 @@ def streamed_quantile_sketch_monitor(spark: SparkSession, sf_dir: str) -> DataFr
             .groupBy("event_type", "bin")
             .agg(F.count("*").alias("cnt"))
         )
-        sk = run_to_memory(sk_agg, "ccdem_streamed_qsk", "complete").localCheckpoint()
+        sk = run_to_memory(sk_agg, "ccdem_streamed_qsk", "complete")
 
     from pyspark.sql import Window as W
 
@@ -1198,7 +1195,6 @@ def streamed_taxonomy_tag_monitor(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.count("*").cast("bigint").alias("n_docs"),
                 F.sum("n_occ").cast("bigint").alias("n_occurrences"),
             )
-            .localCheckpoint()
         )
 
 

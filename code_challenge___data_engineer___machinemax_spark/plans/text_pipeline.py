@@ -576,6 +576,13 @@ def doc_overlap_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     fps = winnowing_fingerprint_rows(d, "doc_id", "text").localCheckpoint()
+    return _shared_fp_pairs(fps)
+
+
+def _shared_fp_pairs(fps: DataFrame) -> DataFrame:
+    """Document pairs (id_a < id_b) sharing >= 3 fingerprints of the
+    ``(doc_id, fp)`` rows ``fps``: the fp-keyed self-equi-join both
+    winnowing twins end in."""
     a = fps.alias("a")
     b = fps.alias("b")
     return (
@@ -608,14 +615,7 @@ def doc_overlap_winnowing_from_store(spark: SparkSession, sf_dir: str) -> DataFr
 
     path = ensure_winnowing_store(spark, sf_dir)
     fps = read_parquet(spark, path)
-    a = fps.alias("a")
-    b = fps.alias("b")
-    return (
-        a.join(b, (F.col("a.fp") == F.col("b.fp")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(F.count("*").alias("shared_fps"))
-        .filter(F.col("shared_fps") >= 3)
-    )
+    return _shared_fp_pairs(fps)
 
 
 @query(

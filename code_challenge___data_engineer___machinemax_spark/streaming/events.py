@@ -21,25 +21,22 @@ from .replay import drain
 
 
 def read_event_stream(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1
+    spark: SparkSession, sf_dir: str, scratch: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
     """events.parquet as a file stream (schema pinned from the batch read;
     ts arrives as long nanos under nanosAsLong — converted exactly like the
-    batch loader, tables.load_table)."""
-    import hashlib
+    batch loader, tables.load_table). A file stream reads a directory, so
+    the single parquet file is linked into ``<scratch>/events/``; the caller
+    owns ``scratch`` and removes it (``replay.scratch_dir``, a test's
+    ``tmp_path``) once the stream is drained and its result pinned."""
     import os
 
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    # file streams require a directory source; stage a symlink dir around the
-    # single parquet file (testdata is read-only)
-    src = f"{sf_dir}/events.parquet"
-    stage = f"/tmp/ccdem_stream_{hashlib.md5(src.encode()).hexdigest()[:10]}"
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
+    stage = os.path.join(scratch, "events")
     os.makedirs(stage, exist_ok=True)
-    link = f"{stage}/events.parquet"
-    if not os.path.exists(link):
+    link = os.path.join(stage, "events.parquet")
+    if not os.path.lexists(link):
         os.symlink(src, link)
     batch_schema = read_parquet(spark, src).schema
     stream = (

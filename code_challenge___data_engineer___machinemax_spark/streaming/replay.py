@@ -82,15 +82,19 @@ def drain(writer: DataStreamWriter) -> None:
 
 def run_to_memory(df: DataFrame, name: str, output_mode: str) -> DataFrame:
     """Drain a finite stream into the in-memory table ``name`` and return
-    that table. It stays registered in the session, so callers pin what
-    they keep (``localCheckpoint``)."""
-    drain(
-        df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(processingTime="0 seconds")
-    )
-    return df.sparkSession.table(name)
+    its rows pinned (``localCheckpoint``). The table itself is dropped
+    before returning, so no sink rows outlive the call in the session."""
+    spark = df.sparkSession
+    try:
+        drain(
+            df.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(name)
+            .trigger(processingTime="0 seconds")
+        )
+        return spark.table(name).localCheckpoint()
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:

@@ -94,8 +94,8 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 def file_signature(path: str) -> tuple[tuple[str, int, int], ...]:
     """(relative name, size, mtime_ns) of each data file under a local
     ``path``, sorted; empty for a URI, a missing path or no data files.
-    Skips the ``_``/``.`` names Spark's file index skips (``_SUCCESS``,
-    ``.crc``), but not ``_``-prefixed partition directories."""
+    Skips the ``_``/``.`` names Spark's file index skips (success
+    markers, ``.crc``), but not ``_``-prefixed partition directories."""
     if urlparse(path).scheme:
         return ()
     try:

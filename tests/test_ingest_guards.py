@@ -1,23 +1,18 @@
-"""The cheaper guard tier for self-contained ingest heavies whose
-deployment plans are persisted-layout *_from_store read paths (VERDICT
-r7 #6 established the pattern for graphrec; VERDICT r8 #4/#5 extend it
-to the dedup and vector families): each rotation pool's self-contained
-queries rebuild their family's ingest stage (basket join / LSH banding /
-PQ encode) purely as INGEST regression guards — the bench publishes the
-*_from_store read paths as the family headline. One pool member stays in
-the timed bench per round (bench.py GUARD_ROTATIONS, round-robin); the
-rest run here: a timed sf0.01 execution with a generous wall ceiling, so
-a structural regression in the shared ingest prefix (a lost broadcast, a
-recompute tree, a skew blow-up) still fails CI loudly even in rounds
-when that query is not the bench's published guard.
+"""A cost guard for the self-contained ingest heavies whose deployment
+plans are the persisted-layout *_from_store read paths: each query below
+rebuilds its family's ingest stage (basket join / LSH banding / PQ
+encode) in-plan. bench.py publishes the store builds themselves under its
+"ingest" key; this module runs the self-contained twins once each at
+sf0.01 with a generous wall ceiling, so a structural regression in the
+shared ingest prefix (a lost broadcast, a recompute tree, a skew blow-up)
+still fails CI loudly.
 
-Correctness of every pool member stays pinned by the full oracle parity
-sweep (tests/test_oracle_parity.py, same sf0.01); this module guards
-COST only. The ceiling is ~10x the queries' steady-state sf0.01 wall
-(sub-second to ~2 s each, BENCH_r07/r08 scaled down) — loose enough to
-never flake on a cold JVM, tight enough that an accidental O(n^2) shape
-(the 112-scan adamic_adar recompute tree of SCALE.md round 7 cost ~4x)
-still trips it.
+Correctness of every member stays pinned by the full oracle parity sweep
+(tests/test_oracle_parity.py, same sf0.01); this module guards COST only.
+The ceiling is ~10x the queries' steady-state sf0.01 wall (sub-second to
+~2 s each, BENCH_r07/r08 scaled down) — loose enough to never flake on a
+cold JVM, tight enough that an accidental O(n^2) shape (the 112-scan
+adamic_adar recompute tree of SCALE.md round 7 cost ~4x) still trips it.
 """
 
 from __future__ import annotations
@@ -26,31 +21,23 @@ import time
 
 import pytest
 
-from bench import GUARD_ROTATIONS, HEADLINE
 from code_challenge___data_engineer___machinemax_spark import plans
 
 from .conftest import SF_DIR as _GUARD_SF_DIR  # honors SPARK_GRAFT_TEST_SF_DIR
 
 _WALL_CEILING_S = 30.0
 
-# the rotation members NOT published in this round's bench
-_TIER2 = sorted(
-    {q for pool in GUARD_ROTATIONS.values() for q in pool} - set(HEADLINE)
-)
-
-
-@pytest.mark.parametrize("family", sorted(GUARD_ROTATIONS))
-def test_rotation_publishes_exactly_one_guard(family):
-    """bench.py must keep exactly ONE rotation member per family in the
-    timed headline set — the round-robin contract of the rebalance."""
-    pool = GUARD_ROTATIONS[family]
-    assert len(set(pool) & set(HEADLINE)) == 1, family
-
-
-def test_tier2_is_everything_unpublished():
-    n_published = len(GUARD_ROTATIONS)
-    n_total = sum(len(p) for p in GUARD_ROTATIONS.values())
-    assert len(_TIER2) == n_total - n_published
+_TIER2 = [
+    "adamic_adar_links",
+    "cdc_chunk_dedup_report",
+    "doc_overlap_winnowing",
+    "item_item_similarity",
+    "ivf_pq_topk",
+    "label_propagation_seeded",
+    "pq_adc_topk",
+    "recsys_hitrate_eval",
+    "simhash_near_dup_pairs",
+]
 
 
 @pytest.mark.parametrize("name", _TIER2)

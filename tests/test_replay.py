@@ -67,10 +67,36 @@ def test_failed_streaming_query_leaves_no_temp_dir(spark, tmp_path, monkeypatch)
     no_tables = tmp_path / "no_tables"
     no_tables.mkdir()
     queries = plans.all_queries()
-    for name in ("streamed_hourly_counts", "streamed_corpus_state"):
+    for name in ("streamed_hourly_counts", "streamed_corpus_state", "streamed_event_rollup"):
         with pytest.raises(Exception):
             queries[name](spark, str(no_tables))
         assert os.listdir(scratch) == [], name
+
+
+def test_event_stream_stages_inside_the_query_scratch_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """streamed_event_rollup links events.parquet into its own scratch dir,
+    so the link goes when the query returns."""
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    links = []
+    symlink = os.symlink
+    monkeypatch.setattr(os, "symlink", lambda src, dst: (links.append(dst), symlink(src, dst)))
+    rows = plans.all_queries()["streamed_event_rollup"](spark, sf_dir).collect()
+    assert rows
+    assert links and all(os.path.commonpath([str(scratch), d]) == str(scratch) for d in links)
+    assert os.listdir(scratch) == []
+
+
+def test_memory_sink_tables_do_not_outlive_the_query(spark, sf_dir):
+    small = os.path.join(os.path.dirname(os.path.normpath(sf_dir)), "sf0.001")
+    if not os.path.isdir(small):
+        small = sf_dir
+    queries = plans.all_queries()
+    for name in ("streamed_hourly_counts", "streamed_sessions"):
+        assert queries[name](spark, small).count() > 0, name
+    names = {t.name for t in spark.catalog.listTables()}
+    assert not names & {"ccdem_streamed_hourly", "ccdem_streamed_sessions"}, names
 
 
 def _empty_tables(src_dir: str, dst_dir) -> str:

@@ -6,21 +6,21 @@ regenerated source table must never serve a stale store."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from code_challenge___data_engineer___machinemax_spark import plans, tables
+from code_challenge___data_engineer___machinemax_spark import plans, stores, tables
 from code_challenge___data_engineer___machinemax_spark.crawl.ingest import ArticleStore
 from code_challenge___data_engineer___machinemax_spark.schemas import ARTICLE
 from code_challenge___data_engineer___machinemax_spark.stores import (
     _source_signature,
-    ensure_copurchase_store,
-    ensure_semantic_kmeans_store,
     ensure_simhash_store,
     ensure_srp_store,
     srp_query_buckets,
@@ -79,22 +79,6 @@ def test_copurchase_store_graph_twins_equal_self_contained(spark, sf_dir, store_
         assert _rows(qs[f"{base}_from_store"](spark, sf_dir)) == _rows(
             qs[base](spark, sf_dir)
         ), base
-
-
-def test_copurchase_ensure_is_idempotent(spark, sf_dir, store_env):
-    p1 = ensure_copurchase_store(spark, sf_dir)
-    mtime = os.path.getmtime(os.path.join(p1, "_SUCCESS"))
-    p2 = ensure_copurchase_store(spark, sf_dir)
-    assert p1 == p2
-    assert os.path.getmtime(os.path.join(p2, "_SUCCESS")) == mtime
-
-
-def test_ensure_is_idempotent(spark, sf_dir, store_env):
-    p1 = ensure_simhash_store(spark, sf_dir)
-    mtime = os.path.getmtime(os.path.join(p1, "_SUCCESS"))
-    p2 = ensure_simhash_store(spark, sf_dir)
-    assert p1 == p2
-    assert os.path.getmtime(os.path.join(p2, "_SUCCESS")) == mtime
 
 
 def test_signature_tracks_source_files(tmp_path):
@@ -253,14 +237,6 @@ def test_semantic_kmeans_store_reads_assignment_not_vectors(spark, sf_dir, store
     assert "embeddings.parquet" not in txt
 
 
-def test_semantic_kmeans_ensure_is_idempotent(spark, sf_dir, store_env):
-    p1 = ensure_semantic_kmeans_store(spark, sf_dir)
-    mtime = os.path.getmtime(os.path.join(p1, "_SUCCESS"))
-    p2 = ensure_semantic_kmeans_store(spark, sf_dir)
-    assert p1 == p2
-    assert os.path.getmtime(os.path.join(p2, "_SUCCESS")) == mtime
-
-
 def test_pq_residual_store_topk_equals_self_contained_and_prunes(
     spark, sf_dir, store_env
 ):
@@ -280,18 +256,6 @@ def test_pq_residual_store_topk_equals_self_contained_and_prunes(
     # ran at ingest — the probe's only embeddings access is the query row
     assert txt.count("embeddings.parquet") <= 1
     assert "list_id IN" in txt or "list_id#" in txt  # partition-pruned scan
-
-
-def test_pq_residual_ensure_is_idempotent(spark, sf_dir, store_env):
-    from code_challenge___data_engineer___machinemax_spark.stores import (
-        ensure_pq_residual_store,
-    )
-
-    p1 = ensure_pq_residual_store(spark, sf_dir)
-    mtime = os.path.getmtime(os.path.join(p1, "_SUCCESS"))
-    p2 = ensure_pq_residual_store(spark, sf_dir)
-    assert p1 == p2
-    assert os.path.getmtime(os.path.join(p2, "_SUCCESS")) == mtime
 
 
 def test_hybrid_rrf_store_equals_self_contained(spark, sf_dir, store_env):
@@ -330,18 +294,6 @@ def test_minhash_band_store_pairs_equal_self_contained_and_prune(
     assert "md5" not in txt.lower()
 
 
-def test_minhash_band_ensure_is_idempotent(spark, sf_dir, store_env):
-    from code_challenge___data_engineer___machinemax_spark.stores import (
-        ensure_minhash_band_store,
-    )
-
-    p1 = ensure_minhash_band_store(spark, sf_dir)
-    mtime = os.path.getmtime(os.path.join(p1, "_SUCCESS"))
-    p2 = ensure_minhash_band_store(spark, sf_dir)
-    assert p1 == p2
-    assert os.path.getmtime(os.path.join(p2, "_SUCCESS")) == mtime
-
-
 def test_winnowing_store_overlap_equals_self_contained(spark, sf_dir, store_env):
     """The L4-winnowing-backed overlap query must equal the self-contained
     twin, and its plan must do NO fingerprint selection — documents is
@@ -355,18 +307,6 @@ def test_winnowing_store_overlap_equals_self_contained(spark, sf_dir, store_env)
     txt = explain_text(stored_df)
     assert "l4_winnow" in txt
     assert "documents.parquet" not in txt
-
-
-def test_winnowing_ensure_is_idempotent(spark, sf_dir, store_env):
-    from code_challenge___data_engineer___machinemax_spark.stores import (
-        ensure_winnowing_store,
-    )
-
-    p1 = ensure_winnowing_store(spark, sf_dir)
-    mtime = os.path.getmtime(os.path.join(p1, "_SUCCESS"))
-    p2 = ensure_winnowing_store(spark, sf_dir)
-    assert p1 == p2
-    assert os.path.getmtime(os.path.join(p2, "_SUCCESS")) == mtime
 
 
 def test_neardup_cluster_store_weights_equal_self_contained(spark, sf_dir, store_env):
@@ -404,18 +344,6 @@ def test_neardup_cluster_store_split_equals_self_contained(spark, sf_dir, store_
     assert len(set(re.findall(r"md5\(cast\([a-z_]+", txt.lower()))) <= 1
 
 
-def test_neardup_cluster_ensure_is_idempotent(spark, sf_dir, store_env):
-    from code_challenge___data_engineer___machinemax_spark.stores import (
-        ensure_neardup_cluster_store,
-    )
-
-    p1 = ensure_neardup_cluster_store(spark, sf_dir)
-    mtime = os.path.getmtime(os.path.join(p1, "_SUCCESS"))
-    p2 = ensure_neardup_cluster_store(spark, sf_dir)
-    assert p1 == p2
-    assert os.path.getmtime(os.path.join(p2, "_SUCCESS")) == mtime
-
-
 def test_containment_postings_store_pairs_equal_self_contained(spark, sf_dir, store_env):
     """The L4-postings-backed containment pairs must equal the
     self-contained twin (the pruning is lossless and the layout caches
@@ -434,18 +362,6 @@ def test_containment_postings_store_pairs_equal_self_contained(spark, sf_dir, st
     low = txt.lower()
     assert "regexp" not in low and "split(" not in low  # no re-tokenize
     assert "row_number" not in low  # the prefix window ran at ingest
-
-
-def test_containment_postings_ensure_is_idempotent(spark, sf_dir, store_env):
-    from code_challenge___data_engineer___machinemax_spark.stores import (
-        ensure_containment_postings_store,
-    )
-
-    p1 = ensure_containment_postings_store(spark, sf_dir)
-    mtime = os.path.getmtime(os.path.join(p1, "_SUCCESS"))
-    p2 = ensure_containment_postings_store(spark, sf_dir)
-    assert p1 == p2
-    assert os.path.getmtime(os.path.join(p2, "_SUCCESS")) == mtime
 
 
 def test_binary_sig_store_scan_reads_signatures_not_vectors(spark, sf_dir, store_env):
@@ -671,3 +587,89 @@ def test_one_parquet_read_primitive():
                 if (rel, lines[line - 1].strip()) not in allowed:
                     found.append(f"{rel}:{line}: {lines[line - 1].strip()}")
     assert not found, "use tables.read_parquet:\n" + "\n".join(found)
+
+
+@pytest.mark.parametrize("name", sorted(n for n in vars(stores) if n.startswith("ensure_")))
+def test_ensure_is_idempotent(spark, sf_dir, store_env, name):
+    """Every store publishes once: the second call returns the same path
+    without rebuilding (the root marker keeps its mtime), and no temp
+    sibling is left beside it."""
+    ensure = getattr(stores, name)
+    p1 = ensure(spark, sf_dir)
+    assert stores._ready(p1)
+    mtime = os.path.getmtime(os.path.join(p1, "_SUCCESS"))
+    p2 = ensure(spark, sf_dir)
+    assert p1 == p2
+    assert os.path.getmtime(os.path.join(p2, "_SUCCESS")) == mtime
+    assert not [n for n in os.listdir(os.path.dirname(p1)) if ".tmp-" in n]
+
+
+def test_failed_build_leaves_nothing_and_next_call_builds(spark, tmp_path):
+    root = tmp_path / "stores"
+    path = str(root / "l0_probe_000000000000")
+
+    def failing(out):
+        spark.range(3).write.parquet(os.path.join(out, "a"))
+        raise RuntimeError("build failed after one relation")
+
+    with pytest.raises(RuntimeError):
+        stores._publish(path, failing)
+    assert os.listdir(root) == []
+
+    built = stores._publish(path, lambda out: spark.range(3).write.parquet(os.path.join(out, "a")))
+    assert built == path and stores._ready(path)
+    assert read_parquet(spark, os.path.join(path, "a")).count() == 3
+    assert os.listdir(root) == [os.path.basename(path)]
+
+
+def test_concurrent_builds_publish_one_store(spark, sf_dir, store_env):
+    with ThreadPoolExecutor(2) as pool:
+        paths = list(pool.map(lambda _: ensure_simhash_store(spark, sf_dir), range(2)))
+    assert paths[0] == paths[1] and stores._ready(paths[0])
+    assert os.listdir(os.path.dirname(paths[0])) == [os.path.basename(paths[0])]
+    n_docs = load_table(spark, sf_dir, "documents").count()
+    assert read_parquet(spark, paths[0]).count() == n_docs
+
+
+def test_one_publish_rule():
+    """Store readiness is decided in one place: the success marker and
+    ``_ready(`` appear in the package only inside ``stores._publish`` and
+    ``stores._ready`` (the Python data-source writer in sources/pyds.py
+    commits its own output and is exempt). The SRP plane set is built in
+    one place too."""
+    pkg = os.path.dirname(tables.__file__)
+    with open(stores.__file__) as f:
+        tree = ast.parse(f.read())
+    owners = [
+        (n.lineno, n.end_lineno)
+        for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name in ("_publish", "_ready")
+    ]
+    assert len(owners) == 2
+    found, planes = [], 0
+    for root, _, names in os.walk(pkg):
+        for name in sorted(n for n in names if n.endswith(".py")):
+            rel = os.path.relpath(os.path.join(root, name), pkg)
+            with open(os.path.join(root, name)) as f:
+                src = f.read()
+            planes += src.count("hyperplane(t * 1009")
+            if rel == os.path.join("sources", "pyds.py"):
+                continue
+            for i, line in enumerate(src.splitlines(), 1):
+                if "_SUCCESS" not in line and "_ready(" not in line:
+                    continue
+                if rel == "stores.py" and any(a <= i <= b for a, b in owners):
+                    continue
+                found.append(f"{rel}:{i}: {line.strip()}")
+    assert not found, "decide readiness through stores._publish:\n" + "\n".join(found)
+    assert planes == 1
+
+
+def test_store_twins_share_their_base_oracle():
+    """A ``X_from_store`` twin reads a cache of ``X``'s deterministic work,
+    so its oracle is ``X``'s, byte for byte."""
+    queries, oracles = plans.all_queries(), plans.all_oracles()
+    twins = [n for n in queries if n.endswith("_from_store") and n[: -len("_from_store")] in queries]
+    assert twins
+    for name in twins:
+        assert oracles.get(name) == oracles.get(name[: -len("_from_store")]), name

@@ -15,9 +15,9 @@ from code_challenge___data_engineer___machinemax_spark.streaming.replay import r
 from code_challenge___data_engineer___machinemax_spark.tables import load_table
 
 
-def test_windowed_counts_stream_matches_batch(spark, sf_dir):
-    stream = read_event_stream(spark, sf_dir)
-    run_to_memory(windowed_counts(stream), "win_counts", "complete")
+def test_windowed_counts_stream_matches_batch(spark, sf_dir, tmp_path):
+    stream = read_event_stream(spark, sf_dir, str(tmp_path))
+    run_to_memory(windowed_counts(stream), "win_counts", "complete").createOrReplaceTempView("win_counts")
     got = {
         (r.win_start, r.event_type): (r.n, r.total_value)
         for r in spark.sql("SELECT * FROM win_counts").collect()
@@ -34,19 +34,19 @@ def test_windowed_counts_stream_matches_batch(spark, sf_dir):
         assert abs(got[k][1] - want[k][1]) < 1e-3
 
 
-def test_dedup_stream_drops_replays(spark, sf_dir):
-    stream = read_event_stream(spark, sf_dir)
+def test_dedup_stream_drops_replays(spark, sf_dir, tmp_path):
+    stream = read_event_stream(spark, sf_dir, str(tmp_path))
     # replay the same file: union of the stream with itself via two reads
-    run_to_memory(dedup_stream(stream), "dedup_once", "append")
+    run_to_memory(dedup_stream(stream), "dedup_once", "append").createOrReplaceTempView("dedup_once")
     n_once = spark.sql("SELECT COUNT(*) AS n FROM dedup_once").collect()[0].n
     n_batch = load_table(spark, sf_dir, "events").count()
     n_distinct = load_table(spark, sf_dir, "events").select("event_id").distinct().count()
     assert n_once == n_distinct <= n_batch
 
 
-def test_user_running_totals_state(spark, sf_dir):
-    stream = read_event_stream(spark, sf_dir)
-    run_to_memory(user_running_totals(stream), "user_totals", "update")
+def test_user_running_totals_state(spark, sf_dir, tmp_path):
+    stream = read_event_stream(spark, sf_dir, str(tmp_path))
+    run_to_memory(user_running_totals(stream), "user_totals", "update").createOrReplaceTempView("user_totals")
     # final state per user == batch aggregation
     got = {
         r.user_id: (r.n_events, r.total_value)
@@ -116,7 +116,7 @@ def test_append_mode_watermark_drops_late_rows(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
     )
-    run_to_memory(windowed_counts(stream), "late_drop", "append")
+    run_to_memory(windowed_counts(stream), "late_drop", "append").createOrReplaceTempView("late_drop")
     got = {
         (r.win_start.hour, r.event_type): r.n
         for r in spark.sql("SELECT * FROM late_drop").collect()
@@ -171,7 +171,7 @@ def test_append_session_windows_merge_finalize_and_boundary(spark, tmp_path):
     )
     run_to_memory(
         session_windows(stream, gap="30 minutes"), "sess_append", "append"
-    )
+    ).createOrReplaceTempView("sess_append")
     got = {
         r.user_id: (r.session_start, r.session_end, r.n_events)
         for r in spark.sql("SELECT * FROM sess_append").collect()

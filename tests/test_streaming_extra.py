@@ -19,9 +19,9 @@ from code_challenge___data_engineer___machinemax_spark.streaming.replay import r
 from code_challenge___data_engineer___machinemax_spark.tables import load_table
 
 
-def test_session_windows_stream_matches_batch(spark, sf_dir):
-    stream = read_event_stream(spark, sf_dir)
-    run_to_memory(session_windows(stream), "sess_win", "complete")
+def test_session_windows_stream_matches_batch(spark, sf_dir, tmp_path):
+    stream = read_event_stream(spark, sf_dir, str(tmp_path))
+    run_to_memory(session_windows(stream), "sess_win", "complete").createOrReplaceTempView("sess_win")
     got = {
         (r.user_id, r.session_start): (r.session_end, r.n_events)
         for r in spark.sql("SELECT * FROM sess_win").collect()
@@ -63,7 +63,7 @@ def test_stateful_totals_accumulate_across_batches(spark, tmp_path):
     stream = (
         spark.readStream.schema(w1.schema).option("maxFilesPerTrigger", 1).parquet(str(land))
     )
-    run_to_memory(user_running_totals(stream), "totals_xbatch", "update")
+    run_to_memory(user_running_totals(stream), "totals_xbatch", "update").createOrReplaceTempView("totals_xbatch")
     rows = spark.sql(
         "SELECT * FROM totals_xbatch ORDER BY n_events DESC LIMIT 1"
     ).collect()
@@ -74,7 +74,7 @@ def test_stateful_totals_accumulate_across_batches(spark, tmp_path):
 
 def test_foreachbatch_upsert(spark, sf_dir, tmp_path):
     path = str(tmp_path / "agg_store")
-    stream = read_event_stream(spark, sf_dir)
+    stream = read_event_stream(spark, sf_dir, str(tmp_path))
     stream_upsert_to_store(stream, path)
     from code_challenge___data_engineer___machinemax_spark.streaming.events import (
         read_state_store,
@@ -179,15 +179,15 @@ def test_store_merge_rewrites_only_touched_buckets(spark, sf_dir, tmp_path):
             assert got[k] == base[k]
 
 
-def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
+def test_stream_stream_interval_join_matches_batch(spark, sf_dir, tmp_path):
     from code_challenge___data_engineer___machinemax_spark.streaming.events import (
         purchases_with_recent_view,
     )
 
-    stream = read_event_stream(spark, sf_dir)
+    stream = read_event_stream(spark, sf_dir, str(tmp_path))
     sp = stream.filter(F.col("event_type") == "purchase")
     sv = stream.filter(F.col("event_type") == "view")
-    run_to_memory(purchases_with_recent_view(sp, sv), "ssj", "append")
+    run_to_memory(purchases_with_recent_view(sp, sv), "ssj", "append").createOrReplaceTempView("ssj")
     got = {
         (r.purchase_id, r.view_id) for r in spark.sql("SELECT * FROM ssj").collect()
     }
@@ -218,7 +218,7 @@ def test_streaming_search_over_store(spark, tmp_path):
     store.append(spark.createDataFrame(rows, ARTICLE), version=1)
     run_to_memory(
         streaming_match_counts(spark, store.path, "spark"), "stream_hits", "complete"
-    )
+    ).createOrReplaceTempView("stream_hits")
     got = {r.section: r.n_matches for r in spark.sql("SELECT * FROM stream_hits").collect()}
     assert got == {"news": 1, "sport": 1}
 
@@ -483,7 +483,7 @@ def test_transform_with_state_totals_or_gate(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
     )
-    run_to_memory(type_running_totals_tws(stream), "ccdem_tws_test", "update")
+    run_to_memory(type_running_totals_tws(stream), "ccdem_tws_test", "update").createOrReplaceTempView("ccdem_tws_test")
     got = {
         r.event_type: (r.n_events, r.value_e6)
         for r in spark.sql(
