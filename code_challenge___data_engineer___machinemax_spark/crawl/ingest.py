@@ -9,22 +9,31 @@ Parquet-backed, append-only with latest-wins read semantics:
   requiring a transactional format (Delta MERGE would replace this 1:1).
 - search(): the keyword query surface (api.py:22-26 semantics).
 
-At scale: partition the store by ingest date and bucket by url; `latest()`
-then prunes to recent partitions and the window shuffles co-located data.
+At scale: the log grows with every append, but readers only see its latest
+rows. So the row_number dedup runs once per log state, not per request:
+the first ``latest()`` of a state writes a snapshot to
+``<path>/_latest/<sig>`` (``sig`` hashes the log's data files), partitioned
+like the store, and every later read and ``search()`` of that state is one
+scan of the snapshot with no window shuffle. ``append`` itself pays
+nothing. Time travel (``as_of_version``), ``versions()`` and ``update``
+still read the log.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.search import keyword_search
+from .. import stores
+from ..operators.search import _keyword_search
 from ..schemas import ARTICLE
-from ..tables import read_parquet
+from ..tables import file_signature, read_parquet
 
 _PROJECTION = [f.name for f in ARTICLE.fields]  # api.py:27-35 field order
 
@@ -55,10 +64,19 @@ class ArticleStore:
         return read_parquet(self.spark, self.path)
 
     def latest(self, as_of_version: int | None = None) -> DataFrame:
-        """One row per url, newest version wins. ``as_of_version`` reads the
-        store as it stood at that ingest version (time travel over the
-        append-only log — what Delta gives via VERSION AS OF, reconstructed
-        from the version column)."""
+        """One row per url, newest version wins: a read of the log state's
+        snapshot (:meth:`_snapshot`). ``as_of_version`` reads the store as
+        it stood at that ingest version (time travel over the append-only
+        log — what Delta gives via VERSION AS OF, reconstructed from the
+        version column)."""
+        snap = None if as_of_version is not None else self._snapshot()
+        if snap is None:
+            return self._resolve(as_of_version)
+        return read_parquet(self.spark, snap).select(*_PROJECTION)
+
+    def _resolve(self, as_of_version: int | None = None) -> DataFrame:
+        """latest() computed from the log: a row_number window over every
+        version of every url."""
         raw = self._raw()
         if as_of_version is not None:
             raw = raw.filter(F.col("ingest_version") <= as_of_version)
@@ -69,6 +87,36 @@ class ArticleStore:
             .select(*_PROJECTION)
         )
 
+    def _snapshot(self) -> str | None:
+        """The directory holding latest()'s rows for the log as it stands,
+        or None while the log holds no data files.
+
+        It is ``<path>/_latest/<sig>``, where ``sig`` hashes the log's data
+        files (:func:`tables.file_signature`, which skips ``_``-prefixed
+        directories, as Spark's file index and the streaming file source
+        do, so the log's readers never see a snapshot). The first call for
+        a log state builds it from the log and publishes it through
+        :func:`stores._publish` (so concurrent first reads publish one
+        copy), then removes the older snapshots; a read still scanning a
+        removed one fails."""
+        files = file_signature(self.path)
+        if not any(name.endswith(".parquet") for name, _, _ in files):
+            return None
+        sig = hashlib.sha256(repr((files, self.partition_by)).encode()).hexdigest()[:12]
+        root = os.path.join(self.path, "_latest")
+
+        def build(out: str) -> None:
+            writer = self._resolve().write
+            if self.partition_by:
+                writer = writer.partitionBy(self.partition_by)
+            writer.parquet(out)
+
+        snap = stores._publish(os.path.join(root, sig), build)
+        for name in os.listdir(root):
+            if name != sig and ".tmp-" not in name:
+                shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+        return snap
+
     def versions(self) -> list[int]:
         return [
             r.v for r in self._raw().select(F.col("ingest_version").alias("v")).distinct()
@@ -76,20 +124,26 @@ class ArticleStore:
         ]
 
     def update(self, url: str, **fields: str) -> None:
-        """update_one-by-key equivalent: append a new version of the row."""
-        row = self.latest().filter(F.col("url") == url)
+        """update_one-by-key equivalent: append a new version of the row.
+        The row is read from the log (the url filter reaches the scan), so
+        no snapshot is built for a state this call is about to replace."""
+        row = self._resolve().filter(F.col("url") == url)
         for name, value in fields.items():
             row = row.withColumn(name, F.lit(value))
         self.append(row)
 
     def search(self, keyword: str) -> DataFrame:
         """Keyword search over stored articles, public-field projection
-        (api.py:26-35). Unknown keyword -> empty DataFrame, not an error;
-        likewise a missing/empty store (the reference returns what it has
-        on a failed read, api.py:36-37)."""
-        if not self.exists():
+        (api.py:26-35), as one statement over the latest() snapshot.
+        Unknown keyword -> empty DataFrame, not an error; likewise a
+        missing/empty store (the reference returns what it has on a failed
+        read, api.py:36-37)."""
+        snap = self._snapshot()
+        if snap is None:
             return self.spark.createDataFrame([], ARTICLE)
-        return keyword_search(self.latest(), keyword).select(*_PROJECTION)
+        return _keyword_search(
+            read_parquet(self.spark, snap), keyword, "text", ", ".join(_PROJECTION)
+        )
 
     def search_json(self, keyword: str) -> list[str]:
         """JSON-array boundary (api.py:38's jsonify)."""
@@ -118,11 +172,7 @@ class ArticleStore:
         )
 
     def exists(self) -> bool:
-        if not os.path.isdir(self.path):
-            return False
-        return any(
-            n.endswith(".parquet") for _, _, files in os.walk(self.path) for n in files
-        )
+        return any(name.endswith(".parquet") for name, _, _ in file_signature(self.path))
 
 
 def download_files(pages: DataFrame, out_dir: str) -> DataFrame:

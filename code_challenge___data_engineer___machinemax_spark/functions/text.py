@@ -36,6 +36,15 @@ def tokenize(col: Column | str) -> Column:
     return F.filter(F.split(F.lower(c), _SEP), lambda t: t != "")
 
 
+def tokenize_spark_sql(expr: str) -> str:
+    """Spark-SQL spelling of :func:`tokenize` — the same expression tree —
+    for a statement run by ``spark.sql(text, **frames)``: the regex
+    literal is escaped for the SQL parser and its braces are doubled for
+    that call's formatter."""
+    sep = _SEP.replace("\\", "\\\\").replace("{", "{{").replace("}", "}}")
+    return f"filter(split(lower({expr}), '{sep}'), x -> x != '')"
+
+
 def tokenize_sql(expr: str) -> str:
     """DuckDB twin of :func:`tokenize`."""
     return (

@@ -14,20 +14,25 @@ Two execution strategies:
   materialize ``(token, doc_id)`` once at ingest (replacing Mongo's text
   index, which the reference re-creates per request, api.py:22), then a
   keyword query becomes a semi-join: probe the index on the (few) query
-  tokens, distinct doc_ids, join back to the corpus. With the index table
+  tokens and semi-join the hits back to the corpus. With the index table
   partitioned/bucketed by token, the probe is a pruned scan, not a full
   corpus pass.
+
+Each search request is one Spark SQL statement over the relations it
+reads, so it is parsed and analyzed once; a chain of DataFrame calls
+costs py4j round trips and an analysis per call.
 """
 
 from __future__ import annotations
 
+import os
 import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import s_stem_py, tokenize, tokenize_stemmed
-from ..tables import read_parquet
+from ..functions.text import s_stem_py, tokenize, tokenize_spark_sql, tokenize_stemmed
+from ..tables import file_signature, read_parquet
 
 
 def query_tokens(keyword: str) -> list[str]:
@@ -48,15 +53,44 @@ def keyword_search(df: DataFrame, keyword: str, text_col: str = "text") -> DataF
     codegen) that short-circuits the expensive tokenize+overlap filter for
     the vast majority of non-matching rows.
     """
+    return _keyword_search(df, keyword, text_col, "*")
+
+
+def _keyword_search(df: DataFrame, keyword: str, text_col: str, columns: str) -> DataFrame:
+    """:func:`keyword_search` projecting the SQL select list ``columns``:
+    one statement, parsed and analyzed once, instead of a chain of
+    DataFrame calls that each cost py4j round trips and an analysis."""
     toks = query_tokens(keyword)
-    if not toks:
-        return df.limit(0)
-    guard = F.lower(F.col(text_col)).contains(toks[0])
-    for t in toks[1:]:
-        guard = guard | F.lower(F.col(text_col)).contains(t)
-    return df.filter(guard).filter(
-        F.arrays_overlap(tokenize(text_col), F.array(*[F.lit(t) for t in toks]))
-    )
+    where = "false"
+    if toks:
+        text = _ident(text_col)
+        guard = " OR ".join(f"contains(lower({text}), {_lit(t)})" for t in toks)
+        overlap = f"arrays_overlap({tokenize_spark_sql(text)}, array({_lits(toks)}))"
+        where = f"({guard}) AND {overlap}"
+    return df.sparkSession.sql(f"SELECT {columns} FROM {{df}} WHERE {where}", df=df)
+
+
+def _lit(value: str) -> str:
+    """A SQL string literal for a ``spark.sql(text, **frames)`` statement:
+    quotes and backslashes escaped for the parser, braces doubled for the
+    formatter."""
+    escaped = value.replace("\\", "\\\\").replace("'", "\\'")
+    return "'" + escaped.replace("{", "{{").replace("}", "}}") + "'"
+
+
+def _lits(values) -> str:
+    return ", ".join(_lit(v) for v in values)
+
+
+def _ident(name: str) -> str:
+    """A quoted SQL identifier, braces doubled for the formatter."""
+    return "`" + name.replace("`", "``").replace("{", "{{").replace("}", "}}") + "`"
+
+
+def _double(x: float | None) -> str:
+    """A DOUBLE literal: ``repr`` round-trips every finite double exactly,
+    and without the ``D`` suffix Spark parses ``0.5`` as DECIMAL."""
+    return "CAST(NULL AS DOUBLE)" if x is None else f"{float(x)!r}D"
 
 
 def _analyzed_keyword_search(
@@ -132,12 +166,17 @@ def _token_buckets_py(toks: list[str]) -> list[str]:
     )
 
 
-def _probe_postings(spark, path: str, toks: list[str]) -> DataFrame:
-    """The pruned read of a token-bucketed posting layout: partition
-    pruning on the bucket + token equality, both pushed to the scan."""
-    return read_parquet(spark, path).filter(
-        F.col("bucket").isin(_token_buckets_py(toks)) & F.col("token").isin(toks)
-    )
+def _probe(toks: list[str]) -> str:
+    """The pruning predicate of a token-bucketed posting layout: partition
+    pruning on the bucket plus token equality, both pushed to the scan."""
+    return f"bucket IN ({_lits(_token_buckets_py(toks))}) AND token IN ({_lits(toks)})"
+
+
+def _no_data(path: str) -> bool:
+    """A published layout directory without data files: its source had no
+    rows, so there is no schema to read (Spark raises
+    UNABLE_TO_INFER_SCHEMA) and every probe of it matches nothing."""
+    return os.path.isdir(path) and not file_signature(path)
 
 
 def materialize_inverted_index(
@@ -180,29 +219,41 @@ def search_with_materialized_index(
     stemmed: bool = False,
 ) -> DataFrame:
     """Probe the persisted index: partition pruning on the token prefix +
-    token equality (both pushed to the scan) -> distinct keys -> broadcast
-    semi-join back to the corpus. ``stemmed=True`` stems the query tokens
-    to probe a ``stemmed=True``-materialized layout."""
+    token equality (both pushed to the scan) -> broadcast semi-join back
+    to the corpus. ``stemmed=True`` stems the query tokens to probe a
+    ``stemmed=True``-materialized layout. An index built from no
+    documents matches nothing."""
     toks = query_tokens(keyword)
     if stemmed:
         toks = sorted({s_stem_py(t) for t in toks})
-    if not toks:
+    if not toks or _no_data(index_path):
         return df.limit(0)
-    hits = _probe_postings(spark, index_path, toks).select(key_col).distinct()
-    return df.join(F.broadcast(hits), key_col, "left_semi")
+    return _semi_join(df, read_parquet(spark, index_path), key_col, _probe(toks))
 
 
 def indexed_keyword_search(df: DataFrame, index: DataFrame, key_col: str, keyword: str) -> DataFrame:
     """Semi-join search: probe the posting table, join back to the corpus.
 
-    The probe side after ``distinct`` is tiny (bounded by matching doc
-    count), so Catalyst/AQE broadcasts it — no full-corpus tokenize pass.
+    The probe side is tiny (bounded by the matching postings), so it is
+    broadcast — no full-corpus tokenize pass.
     """
     toks = query_tokens(keyword)
     if not toks:
         return df.limit(0)
-    hits = index.filter(F.col("token").isin(toks)).select(key_col).distinct()
-    return df.join(F.broadcast(hits), key_col, "left_semi")
+    return _semi_join(df, index, key_col, f"token IN ({_lits(toks)})")
+
+
+def _semi_join(df: DataFrame, postings: DataFrame, key_col: str, probe: str) -> DataFrame:
+    """The corpus rows whose key a posting probe hits, as one statement:
+    a broadcast left-semi join, which returns each corpus row at most once
+    however many postings hit it, so the probe needs no ``distinct``."""
+    key = _ident(key_col)
+    return df.sparkSession.sql(
+        f"SELECT /*+ BROADCAST(hits) */ c.* FROM {{df}} c LEFT SEMI JOIN "
+        f"(SELECT {key} FROM {{postings}} WHERE {probe}) hits ON c.{key} = hits.{key}",
+        df=df,
+        postings=postings,
+    )
 
 
 def materialize_bm25_index(
@@ -224,8 +275,6 @@ def materialize_bm25_index(
     under `append`-style incremental ingest of new documents without a
     stats rebuild; only the tiny stats row needs refreshing on ingest.
     """
-    import os as _os
-
     with_dl = df.select(F.col(key_col), tokenize(text_col).alias("__toks")).withColumn(
         "dl", F.size("__toks")
     )
@@ -240,12 +289,12 @@ def materialize_bm25_index(
         .sortWithinPartitions("token")
         .write.mode("overwrite")
         .partitionBy("bucket")
-        .parquet(_os.path.join(path, "postings"))
+        .parquet(os.path.join(path, "postings"))
     )
     (
         with_dl.agg(F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"))
         .write.mode("overwrite")
-        .parquet(_os.path.join(path, "stats"))
+        .parquet(os.path.join(path, "stats"))
     )
 
 
@@ -261,23 +310,21 @@ def bm25_rank_from_index(
     """BM25 over the persisted posting layout — the production read path.
 
     Candidate generation is the pruned index probe (`PartitionFilters` on
-    the token bucket + `PushedFilters EqualTo(token, ...)`, exactly like
+    the token bucket + `PushedFilters In(token, ...)`, exactly like
     `search_with_materialized_index`); tf and dl ride the probed rows, df
-    is an exact aggregate OF the probed rows, and (n_docs, avgdl) is the
-    one-row stats table — so the whole query touches only the query
-    tokens' postings, never the corpus. Scores are identical to
-    :func:`bm25_rank` (same formula, same doubles).
+    is an exact count OF the probed rows, and (n_docs, avgdl) come from
+    the one-row stats table as literals (:func:`_corpus_stats`) — so the
+    whole query is one statement that touches only the query tokens'
+    postings, never the corpus. Scores are identical to :func:`bm25_rank`
+    (same formula, same doubles). A layout built from no documents ranks
+    nothing.
     """
-    import os as _os
-
     toks = query_tokens(keyword)
-    if not toks:
+    if not toks or _no_data(os.path.join(index_path, "postings")):
         return spark.range(0).select(
             F.col("id").alias(key_col), F.lit(0.0).alias("bm25")
         )
-    postings = _probe_postings(spark, _os.path.join(index_path, "postings"), toks)
-    stats = read_parquet(spark, _os.path.join(index_path, "stats"))
-    return _top_k(_bm25_term_scores(postings, stats, k1, b), key_col, "bm25", k)
+    return _rank_index(spark, index_path, toks, key_col, k, k1, b)
 
 
 def bm25_batch_rank_from_index(
@@ -303,8 +350,6 @@ def bm25_batch_rank_from_index(
     window PARTITIONED BY qid. Scores are bit-identical to N separate
     :func:`bm25_rank_from_index` calls (same formula, same doubles).
     Returns (qid, key, bm25, rk)."""
-    import os as _os
-
     # dedupe tokens WITHIN each query (order-preserving): the single-query
     # path scores each posting row once regardless of how many times the
     # keyword repeats a token, so a duplicate (qid, token) row here would
@@ -315,30 +360,27 @@ def bm25_batch_rank_from_index(
         for t in dict.fromkeys(query_tokens(kw))
     ]
     toks = sorted({t for _, t in qmap_rows})
-    if not toks:
+    if not toks or _no_data(os.path.join(index_path, "postings")):
         return spark.range(0).select(
             F.col("id").cast("int").alias("qid"),
             F.col("id").alias(key_col),
             F.lit(0.0).alias("bm25"),
             F.col("id").cast("int").alias("rk"),
         )
-    postings = _probe_postings(spark, _os.path.join(index_path, "postings"), toks)
-    stats = read_parquet(spark, _os.path.join(index_path, "stats"))
-    term = _bm25_term_scores(postings, stats, k1, b)
-    qmap = spark.createDataFrame(qmap_rows, "qid int, token string")
-    scored = (
-        term.join(F.broadcast(qmap), "token")
-        .groupBy("qid", key_col)
-        .agg(F.round(F.sum("term_score"), 6).alias("bm25"))
-    )
-    from pyspark.sql.window import Window as W
+    queries = ", ".join(f"({qid}, {_lit(t)})" for qid, t in qmap_rows)
+    return _rank_index(spark, index_path, toks, key_col, k, k1, b, queries)
 
-    w = W.partitionBy("qid").orderBy(F.desc("bm25"), F.asc(key_col))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("qid", key_col, "bm25", "rk")
-    )
+
+def _rank_index(
+    spark, index_path: str, toks: list[str], key_col: str, k: int, k1: float, b: float,
+    queries: str | None = None,
+) -> DataFrame:
+    """:func:`_rank_sql` over a BM25 layout: the postings of ``toks``
+    (pruned probe) scored with the layout's corpus scalars."""
+    rows = f"(SELECT {_ident(key_col)}, token, tf, dl FROM {{postings}} WHERE {_probe(toks)})"
+    term = _bm25_term(k1, b, *_corpus_stats(spark, os.path.join(index_path, "stats")))
+    postings = read_parquet(spark, os.path.join(index_path, "postings"))
+    return spark.sql(_rank_sql(rows, key_col, "bm25", term, k, queries), postings=postings)
 
 
 def bm25_rank(
@@ -354,18 +396,19 @@ def bm25_rank(
     reference's unordered Mongo cursor, api.py:26-35).
 
     Plan shape: explode tokens once -> per-(doc, token) tf for query tokens
-    only, with the matched docs' lengths (:func:`_doc_len_and_tf`) -> join
-    tiny (token, df) and scalar (N, avgdl) aggregates, both broadcast ->
-    score (:func:`_bm25_term_scores`, the index paths' formula) + top-k.
-    Scale: the posting explode is the same work as index construction;
-    everything after operates on matched rows only.
+    only, with the matched docs' lengths (:func:`_doc_len_and_tf`) -> the
+    corpus scalars (N, avgdl) read off the pinned lengths -> score and
+    top-k in :func:`_rank_sql` with the index paths' formula
+    (:func:`_bm25_term`). Scale: the posting explode is the same work as
+    index construction; everything after operates on matched rows only.
     """
     toks = query_tokens(keyword)
     if not toks:
         return df.limit(0)
     doc_len, rows = _doc_len_and_tf(df, key_col, text_col, toks)
-    corpus = doc_len.agg(F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"))
-    return _top_k(_bm25_term_scores(rows, corpus, k1, b), key_col, "bm25", k)
+    n_docs, avgdl = doc_len.agg(F.count("*"), F.avg("dl")).first()
+    term = _bm25_term(k1, b, n_docs, avgdl)
+    return rows.sparkSession.sql(_rank_sql("{rows}", key_col, "bm25", term, k), rows=rows)
 
 
 def tfidf_rank(
@@ -378,20 +421,15 @@ def tfidf_rank(
     """TF-IDF-ranked keyword search: score = Σ_t (tf_t / dl) · idf_t with
     the smoothed idf = ln((1+N)/(1+df_t)) + 1 (sklearn's convention — no
     division-by-zero, never negative). The linear sibling of bm25_rank
-    (same pinned tf/doc-length build, tiny broadcast aggregates, top-k);
-    BM25 saturates tf, TF-IDF stays proportional.
+    (same pinned tf/doc-length build, same ranking statement); BM25
+    saturates tf, TF-IDF stays proportional.
     """
     toks = query_tokens(keyword)
     if not toks:
         return df.limit(0)
     doc_len, rows = _doc_len_and_tf(df, key_col, text_col, toks)
-    corpus = doc_len.agg(F.count("*").alias("n_docs"))
-    scored = _with_df_and_stats(rows, corpus).withColumn(
-        "term_score",
-        (F.col("tf") / F.col("dl"))
-        * (F.log((1 + F.col("n_docs")) / (1 + F.col("df"))) + 1.0),
-    )
-    return _top_k(scored, key_col, "tfidf", k)
+    term = f"(tf / dl) * (ln((1 + {doc_len.count()}L) / (1 + df)) + 1.0D)"
+    return rows.sparkSession.sql(_rank_sql("{rows}", key_col, "tfidf", term, k), rows=rows)
 
 
 def _doc_len_and_tf(
@@ -436,46 +474,66 @@ def _doc_len_and_tf(
     return doc_len, tf.join(doc_len_matched, key_col)
 
 
-def _with_df_and_stats(rows: DataFrame, stats: DataFrame) -> DataFrame:
-    """Attach each token's document frequency ``df`` and the one-row
-    corpus ``stats`` to ``(key, token, tf, dl)`` posting rows. The rows
-    hold exactly ONE row per (document, token) — the layout's groupBy, or
-    :func:`_doc_len_and_tf`'s — so count(*) IS the distinct doc frequency,
-    without countDistinct's two-phase expand."""
-    dfreq = rows.groupBy("token").agg(F.count("*").alias("df"))
-    return rows.join(F.broadcast(dfreq), "token").crossJoin(F.broadcast(stats))
+# absolute path of a layout's stats/ -> (file signature, (n_docs, avgdl));
+# keyed like tables.read_parquet's schemas, so a rebuilt layout is read again
+_stats: dict[str, tuple[tuple, tuple[int, float | None]]] = {}
 
 
-def _bm25_term_scores(
-    rows: DataFrame, stats: DataFrame, k1: float, b: float
-) -> DataFrame:
-    """The one BM25 formula: ``term_score`` per ``(key, token, tf, dl)``
-    posting row, given the one-row ``(n_docs, avgdl)`` stats. Every BM25
-    entry point scores through it, so in-memory, single-probe and batched
-    scores are the same doubles."""
-    return (
-        _with_df_and_stats(rows, stats)
-        .withColumn(
-            "idf",
-            F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0),
-        )
-        .withColumn(
-            "term_score",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))),
-        )
+def _corpus_stats(spark, path: str) -> tuple[int, float | None]:
+    """The one-row ``(n_docs, avgdl)`` of a BM25 layout's ``stats/``, read
+    once per file set, so a request inlines them as literals and starts
+    no stats scan or broadcast."""
+    files = file_signature(path)
+    entry = os.path.abspath(path)
+    hit = _stats.get(entry)
+    if files and hit is not None and hit[0] == files:
+        return hit[1]
+    n_docs, avgdl = read_parquet(spark, path).select("n_docs", "avgdl").first()
+    if files:
+        _stats[entry] = (files, (n_docs, avgdl))
+    return n_docs, avgdl
+
+
+def _bm25_term(k1: float, b: float, n_docs: int, avgdl: float | None) -> str:
+    """The one BM25 formula: the SQL ``term_score`` of a posting row's
+    ``tf``, ``dl`` and ``df``, with the corpus scalars inlined as typed
+    literals. Every BM25 entry point scores through it, so in-memory,
+    single-probe and batched scores are the same doubles."""
+    idf = f"ln(({n_docs}L - df + 0.5D) / (df + 0.5D) + 1.0D)"
+    norm = f"{_double(1 - b)} + {_double(b)} * dl / {_double(avgdl)}"
+    return f"{idf} * (tf * {_double(k1 + 1)}) / (tf + {_double(k1)} * ({norm}))"
+
+
+def _rank_sql(
+    rows: str, key_col: str, score: str, term: str, k: int, queries: str | None = None
+) -> str:
+    """One statement that ranks the ``(key, token, tf, dl)`` posting
+    relation ``rows``, one row per (document, token): ``df`` is a window
+    count per token over the rows (so they are scanned once), ``term``
+    scores each row, and a key's ``score`` is its term scores' sum rounded
+    to 6 places. The result is the top ``k`` keys by score, key ties
+    ascending. With ``queries`` (``VALUES`` rows ``(qid, token)``) each
+    query sums the term scores of its own tokens and is ranked on its own:
+    ``(qid, key, score, rk)`` with ``rk <= k``."""
+    key = _ident(key_col)
+    scored = (
+        f"SELECT {key}, token, {term} AS term_score FROM "
+        f"(SELECT *, count(*) OVER (PARTITION BY token) AS df FROM {rows})"
     )
-
-
-def _top_k(scored: DataFrame, key_col: str, score_col: str, k: int) -> DataFrame:
-    """Per-key sum of ``term_score`` rounded to 6 places, top ``k`` by
-    score with key ties ascending."""
+    if queries is None:
+        return (
+            f"SELECT {key}, round(sum(term_score), 6) AS {score} FROM ({scored}) "
+            f"GROUP BY {key} ORDER BY {score} DESC, {key} LIMIT {k}"
+        )
+    per_query = (
+        f"SELECT /*+ BROADCAST(q) */ qid, {key}, round(sum(term_score), 6) AS {score} "
+        f"FROM ({scored}) JOIN (VALUES {queries}) AS q(qid, token) USING (token) "
+        f"GROUP BY qid, {key}"
+    )
     return (
-        scored.groupBy(key_col)
-        .agg(F.round(F.sum("term_score"), 6).alias(score_col))
-        .orderBy(F.desc(score_col), F.asc(key_col))
-        .limit(k)
+        f"SELECT qid, {key}, {score}, rk FROM (SELECT *, row_number() OVER "
+        f"(PARTITION BY qid ORDER BY {score} DESC, {key}) AS rk FROM ({per_query})) "
+        f"WHERE rk <= {k}"
     )
 
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
 from code_challenge___data_engineer___machinemax_spark.operators.search import (
@@ -221,3 +222,140 @@ def test_bm25_batch_dedupes_repeated_query_tokens(spark, sf_dir, tmp_path, monke
     }
     batch = bm25_batch_rank_from_index(spark, path, [kw], k=10).collect()
     assert {(r.doc_id, r.bm25) for r in batch} == single
+
+
+def _request(spark, sf_dir, tmp_path, monkeypatch, entry):
+    """The perfbench ``search_serving`` request of ``entry`` over stores
+    built in ``tmp_path``: ``keyword -> DataFrame``."""
+    from code_challenge___data_engineer___machinemax_spark import stores
+    from code_challenge___data_engineer___machinemax_spark.crawl.ingest import ArticleStore
+    from code_challenge___data_engineer___machinemax_spark.operators.search import (
+        bm25_rank_from_index,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_STORE_DIR", str(tmp_path / "stores"))
+    if entry == "article_store":
+        docs = load_table(spark, sf_dir, "documents")
+        articles = docs.selectExpr(
+            "format_string('https://a.test/%d', doc_id) AS url", "'t' AS title",
+            "CAST(NULL AS STRING) AS description", "source AS author", "lang AS section",
+            "CAST(NULL AS STRING) AS keywords", "text",
+        )
+        store = ArticleStore(spark, str(tmp_path / "articles"))
+        store.append(articles.withColumn("text", F.lit("stale draft")), version=1)
+        store.append(articles, version=2)
+        return store.search
+    if entry == "keyword_search":
+        return lambda kw: keyword_search(load_table(spark, sf_dir, "documents"), kw)
+    if entry == "materialized_index":
+        path = stores.ensure_inverted_index_store(spark, sf_dir)
+        return lambda kw: search_with_materialized_index(
+            spark, load_table(spark, sf_dir, "documents"), path, "doc_id", kw
+        )
+    path = stores.ensure_bm25_index_store(spark, sf_dir)
+    return lambda kw: bm25_rank_from_index(spark, path, kw)
+
+
+@pytest.mark.parametrize(
+    "entry, max_jobs",
+    [("article_store", 1), ("keyword_search", 1), ("materialized_index", 2), ("bm25_from_index", 3)],
+)
+def test_search_request_job_budget(spark, sf_dir, tmp_path, monkeypatch, entry, max_jobs):
+    """Once one request has run (snapshot published, schemas inferred,
+    BM25 stats read), a request builds its DataFrame without a Spark job
+    and runs in at most ``max_jobs``."""
+    from tests.test_stores import _jobs
+
+    request = _request(spark, sf_dir, tmp_path, monkeypatch, entry)
+    request("merge vector").collect()
+    df, build_jobs = _jobs(spark, f"{tmp_path.name}-build", lambda: request("scan window"))
+    rows, exec_jobs = _jobs(spark, f"{tmp_path.name}-exec", df.collect)
+    assert rows
+    assert build_jobs == 0
+    assert 1 <= exec_jobs <= max_jobs
+
+
+def _bm25_reference(rows, keyword, k1, b):
+    """BM25 in plain Python over ``(doc_id, text)`` rows: the top 10 of
+    ``(doc_id, score)``, score descending, doc_id ascending."""
+    import math
+
+    from code_challenge___data_engineer___machinemax_spark.operators.search import query_tokens
+
+    docs = {doc_id: query_tokens(text) for doc_id, text in rows}
+    n_docs, avgdl = len(docs), sum(map(len, docs.values())) / len(docs)
+    scores = {}
+    for t in set(query_tokens(keyword)):
+        df = sum(t in toks for toks in docs.values())
+        idf = math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
+        for doc_id, toks in docs.items():
+            tf = toks.count(t)
+            if tf:
+                norm = tf + k1 * (1 - b + b * len(toks) / avgdl)
+                scores[doc_id] = scores.get(doc_id, 0.0) + idf * tf * (k1 + 1) / norm
+    return sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
+
+
+def test_bm25_scores_are_exact_doubles(spark, tmp_path):
+    """Off-default k1/b, a repeated query token and a non-ASCII token: the
+    index paths equal the in-memory ranking as exact doubles, all three
+    agree with a plain-Python BM25 to the rounding, and no plan does
+    DECIMAL arithmetic (a float literal without its ``D`` suffix)."""
+    from code_challenge___data_engineer___machinemax_spark.operators.search import (
+        bm25_batch_rank_from_index,
+        bm25_rank,
+        bm25_rank_from_index,
+        materialize_bm25_index,
+    )
+
+    from tests.test_plans import explain_text
+
+    rows = [
+        (1, "merge merge vector über"),
+        (2, "vector über straße vector"),
+        (3, "merge join plan"),
+        (4, "über alles merge vector vector vector"),
+        (5, "nothing to see"),
+    ]
+    d = spark.createDataFrame(rows, "doc_id long, text string")
+    path = str(tmp_path / "bm25")
+    materialize_bm25_index(d, "doc_id", path)
+    keywords = ["merge merge vector", "über straße"]
+    batch = bm25_batch_rank_from_index(spark, path, keywords, k=10, k1=1.5, b=0.3)
+    by_q = {}
+    for r in batch.collect():
+        by_q.setdefault(r.qid, []).append((r.doc_id, r.bm25))
+    for qid, kw in enumerate(keywords):
+        want_df = bm25_rank(d, "doc_id", kw, k=10, k1=1.5, b=0.3)
+        got_df = bm25_rank_from_index(spark, path, kw, k=10, k1=1.5, b=0.3)
+        want = [(r.doc_id, r.bm25) for r in want_df.collect()]
+        assert want and [(r.doc_id, r.bm25) for r in got_df.collect()] == want, kw
+        ref = _bm25_reference(rows, kw, k1=1.5, b=0.3)
+        assert [d for d, _ in want] == [d for d, _ in ref], kw
+        assert all(abs(s - r) <= 1e-6 for (_, s), (_, r) in zip(want, ref)), kw
+        assert sorted(by_q[qid], key=lambda t: (-t[1], t[0])) == want, kw
+        for df in (want_df, got_df):
+            assert "decimal" not in explain_text(df).lower(), kw
+    assert "decimal" not in explain_text(batch).lower()
+
+
+def test_one_bm25_formula():
+    """The engine spells the BM25 idf (``ln``/``F.log`` over ``n_docs -
+    df``) once, in ``operators.search._bm25_term``; the DuckDB oracles,
+    which spell their doubles ``::DOUBLE``, are its independent twin."""
+    import os
+    import re
+
+    from code_challenge___data_engineer___machinemax_spark import operators
+
+    pkg = os.path.dirname(os.path.dirname(operators.__file__))
+    pattern = re.compile(r"(\bln\(|F\.log\().*n_docs.*-\s*(F\.col\(\"df\"\)|df\b)")
+    found = []
+    for root, _, names in os.walk(pkg):
+        for name in sorted(n for n in names if n.endswith(".py")):
+            path = os.path.join(root, name)
+            with open(path) as f:
+                for i, line in enumerate(f, 1):
+                    if pattern.search(line) and "::DOUBLE" not in line:
+                        found.append(f"{os.path.relpath(path, pkg)}:{i}")
+    assert len(found) == 1 and found[0].startswith(os.path.join("operators", "search.py")), found

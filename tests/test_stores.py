@@ -529,6 +529,112 @@ def test_article_store_append_is_seen_by_next_search(spark, tmp_path):
     assert [r.text for r in store.search("delta").collect()] == ["delta"]
 
 
+def _article(spark, url, text, section=None):
+    return spark.createDataFrame([(url, "t", None, None, section, None, text)], ARTICLE)
+
+
+def _snapshots(store):
+    return sorted(os.listdir(os.path.join(store.path, "_latest")))
+
+
+def test_article_store_snapshot_follows_append_and_update(spark, tmp_path):
+    """search() reads latest() from a snapshot of the log state: an append
+    or an update is seen by the next search, and time travel still reads
+    the log as it stood."""
+    store = ArticleStore(spark, str(tmp_path / "articles"))
+    store.append(_article(spark, "https://a.test/1", "alpha"), version=1)
+    store.append(_article(spark, "https://a.test/2", "beta"), version=2)
+    assert [r.url for r in store.search("alpha").collect()] == ["https://a.test/1"]
+    store.append(_article(spark, "https://a.test/1", "gamma"), version=3)
+    assert store.search("alpha").collect() == []
+    assert [r.text for r in store.search("gamma").collect()] == ["gamma"]
+    store.update("https://a.test/2", text="delta")
+    assert store.search("beta").collect() == []
+    assert [r.url for r in store.search("delta").collect()] == ["https://a.test/2"]
+    assert sorted((r.url, r.text) for r in store.latest(as_of_version=1).collect()) == [
+        ("https://a.test/1", "alpha")
+    ]
+    assert sorted((r.url, r.text) for r in store.latest(as_of_version=2).collect()) == [
+        ("https://a.test/1", "alpha"), ("https://a.test/2", "beta")
+    ]
+    assert store.versions()[:3] == [1, 2, 3] and len(store.versions()) == 4
+
+
+def test_article_store_snapshot_prunes_on_partition(spark, tmp_path):
+    store = ArticleStore(spark, str(tmp_path / "articles"), partition_by="section")
+    for i, section in enumerate(["news", "sport", None], 1):
+        store.append(_article(spark, f"https://a.test/{i}", "alpha", section), version=i)
+    q = store.latest().filter(F.col("section") == "news")
+    txt = explain_text(q)
+    assert "_latest" in txt
+    assert "section" in txt.split("PartitionFilters", 1)[1][:200]
+    assert [r.url for r in q.collect()] == ["https://a.test/1"]
+    assert {r.section for r in store.search("alpha").collect()} == {"news", "sport", None}
+
+
+def test_article_store_snapshot_is_invisible_to_log_readers(spark, tmp_path):
+    """The snapshot lives under ``_latest/``, which the file signature,
+    Spark's file index and the streaming file source all skip."""
+    from code_challenge___data_engineer___machinemax_spark.streaming.replay import run_to_memory
+    from code_challenge___data_engineer___machinemax_spark.streaming.search import (
+        stream_article_matches,
+    )
+
+    store = ArticleStore(spark, str(tmp_path / "articles"))
+    store.append(_article(spark, "https://a.test/1", "alpha"), version=1)
+    store.append(_article(spark, "https://a.test/1", "alpha again"), version=2)
+    before = tables.file_signature(store.path)
+    assert len(store.search("alpha").collect()) == 1
+    assert len(_snapshots(store)) == 1
+    assert tables.file_signature(store.path) == before
+    assert store._raw().count() == 2
+    streamed = run_to_memory(stream_article_matches(spark, store.path, "alpha"), "snap_hits", "append")
+    assert sorted(r.text for r in streamed.collect()) == ["alpha", "alpha again"]
+
+
+def test_article_store_new_log_state_replaces_snapshot(spark, tmp_path):
+    store = ArticleStore(spark, str(tmp_path / "articles"))
+    store.append(_article(spark, "https://a.test/1", "alpha"), version=1)
+    store.search("alpha").collect()
+    first = _snapshots(store)
+    store.append(_article(spark, "https://a.test/2", "beta"), version=2)
+    assert _snapshots(store) == first  # append builds nothing
+    store.search("beta").collect()
+    second = _snapshots(store)
+    assert len(first) == len(second) == 1 and first != second
+
+
+def test_article_store_concurrent_first_reads_publish_one_snapshot(spark, tmp_path):
+    store = ArticleStore(spark, str(tmp_path / "articles"))
+    store.append(_article(spark, "https://a.test/1", "alpha"), version=1)
+    with ThreadPoolExecutor(2) as pool:
+        hits = list(pool.map(lambda _: store.search("alpha").collect(), range(2)))
+    assert [len(h) for h in hits] == [1, 1]
+    assert len(_snapshots(store)) == 1  # no second copy, no temp sibling
+
+
+@pytest.mark.parametrize(
+    "name", ["keyword_search_stored_index", "bm25_keyword_indexed", "bm25_batch_search_from_store"]
+)
+def test_search_stores_built_from_no_documents(spark, sf_dir, tmp_path, store_env, name):
+    """A store built from a 0-row source holds no data files; its search
+    returns the oracle's answer, no rows, under a non-empty store's types."""
+    from tests.oracle_harness import compare, duck_connection
+    from tests.test_replay import _empty_tables
+
+    empty = _empty_tables(sf_dir, tmp_path / "empty")
+    query = plans.all_queries()[name]
+    df = query(spark, empty)
+    assert df.collect() == []
+    assert [f.dataType for f in df.schema] == [f.dataType for f in query(spark, sf_dir).schema]
+    con = duck_connection(empty)
+    try:
+        ok, msg = compare(df, con, plans.all_oracles()[name])
+    finally:
+        con.close()
+    assert ok, f"{name}: {msg}"
+
+
 def _schema_or_condition(read):
     try:
         return read().schema
