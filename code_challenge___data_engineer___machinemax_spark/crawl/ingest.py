@@ -10,13 +10,18 @@ Parquet-backed, append-only with latest-wins read semantics:
 - search(): the keyword query surface (api.py:22-26 semantics).
 
 At scale: the log grows with every append, but readers only see its latest
-rows. So the row_number dedup runs once per log state, not per request:
-the first ``latest()`` of a state writes a snapshot to
-``<path>/_latest/<sig>`` (``sig`` hashes the log's data files), partitioned
-like the store, and every later read and ``search()`` of that state is one
-scan of the snapshot with no window shuffle. ``append`` itself pays
-nothing. Time travel (``as_of_version``), ``versions()`` and ``update``
-still read the log.
+rows, so the row_number dedup runs once per log state, not per request.
+The first ``latest()`` or ``search()`` of a state resolves the log and
+writes the result to ``<path>/_latest/<gen>-<sig>`` (``sig`` hashes the
+log's data files, ``gen`` counts them), partitioned like the store; every
+later read of that state is one scan of the snapshot with no window
+shuffle. The gain therefore depends on reads per log state: ``append``
+writes only the log, but the next read pays the window plus a rewrite of
+every latest row, more than one read of the log itself costs, so traffic
+that appends between every pair of searches is slower than resolving the
+log per request. The previous state's snapshot is kept, so a DataFrame
+built before an append still runs after the next state is read. Time
+travel (``as_of_version``), ``versions()`` and ``update`` read the log.
 """
 
 from __future__ import annotations
@@ -91,18 +96,19 @@ class ArticleStore:
         """The directory holding latest()'s rows for the log as it stands,
         or None while the log holds no data files.
 
-        It is ``<path>/_latest/<sig>``, where ``sig`` hashes the log's data
+        It is ``<path>/_latest/<gen>-<sig>``: ``sig`` hashes the log's data
         files (:func:`tables.file_signature`, which skips ``_``-prefixed
         directories, as Spark's file index and the streaming file source
-        do, so the log's readers never see a snapshot). The first call for
-        a log state builds it from the log and publishes it through
-        :func:`stores._publish` (so concurrent first reads publish one
-        copy), then removes the older snapshots; a read still scanning a
-        removed one fails."""
+        do, so the log's readers never see a snapshot), and ``gen``, their
+        count zero-padded, orders the log states, since an append-only log
+        only gains files. The first call for a log state builds it from the
+        log and publishes it through :func:`stores._publish` (so concurrent
+        first reads publish one copy), then prunes (:func:`_prune_snapshots`)."""
         files = file_signature(self.path)
         if not any(name.endswith(".parquet") for name, _, _ in files):
             return None
         sig = hashlib.sha256(repr((files, self.partition_by)).encode()).hexdigest()[:12]
+        name = f"{len(files):012d}-{sig}"
         root = os.path.join(self.path, "_latest")
 
         def build(out: str) -> None:
@@ -111,10 +117,8 @@ class ArticleStore:
                 writer = writer.partitionBy(self.partition_by)
             writer.parquet(out)
 
-        snap = stores._publish(os.path.join(root, sig), build)
-        for name in os.listdir(root):
-            if name != sig and ".tmp-" not in name:
-                shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+        snap = stores._publish(os.path.join(root, name), build)
+        _prune_snapshots(root, name)
         return snap
 
     def versions(self) -> list[int]:
@@ -173,6 +177,17 @@ class ArticleStore:
 
     def exists(self) -> bool:
         return any(name.endswith(".parquet") for name, _, _ in file_signature(self.path))
+
+
+def _prune_snapshots(root: str, name: str) -> None:
+    """Remove the snapshots under ``root`` of log states older than the one
+    before ``name``'s. A DataFrame built over the previous state's snapshot
+    still runs after the next state is read; it fails only once two newer
+    states have been read. A snapshot of a newer state (published by a
+    reader that listed the log after this one) is never removed."""
+    older = sorted(n for n in os.listdir(root) if ".tmp-" not in n and n < name)
+    for stale in older[:-1]:
+        shutil.rmtree(os.path.join(root, stale), ignore_errors=True)
 
 
 def download_files(pages: DataFrame, out_dir: str) -> DataFrame:

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import s_stem_py, tokenize, tokenize_spark_sql, tokenize_stemmed
-from ..tables import file_signature, read_parquet
+from ..tables import file_signature, read_layout, read_parquet
 
 
 def query_tokens(keyword: str) -> list[str]:
@@ -172,13 +172,6 @@ def _probe(toks: list[str]) -> str:
     return f"bucket IN ({_lits(_token_buckets_py(toks))}) AND token IN ({_lits(toks)})"
 
 
-def _no_data(path: str) -> bool:
-    """A published layout directory without data files: its source had no
-    rows, so there is no schema to read (Spark raises
-    UNABLE_TO_INFER_SCHEMA) and every probe of it matches nothing."""
-    return os.path.isdir(path) and not file_signature(path)
-
-
 def materialize_inverted_index(
     df: DataFrame, key_col: str, path: str, text_col: str = "text", stemmed: bool = False
 ) -> None:
@@ -226,9 +219,10 @@ def search_with_materialized_index(
     toks = query_tokens(keyword)
     if stemmed:
         toks = sorted({s_stem_py(t) for t in toks})
-    if not toks or _no_data(index_path):
+    index = read_layout(spark, index_path) if toks else None
+    if index is None:
         return df.limit(0)
-    return _semi_join(df, read_parquet(spark, index_path), key_col, _probe(toks))
+    return _semi_join(df, index, key_col, _probe(toks))
 
 
 def indexed_keyword_search(df: DataFrame, index: DataFrame, key_col: str, keyword: str) -> DataFrame:
@@ -320,11 +314,12 @@ def bm25_rank_from_index(
     nothing.
     """
     toks = query_tokens(keyword)
-    if not toks or _no_data(os.path.join(index_path, "postings")):
+    postings = read_layout(spark, os.path.join(index_path, "postings")) if toks else None
+    if postings is None:
         return spark.range(0).select(
             F.col("id").alias(key_col), F.lit(0.0).alias("bm25")
         )
-    return _rank_index(spark, index_path, toks, key_col, k, k1, b)
+    return _rank_index(spark, index_path, postings, toks, key_col, k, k1, b)
 
 
 def bm25_batch_rank_from_index(
@@ -360,7 +355,8 @@ def bm25_batch_rank_from_index(
         for t in dict.fromkeys(query_tokens(kw))
     ]
     toks = sorted({t for _, t in qmap_rows})
-    if not toks or _no_data(os.path.join(index_path, "postings")):
+    postings = read_layout(spark, os.path.join(index_path, "postings")) if toks else None
+    if postings is None:
         return spark.range(0).select(
             F.col("id").cast("int").alias("qid"),
             F.col("id").alias(key_col),
@@ -368,18 +364,17 @@ def bm25_batch_rank_from_index(
             F.col("id").cast("int").alias("rk"),
         )
     queries = ", ".join(f"({qid}, {_lit(t)})" for qid, t in qmap_rows)
-    return _rank_index(spark, index_path, toks, key_col, k, k1, b, queries)
+    return _rank_index(spark, index_path, postings, toks, key_col, k, k1, b, queries)
 
 
 def _rank_index(
-    spark, index_path: str, toks: list[str], key_col: str, k: int, k1: float, b: float,
-    queries: str | None = None,
+    spark, index_path: str, postings: DataFrame, toks: list[str], key_col: str, k: int,
+    k1: float, b: float, queries: str | None = None,
 ) -> DataFrame:
-    """:func:`_rank_sql` over a BM25 layout: the postings of ``toks``
+    """:func:`_rank_sql` over a BM25 layout: the ``postings`` of ``toks``
     (pruned probe) scored with the layout's corpus scalars."""
-    rows = f"(SELECT {_ident(key_col)}, token, tf, dl FROM {{postings}} WHERE {_probe(toks)})"
+    rows = f"SELECT {_ident(key_col)}, token, tf, dl FROM {{postings}} WHERE {_probe(toks)}"
     term = _bm25_term(k1, b, *_corpus_stats(spark, os.path.join(index_path, "stats")))
-    postings = read_parquet(spark, os.path.join(index_path, "postings"))
     return spark.sql(_rank_sql(rows, key_col, "bm25", term, k, queries), postings=postings)
 
 
@@ -408,7 +403,9 @@ def bm25_rank(
     doc_len, rows = _doc_len_and_tf(df, key_col, text_col, toks)
     n_docs, avgdl = doc_len.agg(F.count("*"), F.avg("dl")).first()
     term = _bm25_term(k1, b, n_docs, avgdl)
-    return rows.sparkSession.sql(_rank_sql("{rows}", key_col, "bm25", term, k), rows=rows)
+    return rows.sparkSession.sql(
+        _rank_sql("SELECT * FROM {rows}", key_col, "bm25", term, k), rows=rows
+    )
 
 
 def tfidf_rank(
@@ -429,7 +426,9 @@ def tfidf_rank(
         return df.limit(0)
     doc_len, rows = _doc_len_and_tf(df, key_col, text_col, toks)
     term = f"(tf / dl) * (ln((1 + {doc_len.count()}L) / (1 + df)) + 1.0D)"
-    return rows.sparkSession.sql(_rank_sql("{rows}", key_col, "tfidf", term, k), rows=rows)
+    return rows.sparkSession.sql(
+        _rank_sql("SELECT * FROM {rows}", key_col, "tfidf", term, k), rows=rows
+    )
 
 
 def _doc_len_and_tf(
@@ -507,9 +506,10 @@ def _bm25_term(k1: float, b: float, n_docs: int, avgdl: float | None) -> str:
 def _rank_sql(
     rows: str, key_col: str, score: str, term: str, k: int, queries: str | None = None
 ) -> str:
-    """One statement that ranks the ``(key, token, tf, dl)`` posting
-    relation ``rows``, one row per (document, token): ``df`` is a window
-    count per token over the rows (so they are scanned once), ``term``
+    """One statement that ranks the ``(key, token, tf, dl)`` posting rows
+    that the query text ``rows`` selects, one row per (document, token):
+    ``df`` is a grouped count per token, broadcast back to the rows, so no
+    posting row is shuffled however many documents hold a token; ``term``
     scores each row, and a key's ``score`` is its term scores' sum rounded
     to 6 places. The result is the top ``k`` keys by score, key ties
     ascending. With ``queries`` (``VALUES`` rows ``(qid, token)``) each
@@ -517,21 +517,22 @@ def _rank_sql(
     ``(qid, key, score, rk)`` with ``rk <= k``."""
     key = _ident(key_col)
     scored = (
-        f"SELECT {key}, token, {term} AS term_score FROM "
-        f"(SELECT *, count(*) OVER (PARTITION BY token) AS df FROM {rows})"
+        f"WITH p AS ({rows}), scored AS (SELECT /*+ BROADCAST(d) */ {key}, token, "
+        f"{term} AS term_score FROM (SELECT * FROM p DISTRIBUTE BY {key}) JOIN "
+        f"(SELECT token, count(*) AS df FROM p GROUP BY token) d USING (token)) "
     )
     if queries is None:
         return (
-            f"SELECT {key}, round(sum(term_score), 6) AS {score} FROM ({scored}) "
+            f"{scored}SELECT {key}, round(sum(term_score), 6) AS {score} FROM scored "
             f"GROUP BY {key} ORDER BY {score} DESC, {key} LIMIT {k}"
         )
     per_query = (
         f"SELECT /*+ BROADCAST(q) */ qid, {key}, round(sum(term_score), 6) AS {score} "
-        f"FROM ({scored}) JOIN (VALUES {queries}) AS q(qid, token) USING (token) "
+        f"FROM scored JOIN (VALUES {queries}) AS q(qid, token) USING (token) "
         f"GROUP BY qid, {key}"
     )
     return (
-        f"SELECT qid, {key}, {score}, rk FROM (SELECT *, row_number() OVER "
+        f"{scored}SELECT qid, {key}, {score}, rk FROM (SELECT *, row_number() OVER "
         f"(PARTITION BY qid ORDER BY {score} DESC, {key}) AS rk FROM ({per_query})) "
         f"WHERE rk <= {k}"
     )

@@ -76,7 +76,21 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     A repeat read of an unchanged local path starts no Spark job. A URI, a
     missing path or one without data files goes to a plain
     ``spark.read.parquet``, so Spark's own error surfaces unchanged."""
+    return _read_parquet(spark, path, file_signature(path))
+
+
+def read_layout(spark: SparkSession, path: str) -> DataFrame | None:
+    """:func:`read_parquet` of a published layout directory, or None when
+    the directory holds no data files: its source had no rows, so there is
+    no schema to read, and every probe of it matches nothing. The path's
+    files are listed once for both answers."""
     files = file_signature(path)
+    if not files and os.path.isdir(path):
+        return None
+    return _read_parquet(spark, path, files)
+
+
+def _read_parquet(spark: SparkSession, path: str, files: tuple) -> DataFrame:
     if not files:
         return spark.read.parquet(path)
     # the key is taken before the inferring read: if the files change during

@@ -258,12 +258,14 @@ def _request(spark, sf_dir, tmp_path, monkeypatch, entry):
 
 @pytest.mark.parametrize(
     "entry, max_jobs",
-    [("article_store", 1), ("keyword_search", 1), ("materialized_index", 2), ("bm25_from_index", 3)],
+    [("article_store", 1), ("keyword_search", 1), ("materialized_index", 2), ("bm25_from_index", 4)],
 )
 def test_search_request_job_budget(spark, sf_dir, tmp_path, monkeypatch, entry, max_jobs):
     """Once one request has run (snapshot published, schemas inferred,
     BM25 stats read), a request builds its DataFrame without a Spark job
-    and runs in at most ``max_jobs``."""
+    and runs in at most ``max_jobs``. BM25's four: the postings shuffled
+    by key and the per-token df count, which run side by side, the df
+    broadcast, and the ranking."""
     from tests.test_stores import _jobs
 
     request = _request(spark, sf_dir, tmp_path, monkeypatch, entry)
@@ -337,6 +339,26 @@ def test_bm25_scores_are_exact_doubles(spark, tmp_path):
         for df in (want_df, got_df):
             assert "decimal" not in explain_text(df).lower(), kw
     assert "decimal" not in explain_text(batch).lower()
+
+
+def test_bm25_df_is_a_broadcast_count(spark, tmp_path):
+    """The ranking shuffles posting rows by key only: each token's df is a
+    grouped count broadcast back to them, never a window over the token,
+    which would gather every posting of a common token into one task."""
+    from code_challenge___data_engineer___machinemax_spark.operators.search import (
+        bm25_rank,
+        bm25_rank_from_index,
+        materialize_bm25_index,
+    )
+
+    from tests.test_plans import explain_text
+
+    d = spark.createDataFrame([(1, "merge vector"), (2, "merge join")], "doc_id long, text string")
+    path = str(tmp_path / "bm25")
+    materialize_bm25_index(d, "doc_id", path)
+    for df in (bm25_rank_from_index(spark, path, "merge vector"), bm25_rank(d, "doc_id", "merge")):
+        plan = explain_text(df)
+        assert "Window" not in plan and "BroadcastExchange" in plan
 
 
 def test_one_bm25_formula():

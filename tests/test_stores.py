@@ -592,7 +592,12 @@ def test_article_store_snapshot_is_invisible_to_log_readers(spark, tmp_path):
     assert sorted(r.text for r in streamed.collect()) == ["alpha", "alpha again"]
 
 
-def test_article_store_new_log_state_replaces_snapshot(spark, tmp_path):
+def test_article_store_snapshots_keep_the_previous_log_state(spark, tmp_path):
+    """A new log state's first read publishes its snapshot beside the
+    previous state's and removes the older ones; a reader that listed an
+    older state removes no newer snapshot."""
+    from code_challenge___data_engineer___machinemax_spark.crawl.ingest import _prune_snapshots
+
     store = ArticleStore(spark, str(tmp_path / "articles"))
     store.append(_article(spark, "https://a.test/1", "alpha"), version=1)
     store.search("alpha").collect()
@@ -601,7 +606,26 @@ def test_article_store_new_log_state_replaces_snapshot(spark, tmp_path):
     assert _snapshots(store) == first  # append builds nothing
     store.search("beta").collect()
     second = _snapshots(store)
-    assert len(first) == len(second) == 1 and first != second
+    assert len(first) == 1 and len(second) == 2 and first[0] == second[0]
+    store.append(_article(spark, "https://a.test/3", "gamma"), version=3)
+    store.search("gamma").collect()
+    third = _snapshots(store)
+    assert len(third) == 2 and third[0] == second[1] and first[0] not in third
+    _prune_snapshots(os.path.join(store.path, "_latest"), third[0])
+    assert _snapshots(store) == third
+
+
+def test_article_store_held_search_survives_next_log_state(spark, tmp_path):
+    """A search DataFrame built before an append still runs after the next
+    log state's first read has published a new snapshot."""
+    store = ArticleStore(spark, str(tmp_path / "articles"))
+    store.append(_article(spark, "https://a.test/1", "alpha"), version=1)
+    held = store.search("alpha")
+    store.append(_article(spark, "https://a.test/2", "alpha beta"), version=2)
+    assert sorted(r.url for r in store.search("alpha").collect()) == [
+        "https://a.test/1", "https://a.test/2"
+    ]
+    assert [r.url for r in held.collect()] == ["https://a.test/1"]
 
 
 def test_article_store_concurrent_first_reads_publish_one_snapshot(spark, tmp_path):
