@@ -508,8 +508,9 @@ def _rank_sql(
 ) -> str:
     """One statement that ranks the ``(key, token, tf, dl)`` posting rows
     that the query text ``rows`` selects, one row per (document, token):
-    ``df`` is a grouped count per token, broadcast back to the rows, so no
-    posting row is shuffled however many documents hold a token; ``term``
+    the rows are shuffled by key and ``df`` is a grouped count per token
+    broadcast back to them, so no task gathers every posting of a common
+    token, as a window over the token would; ``term``
     scores each row, and a key's ``score`` is its term scores' sum rounded
     to 6 places. The result is the top ``k`` keys by score, key ties
     ascending. With ``queries`` (``VALUES`` rows ``(qid, token)``) each
