@@ -77,7 +77,7 @@ class ArticleStore:
         snap = None if as_of_version is not None else self._snapshot()
         if snap is None:
             return self._resolve(as_of_version)
-        return read_parquet(self.spark, snap).select(*_PROJECTION)
+        return _read_snapshot(self.spark, snap).select(*_PROJECTION)
 
     def _resolve(self, as_of_version: int | None = None) -> DataFrame:
         """latest() computed from the log: a row_number window over every
@@ -146,7 +146,7 @@ class ArticleStore:
         if snap is None:
             return self.spark.createDataFrame([], ARTICLE)
         return _keyword_search(
-            read_parquet(self.spark, snap), keyword, "text", ", ".join(_PROJECTION)
+            _read_snapshot(self.spark, snap), keyword, "text", ", ".join(_PROJECTION)
         )
 
     def search_json(self, keyword: str) -> list[str]:
@@ -177,6 +177,14 @@ class ArticleStore:
 
     def exists(self) -> bool:
         return any(name.endswith(".parquet") for name, _, _ in file_signature(self.path))
+
+
+def _read_snapshot(spark: SparkSession, snap: str) -> DataFrame:
+    """A snapshot read with the declared ``ARTICLE`` schema: every column
+    the snapshot's build writes is a string, so the read starts no
+    schema-inference job and keeps no per-state schema entry, and a
+    partition column reads back as a string whatever its values look like."""
+    return spark.read.schema(ARTICLE).parquet(snap)
 
 
 def _prune_snapshots(root: str, name: str) -> None:

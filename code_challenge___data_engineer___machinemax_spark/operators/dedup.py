@@ -110,6 +110,31 @@ def _spread_narrow_scan(df: DataFrame, key_col: str) -> DataFrame:
     return df
 
 
+def _minhash_array(
+    df: DataFrame, id_col: str, text_col: str, num_hashes: int, k: int
+) -> tuple[DataFrame, Column]:
+    """The one MinHash signature expression: the ``(id, __sh)`` shingle
+    frame over the spread scan and ONE nested-lambda array of all
+    num_hashes minima over ``__sh`` (family i hashes md5(i || ':' ||
+    shingle)). num_hashes separate array_min(transform(...)) trees would
+    blow up plan size quadratically once downstream projections inline
+    them (measured: the 128-hash production config hung the optimizer)."""
+    from ..functions.text import shingles
+
+    src = _spread_narrow_scan(df.select(F.col(id_col), F.col(text_col)), id_col)
+    sh = src.select(F.col(id_col), shingles(text_col, k).alias("__sh"))
+    mh_arr = F.transform(
+        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
+        lambda i: F.array_min(
+            F.transform(
+                F.col("__sh"),
+                lambda s: F.md5(F.concat(i.cast("string"), F.lit(":"), s)),
+            )
+        ),
+    )
+    return sh, mh_arr
+
+
 def minhash_signatures_df(
     df: DataFrame, id_col: str, text_col: str, num_hashes: int = 8, k: int = 3
 ) -> DataFrame:
@@ -140,26 +165,7 @@ def minhash_signatures_df(
     only exchange left is the conditional single-file spread
     (:func:`_spread_narrow_scan`), absent at deployment scale.
     """
-    from ..functions.text import shingles
-
-    src = _spread_narrow_scan(df.select(F.col(id_col), F.col(text_col)), id_col)
-    sh = src.select(F.col(id_col), shingles(text_col, k).alias("__sh"))
-    # ONE nested-lambda expression computes all num_hashes minima as an
-    # array (hash family i's prefix CAST(i AS STRING) || ':' renders the
-    # identical bytes to the previous per-column literal f"{i}:"); the
-    # mh{i} output columns are then cheap element_at references. Emitting
-    # num_hashes separate array_min(transform(...)) trees instead blows up
-    # plan size quadratically once downstream projections/filters inline
-    # them (measured: the 128-hash production config hung the optimizer).
-    mh_arr = F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(
-                F.col("__sh"),
-                lambda s: F.md5(F.concat(i.cast("string"), F.lit(":"), s)),
-            )
-        ),
-    )
+    sh, mh_arr = _minhash_array(df, id_col, text_col, num_hashes, k)
     sigs = sh.select(F.col(id_col), mh_arr.alias("__mh"))
     return sigs.select(
         F.col(id_col),
@@ -187,19 +193,7 @@ def band_rows(
     does no cross-operator common-subexpression elimination), so the
     signature computed num_hashes+1 times per row."""
     rows_per_band = num_hashes // bands
-    from ..functions.text import shingles
-
-    src = _spread_narrow_scan(df.select(F.col(id_col), F.col(text_col)), id_col)
-    sh = src.select(F.col(id_col), shingles(text_col, 3).alias("__sh"))
-    mh_arr = F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(
-                F.col("__sh"),
-                lambda s: F.md5(F.concat(i.cast("string"), F.lit(":"), s)),
-            )
-        ),
-    )
+    sh, mh_arr = _minhash_array(df, id_col, text_col, num_hashes, 3)
     # NULL (not empty-string) band keys for shingle-less docs: guarded at
     # the array level so those rows vanish in the explode
     mh = sh.select(

@@ -180,16 +180,11 @@ def materialize_inverted_index(
     This replaces the reference's per-request index creation (api.py:22)
     with ingest-time materialization. A keyword probe then reads only the
     query tokens' partitions — partition pruning does the work of Mongo's
-    B-tree walk. Incremental ingest appends to the same layout.
-    ``stemmed=True`` persists the analyzer-parity (S-stemmed) layout.
+    B-tree walk. Incremental ingest appends to the same layout
+    (:func:`append_to_inverted_index`). ``stemmed=True`` persists the
+    analyzer-parity (S-stemmed) layout.
     """
-    (
-        build_inverted_index(df, key_col, text_col, stemmed=stemmed)
-        .withColumn("bucket", _token_bucket(F.col("token")))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
+    _write_inverted_index(df, key_col, path, text_col, stemmed, "overwrite")
 
 
 def append_to_inverted_index(
@@ -198,10 +193,16 @@ def append_to_inverted_index(
     """Incremental index maintenance: append postings for newly ingested
     documents into the same partition layout (REFRESH semantics for op 14's
     index — the reference recreated its index per request, api.py:22)."""
+    _write_inverted_index(df, key_col, path, text_col, False, "append")
+
+
+def _write_inverted_index(
+    df: DataFrame, key_col: str, path: str, text_col: str, stemmed: bool, mode: str
+) -> None:
     (
-        build_inverted_index(df, key_col, text_col)
+        build_inverted_index(df, key_col, text_col, stemmed=stemmed)
         .withColumn("bucket", _token_bucket(F.col("token")))
-        .write.mode("append")
+        .write.mode(mode)
         .partitionBy("bucket")
         .parquet(path)
     )
@@ -269,26 +270,44 @@ def materialize_bm25_index(
     under `append`-style incremental ingest of new documents without a
     stats rebuild; only the tiny stats row needs refreshing on ingest.
     """
-    with_dl = df.select(F.col(key_col), tokenize(text_col).alias("__toks")).withColumn(
-        "dl", F.size("__toks")
-    )
-    tf = (
-        with_dl.select(F.col(key_col), "dl", F.explode("__toks").alias("token"))
-        .groupBy(key_col, "dl", "token")
-        .agg(F.count("*").alias("tf"))
-    )
     (
-        tf.withColumn("bucket", _token_bucket(F.col("token")))
+        _postings(df, key_col, text_col)
+        .withColumn("bucket", _token_bucket(F.col("token")))
         .repartition("bucket")
         .sortWithinPartitions("token")
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(os.path.join(path, "postings"))
     )
-    (
-        with_dl.agg(F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"))
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "stats"))
+    _doc_stats(df, text_col).write.mode("overwrite").parquet(os.path.join(path, "stats"))
+
+
+def _postings(
+    df: DataFrame, key_col: str, text_col: str, toks: list[str] | None = None
+) -> DataFrame:
+    """The ``(key, dl, token, tf)`` posting rows, one per (document,
+    token): the one derivation behind the L2 BM25 layout's ``postings/``
+    and the in-memory rankers. ``dl`` is the document's token count, a
+    per-row array size carried on each row, so no corpus-wide length
+    relation is joined back. With ``toks`` the token array is filtered
+    BEFORE the explode, so only query-token occurrences generate rows
+    (~|toks|/|vocab| of the corpus)."""
+    with_dl = df.select(F.col(key_col), tokenize(text_col).alias("__toks")).withColumn(
+        "dl", F.size("__toks")
+    )
+    tokens = F.col("__toks") if toks is None else F.filter("__toks", lambda t: t.isin(toks))
+    return (
+        with_dl.select(F.col(key_col), "dl", F.explode(tokens).alias("token"))
+        .groupBy(key_col, "dl", "token")
+        .agg(F.count("*").alias("tf"))
+    )
+
+
+def _doc_stats(df: DataFrame, text_col: str) -> DataFrame:
+    """The one-row corpus scalars ``(n_docs, avgdl)`` of :func:`_postings`'
+    documents: a per-row array size, never an explode of the corpus."""
+    return df.select(F.size(tokenize(text_col)).alias("dl")).agg(
+        F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
     )
 
 
@@ -388,21 +407,19 @@ def bm25_rank(
     b: float = 0.75,
 ) -> DataFrame:
     """BM25-ranked keyword search (the relevance upgrade over the
-    reference's unordered Mongo cursor, api.py:26-35).
-
-    Plan shape: explode tokens once -> per-(doc, token) tf for query tokens
-    only, with the matched docs' lengths (:func:`_doc_len_and_tf`) -> the
-    corpus scalars (N, avgdl) read off the pinned lengths -> score and
-    top-k in :func:`_rank_sql` with the index paths' formula
-    (:func:`_bm25_term`). Scale: the posting explode is the same work as
-    index construction; everything after operates on matched rows only.
+    reference's unordered Mongo cursor, api.py:26-35), in memory: the
+    query tokens' :func:`_postings` rows (the rows the L2 layout stores;
+    pinned, since :func:`_rank_sql` reads them twice) scored with the
+    :func:`_doc_stats` scalars through :func:`_bm25_term`, so the scores
+    are the doubles :func:`bm25_rank_from_index` returns. Executor-loss
+    caveat: localCheckpoint blocks are non-replicated and non-recomputable
+    — see dedup.lsh_candidate_pairs's availability note.
     """
     toks = query_tokens(keyword)
     if not toks:
         return df.limit(0)
-    doc_len, rows = _doc_len_and_tf(df, key_col, text_col, toks)
-    n_docs, avgdl = doc_len.agg(F.count("*"), F.avg("dl")).first()
-    term = _bm25_term(k1, b, n_docs, avgdl)
+    rows = _postings(df, key_col, text_col, toks).localCheckpoint()
+    term = _bm25_term(k1, b, *_doc_stats(df, text_col).first())
     return rows.sparkSession.sql(
         _rank_sql("SELECT * FROM {rows}", key_col, "bm25", term, k), rows=rows
     )
@@ -417,60 +434,19 @@ def tfidf_rank(
 ) -> DataFrame:
     """TF-IDF-ranked keyword search: score = Σ_t (tf_t / dl) · idf_t with
     the smoothed idf = ln((1+N)/(1+df_t)) + 1 (sklearn's convention — no
-    division-by-zero, never negative). The linear sibling of bm25_rank
-    (same pinned tf/doc-length build, same ranking statement); BM25
-    saturates tf, TF-IDF stays proportional.
+    division-by-zero, never negative). The linear sibling of
+    :func:`bm25_rank`: the same pinned posting rows and ranking
+    statement, with N the corpus row count; BM25 saturates tf, TF-IDF
+    stays proportional.
     """
     toks = query_tokens(keyword)
     if not toks:
         return df.limit(0)
-    doc_len, rows = _doc_len_and_tf(df, key_col, text_col, toks)
-    term = f"(tf / dl) * (ln((1 + {doc_len.count()}L) / (1 + df)) + 1.0D)"
+    rows = _postings(df, key_col, text_col, toks).localCheckpoint()
+    term = f"(tf / dl) * (ln((1 + {df.count()}L) / (1 + df)) + 1.0D)"
     return rows.sparkSession.sql(
         _rank_sql("SELECT * FROM {rows}", key_col, "tfidf", term, k), rows=rows
     )
-
-
-def _doc_len_and_tf(
-    df: DataFrame, key_col: str, text_col: str, toks: list[str]
-) -> tuple[DataFrame, DataFrame]:
-    """The in-memory twin of the L2 BM25 layout: (key, dl) for every
-    document, and the match-bounded ``(key, token, tf, dl)`` posting rows
-    of the query tokens — the rows :func:`bm25_rank_from_index` reads from
-    ``postings/``.
-
-    Doc length is a per-row array size — never explode the full corpus
-    just to count it (the explode+groupBy costs a corpus-sized shuffle);
-    and the token array is filtered BEFORE explode so only query-token
-    occurrences generate rows (~|toks|/|vocab| of the corpus).
-
-    The two projections are pinned: doc_len (two int columns per doc) and
-    the match-bounded tf — un-pinned, corpus stats / dfreq /
-    doc_len_matched each re-ran the tokenize scan (the plan is a tree; 5
-    scans measured). Materializing 16-byte doc rows once beats
-    re-tokenizing the corpus per branch; the production path is
-    bm25_rank_from_index, which stores these tables outright.
-    Executor-loss caveat: localCheckpoint blocks are non-replicated and
-    non-recomputable — see dedup.lsh_candidate_pairs's availability note
-    for the multi-executor alternative (persist + action)."""
-    with_dl = df.select(F.col(key_col), tokenize(text_col).alias("__toks")).withColumn(
-        "dl", F.size("__toks")
-    )
-    doc_len = with_dl.select(key_col, "dl").localCheckpoint()
-    matched = with_dl.select(
-        F.col(key_col),
-        F.explode(F.filter("__toks", lambda t: t.isin(toks))).alias("token"),
-    )
-    tf = matched.groupBy(key_col, "token").agg(F.count("*").alias("tf")).localCheckpoint()
-    # restrict doc lengths to MATCHED docs before joining: unrestricted,
-    # Catalyst broadcasts the corpus-sized doc_len on local size estimates
-    # (the SCALE.md estimate trap) — semi-joined it is match-bounded at any
-    # scale. No broadcast hint on the matched-id side: a high-df query token
-    # makes the matched set itself corpus-scale, so forcing the broadcast
-    # reintroduces the OOM hazard; AQE picks broadcast when the runtime size
-    # is actually small (round-2 advice).
-    doc_len_matched = doc_len.join(tf.select(key_col).distinct(), key_col, "left_semi")
-    return doc_len, tf.join(doc_len_matched, key_col)
 
 
 # absolute path of a layout's stats/ -> (file signature, (n_docs, avgdl));

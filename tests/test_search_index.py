@@ -344,11 +344,16 @@ def test_bm25_scores_are_exact_doubles(spark, tmp_path):
 def test_bm25_df_is_a_broadcast_count(spark, tmp_path):
     """The ranking shuffles posting rows by key only: each token's df is a
     grouped count broadcast back to them, never a window over the token,
-    which would gather every posting of a common token into one task."""
+    which would gather every posting of a common token into one task.
+    The posting rows carry their document's length, in memory as in the
+    layout, so that token join is the statement's only join."""
+    import re
+
     from code_challenge___data_engineer___machinemax_spark.operators.search import (
         bm25_rank,
         bm25_rank_from_index,
         materialize_bm25_index,
+        tfidf_rank,
     )
 
     from tests.test_plans import explain_text
@@ -356,9 +361,16 @@ def test_bm25_df_is_a_broadcast_count(spark, tmp_path):
     d = spark.createDataFrame([(1, "merge vector"), (2, "merge join")], "doc_id long, text string")
     path = str(tmp_path / "bm25")
     materialize_bm25_index(d, "doc_id", path)
-    for df in (bm25_rank_from_index(spark, path, "merge vector"), bm25_rank(d, "doc_id", "merge")):
+    for df in (
+        bm25_rank_from_index(spark, path, "merge vector"),
+        bm25_rank(d, "doc_id", "merge"),
+        tfidf_rank(d, "doc_id", "merge"),
+    ):
         plan = explain_text(df)
         assert "Window" not in plan and "BroadcastExchange" in plan
+        keys = re.findall(r"(?:Left|Right) keys \[\d+\]: \[(.*?)\]\n", plan)
+        assert "LeftSemi" not in plan
+        assert keys and all(k.startswith("token#") for k in keys), keys
 
 
 def test_one_bm25_formula():

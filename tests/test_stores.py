@@ -572,6 +572,38 @@ def test_article_store_snapshot_prunes_on_partition(spark, tmp_path):
     assert {r.section for r in store.search("alpha").collect()} == {"news", "sport", None}
 
 
+def test_article_store_snapshot_read_infers_no_schema(spark, tmp_path):
+    """The first search of a new log state resolves the log and writes its
+    snapshot, then reads it with the declared ``ARTICLE`` schema: three
+    jobs while the DataFrame is built (an inferring read of the snapshot
+    made it four), one to collect it."""
+    store = ArticleStore(spark, str(tmp_path / "articles"))
+    store.append(_article(spark, "https://a.test/1", "alpha"), version=1)
+    store.search("alpha").collect()
+    store.append(_article(spark, "https://a.test/2", "alpha beta"), version=2)
+    df, build_jobs = _jobs(spark, f"{tmp_path.name}-build", lambda: store.search("alpha"))
+    rows, exec_jobs = _jobs(spark, f"{tmp_path.name}-exec", df.collect)
+    assert len(_snapshots(store)) == 2
+    assert build_jobs <= 3 and exec_jobs == 1
+    assert sorted(r.url for r in rows) == ["https://a.test/1", "https://a.test/2"]
+
+
+def test_article_store_partition_column_reads_as_string(spark, tmp_path):
+    """Section values that look like integers still read back as strings
+    from a partitioned snapshot, and a section filter still prunes."""
+    store = ArticleStore(spark, str(tmp_path / "articles"), partition_by="section")
+    for i, section in enumerate(["1", "2", None], 1):
+        store.append(_article(spark, f"https://a.test/{i}", "alpha", section), version=i)
+    latest = store.latest()
+    assert latest.schema["section"].dataType == T.StringType()
+    q = latest.filter(F.col("section") == "1")
+    assert "section" in explain_text(q).split("PartitionFilters", 1)[1][:200]
+    assert [(r.url, r.section) for r in q.collect()] == [("https://a.test/1", "1")]
+    hits = store.search("alpha")
+    assert hits.schema["section"].dataType == T.StringType()
+    assert {r.section for r in hits.collect()} == {"1", "2", None}
+
+
 def test_article_store_snapshot_is_invisible_to_log_readers(spark, tmp_path):
     """The snapshot lives under ``_latest/``, which the file signature,
     Spark's file index and the streaming file source all skip."""
@@ -700,7 +732,9 @@ def test_one_parquet_read_primitive():
     """Every parquet read in the package goes through tables.read_parquet,
     so none pays a schema-inference job per call. The one exception is the
     multi-directory snapshot read in txn.py; the mergeSchema read in
-    plans/layout_queries.py is ``.read.option(...)`` and not matched."""
+    plans/layout_queries.py is ``.read.option(...)`` and the declared-schema
+    article snapshot read in crawl/ingest.py is ``.read.schema(...)``, which
+    infers nothing; neither is matched."""
     pkg = os.path.dirname(tables.__file__)
     allowed = {("txn.py", "return spark.read.parquet(*dirs)")}
     found = []
