@@ -28,7 +28,7 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.text import s_stem_py, tokenize, tokenize_spark_sql, tokenize_stemmed
@@ -283,7 +283,11 @@ def materialize_bm25_index(
 
 
 def _postings(
-    df: DataFrame, key_col: str, text_col: str, toks: list[str] | None = None
+    df: DataFrame,
+    key_col: str,
+    text_col: str,
+    toks: list[str] | None = None,
+    stats: Observation | None = None,
 ) -> DataFrame:
     """The ``(key, dl, token, tf)`` posting rows, one per (document,
     token): the one derivation behind the L2 BM25 layout's ``postings/``
@@ -291,10 +295,14 @@ def _postings(
     per-row array size carried on each row, so no corpus-wide length
     relation is joined back. With ``toks`` the token array is filtered
     BEFORE the explode, so only query-token occurrences generate rows
-    (~|toks|/|vocab| of the corpus)."""
+    (~|toks|/|vocab| of the corpus). With ``stats`` the documents are
+    observed before the explode, so the pass that computes the rows also
+    yields the :func:`_doc_stats` scalars."""
     with_dl = df.select(F.col(key_col), tokenize(text_col).alias("__toks")).withColumn(
         "dl", F.size("__toks")
     )
+    if stats is not None:
+        with_dl = with_dl.observe(stats, *_doc_stat_columns())
     tokens = F.col("__toks") if toks is None else F.filter("__toks", lambda t: t.isin(toks))
     return (
         with_dl.select(F.col(key_col), "dl", F.explode(tokens).alias("token"))
@@ -306,9 +314,31 @@ def _postings(
 def _doc_stats(df: DataFrame, text_col: str) -> DataFrame:
     """The one-row corpus scalars ``(n_docs, avgdl)`` of :func:`_postings`'
     documents: a per-row array size, never an explode of the corpus."""
-    return df.select(F.size(tokenize(text_col)).alias("dl")).agg(
-        F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
+    return df.select(F.size(tokenize(text_col)).alias("dl")).agg(*_doc_stat_columns())
+
+
+def _doc_stat_columns() -> tuple:
+    """The aggregates of ``(n_docs, avgdl)`` over rows carrying ``dl``."""
+    return F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
+
+
+def _pinned_postings(
+    df: DataFrame, key_col: str, text_col: str, toks: list[str]
+) -> tuple[DataFrame, int, float | None]:
+    """The query tokens' :func:`_postings` rows, pinned, with the corpus
+    scalars ``(n_docs, avgdl)`` observed on the same pass, so the corpus
+    is tokenized once per in-memory ranking. Executor-loss caveat:
+    localCheckpoint blocks are non-replicated and non-recomputable — see
+    dedup.lsh_candidate_pairs's availability note."""
+    stats = Observation()
+    rows = _postings(df, key_col, text_col, toks, stats).localCheckpoint()
+    if not rows.rdd.getNumPartitions():
+        # no document holds a query token: adaptive execution drops the
+        # empty shuffle stage, and the metrics observed in it, from the
+        # plan; the ranking of no rows is empty whatever the scalars
+        return rows, 0, None
+    got = stats.get
+    return rows, got["n_docs"], got["avgdl"]
 
 
 def bm25_rank_from_index(
@@ -328,9 +358,10 @@ def bm25_rank_from_index(
     is an exact count OF the probed rows, and (n_docs, avgdl) come from
     the one-row stats table as literals (:func:`_corpus_stats`) — so the
     whole query is one statement that touches only the query tokens'
-    postings, never the corpus. Scores are identical to :func:`bm25_rank`
-    (same formula, same doubles). A layout built from no documents ranks
-    nothing.
+    postings, never the corpus, and runs as one Spark job: the probe is
+    ranked in one task with no exchange (:func:`_rank_sql`). Scores are
+    identical to :func:`bm25_rank` (same formula, same doubles). A layout
+    built from no documents ranks nothing.
     """
     toks = query_tokens(keyword)
     postings = read_layout(spark, os.path.join(index_path, "postings")) if toks else None
@@ -359,21 +390,22 @@ def bm25_batch_rank_from_index(
     metadata: PartitionFilters on the token buckets + token IN (...) at
     the scan); per-token df/idf and per-(doc, token) term scores are
     computed ONCE from the probed rows and shared across queries; a
-    broadcast (qid, token) map then fans each term score out to exactly
-    the queries containing that token, and the per-query top-k is a
-    window PARTITIONED BY qid. Scores are bit-identical to N separate
-    :func:`bm25_rank_from_index` calls (same formula, same doubles).
-    Returns (qid, key, bm25, rk)."""
-    # dedupe tokens WITHIN each query (order-preserving): the single-query
-    # path scores each posting row once regardless of how many times the
-    # keyword repeats a token, so a duplicate (qid, token) row here would
-    # double-count term_score and break the bit-identical claim (ADVICE r8)
-    qmap_rows = [
-        (qid, t)
-        for qid, kw in enumerate(keywords)
-        for t in dict.fromkeys(query_tokens(kw))
-    ]
-    toks = sorted({t for _, t in qmap_rows})
+    literal ``map(token -> array(qid))`` exploded on each scored row fans
+    its term score out to exactly the queries containing that token, and
+    the per-query top-k is a window PARTITIONED BY qid — all in the one
+    partition the probe is coalesced to, so the batch is one Spark job
+    with no exchange and no join (:func:`_rank_sql`). Scores are
+    bit-identical to N separate :func:`bm25_rank_from_index` calls (same
+    formula, same doubles). Returns (qid, key, bm25, rk)."""
+    # each token's query ids, a query's repeated token counted once: the
+    # single-query path scores each posting row once regardless of how many
+    # times the keyword repeats a token, so a duplicate qid here would
+    # double-count term_score and break the bit-identical claim
+    qids: dict[str, list[int]] = {}
+    for qid, kw in enumerate(keywords):
+        for t in dict.fromkeys(query_tokens(kw)):
+            qids.setdefault(t, []).append(qid)
+    toks = sorted(qids)
     postings = read_layout(spark, os.path.join(index_path, "postings")) if toks else None
     if postings is None:
         return spark.range(0).select(
@@ -382,19 +414,19 @@ def bm25_batch_rank_from_index(
             F.lit(0.0).alias("bm25"),
             F.col("id").cast("int").alias("rk"),
         )
-    queries = ", ".join(f"({qid}, {_lit(t)})" for qid, t in qmap_rows)
-    return _rank_index(spark, index_path, postings, toks, key_col, k, k1, b, queries)
+    fanout = ", ".join(f"{_lit(t)}, array({', '.join(map(str, qids[t]))})" for t in toks)
+    return _rank_index(spark, index_path, postings, toks, key_col, k, k1, b, f"map({fanout})")
 
 
 def _rank_index(
     spark, index_path: str, postings: DataFrame, toks: list[str], key_col: str, k: int,
-    k1: float, b: float, queries: str | None = None,
+    k1: float, b: float, fanout: str | None = None,
 ) -> DataFrame:
     """:func:`_rank_sql` over a BM25 layout: the ``postings`` of ``toks``
     (pruned probe) scored with the layout's corpus scalars."""
     rows = f"SELECT {_ident(key_col)}, token, tf, dl FROM {{postings}} WHERE {_probe(toks)}"
     term = _bm25_term(k1, b, *_corpus_stats(spark, os.path.join(index_path, "stats")))
-    return spark.sql(_rank_sql(rows, key_col, "bm25", term, k, queries), postings=postings)
+    return spark.sql(_rank_sql(rows, key_col, "bm25", term, k, fanout), postings=postings)
 
 
 def bm25_rank(
@@ -408,20 +440,20 @@ def bm25_rank(
 ) -> DataFrame:
     """BM25-ranked keyword search (the relevance upgrade over the
     reference's unordered Mongo cursor, api.py:26-35), in memory: the
-    query tokens' :func:`_postings` rows (the rows the L2 layout stores;
-    pinned, since :func:`_rank_sql` reads them twice) scored with the
-    :func:`_doc_stats` scalars through :func:`_bm25_term`, so the scores
-    are the doubles :func:`bm25_rank_from_index` returns. Executor-loss
-    caveat: localCheckpoint blocks are non-replicated and non-recomputable
-    — see dedup.lsh_candidate_pairs's availability note.
+    query tokens' :func:`_postings` rows (the rows the L2 layout stores),
+    pinned by the one pass over the corpus that also observes the
+    :func:`_doc_stats` scalars (:func:`_pinned_postings`), then scored
+    through :func:`_bm25_term` and ranked in one Spark job with no
+    exchange (:func:`_rank_sql`), so the scores are the doubles
+    :func:`bm25_rank_from_index` returns.
     """
     toks = query_tokens(keyword)
     if not toks:
         return df.limit(0)
-    rows = _postings(df, key_col, text_col, toks).localCheckpoint()
-    term = _bm25_term(k1, b, *_doc_stats(df, text_col).first())
+    rows, n_docs, avgdl = _pinned_postings(df, key_col, text_col, toks)
     return rows.sparkSession.sql(
-        _rank_sql("SELECT * FROM {rows}", key_col, "bm25", term, k), rows=rows
+        _rank_sql("SELECT * FROM {rows}", key_col, "bm25", _bm25_term(k1, b, n_docs, avgdl), k),
+        rows=rows,
     )
 
 
@@ -436,14 +468,14 @@ def tfidf_rank(
     the smoothed idf = ln((1+N)/(1+df_t)) + 1 (sklearn's convention — no
     division-by-zero, never negative). The linear sibling of
     :func:`bm25_rank`: the same pinned posting rows and ranking
-    statement, with N the corpus row count; BM25 saturates tf, TF-IDF
-    stays proportional.
+    statement, with N the observed corpus row count; BM25 saturates tf,
+    TF-IDF stays proportional.
     """
     toks = query_tokens(keyword)
     if not toks:
         return df.limit(0)
-    rows = _postings(df, key_col, text_col, toks).localCheckpoint()
-    term = f"(tf / dl) * (ln((1 + {df.count()}L) / (1 + df)) + 1.0D)"
+    rows, n_docs, _ = _pinned_postings(df, key_col, text_col, toks)
+    term = f"(tf / dl) * (ln((1 + {n_docs}L) / (1 + df)) + 1.0D)"
     return rows.sparkSession.sql(
         _rank_sql("SELECT * FROM {rows}", key_col, "tfidf", term, k), rows=rows
     )
@@ -480,32 +512,38 @@ def _bm25_term(k1: float, b: float, n_docs: int, avgdl: float | None) -> str:
 
 
 def _rank_sql(
-    rows: str, key_col: str, score: str, term: str, k: int, queries: str | None = None
+    rows: str, key_col: str, score: str, term: str, k: int, fanout: str | None = None
 ) -> str:
     """One statement that ranks the ``(key, token, tf, dl)`` posting rows
-    that the query text ``rows`` selects, one row per (document, token):
-    the rows are shuffled by key and ``df`` is a grouped count per token
-    broadcast back to them, so no task gathers every posting of a common
-    token, as a window over the token would; ``term``
-    scores each row, and a key's ``score`` is its term scores' sum rounded
-    to 6 places. The result is the top ``k`` keys by score, key ties
-    ascending. With ``queries`` (``VALUES`` rows ``(qid, token)``) each
-    query sums the term scores of its own tokens and is ranked on its own:
-    ``(qid, key, score, rk)`` with ``rk <= k``."""
+    that the query text ``rows`` selects, one row per (document, token),
+    in one Spark job with no exchange: the rows are coalesced to one
+    partition, where ``df`` is a count over the token, ``term`` scores
+    each row and a key's ``score`` is its term scores' sum rounded to 6
+    places, so neither the sum nor the top-k shuffles. The result is the
+    top ``k`` keys by score, key ties ascending. With ``fanout`` (a SQL
+    ``map`` from each token to the array of query ids containing it) each
+    query sums the term scores of its own tokens and is ranked on its
+    own: ``(qid, key, score, rk)`` with ``rk <= k``.
+
+    The trade-off: one task ranks every probed posting, a common token's
+    included, rather than spreading them over tasks at the cost of
+    exchanges and more jobs. A serving request probes few postings, so
+    its cost is its jobs; a request whose probe holds most postings of a
+    large corpus ranks slower in the one task."""
     key = _ident(key_col)
     scored = (
-        f"WITH p AS ({rows}), scored AS (SELECT /*+ BROADCAST(d) */ {key}, token, "
-        f"{term} AS term_score FROM (SELECT * FROM p DISTRIBUTE BY {key}) JOIN "
-        f"(SELECT token, count(*) AS df FROM p GROUP BY token) d USING (token)) "
+        f"WITH p AS (SELECT /*+ COALESCE(1) */ * FROM ({rows})), scored AS "
+        f"(SELECT {key}, token, {term} AS term_score FROM "
+        f"(SELECT *, count(*) OVER (PARTITION BY token) AS df FROM p)) "
     )
-    if queries is None:
+    if fanout is None:
         return (
             f"{scored}SELECT {key}, round(sum(term_score), 6) AS {score} FROM scored "
             f"GROUP BY {key} ORDER BY {score} DESC, {key} LIMIT {k}"
         )
     per_query = (
-        f"SELECT /*+ BROADCAST(q) */ qid, {key}, round(sum(term_score), 6) AS {score} "
-        f"FROM scored JOIN (VALUES {queries}) AS q(qid, token) USING (token) "
+        f"SELECT qid, {key}, round(sum(term_score), 6) AS {score} FROM (SELECT "
+        f"explode(element_at({fanout}, token)) AS qid, {key}, term_score FROM scored) "
         f"GROUP BY qid, {key}"
     )
     return (

@@ -133,8 +133,10 @@ def bm25_batch_search_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyword queries share ONE pruned index probe (the union of their
     tokens — still PartitionFilters + token IN (...) at the scan),
     per-token df/idf and per-(doc, token) term scores compute once and
-    fan out to queries via a broadcast (qid, token) map, and each query's
-    top-10 is a qid-partitioned window. The search-family counterpart of
+    fan out to queries via a literal token -> query-ids map, and each
+    query's top-10 is a qid-partitioned window, all in the one partition
+    the probe is coalesced to: one Spark job, no exchange, no join. The
+    search-family counterpart of
     `ivf_batch_topk_from_store`: the layout amortizes across the query
     BATCH — per-query cost is probe/|batch|, which is how a search
     service (or an offline relevance-labeling sweep over thousands of
@@ -144,10 +146,10 @@ def bm25_batch_search_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties, identically in the oracle.
 
     Scale: probe volume is union-of-tokens bounded regardless of batch
-    size; the (qid, token) fan-out multiplies only matched posting rows
-    by the queries sharing each token; the per-query window partitions by
-    qid over match-bounded candidates (operators/search.py::
-    bm25_batch_rank_from_index)."""
+    size; the fan-out multiplies only matched posting rows by the queries
+    sharing each token; one task ranks the whole probe, so a batch whose
+    probe holds most postings of a large corpus is bound by that task
+    (operators/search.py::_rank_sql)."""
     from ..operators.search import bm25_batch_rank_from_index
     from ..stores import ensure_bm25_index_store
 

@@ -11,7 +11,7 @@ from code_challenge___data_engineer___machinemax_spark.operators.clustering impo
     inertia,
     kmeans_lite,
 )
-from code_challenge___data_engineer___machinemax_spark.operators.search import bm25_rank
+from code_challenge___data_engineer___machinemax_spark.operators.search import bm25_rank, tfidf_rank
 from code_challenge___data_engineer___machinemax_spark.tables import load_table
 
 
@@ -118,6 +118,9 @@ def test_bm25_ranks_higher_tf_and_rarer_terms(spark):
     # rarer term outranks common term at equal tf
     top2 = bm25_rank(df, "doc_id", "rareterm engine", k=5).collect()
     assert top2[0].doc_id == 5
+    # a keyword no document holds ranks nothing (its posting pass is empty)
+    assert bm25_rank(df, "doc_id", "nohit").collect() == []
+    assert tfidf_rank(df, "doc_id", "nohit").collect() == []
 
 
 def test_kmeans_fixed_point_separates_planted_clusters(spark):

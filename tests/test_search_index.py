@@ -258,14 +258,13 @@ def _request(spark, sf_dir, tmp_path, monkeypatch, entry):
 
 @pytest.mark.parametrize(
     "entry, max_jobs",
-    [("article_store", 1), ("keyword_search", 1), ("materialized_index", 2), ("bm25_from_index", 4)],
+    [("article_store", 1), ("keyword_search", 1), ("materialized_index", 2), ("bm25_from_index", 1)],
 )
 def test_search_request_job_budget(spark, sf_dir, tmp_path, monkeypatch, entry, max_jobs):
     """Once one request has run (snapshot published, schemas inferred,
     BM25 stats read), a request builds its DataFrame without a Spark job
-    and runs in at most ``max_jobs``. BM25's four: the postings shuffled
-    by key and the per-token df count, which run side by side, the df
-    broadcast, and the ranking."""
+    and runs in at most ``max_jobs``. BM25 ranks its probed postings in
+    one job."""
     from tests.test_stores import _jobs
 
     request = _request(spark, sf_dir, tmp_path, monkeypatch, entry)
@@ -341,36 +340,41 @@ def test_bm25_scores_are_exact_doubles(spark, tmp_path):
     assert "decimal" not in explain_text(batch).lower()
 
 
-def test_bm25_df_is_a_broadcast_count(spark, tmp_path):
-    """The ranking shuffles posting rows by key only: each token's df is a
-    grouped count broadcast back to them, never a window over the token,
-    which would gather every posting of a common token into one task.
-    The posting rows carry their document's length, in memory as in the
-    layout, so that token join is the statement's only join."""
-    import re
-
+def test_rankers_run_one_job_without_exchange(spark, tmp_path):
+    """Every ranker runs as one Spark job whose executed plan has no
+    exchange (shuffle or broadcast) and no join: the posting rows are
+    coalesced to one partition, where df is a count over the token and the
+    per-key sum, the per-query fan-out and the top-k need no shuffle. The
+    posting rows carry their document's length, in memory as in the
+    layout, so nothing is joined back."""
     from code_challenge___data_engineer___machinemax_spark.operators.search import (
+        bm25_batch_rank_from_index,
         bm25_rank,
         bm25_rank_from_index,
         materialize_bm25_index,
         tfidf_rank,
     )
 
-    from tests.test_plans import explain_text
+    from tests.test_stores import _jobs
 
-    d = spark.createDataFrame([(1, "merge vector"), (2, "merge join")], "doc_id long, text string")
+    d = spark.createDataFrame(
+        [(1, "merge vector"), (2, "merge join"), (3, "vector plan vector")],
+        "doc_id long, text string",
+    )
     path = str(tmp_path / "bm25")
     materialize_bm25_index(d, "doc_id", path)
-    for df in (
-        bm25_rank_from_index(spark, path, "merge vector"),
-        bm25_rank(d, "doc_id", "merge"),
-        tfidf_rank(d, "doc_id", "merge"),
-    ):
-        plan = explain_text(df)
-        assert "Window" not in plan and "BroadcastExchange" in plan
-        keys = re.findall(r"(?:Left|Right) keys \[\d+\]: \[(.*?)\]\n", plan)
-        assert "LeftSemi" not in plan
-        assert keys and all(k.startswith("token#") for k in keys), keys
+    rankers = {
+        "bm25_from_index": lambda: bm25_rank_from_index(spark, path, "merge vector"),
+        "bm25_batch": lambda: bm25_batch_rank_from_index(spark, path, ["merge vector", "plan"]),
+        "bm25": lambda: bm25_rank(d, "doc_id", "merge vector"),
+        "tfidf": lambda: tfidf_rank(d, "doc_id", "merge vector"),
+    }
+    for name, rank in rankers.items():
+        df = rank()
+        rows, jobs = _jobs(spark, f"{tmp_path.name}-{name}", df.collect)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert rows and jobs == 1, (name, jobs)
+        assert "Exchange" not in plan and "Join" not in plan, (name, plan)
 
 
 def test_one_bm25_formula():
