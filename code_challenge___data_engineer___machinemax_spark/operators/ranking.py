@@ -32,6 +32,14 @@ garbage-collected — same one-materialization pin, no session-lifetime
 leak, and the first action (the count job below) still materializes it
 in one pass exactly as the lazy persist did.
 
+Because the pin truncates lineage, the range exchange is not in the
+returned frame's plan: it is in the plan of the pin's own SQL execution
+(``localCheckpoint``), which starts during the call, and the count job
+below runs it. The returned frame's plan starts at ``Scan ExistingRDD``
+over the checkpointed rows. A plan check for ``rangepartitioning`` must
+read the SQL executions the call started (the status store's
+``executionsList``), not only the frame's ``explain``.
+
 ``ntile_from_rank`` then reproduces SQL ``NTILE(k)`` arithmetic exactly
 (first ``n % k`` tiles get ``ceil(n/k)`` rows, the rest ``floor(n/k)``),
 so results are bit-identical to the DuckDB oracle's ``ntile`` under the

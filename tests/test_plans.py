@@ -274,11 +274,29 @@ def test_dsir_scoring_join_broadcasts_model(spark, sf_dir):
     assert "CartesianProduct" not in txt
 
 
+def _sql_executions(spark) -> list[tuple[int, str]]:
+    """(id, physical plan) of each SQL execution the status store retains."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    out = []
+    while it.hasNext():
+        e = it.next()
+        out.append((e.executionId(), e.physicalPlanDescription()))
+    return out
+
+
 def test_perplexity_terciles_have_no_global_window(spark, sf_dir):
     # the corpus-wide NTILE must be the scalable_ntile plan (range
-    # exchange + partitioned local ranks), never a single-partition window
-    txt = explain_text(_QS["perplexity_tercile_mix"](spark, sf_dir))
-    assert "rangepartitioning" in txt.lower()
+    # exchange + partitioned local ranks), never a single-partition window.
+    # The range layout is pinned by a localCheckpoint, so its exchange runs
+    # in the SQL executions started while the frame is built, and the
+    # frame's own plan starts at the checkpointed rows. Executions are
+    # selected by id: the store drops its oldest beyond retainedExecutions.
+    before = max((i for i, _ in _sql_executions(spark)), default=-1)
+    df = _QS["perplexity_tercile_mix"](spark, sf_dir)
+    built = [plan for i, plan in _sql_executions(spark) if i > before]
+    txt = explain_text(df)
+    assert "rangepartitioning" in "\n".join([*built, txt]).lower()
     assert "ntile(" not in txt.lower()  # tile comes from rank arithmetic
 
 
