@@ -7,16 +7,18 @@ an error, api-test:40-43). Stemming is a documented deviation (Mongo's
 analyzer-dependent stemming is not reproduced; the reference tests only
 exercise exact-token match).
 
-Two execution strategies:
+Three execution strategies:
 - ``keyword_search``: brute-force tokenize + ``arrays_overlap`` scan.
   Catalyst-native, whole-stage codegen, perfect at test scale.
-- ``build_inverted_index`` + ``indexed_keyword_search``: the 100 TB path —
-  materialize ``(token, doc_id)`` once at ingest (replacing Mongo's text
-  index, which the reference re-creates per request, api.py:22), then a
-  keyword query becomes a semi-join: probe the index on the (few) query
-  tokens and semi-join the hits back to the corpus. With the index table
-  partitioned/bucketed by token, the probe is a pruned scan, not a full
-  corpus pass.
+- ``build_inverted_index`` + ``indexed_keyword_search``: ``(token, doc_id)``
+  postings built in the query's own plan, then a semi-join of the probed
+  keys back to the corpus.
+- The persisted L2 posting layout: ``materialize_bm25_index`` writes the
+  ``(key, dl, token, tf)`` postings once at ingest (replacing Mongo's text
+  index, which the reference re-creates per request, api.py:22),
+  partitioned by token bucket, so a probe is a pruned scan, not a full
+  corpus pass. The one layout serves both the keyword probe
+  (``search_with_materialized_index``) and the BM25 rankers.
 
 Each search request is one Spark SQL statement over the relations it
 reads, so it is parsed and analyzed once; a chain of DataFrame calls
@@ -129,22 +131,12 @@ def keyword_search_folded(df: DataFrame, keyword: str, text_col: str = "text") -
     return _analyzed_keyword_search(df, keyword, text_col, fold_accents_py, tokenize_folded)
 
 
-def build_inverted_index(
-    df: DataFrame, key_col: str, text_col: str = "text", stemmed: bool = False
-) -> DataFrame:
-    """(token, key) posting table: explode distinct tokens per document.
-
-    ``stemmed=True`` builds the analyzer-parity posting list (S-stemmed
-    tokens — the ingest-time twin of :func:`keyword_search_stemmed`, so the
-    per-query cost of stemming is zero at scale). Probe it with stemmed
-    query tokens.
-
-    At scale: write partitioned/bucketed by ``token`` so a keyword probe
-    prunes to the query tokens' buckets.
-    """
-    toks = tokenize_stemmed(text_col) if stemmed else tokenize(text_col)
+def build_inverted_index(df: DataFrame, key_col: str, text_col: str = "text") -> DataFrame:
+    """(token, key) posting table: explode distinct tokens per document,
+    in the query's own plan. The persisted layout is
+    :func:`materialize_bm25_index`'s ``postings/``."""
     return df.select(
-        F.col(key_col), F.explode(F.array_distinct(toks)).alias("token")
+        F.col(key_col), F.explode(F.array_distinct(tokenize(text_col))).alias("token")
     )
 
 
@@ -172,36 +164,31 @@ def _probe(toks: list[str]) -> str:
     return f"bucket IN ({_lits(_token_buckets_py(toks))}) AND token IN ({_lits(toks)})"
 
 
-def materialize_inverted_index(
-    df: DataFrame, key_col: str, path: str, text_col: str = "text", stemmed: bool = False
-) -> None:
-    """Persist the posting table partitioned by token prefix.
-
-    This replaces the reference's per-request index creation (api.py:22)
-    with ingest-time materialization. A keyword probe then reads only the
-    query tokens' partitions — partition pruning does the work of Mongo's
-    B-tree walk. Incremental ingest appends to the same layout
-    (:func:`append_to_inverted_index`). ``stemmed=True`` persists the
-    analyzer-parity (S-stemmed) layout.
-    """
-    _write_inverted_index(df, key_col, path, text_col, stemmed, "overwrite")
-
-
 def append_to_inverted_index(
     df: DataFrame, key_col: str, path: str, text_col: str = "text"
 ) -> None:
-    """Incremental index maintenance: append postings for newly ingested
-    documents into the same partition layout (REFRESH semantics for op 14's
-    index — the reference recreated its index per request, api.py:22)."""
-    _write_inverted_index(df, key_col, path, text_col, False, "append")
+    """Incremental index maintenance: append the postings of newly
+    ingested documents to a posting layout (``path`` is a
+    :func:`materialize_bm25_index` ``postings/`` or a layout built by
+    appends alone) — REFRESH semantics for op 14's index; the reference
+    recreated its index per request (api.py:22). A layout built by appends
+    alone has no ``stats/``, so it serves keyword probes only; an append to
+    a BM25 layout's ``postings/`` leaves its ``stats/`` at the old corpus,
+    so BM25 over it needs a rebuild."""
+    _write_postings(df, key_col, path, text_col, "append")
 
 
-def _write_inverted_index(
-    df: DataFrame, key_col: str, path: str, text_col: str, stemmed: bool, mode: str
-) -> None:
+def _write_postings(df: DataFrame, key_col: str, path: str, text_col: str, mode: str) -> None:
+    """The one writer of the token-bucketed posting layout: the
+    :func:`_postings` rows partitioned by token first-char bucket and
+    sorted by token within partitions, so a probe prunes to the query
+    tokens' partitions and row groups. ``mode`` is ``overwrite`` or
+    ``append``."""
     (
-        build_inverted_index(df, key_col, text_col, stemmed=stemmed)
+        _postings(df, key_col, text_col)
         .withColumn("bucket", _token_bucket(F.col("token")))
+        .repartition("bucket")
+        .sortWithinPartitions("token")
         .write.mode(mode)
         .partitionBy("bucket")
         .parquet(path)
@@ -209,17 +196,13 @@ def _write_inverted_index(
 
 
 def search_with_materialized_index(
-    spark, df: DataFrame, index_path: str, key_col: str, keyword: str,
-    stemmed: bool = False,
+    spark, df: DataFrame, index_path: str, key_col: str, keyword: str
 ) -> DataFrame:
-    """Probe the persisted index: partition pruning on the token prefix +
-    token equality (both pushed to the scan) -> broadcast semi-join back
-    to the corpus. ``stemmed=True`` stems the query tokens to probe a
-    ``stemmed=True``-materialized layout. An index built from no
-    documents matches nothing."""
+    """Probe a persisted posting layout (a :func:`materialize_bm25_index`
+    ``postings/``): partition pruning on the token prefix + token
+    equality (both pushed to the scan) -> broadcast semi-join back to the
+    corpus. An index built from no documents matches nothing."""
     toks = query_tokens(keyword)
-    if stemmed:
-        toks = sorted({s_stem_py(t) for t in toks})
     index = read_layout(spark, index_path) if toks else None
     if index is None:
         return df.limit(0)
@@ -254,13 +237,14 @@ def _semi_join(df: DataFrame, postings: DataFrame, key_col: str, probe: str) -> 
 def materialize_bm25_index(
     df: DataFrame, key_col: str, path: str, text_col: str = "text"
 ) -> None:
-    """Persist the BM25-scored posting layout (DEPLOY.md L2 + the
-    'BM25 per-doc lengths' entry of the ingest-time materialization list):
+    """Persist the L2 posting layout (DEPLOY.md L2 + the 'BM25 per-doc
+    lengths' entry of the ingest-time materialization list):
 
-    - ``postings/``: one ``(token, key, tf, dl)`` row per (document, token),
-      partitioned by token first-char bucket and sorted by token within
-      partitions — a probe prunes to the query tokens' partitions and
-      row-groups exactly like the plain keyword index.
+    - ``postings/``: one ``(key, dl, token, tf)`` row per (document,
+      token), written by :func:`_write_postings` — the layout the keyword
+      probe (:func:`search_with_materialized_index`) and the BM25 rankers
+      both read. Incremental ingest appends to it
+      (:func:`append_to_inverted_index`).
     - ``stats/``: ONE row ``(n_docs, avgdl)`` — the corpus scalars BM25
       needs, computed once at ingest instead of a full corpus pass per
       query (the cost `bm25_rank` pays self-contained).
@@ -270,15 +254,7 @@ def materialize_bm25_index(
     under `append`-style incremental ingest of new documents without a
     stats rebuild; only the tiny stats row needs refreshing on ingest.
     """
-    (
-        _postings(df, key_col, text_col)
-        .withColumn("bucket", _token_bucket(F.col("token")))
-        .repartition("bucket")
-        .sortWithinPartitions("token")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(os.path.join(path, "postings"))
-    )
+    _write_postings(df, key_col, os.path.join(path, "postings"), text_col, "overwrite")
     _doc_stats(df, text_col).write.mode("overwrite").parquet(os.path.join(path, "stats"))
 
 
@@ -573,7 +549,7 @@ def phrase_search(
 
     The positional posting table (key, pos, token) is filtered to each
     query token BEFORE any join — at scale the postings live in the
-    token-bucketed L2 index layout (materialize_inverted_index), so each
+    token-bucketed L2 posting layout (materialize_bm25_index), so each
     filter is a partition-pruned probe, and the n-1 self-joins are
     equi-joins on (key, pos+i) over only the probed slices (selectivity
     of the rarest token bounds all of them). No window, no cartesian.

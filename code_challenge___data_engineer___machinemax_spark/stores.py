@@ -242,17 +242,11 @@ def ensure_bm25_index_store(spark: SparkSession, sf_dir: str) -> str:
 
 
 def ensure_inverted_index_store(spark: SparkSession, sf_dir: str) -> str:
-    """The token-bucket-partitioned inverted index for ``documents``
-    (DEPLOY.md L2; ``operators.search.materialize_inverted_index``) — the
-    replacement for the reference's per-request index build (api.py:22)."""
-    from .operators.search import materialize_inverted_index
-
-    return _publish(
-        _store_path(sf_dir, "documents", "l2_postings"),
-        lambda out: materialize_inverted_index(
-            load_table(spark, sf_dir, "documents"), "doc_id", out
-        ),
-    )
+    """The token-bucketed posting layout the keyword probe reads (DEPLOY.md
+    L2) — the replacement for the reference's per-request index build
+    (api.py:22): the ``postings/`` of :func:`ensure_bm25_index_store`, so
+    keyword search and BM25 share one layout and one build."""
+    return os.path.join(ensure_bm25_index_store(spark, sf_dir), "postings")
 
 
 def srp_query_buckets(qvec: list[float], n_planes: int = 8, n_tables: int = 8) -> list[tuple[int, int]]:

@@ -37,10 +37,13 @@ def maintain_inverted_index(
     spark: SparkSession, store_path: str, index_path: str, key_col: str = "url"
 ):
     """Incremental index maintenance as a stream: every micro-batch of newly
-    ingested articles appends its postings into the partitioned index layout
-    (operators/search.py::append_to_inverted_index). This replaces the
-    reference's per-request index creation (api.py:22) with continuous
-    ingest-time maintenance — the index is always fresh, queries only probe.
+    ingested articles appends its ``(key, dl, token, tf)`` postings into the
+    token-bucketed L2 posting layout (operators/search.py::
+    append_to_inverted_index), the rows a batch-built ``postings/`` holds;
+    the layout has no ``stats/``, so it serves keyword probes. This
+    replaces the reference's per-request index creation (api.py:22) with
+    continuous ingest-time maintenance — the index is always fresh,
+    queries only probe.
 
     Returns the StreamingQuery; callers stop() it (or processAllAvailable()
     in tests). Exactly-once per batch: the checkpoint tracks which article

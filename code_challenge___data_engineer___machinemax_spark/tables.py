@@ -41,10 +41,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # events.ts has shipped as parquet TIMESTAMP(NANOS), which Spark's
         # vectorized reader rejects; read it as long nanos and convert
         # (floor to micros, matching DuckDB's nanos->micros truncation).
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
         if isinstance(df.schema["ts"].dataType, T.LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

@@ -78,6 +78,7 @@ def test_streaming_index_maintenance(spark, tmp_path_factory):
     from pyspark.sql import functions as F
 
     from code_challenge___data_engineer___machinemax_spark.operators.search import (
+        _postings,
         keyword_search,
         search_with_materialized_index,
     )
@@ -98,7 +99,7 @@ def test_streaming_index_maintenance(spark, tmp_path_factory):
         q.processAllAvailable()
         # second ingest wave lands while the maintainer runs
         spark.createDataFrame(
-            [("u3", "spark streaming search")], "url string, text string"
+            [("u3", "spark streaming search streams streaming")], "url string, text string"
         ).write.mode("append").parquet(store)
         q.processAllAvailable()
     finally:
@@ -112,3 +113,8 @@ def test_streaming_index_maintenance(spark, tmp_path_factory):
         }
         brute = {r.url for r in keyword_search(corpus, kw).collect()}
         assert indexed == brute, kw
+    # one derivation for batch and stream: the streamed layout holds the
+    # postings of the whole store
+    cols = ("url", "token", "tf", "dl")
+    streamed = spark.read.parquet(index).select(*cols).collect()
+    assert sorted(streamed) == sorted(_postings(corpus, "url", "text").select(*cols).collect())

@@ -4,13 +4,14 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from code_challenge___data_engineer___machinemax_spark.operators.search import (
     keyword_search,
-    materialize_inverted_index,
+    materialize_bm25_index,
     search_with_materialized_index,
 )
 from code_challenge___data_engineer___machinemax_spark.operators.similarity import (
@@ -21,10 +22,16 @@ from code_challenge___data_engineer___machinemax_spark.operators.similarity impo
 from code_challenge___data_engineer___machinemax_spark.tables import load_table
 
 
+def _postings_layout(d, path: str) -> str:
+    """The L2 layout of ``d`` built at ``path``; returns its ``postings/``,
+    the layout the keyword probe reads."""
+    materialize_bm25_index(d, "doc_id", path)
+    return os.path.join(path, "postings")
+
+
 def test_materialized_index_matches_bruteforce(spark, sf_dir, tmp_path):
     d = load_table(spark, sf_dir, "documents")
-    path = str(tmp_path / "inv_index")
-    materialize_inverted_index(d, "doc_id", path)
+    path = _postings_layout(d, str(tmp_path / "inv_index"))
     for kw in ["spark window", "merge", "zzznotatoken"]:
         brute = {r.doc_id for r in keyword_search(d, kw).collect()}
         indexed = {
@@ -36,8 +43,7 @@ def test_materialized_index_matches_bruteforce(spark, sf_dir, tmp_path):
 
 def test_index_probe_prunes_partitions(spark, sf_dir, tmp_path):
     d = load_table(spark, sf_dir, "documents")
-    path = str(tmp_path / "inv_index")
-    materialize_inverted_index(d, "doc_id", path)
+    path = _postings_layout(d, str(tmp_path / "inv_index"))
     df = search_with_materialized_index(spark, d, path, "doc_id", "spark")
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -61,15 +67,12 @@ def test_materialized_index_non_ascii_tokens(spark, tmp_path):
     from code_challenge___data_engineer___machinemax_spark.operators.search import (
         bm25_batch_rank_from_index,
         bm25_rank_from_index,
-        materialize_bm25_index,
     )
 
     d = spark.createDataFrame(rows, "doc_id long, text string")
-    path = str(tmp_path / "inv_index_unicode")
-    materialize_inverted_index(d, "doc_id", path)
-    # the BM25 layout's probes share the same bucket rule
+    # the keyword probe and the BM25 rankers read one layout
     bm25_path = str(tmp_path / "bm25_index_unicode")
-    materialize_bm25_index(d, "doc_id", bm25_path)
+    path = _postings_layout(d, bm25_path)
     cases = [("über", {1, 4}), ("日本", {2, 4}), ("plain", {3})]
     for kw, want in cases:
         brute = {r.doc_id for r in keyword_search(d, kw).collect()}
@@ -106,8 +109,7 @@ def test_incremental_index_append(spark, sf_dir, tmp_path):
     d = load_table(spark, sf_dir, "documents")
     old = d.filter(F.col("doc_id") < 250)
     new = d.filter(F.col("doc_id") >= 250)
-    path = str(tmp_path / "inv_index")
-    materialize_inverted_index(old, "doc_id", path)
+    path = _postings_layout(old, str(tmp_path / "inv_index"))
     append_to_inverted_index(new, "doc_id", path)
     brute = {r.doc_id for r in keyword_search(d, "spark").collect()}
     indexed = {
@@ -132,39 +134,18 @@ def test_ivf_topk_recall(spark, sf_dir):
     assert len(exact & approx) >= 5  # nprobe=3 of 10 lists recovers most
 
 
-def test_stemmed_materialized_index_matches_stemmed_bruteforce(spark, tmp_path):
-    # the analyzer-parity layout: stemmed postings probed with stemmed query
-    # tokens answer exactly what brute-force stemmed search answers
-    from code_challenge___data_engineer___machinemax_spark.operators.search import (
-        keyword_search_stemmed,
-    )
+def test_keyword_index_is_the_bm25_layout(spark, sf_dir, tmp_path, monkeypatch):
+    """One persisted posting layout per corpus: the keyword probe's store
+    is the BM25 store's ``postings/``, and no second layout is built."""
+    from code_challenge___data_engineer___machinemax_spark import stores
 
-    rows = [
-        (1, "the query planner joins tables"),
-        (2, "many queries arrive daily"),
-        (3, "a join strategy for engines"),
-        (4, "nothing relevant here"),
-    ]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    path = str(tmp_path / "stemmed_index")
-    materialize_inverted_index(d, "doc_id", path, stemmed=True)
-    for kw in ("queries joins", "query", "engine", "absent"):
-        brute = {r.doc_id for r in keyword_search_stemmed(d, kw).collect()}
-        indexed = {
-            r.doc_id
-            for r in search_with_materialized_index(
-                spark, d, path, "doc_id", kw, stemmed=True
-            ).collect()
-        }
-        assert indexed == brute, kw
-    # plural query hits singular docs through the index
-    hits = {
-        r.doc_id
-        for r in search_with_materialized_index(
-            spark, d, path, "doc_id", "queries joins", stemmed=True
-        ).collect()
-    }
-    assert hits == {1, 2, 3}
+    monkeypatch.setenv("SPARK_GRAFT_STORE_DIR", str(tmp_path / "stores"))
+    keyword = stores.ensure_inverted_index_store(spark, sf_dir)
+    bm25 = stores.ensure_bm25_index_store(spark, sf_dir)
+    names = os.listdir(os.path.dirname(bm25))
+    assert [n for n in names if n.startswith("l2_")] == [os.path.basename(bm25)]
+    assert os.path.basename(bm25).startswith("l2_bm25_")
+    assert os.path.commonpath([keyword, bm25]) == bm25 and keyword != bm25
 
 
 def test_bm25_batch_matches_per_query_probes(spark, sf_dir, tmp_path, monkeypatch):
