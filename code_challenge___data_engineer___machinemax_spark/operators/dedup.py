@@ -459,22 +459,11 @@ def prefix_filter_pairs(
     off, and rarest-first ordering already keeps prefixes to rare tokens).
     """
     eps = 1e-6
-    toks = (
-        df.select(F.col(id_col), F.array_distinct(tokenize(text_col)).alias("__toks"))
-        .filter(F.size("__toks") > 0)
-        .withColumn("__sz", F.size("__toks"))
-    )
+    toks = _containment_tokens(df, id_col, text_col)
     occ = toks.select(id_col, "__sz", F.explode("__toks").alias("__tok"))
-    dfreq = occ.groupBy("__tok").agg(F.count("*").alias("__df"))
-    w = W.partitionBy(id_col).orderBy(F.asc("__df"), F.asc("__tok"))
-    prefix_len = F.col("__sz") - F.ceil(F.lit(threshold - eps) * F.col("__sz")) + 1
-    prefix = (
-        occ.join(dfreq, "__tok")
-        .withColumn("__pos", F.row_number().over(w))
-        .filter(F.col("__pos") <= prefix_len)
-        .select(id_col, "__sz", "__tok")
+    prefix = _drop_hot_keys(
+        containment_probe_prefix(occ, id_col, threshold), ["__tok"], max_token_bucket
     )
-    prefix = _drop_hot_keys(prefix, ["__tok"], max_token_bucket)
     a = prefix.select(
         F.col(id_col).alias("id_a"), F.col("__sz").alias("__sza"), "__tok"
     )

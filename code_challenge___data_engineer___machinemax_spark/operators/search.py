@@ -17,8 +17,9 @@ Three execution strategies:
   ``(key, dl, token, tf)`` postings once at ingest (replacing Mongo's text
   index, which the reference re-creates per request, api.py:22),
   partitioned by token bucket, so a probe is a pruned scan, not a full
-  corpus pass. The one layout serves both the keyword probe
-  (``search_with_materialized_index``) and the BM25 rankers.
+  corpus pass. The layout is one relation: it serves the keyword probe
+  (``search_with_materialized_index``), and the BM25 rankers derive the
+  corpus scalars from its rows.
 
 Each search request is one Spark SQL statement over the relations it
 reads, so it is parsed and analyzed once; a chain of DataFrame calls
@@ -34,7 +35,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.text import s_stem_py, tokenize, tokenize_spark_sql, tokenize_stemmed
-from ..tables import file_signature, read_layout, read_parquet
+from ..tables import file_signature, read_layout
 
 
 def query_tokens(keyword: str) -> list[str]:
@@ -134,7 +135,7 @@ def keyword_search_folded(df: DataFrame, keyword: str, text_col: str = "text") -
 def build_inverted_index(df: DataFrame, key_col: str, text_col: str = "text") -> DataFrame:
     """(token, key) posting table: explode distinct tokens per document,
     in the query's own plan. The persisted layout is
-    :func:`materialize_bm25_index`'s ``postings/``."""
+    :func:`materialize_bm25_index`'s."""
     return df.select(
         F.col(key_col), F.explode(F.array_distinct(tokenize(text_col))).alias("token")
     )
@@ -169,12 +170,11 @@ def append_to_inverted_index(
 ) -> None:
     """Incremental index maintenance: append the postings of newly
     ingested documents to a posting layout (``path`` is a
-    :func:`materialize_bm25_index` ``postings/`` or a layout built by
-    appends alone) — REFRESH semantics for op 14's index; the reference
-    recreated its index per request (api.py:22). A layout built by appends
-    alone has no ``stats/``, so it serves keyword probes only; an append to
-    a BM25 layout's ``postings/`` leaves its ``stats/`` at the old corpus,
-    so BM25 over it needs a rebuild."""
+    :func:`materialize_bm25_index` layout or one built by appends alone)
+    — REFRESH semantics for op 14's index; the reference recreated its
+    index per request (api.py:22). The corpus scalars derive from the
+    postings, so the keyword probe and BM25 both see the appended
+    documents."""
     _write_postings(df, key_col, path, text_col, "append")
 
 
@@ -199,7 +199,7 @@ def search_with_materialized_index(
     spark, df: DataFrame, index_path: str, key_col: str, keyword: str
 ) -> DataFrame:
     """Probe a persisted posting layout (a :func:`materialize_bm25_index`
-    ``postings/``): partition pruning on the token prefix + token
+    layout): partition pruning on the token prefix + token
     equality (both pushed to the scan) -> broadcast semi-join back to the
     corpus. An index built from no documents matches nothing."""
     toks = query_tokens(keyword)
@@ -237,25 +237,19 @@ def _semi_join(df: DataFrame, postings: DataFrame, key_col: str, probe: str) -> 
 def materialize_bm25_index(
     df: DataFrame, key_col: str, path: str, text_col: str = "text"
 ) -> None:
-    """Persist the L2 posting layout (DEPLOY.md L2 + the 'BM25 per-doc
-    lengths' entry of the ingest-time materialization list):
+    """Persist the L2 posting layout at ``path`` (DEPLOY.md L2 + the 'BM25
+    per-doc lengths' entry of the ingest-time materialization list): one
+    ``(key, dl, token, tf)`` row per (document, token), written by
+    :func:`_write_postings` — the one relation the keyword probe
+    (:func:`search_with_materialized_index`) and the BM25 rankers read.
+    Incremental ingest appends to it (:func:`append_to_inverted_index`).
 
-    - ``postings/``: one ``(key, dl, token, tf)`` row per (document,
-      token), written by :func:`_write_postings` — the layout the keyword
-      probe (:func:`search_with_materialized_index`) and the BM25 rankers
-      both read. Incremental ingest appends to it
-      (:func:`append_to_inverted_index`).
-    - ``stats/``: ONE row ``(n_docs, avgdl)`` — the corpus scalars BM25
-      needs, computed once at ingest instead of a full corpus pass per
-      query (the cost `bm25_rank` pays self-contained).
-
-    df-per-token is NOT persisted: it is derivable exactly from the pruned
-    probe output (distinct keys per probed token), so it stays correct
-    under `append`-style incremental ingest of new documents without a
-    stats rebuild; only the tiny stats row needs refreshing on ingest.
+    Nothing else is persisted: df-per-token is an exact count of the
+    pruned probe's rows, and the corpus scalars ``(n_docs, avgdl)`` are
+    the distinct ``(key, dl)`` rows' count and mean (:func:`_corpus_stats`),
+    so both stay correct under appends without a rebuild.
     """
-    _write_postings(df, key_col, os.path.join(path, "postings"), text_col, "overwrite")
-    _doc_stats(df, text_col).write.mode("overwrite").parquet(os.path.join(path, "stats"))
+    _write_postings(df, key_col, path, text_col, "overwrite")
 
 
 def _postings(
@@ -266,14 +260,15 @@ def _postings(
     stats: Observation | None = None,
 ) -> DataFrame:
     """The ``(key, dl, token, tf)`` posting rows, one per (document,
-    token): the one derivation behind the L2 BM25 layout's ``postings/``
-    and the in-memory rankers. ``dl`` is the document's token count, a
-    per-row array size carried on each row, so no corpus-wide length
-    relation is joined back. With ``toks`` the token array is filtered
-    BEFORE the explode, so only query-token occurrences generate rows
+    token): the one derivation behind the L2 posting layout and the
+    in-memory rankers. ``dl`` is the document's token count, a per-row
+    array size carried on each row, so no corpus-wide length relation is
+    joined back. With ``toks`` the token array is filtered BEFORE the
+    explode, so only query-token occurrences generate rows
     (~|toks|/|vocab| of the corpus). With ``stats`` the documents are
     observed before the explode, so the pass that computes the rows also
-    yields the :func:`_doc_stats` scalars."""
+    yields :func:`_doc_stat_columns`, the scalars :func:`_corpus_stats`
+    derives from a layout's rows."""
     with_dl = df.select(F.col(key_col), tokenize(text_col).alias("__toks")).withColumn(
         "dl", F.size("__toks")
     )
@@ -287,15 +282,14 @@ def _postings(
     )
 
 
-def _doc_stats(df: DataFrame, text_col: str) -> DataFrame:
-    """The one-row corpus scalars ``(n_docs, avgdl)`` of :func:`_postings`'
-    documents: a per-row array size, never an explode of the corpus."""
-    return df.select(F.size(tokenize(text_col)).alias("dl")).agg(*_doc_stat_columns())
-
-
 def _doc_stat_columns() -> tuple:
-    """The aggregates of ``(n_docs, avgdl)`` over rows carrying ``dl``."""
-    return F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
+    """The aggregates of ``(n_docs, avgdl)`` over rows carrying ``dl``,
+    counting only the documents with a token (``dl > 0``), as the
+    layout's rows and the oracles do. Conditional aggregates, not a
+    filter: Catalyst would push a ``dl > 0`` filter below the tokenize
+    and tokenize each document twice."""
+    dl = F.when(F.col("dl") > 0, F.col("dl"))
+    return F.count(dl).alias("n_docs"), F.avg(dl).alias("avgdl")
 
 
 def _pinned_postings(
@@ -331,16 +325,16 @@ def bm25_rank_from_index(
     Candidate generation is the pruned index probe (`PartitionFilters` on
     the token bucket + `PushedFilters In(token, ...)`, exactly like
     `search_with_materialized_index`); tf and dl ride the probed rows, df
-    is an exact count OF the probed rows, and (n_docs, avgdl) come from
-    the one-row stats table as literals (:func:`_corpus_stats`) — so the
-    whole query is one statement that touches only the query tokens'
+    is an exact count OF the probed rows, and (n_docs, avgdl) are
+    derived from the layout's rows once per file set and inlined as
+    literals (:func:`_corpus_stats`) — so the whole query is one statement that touches only the query tokens'
     postings, never the corpus, and runs as one Spark job: the probe is
     ranked in one task with no exchange (:func:`_rank_sql`). Scores are
     identical to :func:`bm25_rank` (same formula, same doubles). A layout
     built from no documents ranks nothing.
     """
     toks = query_tokens(keyword)
-    postings = read_layout(spark, os.path.join(index_path, "postings")) if toks else None
+    postings = read_layout(spark, index_path) if toks else None
     if postings is None:
         return spark.range(0).select(
             F.col("id").alias(key_col), F.lit(0.0).alias("bm25")
@@ -382,7 +376,7 @@ def bm25_batch_rank_from_index(
         for t in dict.fromkeys(query_tokens(kw)):
             qids.setdefault(t, []).append(qid)
     toks = sorted(qids)
-    postings = read_layout(spark, os.path.join(index_path, "postings")) if toks else None
+    postings = read_layout(spark, index_path) if toks else None
     if postings is None:
         return spark.range(0).select(
             F.col("id").cast("int").alias("qid"),
@@ -401,7 +395,7 @@ def _rank_index(
     """:func:`_rank_sql` over a BM25 layout: the ``postings`` of ``toks``
     (pruned probe) scored with the layout's corpus scalars."""
     rows = f"SELECT {_ident(key_col)}, token, tf, dl FROM {{postings}} WHERE {_probe(toks)}"
-    term = _bm25_term(k1, b, *_corpus_stats(spark, os.path.join(index_path, "stats")))
+    term = _bm25_term(k1, b, *_corpus_stats(index_path, postings, key_col))
     return spark.sql(_rank_sql(rows, key_col, "bm25", term, k, fanout), postings=postings)
 
 
@@ -418,7 +412,7 @@ def bm25_rank(
     reference's unordered Mongo cursor, api.py:26-35), in memory: the
     query tokens' :func:`_postings` rows (the rows the L2 layout stores),
     pinned by the one pass over the corpus that also observes the
-    :func:`_doc_stats` scalars (:func:`_pinned_postings`), then scored
+    ``(n_docs, avgdl)`` scalars (:func:`_pinned_postings`), then scored
     through :func:`_bm25_term` and ranked in one Spark job with no
     exchange (:func:`_rank_sql`), so the scores are the doubles
     :func:`bm25_rank_from_index` returns.
@@ -444,7 +438,8 @@ def tfidf_rank(
     the smoothed idf = ln((1+N)/(1+df_t)) + 1 (sklearn's convention — no
     division-by-zero, never negative). The linear sibling of
     :func:`bm25_rank`: the same pinned posting rows and ranking
-    statement, with N the observed corpus row count; BM25 saturates tf,
+    statement, with N the observed count of documents with a token; BM25
+    saturates tf,
     TF-IDF stays proportional.
     """
     toks = query_tokens(keyword)
@@ -457,21 +452,25 @@ def tfidf_rank(
     )
 
 
-# absolute path of a layout's stats/ -> (file signature, (n_docs, avgdl));
-# keyed like tables.read_parquet's schemas, so a rebuilt layout is read again
+# absolute path of a layout -> (file signature, (n_docs, avgdl)); keyed like
+# tables.read_parquet's schemas, so an appended or rebuilt layout is derived
+# again
 _stats: dict[str, tuple[tuple, tuple[int, float | None]]] = {}
 
 
-def _corpus_stats(spark, path: str) -> tuple[int, float | None]:
-    """The one-row ``(n_docs, avgdl)`` of a BM25 layout's ``stats/``, read
-    once per file set, so a request inlines them as literals and starts
-    no stats scan or broadcast."""
+def _corpus_stats(path: str, postings: DataFrame, key_col: str) -> tuple[int, float | None]:
+    """The ``(n_docs, avgdl)`` of the posting layout at ``path``: the
+    :func:`_doc_stat_columns` of its distinct ``(key, dl)`` rows, one per
+    document with a token — the documents the in-memory rankers observe.
+    Derived once per file set, so a request inlines them as literals and
+    starts no scan or broadcast for them, and an append or overwrite
+    derives them again."""
     files = file_signature(path)
     entry = os.path.abspath(path)
     hit = _stats.get(entry)
     if files and hit is not None and hit[0] == files:
         return hit[1]
-    n_docs, avgdl = read_parquet(spark, path).select("n_docs", "avgdl").first()
+    n_docs, avgdl = postings.select(key_col, "dl").distinct().agg(*_doc_stat_columns()).first()
     if files:
         _stats[entry] = (files, (n_docs, avgdl))
     return n_docs, avgdl

@@ -70,8 +70,8 @@ def bm25_keyword_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-10 over the persisted L2 posting layout (VERDICT r4 #7):
     candidate generation is the pruned index probe — PartitionFilters on
     the token bucket, EqualTo(token, ...) pushed to the scan — and tf/dl/df
-    all derive from the probed rows plus the one-row (n_docs, avgdl) stats
-    table, so the query never touches the corpus. Same oracle as
+    all derive from the probed rows, with (n_docs, avgdl) derived from the
+    layout's rows once per file set, so the query never touches the corpus. Same oracle as
     `bm25_keyword_ranking`: the layout is a cache of deterministic ingest
     work, the scores are bit-identical."""
     from ..operators.search import bm25_rank_from_index
@@ -1102,8 +1102,8 @@ def hybrid_search_rrf_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     an ingest regression guard, while this path is the deployment shape:
     candidate generation is the pruned index probe (`PartitionFilters` on
     the token bucket, `EqualTo(token, ...)` pushed to the scan), tf/dl
-    ride the probed rows, and (n_docs, avgdl) is the one-row stats table,
-    so the sparse arm never touches the corpus. The dense arm stays the
+    ride the probed rows, and (n_docs, avgdl) derive from the layout's rows
+    once per file set, so the sparse arm never touches the corpus. The dense arm stays the
     exact brute-force top-50 (at 100 TB the ANN store replaces it, cf.
     `ivf_topk_from_store`); fusion is the shared <=50-row full-outer
     join. Same oracle as `hybrid_search_rrf`: BM25 scores off the layout

@@ -144,8 +144,8 @@ def keyword_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def keyword_search_stored_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Op 14 on the PERSISTED L2 posting layout (DEPLOY.md L2; the twin of
     `keyword_search_indexed`, which builds its postings in-plan): the probe
-    reads only the query tokens' bucket partitions of the BM25 layout's
-    ``postings/`` with the token equality pushed into parquet — Mongo's
+    reads only the query tokens' bucket partitions of the one L2 layout
+    (shared with BM25) with the token equality pushed into parquet — Mongo's
     B-tree walk as partition pruning — then broadcast-semi-joins back to
     the corpus. Index materialization is ingest-time work (primed once per
     store signature, shared with the BM25 queries)."""

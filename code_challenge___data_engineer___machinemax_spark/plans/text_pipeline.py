@@ -504,7 +504,13 @@ def unigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle_hash avoids broadcasting a vocab-sized table on local size
     estimates), and the doc re-agg shuffles narrow (doc_id, bigint) rows.
     """
-    d = load_table(spark, sf_dir, "documents")
+    return _unigram_doc_scores(load_table(spark, sf_dir, "documents"))
+
+
+def _unigram_doc_scores(d: DataFrame) -> DataFrame:
+    """``(doc_id, n_tokens, logprob_e6)`` of each document with a token:
+    the unigram scorer of :func:`unigram_logprob_scores`, shared with
+    :func:`perplexity_tercile_mix`."""
     occ = d.select("doc_id", F.explode(tokenize("text")).alias("token"))
     freq = occ.groupBy("token").agg(F.count("*").alias("cnt"))
     total = freq.agg(F.sum("cnt").cast("bigint").alias("total"))
@@ -1046,19 +1052,7 @@ def perplexity_tercile_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow re-agg); the ntile adds a range exchange on an 8-byte double;
     the final (source, tercile) rollup is tiny."""
     d = load_table(spark, sf_dir, "documents")
-    occ = d.select("doc_id", F.explode(tokenize("text")).alias("token"))
-    freq = occ.groupBy("token").agg(F.count("*").alias("cnt"))
-    total = freq.agg(F.sum("cnt").cast("bigint").alias("total"))
-    li = (F.log(F.col("cnt").cast("double") / F.col("total")) * 1e6).cast("bigint")
-    scored = (
-        occ.join(freq.hint("shuffle_hash"), "token")
-        .crossJoin(F.broadcast(total))
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_tokens"),
-            F.sum(li).cast("bigint").alias("logprob_e6"),
-        )
-    )
+    scored = _unigram_doc_scores(d)
     per_tok = F.col("logprob_e6").cast("double") / F.col("n_tokens")
     tiled = scalable_ntile(
         scored.withColumn("__score", per_tok),

@@ -10,8 +10,8 @@ The concrete implementations live with their domains:
 - article store (parquet, versioned, optional hive partitioning, JSON
   boundary): ``crawl.ingest.ArticleStore``
 - document download sink + ledger: ``crawl.ingest.download_files``
-- posting store (token-prefix partitioned; keyword probe and BM25):
-  ``operators.search.materialize_bm25_index``
+- posting store (one token-prefix partitioned relation; keyword probe
+  and BM25): ``operators.search.materialize_bm25_index``
 - streaming file source + memory/foreachBatch sinks: ``streaming.events``
 - format round-trips (parquet/orc/json/csv null fidelity):
   tests/test_sources.py

@@ -229,12 +229,13 @@ def ensure_compacted_ivf_store(
 
 
 def ensure_bm25_index_store(spark: SparkSession, sf_dir: str) -> str:
-    """The BM25-scored posting layout for ``documents`` (L2 + per-doc
-    lengths + corpus scalars; ``operators.search.materialize_bm25_index``)."""
+    """The L2 posting layout for ``documents``: one relation of
+    ``(doc_id, dl, token, tf)`` rows (``operators.search.materialize_bm25_index``),
+    from which BM25 derives its corpus scalars."""
     from .operators.search import materialize_bm25_index
 
     return _publish(
-        _store_path(sf_dir, "documents", "l2_bm25"),
+        _store_path(sf_dir, "documents", "l2_text"),
         lambda out: materialize_bm25_index(
             load_table(spark, sf_dir, "documents"), "doc_id", out
         ),
@@ -244,9 +245,9 @@ def ensure_bm25_index_store(spark: SparkSession, sf_dir: str) -> str:
 def ensure_inverted_index_store(spark: SparkSession, sf_dir: str) -> str:
     """The token-bucketed posting layout the keyword probe reads (DEPLOY.md
     L2) — the replacement for the reference's per-request index build
-    (api.py:22): the ``postings/`` of :func:`ensure_bm25_index_store`, so
+    (api.py:22): the same path as :func:`ensure_bm25_index_store`, so
     keyword search and BM25 share one layout and one build."""
-    return os.path.join(ensure_bm25_index_store(spark, sf_dir), "postings")
+    return ensure_bm25_index_store(spark, sf_dir)
 
 
 def srp_query_buckets(qvec: list[float], n_planes: int = 8, n_tables: int = 8) -> list[tuple[int, int]]:

@@ -39,9 +39,8 @@ def maintain_inverted_index(
     """Incremental index maintenance as a stream: every micro-batch of newly
     ingested articles appends its ``(key, dl, token, tf)`` postings into the
     token-bucketed L2 posting layout (operators/search.py::
-    append_to_inverted_index), the rows a batch-built ``postings/`` holds;
-    the layout has no ``stats/``, so it serves keyword probes. This
-    replaces the reference's per-request index creation (api.py:22) with
+    append_to_inverted_index), the rows a batch-built layout holds, so it
+    serves keyword probes and BM25 alike. This replaces the reference's per-request index creation (api.py:22) with
     continuous ingest-time maintenance — the index is always fresh,
     queries only probe.
 

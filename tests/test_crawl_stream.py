@@ -74,11 +74,14 @@ def test_stream_journal_counts_match_stats(spark, stream_result):
 def test_streaming_index_maintenance(spark, tmp_path_factory):
     """Index postings appended per micro-batch == the batch-built index:
     the materialized probe answers exactly what brute-force search answers,
-    across two incremental ingest waves."""
+    and BM25 over the streamed layout ranks as BM25 over the store, across
+    two incremental ingest waves."""
     from pyspark.sql import functions as F
 
     from code_challenge___data_engineer___machinemax_spark.operators.search import (
         _postings,
+        bm25_rank,
+        bm25_rank_from_index,
         keyword_search,
         search_with_materialized_index,
     )
@@ -113,6 +116,8 @@ def test_streaming_index_maintenance(spark, tmp_path_factory):
         }
         brute = {r.url for r in keyword_search(corpus, kw).collect()}
         assert indexed == brute, kw
+        ranked = [tuple(r) for r in bm25_rank_from_index(spark, index, kw, key_col="url").collect()]
+        assert ranked == [tuple(r) for r in bm25_rank(corpus, "url", kw).collect()], kw
     # one derivation for batch and stream: the streamed layout holds the
     # postings of the whole store
     cols = ("url", "token", "tf", "dl")

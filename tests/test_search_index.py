@@ -23,10 +23,10 @@ from code_challenge___data_engineer___machinemax_spark.tables import load_table
 
 
 def _postings_layout(d, path: str) -> str:
-    """The L2 layout of ``d`` built at ``path``; returns its ``postings/``,
-    the layout the keyword probe reads."""
+    """The L2 layout of ``d`` built at ``path``; returns ``path``, the
+    layout the keyword probe and the BM25 rankers read."""
     materialize_bm25_index(d, "doc_id", path)
-    return os.path.join(path, "postings")
+    return path
 
 
 def test_materialized_index_matches_bruteforce(spark, sf_dir, tmp_path):
@@ -136,7 +136,7 @@ def test_ivf_topk_recall(spark, sf_dir):
 
 def test_keyword_index_is_the_bm25_layout(spark, sf_dir, tmp_path, monkeypatch):
     """One persisted posting layout per corpus: the keyword probe's store
-    is the BM25 store's ``postings/``, and no second layout is built."""
+    is the BM25 store, and no second layout is built."""
     from code_challenge___data_engineer___machinemax_spark import stores
 
     monkeypatch.setenv("SPARK_GRAFT_STORE_DIR", str(tmp_path / "stores"))
@@ -144,8 +144,81 @@ def test_keyword_index_is_the_bm25_layout(spark, sf_dir, tmp_path, monkeypatch):
     bm25 = stores.ensure_bm25_index_store(spark, sf_dir)
     names = os.listdir(os.path.dirname(bm25))
     assert [n for n in names if n.startswith("l2_")] == [os.path.basename(bm25)]
-    assert os.path.basename(bm25).startswith("l2_bm25_")
-    assert os.path.commonpath([keyword, bm25]) == bm25 and keyword != bm25
+    assert os.path.basename(bm25).startswith("l2_text_")
+    assert keyword == bm25
+
+
+def _oracle_rows(tmp_path, rows, name):
+    """The registered oracle ``name`` run in DuckDB over ``rows`` as the
+    ``documents`` table."""
+    import duckdb
+    import pandas as pd
+
+    from code_challenge___data_engineer___machinemax_spark import plans
+
+    path = str(tmp_path / "documents.parquet")
+    pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(path)
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+    return con.sql(plans.all_oracles()[name]).fetchall()
+
+
+def test_rankers_skip_tokenless_documents_like_the_oracles(spark, tmp_path):
+    """Documents without a token (an empty text, punctuation only, NULL)
+    are not in the corpus the oracles count: every ranker, in memory or
+    over the layout, scores as the registered oracle does on the same
+    rows."""
+    from code_challenge___data_engineer___machinemax_spark.operators.search import (
+        bm25_batch_rank_from_index,
+        bm25_rank,
+        bm25_rank_from_index,
+        tfidf_rank,
+    )
+
+    rows = [
+        (1, "merge vector merge"),
+        (2, "vector hash batch plan"),
+        (3, "merge join plan scan hash"),
+        (4, "batch window scan"),
+        (5, ""),
+        (6, "!!! ..."),
+        (7, None),
+    ]
+    d = spark.createDataFrame(rows, "doc_id long, text string")
+    path = _postings_layout(d, str(tmp_path / "bm25"))
+    bm25 = _oracle_rows(tmp_path, rows, "bm25_keyword_ranking")
+    tfidf = _oracle_rows(tmp_path, rows, "tfidf_keyword_ranking")
+    assert [r[0] for r in bm25] == [1, 2, 3] and [r[0] for r in tfidf] == [2, 4, 3]
+    got = {
+        "bm25": bm25_rank(d, "doc_id", "merge vector").collect(),
+        "bm25_from_index": bm25_rank_from_index(spark, path, "merge vector").collect(),
+        "bm25_batch": bm25_batch_rank_from_index(spark, path, ["merge vector"]).collect(),
+    }
+    for name, ranked in got.items():
+        assert [(r.doc_id, r.bm25) for r in ranked] == bm25, name
+    ranked = tfidf_rank(d, "doc_id", "hash batch").collect()
+    assert [(r.doc_id, r.tfidf) for r in ranked] == tfidf
+
+
+def test_bm25_from_index_ranks_appended_documents(spark, tmp_path):
+    """An append to the layout changes the corpus BM25 scores against:
+    the scalars are derived from the layout's rows again, so the index
+    ranks as the in-memory ranker does over every document."""
+    from code_challenge___data_engineer___machinemax_spark.operators.search import (
+        append_to_inverted_index,
+        bm25_rank,
+        bm25_rank_from_index,
+    )
+
+    schema = "doc_id long, text string"
+    old = spark.createDataFrame([(1, "merge vector"), (2, "merge join")], schema)
+    new = spark.createDataFrame([(3, "merge plan scan"), (4, "vector window merge")], schema)
+    path = _postings_layout(old, str(tmp_path / "bm25"))
+    assert bm25_rank_from_index(spark, path, "merge vector").collect()
+    append_to_inverted_index(new, "doc_id", path)
+    got = [(r.doc_id, r.bm25) for r in bm25_rank_from_index(spark, path, "merge vector").collect()]
+    want = [(r.doc_id, r.bm25) for r in bm25_rank(old.union(new), "doc_id", "merge vector").collect()]
+    assert len(want) == 4 and got == want
 
 
 def test_bm25_batch_matches_per_query_probes(spark, sf_dir, tmp_path, monkeypatch):

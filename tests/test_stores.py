@@ -269,7 +269,7 @@ def test_hybrid_rrf_store_equals_self_contained(spark, sf_dir, store_env):
     assert stored == fresh
 
     txt = explain_text(stored_df)
-    assert "l2_bm25" in txt
+    assert "l2_text" in txt
     assert "documents.parquet" not in txt  # sparse arm never scans the corpus
 
 
