@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import coalesce_nonblank
+from ..functions.text import coalesce_nonblank, strip_html
 
 # Wanted-document extensions (reference index.py:10).
 WANTED_EXT = r"(?i)\.(pdf|docx?|xlsx?|pptx?|o(d|t)[cgmpst]|csv|rtf|zip|rar|t?gz|xz)$"
@@ -41,17 +41,14 @@ def article_fields(df: DataFrame, html_col: str = "html") -> DataFrame:
 
     - title: og:title meta, fallback to the itemprop=headline h1
       (Python-`or` semantics: '' falls through, newsspider.py:41-42)
-    - text: all <p> fragments inside the articleBody div, joined with
-      spaces, tags stripped, trimmed; NULL iff there are no paragraphs
-      (newsspider.py:48-49 — empty-after-strip stays '', not NULL)
+    - text: all <p> fragments inside the articleBody div through
+      ``strip_html`` (joined with spaces, tags stripped, trimmed); NULL iff
+      there are no paragraphs, a NULL ``html`` included (newsspider.py:48-49
+      — empty-after-strip stays '', not NULL)
     """
     html = F.col(html_col)
     body = F.regexp_extract(html, r'<div[^>]*itemprop="articleBody"[^>]*>(.*?)</div>', 1)
     paragraphs = F.regexp_extract_all(body, F.lit(r"<p[^>]*>(.*?)</p>"), 1)
-    joined = F.concat_ws(" ", paragraphs)
-    text = F.when(F.size(paragraphs) == 0, F.lit(None).cast("string")).otherwise(
-        F.trim(F.regexp_replace(joined, r"<[^>]*>", ""))
-    )
     h1 = F.nullif(
         F.trim(
             F.regexp_replace(
@@ -69,7 +66,7 @@ def article_fields(df: DataFrame, html_col: str = "html") -> DataFrame:
         meta_content(html, "article:author").alias("author"),
         meta_content(html, "article:section").alias("section"),
         meta_content(html, "keywords", attr="name").alias("keywords"),
-        text.alias("text"),
+        strip_html(paragraphs).alias("text"),
     )
 
 

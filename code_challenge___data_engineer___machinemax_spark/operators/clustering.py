@@ -220,10 +220,10 @@ def kmeans_fixed_point(
 def _kmeans_quantized(
     df: DataFrame, id_col: str, vec_col: str, scale: int
 ) -> DataFrame:
-    """Quantize vectors to exact int64 components and pin the result (it
-    is re-read every Lloyd round and by the final assignment), spreading a
-    single-file local scan across the executor pool first (no-op on a
-    deployment-scale multi-split scan)."""
+    """The one vector quantizer of the exact-integer clusterers (k-means,
+    SemDeDup pairing, the L10 store build, k-center): components to
+    ``CAST(x * scale AS BIGINT)`` int64, pinned (the result is re-read every
+    round), over the narrow-scan spread (``dedup._spread_narrow_scan``)."""
     from .dedup import _spread_narrow_scan
 
     src = _spread_narrow_scan(df.select(F.col(id_col), F.col(vec_col)), id_col)
@@ -548,23 +548,17 @@ def kcenter_greedy(
     sequence, non-increasing by construction.
 
     Same fixed-point discipline as kmeans_fixed_point: components quantize
-    to trunc(x*scale) int64 once, every distance is an exact integer, so
-    all k selections are bit-reproducible cross-engine and the whole
-    greedy loop has an unrolled-CTE DuckDB oracle.
+    to trunc(x*scale) int64 once (:func:`_kmeans_quantized`), every
+    distance is an exact integer, so all k selections are bit-reproducible
+    cross-engine and the whole greedy loop has an unrolled-CTE DuckDB
+    oracle.
 
     Scale shape: k-1 rounds, each = one broadcast of the single new center
     into a min-update projection plus one TakeOrdered(1) argmax — per
     round one scan of the (id, qv, md) frame, shuffling only the 1-row
     top; localCheckpoint caps lineage across rounds. The selected-center
     frames are 1-row each; the driver never holds data rows."""
-    from pyspark.sql import Window as W  # noqa: F401  (parity with siblings)
-
-    q = df.select(
-        F.col(id_col),
-        F.expr(
-            f"transform({vec_col}, x -> CAST(CAST(x AS DOUBLE) * {scale} AS BIGINT))"
-        ).alias("qv"),
-    ).localCheckpoint()
+    q = _kmeans_quantized(df, id_col, vec_col, scale)
     sqdist = F.expr(
         "aggregate(zip_with(qv, cv, (a, b) -> (a - b) * (a - b)), "
         "CAST(0 AS BIGINT), (acc, d) -> acc + d)"

@@ -52,7 +52,12 @@ def shingle_rows(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataF
     k-grams with lead() over a per-document window — a full shuffle+sort
     of the exploded token stream that the map-side array build makes
     unnecessary. Same rows (one per shingle occurrence, short docs drop
-    out), zero exchanges.
+    out), no exchange beyond the narrow-scan spread
+    (:func:`_spread_narrow_scan`), since the shingle build itself is the
+    heavy lifting. Queries that derive the gram stream twice still build
+    it once per branch (only the scan+spread subplan is exchange-reused);
+    the deployment answer for those is the materialized L4 gram table, as
+    the callers' docstrings note.
 
     The array is built by transform-over-positions against the PINNED
     token attribute (__toks is referenced three times, so CollapseProject
@@ -62,7 +67,8 @@ def shingle_rows(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataF
     chain was measured 2.4x slower at k=5 (it materializes k-1
     progressively longer intermediate gram arrays).
     """
-    toks = df.select(F.col(id_col), tokenize(text_col).alias("__toks"))
+    src = _spread_narrow_scan(df.select(F.col(id_col), F.col(text_col)), id_col)
+    toks = src.select(F.col(id_col), tokenize(text_col).alias("__toks"))
     grams = F.when(
         F.size("__toks") >= k,
         F.transform(
@@ -73,28 +79,12 @@ def shingle_rows(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataF
     return toks.select(F.col(id_col), F.explode(grams).alias("shingle"))
 
 
-def shingle_rows_spread(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3
-) -> DataFrame:
-    """:func:`shingle_rows` behind the conditional single-file spread
-    (:func:`_spread_narrow_scan`): for gram-stream consumers whose heavy
-    lifting is the map-side shingle build itself, a one-file local scan
-    would otherwise run it on one task. Queries that derive the gram
-    stream twice still build it once per branch (only the scan+spread
-    subplan is exchange-reused) — the deployment answer for those is the
-    materialized L4 gram table, as the callers' docstrings note. No-op at
-    deployment scale (multi-split scans)."""
-    return shingle_rows(
-        _spread_narrow_scan(df.select(F.col(id_col), F.col(text_col)), id_col),
-        id_col,
-        text_col,
-        k,
-    )
-
-
 def _spread_narrow_scan(df: DataFrame, key_col: str) -> DataFrame:
-    """Scale-adaptive parallelism guard for map-heavy projections (round-10
-    optimization, guide §2.5 "input skew — one file"): when the upstream
+    """The one spread rule for map-heavy corpus passes — the shingle
+    stream (:func:`shingle_rows`), MinHash signatures
+    (:func:`_minhash_array`), SimHash fingerprints (:func:`simhash`) and
+    the k-means quantizer (``clustering._kmeans_quantized``). Round-10
+    optimization, guide §2.5 "input skew — one file": when the upstream
     scan yields fewer partitions than the session's default parallelism
     (the local bench reads ONE parquet file -> one task, serializing every
     per-row md5), hash-repartition on the row key so the projection uses
@@ -684,9 +674,7 @@ def containment_prefix_pairs(
     return containment_verify(cand, toks, id_col, threshold, emit_sizes)
 
 
-def simhash(
-    df: DataFrame, id_col: str, text_col: str, bits: int = 60, spread: bool = False
-) -> DataFrame:
+def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 60) -> DataFrame:
     """SimHash fingerprint per row, ``bits`` wide (<=60 so the value fits a
     signed 64-bit long; token hash = first 15 md5 hex chars as an integer).
 
@@ -696,24 +684,18 @@ def simhash(
     (2·ones - n > 0) but each aggregate is a bare ``(h>>i)&1`` sum.
     Near-dup docs differ in few bits (compare via :func:`hamming64`).
 
-    Plan shape: explode tokens -> one hash-agg with ``bits``+1 sum columns
-    (partial map-side combine applies) -> arithmetic projection. One shuffle
-    on the id, no Python. ``spread=True`` round-robins the input over
-    ``defaultParallelism`` partitions first — worth it ONLY when the input
-    is a narrow scan of a small file (the local bench case, measured in
-    SCALE.md); it is opt-in because the r3 default (an eager
-    ``df.rdd.getNumPartitions()`` probe + unconditional repartition) forced
-    a plan-to-RDD conversion and an extra shuffle on every tiny
-    intermediate frame a library caller passed (round-3 advice). At real
-    scale the scan already has more partitions than cores — leave it off.
+    Plan shape: the narrow-scan spread (:func:`_spread_narrow_scan`,
+    hash on the id) -> explode tokens -> one hash-agg with ``bits``+1 sum
+    columns (partial map-side combine applies; grouped on the id, so it
+    reuses the spread's partitioning) -> arithmetic projection. At most one
+    shuffle, on the id, no Python.
     """
     from functools import reduce
     from operator import add
 
-    if spread:
-        df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    src = _spread_narrow_scan(df.select(F.col(id_col), F.col(text_col)), id_col)
     token_hash = F.conv(F.substring(F.md5(F.col("__tok")), 1, 15), 16, 10).cast("bigint")
-    exploded = df.select(
+    exploded = src.select(
         F.col(id_col), F.explode(F.array_distinct(tokenize(text_col))).alias("__tok")
     ).withColumn("__h", token_hash)
     votes = exploded.groupBy(id_col).agg(
@@ -748,7 +730,6 @@ def simhash_near_dup_pairs(
     bands: int = 4,
     max_hamming: int = 3,
     max_bucket_size: int | None = None,
-    spread: bool = False,
 ) -> DataFrame:
     """Near-dup pairs (a < b) via SimHash banding + exact Hamming verify.
 
@@ -765,7 +746,7 @@ def simhash_near_dup_pairs(
     ``max_bucket_size`` caps B^2 hot-bucket blowup exactly like the MinHash
     path (all-zero-band boilerplate buckets are the 100 TB risk).
     """
-    fp = simhash(df, id_col, text_col, bits, spread=spread).localCheckpoint()
+    fp = simhash(df, id_col, text_col, bits).localCheckpoint()
     return simhash_pairs_from_fingerprints(
         fp, id_col, bits=bits, bands=bands, max_hamming=max_hamming,
         max_bucket_size=max_bucket_size,

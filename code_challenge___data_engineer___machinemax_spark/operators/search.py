@@ -546,12 +546,12 @@ def phrase_search(
     document — Mongo $text (the reference's search, api.py:22-26) treats a
     quoted string as a phrase; this is that semantic, engine-side.
 
-    The positional posting table (key, pos, token) is filtered to each
-    query token BEFORE any join — at scale the postings live in the
-    token-bucketed L2 posting layout (materialize_bm25_index), so each
-    filter is a partition-pruned probe, and the n-1 self-joins are
-    equi-joins on (key, pos+i) over only the probed slices (selectivity
-    of the rarest token bounds all of them). No window, no cartesian.
+    The positional posting rows (key, pos, token) are derived in-plan (a
+    posexplode of the tokenized text; the L2 posting layout holds
+    ``(key, dl, token, tf)`` and no positions) and filtered to each query
+    token BEFORE any join, so the n-1 self-joins are equi-joins on
+    (key, pos+i) over only the filtered slices (selectivity of the rarest
+    token bounds all of them). No window, no cartesian.
     """
     toks = query_tokens(phrase)
     if not toks:

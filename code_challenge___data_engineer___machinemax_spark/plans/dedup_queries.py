@@ -196,11 +196,7 @@ def simhash_near_dup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import simhash_near_dup_pairs
 
     d = load_table(spark, sf_dir, "documents")
-    # spread=True: the local documents scan is one narrow file; the 61-sum
-    # explode stage is the cost center and wants all cores (SCALE.md)
-    return simhash_near_dup_pairs(
-        d, "doc_id", "text", bits=60, bands=4, max_hamming=3, spread=True
-    )
+    return simhash_near_dup_pairs(d, "doc_id", "text", bits=60, bands=4, max_hamming=3)
 
 
 @query("simhash_near_dup_pairs_from_store", oracle=_simhash_pairs_oracle_sql())
@@ -279,7 +275,7 @@ def simhash_incremental_admission(spark: SparkSession, sf_dir: str) -> DataFrame
     corpus_fp = read_parquet(spark, fp_path).filter(F.col("doc_id") % 10 != 7)
     d = load_table(spark, sf_dir, "documents")
     batch = d.filter(F.col("doc_id") % 10 == 7)
-    batch_fp = simhash(batch, "doc_id", "text", 60, spread=True).localCheckpoint()
+    batch_fp = simhash(batch, "doc_id", "text", 60).localCheckpoint()
     matches = (
         simhash_cross_pairs(batch_fp, corpus_fp, "doc_id")
         .groupBy("batch_id")
@@ -303,7 +299,7 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     Note: documents whose text has zero tokens drop out (no rows to vote) —
     identical behavior both sides."""
     d = load_table(spark, sf_dir, "documents")
-    return simhash(d, "doc_id", "text", spread=True)
+    return simhash(d, "doc_id", "text")
 
 
 @query(
@@ -338,10 +334,10 @@ def repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same shuffle via Spark's two-phase distinct expansion. Top-50 under
     a total ordering (spread, frequency, passage) is
     TakeOrderedAndProject — no global sort."""
-    from ..operators.dedup import shingle_rows_spread
+    from ..operators.dedup import shingle_rows
 
     d = load_table(spark, sf_dir, "documents")
-    grams = shingle_rows_spread(d, "doc_id", "text", k=5)
+    grams = shingle_rows(d, "doc_id", "text", k=5)
     return (
         grams.groupBy(F.col("shingle").alias("passage"))
         .agg(
@@ -1227,12 +1223,10 @@ def repeated_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join key would be a 128-bit gram hash instead of the raw string
     (same discipline the line-level dedup pins); the raw-string key keeps
     the oracle twin byte-identical here."""
-    from ..operators.dedup import shingle_rows_spread
+    from ..operators.dedup import shingle_rows
 
     d = load_table(spark, sf_dir, "documents")
-    grams = shingle_rows_spread(d, "doc_id", "text", k=5).withColumnRenamed(
-        "shingle", "gram"
-    )
+    grams = shingle_rows(d, "doc_id", "text", k=5).withColumnRenamed("shingle", "gram")
     dup = (
         grams.groupBy("gram")
         .agg(F.countDistinct("doc_id").alias("__nd"))

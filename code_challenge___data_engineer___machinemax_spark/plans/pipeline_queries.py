@@ -283,9 +283,7 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import simhash_near_dup_pairs
 
     d = load_table(spark, sf_dir, "documents")
-    pairs = simhash_near_dup_pairs(
-        d, "doc_id", "text", bits=60, bands=4, max_hamming=3, spread=True
-    )
+    pairs = simhash_near_dup_pairs(d, "doc_id", "text", bits=60, bands=4, max_hamming=3)
     return triangles(pairs)
 
 

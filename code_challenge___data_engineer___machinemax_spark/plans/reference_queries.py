@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..crawl.extract import BIN_EXT, WANTED_EXT, classify_link
 from ..functions.text import (
     tokenize,
     tokenize_analyzed_sql,
@@ -397,18 +398,15 @@ _LINK_SYNTH_SQL = """
              ELSE 'http://site.com/data/table_' || doc_id || '.csv' END
 """
 
-_WANTED_EXT = r"(?i)\.(pdf|docx?|xlsx?|pptx?|o(d|t)[cgmpst]|csv|rtf|zip|rar|t?gz|xz)$"
-_BIN_EXT = r"(?i)\.(jpe?g|png|gif|bmp|svg|ico|webp|mp[34]|avi|mov|mkv|woff2?|ttf|js|exe)$"
-
 
 @query(
     "link_classify",
     oracle=f"""
     WITH links AS (SELECT doc_id, {_LINK_SYNTH_SQL} AS link FROM documents)
     SELECT doc_id, link,
-           CASE WHEN regexp_matches(link, '(?i)\\.(pdf|docx?|xlsx?|pptx?|o(d|t)[cgmpst]|csv|rtf|zip|rar|t?gz|xz)$')
+           CASE WHEN regexp_matches(link, '{WANTED_EXT}')
                     THEN 'wanted_doc'
-                WHEN regexp_matches(link, '(?i)\\.(jpe?g|png|gif|bmp|svg|ico|webp|mp[34]|avi|mov|mkv|woff2?|ttf|js|exe)$')
+                WHEN regexp_matches(link, '{BIN_EXT}')
                     THEN 'junk'
                 WHEN link LIKE '%site.com%' THEN 'next_page'
                 ELSE 'offsite' END AS link_class
@@ -418,7 +416,10 @@ _BIN_EXT = r"(?i)\.(jpe?g|png|gif|bmp|svg|ico|webp|mp[34]|avi|mov|mkv|woff2?|ttf
 def link_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three-way link classification from the crawler (index.py:162-172):
     wanted-document extensions (index.py:10), binary junk (index.py:11-12),
-    same-site next pages (index.py:165), else offsite."""
+    same-site next pages (index.py:165), else offsite. The crawl's own
+    ``classify_link`` runs here, and the oracle spells its patterns from the
+    same ``WANTED_EXT``/``BIN_EXT``, so the gate checks the classifier the
+    crawl runs."""
     d = load_table(spark, sf_dir, "documents")
     link = (
         F.when(F.col("doc_id") % 5 == 0, F.concat(F.lit("http://site.com/files/report_"), F.col("doc_id"), F.lit(".pdf")))
@@ -427,13 +428,9 @@ def link_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("doc_id") % 5 == 3, F.concat(F.lit("http://other.org/page_"), F.col("doc_id")))
         .otherwise(F.concat(F.lit("http://site.com/data/table_"), F.col("doc_id"), F.lit(".csv")))
     )
-    link_class = (
-        F.when(link.rlike(_WANTED_EXT), "wanted_doc")
-        .when(link.rlike(_BIN_EXT), "junk")
-        .when(link.contains("site.com"), "next_page")
-        .otherwise("offsite")
+    return d.select(
+        "doc_id", link.alias("link"), classify_link(link, "site.com").alias("link_class")
     )
-    return d.select("doc_id", link.alias("link"), link_class.alias("link_class"))
 
 
 # --- op 13: link extraction (index.py:158-159, regex at index.py:13) --------

@@ -388,10 +388,10 @@ def repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("dup_line_chars"),
     )
-    from ..operators.dedup import shingle_rows_spread
+    from ..operators.dedup import shingle_rows
 
     bigrams = (
-        shingle_rows_spread(base, "doc_id", "text", k=2)
+        shingle_rows(base, "doc_id", "text", k=2)
         .groupBy("doc_id", F.col("shingle").alias("bg"))
         .agg(F.count("*").alias("cnt"))
     )
@@ -658,10 +658,10 @@ def bigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical — explode once, two count aggs, shuffle_hash joins on the
     bigram/prefix keys (never a vocab-sized broadcast), narrow (doc_id,
     bigint) re-agg. Runs at ingest next to the index builds."""
-    from ..operators.dedup import shingle_rows_spread
+    from ..operators.dedup import shingle_rows
 
     d = load_table(spark, sf_dir, "documents")
-    big = shingle_rows_spread(d, "doc_id", "text", k=2).withColumnRenamed("shingle", "bg")
+    big = shingle_rows(d, "doc_id", "text", k=2).withColumnRenamed("shingle", "bg")
     c12 = big.groupBy("bg").agg(F.count("*").alias("cnt12"))
     c1 = (
         big.select(F.substring_index("bg", " ", 1).alias("w1"))
@@ -1679,10 +1679,10 @@ def kneser_ney_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     are the novel-continuation statistics that make KN the strong LM
     baseline — distinct-count aggs, exactly what the engine's groupBy
     does."""
-    from ..operators.dedup import shingle_rows_spread
+    from ..operators.dedup import shingle_rows
 
     d = load_table(spark, sf_dir, "documents")
-    big = shingle_rows_spread(d, "doc_id", "text", k=2).withColumnRenamed("shingle", "bg")
+    big = shingle_rows(d, "doc_id", "text", k=2).withColumnRenamed("shingle", "bg")
     # ONE gram build: per-doc bigram counts, pinned; train stats and the
     # scoring branch both read the pin
     dtc = big.groupBy("doc_id", "bg").agg(F.count("*").alias("k")).localCheckpoint()

@@ -131,9 +131,7 @@ def prune_stale_stores(sf_dir: str, dry_run: bool = False) -> list[str]:
     return pruned
 
 
-def ensure_simhash_store(
-    spark: SparkSession, sf_dir: str, bits: int = 60, spread: bool = True
-) -> str:
+def ensure_simhash_store(spark: SparkSession, sf_dir: str, bits: int = 60) -> str:
     """The L4 SimHash fingerprint table ``(doc_id, simhash int64)`` for
     ``documents`` (DEPLOY.md L4); pair generation against it is pure
     int-key work (``operators.dedup.simhash_pairs_from_fingerprints``)."""
@@ -141,7 +139,7 @@ def ensure_simhash_store(
 
     def build(out: str) -> None:
         d = load_table(spark, sf_dir, "documents")
-        simhash(d, "doc_id", "text", bits, spread=spread).write.parquet(out)
+        simhash(d, "doc_id", "text", bits).write.parquet(out)
 
     return _publish(_store_path(sf_dir, "documents", f"l4_simhash_b{bits}"), build)
 
@@ -525,17 +523,14 @@ def ensure_semantic_kmeans_store(spark: SparkSession, sf_dir: str) -> str:
     (operators.clustering.semantic_pairs_from_assigned) reads ONLY this
     relation. Partitioned by centroid_id so a per-cluster consumer prunes
     to its own list, like the L3 IVF layout."""
-    from .operators.clustering import kmeans_fixed_point
+    from .operators.clustering import _kmeans_assign_with_vectors, _kmeans_quantized
 
     def build(out: str) -> None:
         e = load_table(spark, sf_dir, "embeddings")
-        quant = F.expr(
-            "transform(embedding, x -> CAST(CAST(x AS DOUBLE) * 1000000 AS BIGINT))"
+        q = _kmeans_quantized(e, "vec_id", "embedding", 1_000_000)
+        aq = _kmeans_assign_with_vectors(q, "vec_id", k=8, iters=2).select(
+            "vec_id", "centroid_id", "qv"
         )
-        assigned = kmeans_fixed_point(e, "vec_id", "embedding", k=8, iters=2).select(
-            "vec_id", "centroid_id"
-        )
-        aq = assigned.join(e.select("vec_id", quant.alias("qv")), "vec_id")
         aq.write.partitionBy("centroid_id").parquet(os.path.join(out, "assigned"))
 
     return _publish(

@@ -127,6 +127,13 @@ def test_title_fallback_and_null_text(result):
     assert a2.description is None
 
 
+def test_null_html_gives_null_text(spark):
+    pages = spark.createDataFrame([(f"{BASE}/x", None)], "url string, html string")
+    row = article_fields(pages).collect()[0]
+    assert row.text is None  # no paragraphs at all -> NULL, as for zero <p>
+    assert row.title is None
+
+
 def test_wanted_doc_classification(result):
     docs = {r.url for r in result.downloads.collect()}
     assert docs == {f"{BASE}/files/report.pdf"}

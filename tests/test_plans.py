@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 from pyspark.sql import functions as F
 
@@ -58,6 +59,18 @@ def test_filter_pushdown_on_timestamp(spark, sf_dir):
     ).select("l_orderkey")
     txt = explain_text(l)
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in txt
+
+
+def test_simhash_spreads_once_on_the_id(spark, sf_dir):
+    # the narrow-scan spread hashes on doc_id and the vote aggregate groups
+    # on doc_id, so the aggregate reuses that one exchange
+    txt = explain_text(_QS["simhash_fingerprints"](spark, sf_dir))
+    exchanges = [
+        sec for sec in txt.split("\n\n") if re.match(r"\(\d+\) Exchange\n", sec.lstrip())
+    ]
+    assert len(exchanges) == 1, exchanges
+    assert "Arguments: hashpartitioning(doc_id" in exchanges[0]
+    assert "RoundRobinPartitioning" not in txt
 
 
 def test_keyword_search_stays_jvm_side(spark, sf_dir):
