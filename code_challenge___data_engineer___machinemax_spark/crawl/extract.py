@@ -20,6 +20,10 @@ from ..functions.text import coalesce_nonblank, strip_html
 WANTED_EXT = r"(?i)\.(pdf|docx?|xlsx?|pptx?|o(d|t)[cgmpst]|csv|rtf|zip|rar|t?gz|xz)$"
 # Never-follow binary/media extensions (reference index.py:11-12).
 BIN_EXT = r"(?i)\.(jpe?g|png|gif|bmp|svg|ico|webp|mp[34]|avi|mov|mkv|woff2?|ttf|js|css|exe)$"
+# Link targets (reference regex index.py:13): href/src attributes, and css
+# url(...) references; group 1 is the target.
+ATTR_LINK = r'(?:href|src)="([^"]*)"'
+CSS_URL = r"url\(['\"]?([^'\")]+)['\"]?\)"
 
 
 def meta_content(html: Column, prop: str, attr: str = "property") -> Column:
@@ -85,8 +89,8 @@ def extract_links(df: DataFrame, html_col: str = "html") -> DataFrame:
     url(...) references (reference regex index.py:13), per-page dedup
     (Scrapy LinkExtractor unique=True, newsspider.py:12)."""
     html = F.col(html_col)
-    attr_links = F.regexp_extract_all(html, F.lit(r'(?:href|src)="([^"]*)"'), 1)
-    css_links = F.regexp_extract_all(html, F.lit(r"url\(['\"]?([^'\")]+)['\"]?\)"), 1)
+    attr_links = F.regexp_extract_all(html, F.lit(ATTR_LINK), 1)
+    css_links = F.regexp_extract_all(html, F.lit(CSS_URL), 1)
     return (
         df.select(F.col("url").alias("page_url"), F.explode(F.concat(attr_links, css_links)).alias("link"))
         .dropDuplicates(["page_url", "link"])

@@ -208,6 +208,43 @@ def band_rows(
     )
 
 
+def _bucket_pairs(
+    a: DataFrame,
+    b: DataFrame | None,
+    id_col: str,
+    keys: list[str],
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """The one bucket-collision join of the banded near-dup generators:
+    distinct ``(id_a, id_b)`` pairs of rows sharing every column in ``keys``.
+
+    ``b=None`` self-joins ``a`` with ``id_a < id_b`` in the join condition;
+    otherwise ``a`` joins ``b`` with no order on the ids. Every other column
+    rides through as ``<col>_a`` / ``<col>_b``; callers pass only columns
+    the id determines, so the distinct (which collapses multi-bucket
+    collisions) is still one row per pair. ``max_bucket_size`` drops the hot
+    buckets (``skew._drop_hot_keys``) of ``a`` in self mode, of ``b`` in
+    cross mode."""
+    self_join = b is None
+    b = _drop_hot_keys(a if self_join else b, keys, max_bucket_size)
+    a = b if self_join else a
+    cond = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    if self_join:
+        cond.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    rides = [
+        F.col(f"{s}.{c}").alias(f"{c}_{s}")
+        for s, df in (("a", a), ("b", b))
+        for c in df.columns
+        if c != id_col and c not in keys
+    ]
+    return (
+        a.alias("a")
+        .join(b.alias("b"), cond)
+        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"), *rides)
+        .distinct()
+    )
+
+
 def lsh_candidate_pairs(
     df: DataFrame,
     id_col: str,
@@ -220,7 +257,7 @@ def lsh_candidate_pairs(
 
     Plan shape: signatures -> explode band keys (md5 of rows_per_band
     consecutive components) -> self-join on (band, band_key) -> distinct
-    pairs (:func:`_band_candidates`). The join key is small and uniformly
+    pairs (:func:`_bucket_pairs`). The join key is small and uniformly
     distributed; hot buckets (boilerplate docs) are the one skew risk.
 
     ``max_bucket_size`` is the skew guard for that risk: a band-bucket with
@@ -251,23 +288,7 @@ def lsh_candidate_pairs(
     operator-internal pin in this package.
     """
     banded = band_rows(df, id_col, text_col, num_hashes, bands).localCheckpoint()
-    return _band_candidates(banded, id_col, max_bucket_size)
-
-
-def _band_candidates(
-    banded: DataFrame, id_col: str, max_bucket_size: int | None
-) -> DataFrame:
-    """Distinct (id_a < id_b) pairs sharing a (band, band_key) bucket of an
-    ``(id, band, band_key)`` frame, after the hot-bucket drop."""
-    banded = _drop_hot_keys(banded, ["band", "band_key"], max_bucket_size)
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "band_key")
-    b = banded.select(F.col(id_col).alias("id_b"), "band", "band_key")
-    return (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return _bucket_pairs(banded, None, id_col, ["band", "band_key"], max_bucket_size)
 
 
 def _minhash_pairs(
@@ -283,7 +304,7 @@ def _minhash_pairs(
     :func:`near_dup_pairs` or read from the persisted L4 band store
     (plans/dedup_queries.py::near_dup_pairs_minhash_from_store) — verified
     with exact token-set Jaccard >= ``threshold`` against ``docs``."""
-    cand = _band_candidates(banded, id_col, max_bucket_size)
+    cand = _bucket_pairs(banded, None, id_col, ["band", "band_key"], max_bucket_size)
     return _jaccard_verify(cand, docs, docs, id_col, text_col, threshold)
 
 
@@ -393,14 +414,13 @@ def cross_dup_pairs(
     Scale: two banding passes over disjoint row sets = one corpus pass;
     the join key is (band, band_key) — small and uniform; the verify is
     bounded by candidate volume, which banding (and the cap) bounds."""
-    a = band_rows(df_a, id_col, text_col, num_hashes, bands).select(
-        F.col(id_col).alias("id_a"), "band", "band_key"
+    cand = _bucket_pairs(
+        band_rows(df_a, id_col, text_col, num_hashes, bands),
+        band_rows(df_b, id_col, text_col, num_hashes, bands),
+        id_col,
+        ["band", "band_key"],
+        max_bucket_size,
     )
-    b = band_rows(df_b, id_col, text_col, num_hashes, bands).select(
-        F.col(id_col).alias("id_b"), "band", "band_key"
-    )
-    b = _drop_hot_keys(b, ["band", "band_key"], max_bucket_size)
-    cand = a.join(b, ["band", "band_key"]).select("id_a", "id_b").distinct()
     return _jaccard_verify(cand, df_a, df_b, id_col, text_col, threshold)
 
 
@@ -483,12 +503,18 @@ def prefix_filter_pairs(
 
 def _containment_tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Shared tokenize stage of the containment join: one (id, distinct
-    token array, size) row per non-empty document."""
-    return (
-        df.select(F.col(id_col), F.array_distinct(tokenize(text_col)).alias("__toks"))
-        .filter(F.size("__toks") > 0)
-        .withColumn("__sz", F.size("__toks"))
-    )
+    token array, size) row per non-empty document.
+
+    The token-less drop rides a generator (an empty wrapping array explodes
+    to zero rows), as in :func:`band_rows`: a ``size(__toks) > 0`` Filter
+    is pushed below the tokenizing projection, which then tokenizes every
+    document twice. The generator's input is an expression, not an
+    attribute, so Spark infers no filter from it either."""
+    toks = df.select(F.col(id_col), F.array_distinct(tokenize(text_col)).alias("__toks"))
+    return toks.select(
+        F.col(id_col),
+        F.explode(F.when(F.size("__toks") > 0, F.array("__toks"))).alias("__toks"),
+    ).withColumn("__sz", F.size("__toks"))
 
 
 def containment_probe_prefix(
@@ -741,8 +767,9 @@ def simhash_near_dup_pairs(
     "never compare twice" sets embody, reference index.py:117-119).
 
     Plan shape: fingerprints (one hash-agg) -> explode ``bands`` band keys
-    -> self-equi-join on (band, band_bits) -> distinct pairs -> join
-    fingerprints back -> bit_count(xor) filter. All shuffle keys are ints.
+    with the fingerprint riding -> self-equi-join on (band, band_val) ->
+    distinct pairs (:func:`_bucket_pairs`, the MinHash path's collision
+    join) -> bit_count(xor) filter. All shuffle keys are ints.
     ``max_bucket_size`` caps B^2 hot-bucket blowup exactly like the MinHash
     path (all-zero-band boilerplate buckets are the 100 TB risk).
     """
@@ -771,13 +798,13 @@ def simhash_cross_pairs(
     :func:`simhash_pairs_from_fingerprints`; no ``id_a < id_b`` constraint
     because the two sides are disjoint sets by construction (callers split
     on the id domain)."""
-    return _simhash_band_pairs(
+    pairs = _bucket_pairs(
         _simhash_bands(fp_batch, id_col, bits, bands),
         _simhash_bands(fp_corpus, id_col, bits, bands),
         id_col,
-        max_hamming,
-        ordered=False,
-    ).select(
+        ["band", "band_val"],
+    )
+    return _within_hamming(pairs, max_hamming).select(
         F.col("id_a").alias("batch_id"), F.col("id_b").alias("corpus_id"), "hamming"
     )
 
@@ -803,10 +830,11 @@ def simhash_pairs_from_fingerprints(
     ``tests/test_dedup.py`` pins equality with the full pipeline; SCALE.md
     measures the A/B.
     """
-    banded = _drop_hot_keys(
-        _simhash_bands(fp, id_col, bits, bands), ["band", "band_val"], max_bucket_size
+    pairs = _bucket_pairs(
+        _simhash_bands(fp, id_col, bits, bands), None, id_col, ["band", "band_val"],
+        max_bucket_size,
     )
-    return _simhash_band_pairs(banded, banded, id_col, max_hamming, ordered=True)
+    return _within_hamming(pairs, max_hamming)
 
 
 def _simhash_bands(fp: DataFrame, id_col: str, bits: int, bands: int) -> DataFrame:
@@ -828,32 +856,12 @@ def _simhash_bands(fp: DataFrame, id_col: str, bits: int, bands: int) -> DataFra
     )
 
 
-def _simhash_band_pairs(
-    banded_a: DataFrame,
-    banded_b: DataFrame,
-    id_col: str,
-    max_hamming: int,
-    ordered: bool,
-) -> DataFrame:
-    """(id_a, id_b, hamming) for rows sharing a band, within
-    ``max_hamming``; ``ordered`` adds ``id_a < id_b`` (the self-join)."""
-    a = banded_a.alias("a")
-    b = banded_b.alias("b")
-    cond = (F.col("a.band") == F.col("b.band")) & (
-        F.col("a.band_val") == F.col("b.band_val")
-    )
-    if ordered:
-        cond = cond & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+def _within_hamming(pairs: DataFrame, max_hamming: int) -> DataFrame:
+    """(id_a, id_b, hamming) of :func:`_bucket_pairs` rows that carry each
+    side's fingerprint (``simhash_a``, ``simhash_b``), within
+    ``max_hamming``."""
     return (
-        a.join(b, cond)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("__fa"),
-            F.col("b.simhash").alias("__fb"),
-        )
-        .distinct()  # multi-band matches collapse; fps are id-determined
-        .withColumn("hamming", hamming64(F.col("__fa"), F.col("__fb")))
+        pairs.withColumn("hamming", hamming64(F.col("simhash_a"), F.col("simhash_b")))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )

@@ -15,7 +15,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .skew import _drop_hot_keys
+from .dedup import _bucket_pairs
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -232,26 +232,16 @@ def srp_near_dup_pairs(
     (tests measure it). Output pairs are EXACT (the verify step filters by
     true cosine); LSH only bounds which pairs are examined.
 
-    ``max_bucket_size`` is the same hot-bucket guard as text LSH
-    (dedup.lsh_candidate_pairs): at 100 TB a degenerate bucket (zero
-    vectors, spam clusters) otherwise generates B^2 join output.
+    The candidate join is the banded generators' one bucket-collision join
+    (``dedup._bucket_pairs``); ``max_bucket_size`` is its hot-bucket guard,
+    as for text LSH (dedup.lsh_candidate_pairs): at 100 TB a degenerate
+    bucket (zero vectors, spam clusters) otherwise generates B^2 join
+    output.
     """
     banded = srp_band_rows(
         df, vec_col, id_col, n_planes=n_planes, n_tables=n_tables, dim=dim
     )
-    banded = _drop_hot_keys(banded, ["__t", "__bucket"], max_bucket_size)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.__t") == F.col("b.__t"))
-            & (F.col("a.__bucket") == F.col("b.__bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
+    cand = _bucket_pairs(banded, None, id_col, ["__t", "__bucket"], max_bucket_size)
     # normalize each vector ONCE before the pair join: cosine(a,b) inline
     # would recompute both norms per candidate pair (3 higher-order passes
     # per pair; candidates number ~n·T·B/2), pre-normalized it's a single

@@ -11,8 +11,9 @@ runtime; these are the explicit escape hatches for pathological keys:
   broadcast hint usually wins; this is for when the probe side's hot key
   must still spread across partitions for the downstream stage).
 - ``_drop_hot_keys``: the bounded-pair-generation guard every bucketed
-  self-join calls before it fans out (MinHash/SimHash/SRP band buckets,
-  prefix-filter tokens, k-means clusters).
+  self-join calls before it fans out: the banded generators' one
+  collision join ``dedup._bucket_pairs`` (MinHash/SimHash/SRP band
+  buckets), prefix-filter tokens and k-means clusters.
 """
 
 from __future__ import annotations

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..crawl.extract import BIN_EXT, WANTED_EXT, classify_link
+from ..crawl.extract import ATTR_LINK, BIN_EXT, CSS_URL, WANTED_EXT, classify_link, extract_links
 from ..functions.text import (
     tokenize,
     tokenize_analyzed_sql,
@@ -435,30 +435,38 @@ def link_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- op 13: link extraction (index.py:158-159, regex at index.py:13) --------
 
+_CSS_URL_SQL = CSS_URL.replace("'", "''")
+
+
 @query(
     "link_extraction",
-    oracle="""
+    oracle=f"""
     WITH pages AS (
         SELECT doc_id,
                '<a href="/p/' || doc_id || '">x</a><img src="/i/' || doc_id
                    || '.png"><a href="http://ext.org/' || source || '">y</a>' AS html
         FROM documents
     )
-    SELECT doc_id, unnest(regexp_extract_all(html, '(href|src)="([^"]*)"', 2)) AS link
-    FROM pages
+    SELECT DISTINCT doc_id, link
+    FROM (SELECT doc_id,
+                 unnest(list_concat(regexp_extract_all(html, '{ATTR_LINK}', 1),
+                                    regexp_extract_all(html, '{_CSS_URL_SQL}', 1))) AS link
+          FROM pages)
     """,
 )
 def link_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Find all href/src targets in a page and explode one row per link."""
+    """Find every link target in a synthesized page with the crawl's own
+    extractor (``extract_links``: href/src attributes, css ``url(...)``,
+    one row per distinct link of a page). The oracle spells the same
+    ``ATTR_LINK``/``CSS_URL`` patterns, so the gate checks the extractor
+    the crawl runs."""
     d = load_table(spark, sf_dir, "documents")
     html = F.concat(
         F.lit('<a href="/p/'), F.col("doc_id"), F.lit('">x</a><img src="/i/'),
         F.col("doc_id"), F.lit('.png"><a href="http://ext.org/'), F.col("source"), F.lit('">y</a>'),
     )
-    return d.select(
-        "doc_id",
-        F.explode(F.regexp_extract_all(html, F.lit(r'(href|src)="([^"]*)"'), 2)).alias("link"),
-    )
+    pages = d.select(F.col("doc_id").alias("url"), html.alias("html"))
+    return extract_links(pages).select(F.col("page_url").alias("doc_id"), "link")
 
 
 # --- op 24: frontier dedup via anti-join (index.py:117-119,162-172) ---------

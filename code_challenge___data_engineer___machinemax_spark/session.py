@@ -33,3 +33,18 @@ def get_spark(app_name: str = "ccdem-spark", shuffle_partitions: int | None = No
     )
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def sql_executions(spark: SparkSession) -> list[tuple[int, str]]:
+    """(id, physical plan) of each SQL execution the session's status store
+    retains. A frame whose build pins rows (``localCheckpoint``) runs part of
+    its plan in the executions started while it is built, not in its own
+    plan; select those by id, since the store drops its oldest executions
+    beyond ``spark.sql.ui.retainedExecutions``."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    out = []
+    while it.hasNext():
+        e = it.next()
+        out.append((e.executionId(), e.physicalPlanDescription()))
+    return out

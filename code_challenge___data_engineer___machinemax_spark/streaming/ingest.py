@@ -26,10 +26,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..operators.dedup import text_digest
+from ..operators.dedup import _bucket_pairs, text_digest
 from ..sources.jsonl import DOCUMENT_SCHEMA
 from .replay import drain, read_or_empty
 
@@ -60,20 +60,9 @@ def dedup_ingest_stream(spark: SparkSession, landing_dir: str, store_dir: str) -
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         sess = batch_df.sparkSession
-        # within-batch dedup first; min-doc_id survivor (NOT dropDuplicates,
-        # whose surviving row depends on partition order) so the stored
-        # corpus is a deterministic function of the input — the property the
-        # streamed_corpus_state oracle checks (plans/streaming_queries.py).
-        # Same shuffle as dropDuplicates (hash on fingerprint).
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy("fingerprint").orderBy(F.asc("doc_id"), F.asc("source"))
-        batch = (
+        batch = _survivors(  # within-batch dedup first
             batch_df.filter(F.col("text").isNotNull())
             .withColumn("fingerprint", text_digest("text"))
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
         )
         seen = read_or_empty(sess, fp_dir, "fingerprint string")
         # materialize so the fingerprint append below can't feed back into
@@ -119,15 +108,18 @@ def corpus_view(spark: SparkSession, store_dir: str) -> DataFrame:
     append and the fingerprint append in :func:`dedup_ingest_stream`, where
     a replayed batch can re-append documents (at-least-once storage,
     exactly-once view)."""
-    from pyspark.sql import Window as W
+    return _survivors(read_or_empty(spark, os.path.join(store_dir, "corpus"), CORPUS_SCHEMA))
 
-    corpus = read_or_empty(spark, os.path.join(store_dir, "corpus"), CORPUS_SCHEMA)
+
+def _survivors(df: DataFrame) -> DataFrame:
+    """The one survivor rule of the document ingests: one row per
+    fingerprint, the min ``(doc_id, source)`` (NOT dropDuplicates, whose
+    surviving row depends on partition order), so the stored corpus is a
+    deterministic function of the input — the property the
+    streamed_corpus_state oracle checks (plans/streaming_queries.py). Same
+    shuffle as dropDuplicates (hash on fingerprint)."""
     w = W.partitionBy("fingerprint").orderBy(F.asc("doc_id"), F.asc("source"))
-    return (
-        corpus.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
 def near_dedup_ingest_stream(
@@ -178,20 +170,14 @@ def near_dedup_ingest_stream(
     bands_dir = os.path.join(store_dir, "bands")
     checkpoint_dir = os.path.join(store_dir, "_checkpoint")
 
-    from pyspark.sql import Window as W
-
     from ..operators.clustering import connected_components
     from ..operators.dedup import band_rows
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         sess = batch_df.sparkSession
-        w = W.partitionBy("fingerprint").orderBy(F.asc("doc_id"), F.asc("source"))
-        batch = (
+        batch = _survivors(  # within-batch dedup first
             batch_df.filter(F.col("text").isNotNull())
             .withColumn("fingerprint", text_digest("text"))
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
         )
         seen_digests = read_or_empty(sess, digest_dir, "fingerprint string")
         fresh = batch.join(seen_digests, "fingerprint", "left_anti").localCheckpoint()
@@ -215,19 +201,10 @@ def near_dedup_ingest_stream(
             .distinct()
         )
         passed = fresh.join(collided, "doc_id", "left_anti")
-        passed_bands = banded.join(passed.select("doc_id"), "doc_id", "left_semi")
-
-        a, b = passed_bands.alias("a"), passed_bands.alias("b")
-        pairs = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.band_key") == F.col("b.band_key"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-            .distinct()
+        passed_bands = banded.select("doc_id", "band", "band_key").join(
+            passed.select("doc_id"), "doc_id", "left_semi"
         )
+        pairs = _bucket_pairs(passed_bands, None, "doc_id", ["band", "band_key"])
         dropped = (
             connected_components(pairs)
             .filter(F.col("component") < F.col("id"))
@@ -330,33 +307,21 @@ def vector_admission_stream(
         if not fresh.take(1):
             return
         new_bands = band_rows(fresh).localCheckpoint()
-        hist_bands = read_or_empty(
-            sess, bands_dir, "vec_id long, band_id int, band_val long"
-        ).select(F.col("vec_id").alias("__old"), "band_id", "band_val")
+        hist_bands = read_or_empty(sess, bands_dir, "vec_id long, band_id int, band_val long")
         hist_sigs = read_or_empty(
             sess, sigs_dir, "vec_id long, __sig array<bigint>"
-        ).select(F.col("vec_id").alias("__old"), F.col("__sig").alias("__osig"))
+        ).select(F.col("vec_id").alias("id_b"), F.col("__sig").alias("__osig"))
         rejected = (
-            new_bands.join(hist_bands, ["band_id", "band_val"])
-            .select("vec_id", "__old")
-            .distinct()
-            .join(hist_sigs, "__old")
-            .join(fresh.select("vec_id", "__sig"), "vec_id")
+            _bucket_pairs(new_bands, hist_bands, "vec_id", ["band_id", "band_val"])
+            .join(hist_sigs, "id_b")
+            .join(fresh.select(F.col("vec_id").alias("id_a"), "__sig"), "id_a")
             .filter(hamming_distance(F.col("__sig"), F.col("__osig")) <= radius)
-            .select("vec_id")
+            .select(F.col("id_a").alias("vec_id"))
             .distinct()
         )
         passed = fresh.join(rejected, "vec_id", "left_anti").localCheckpoint()
         pb = new_bands.join(passed.select("vec_id"), "vec_id", "left_semi")
-        cand = (
-            pb.alias("a")
-            .join(pb.alias("b"), ["band_id", "band_val"])
-            .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-            .select(
-                F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b")
-            )
-            .distinct()
-        )
+        cand = _bucket_pairs(pb, None, "vec_id", ["band_id", "band_val"])
         sig_of = passed.select("vec_id", "__sig")
         pairs = (
             cand.join(

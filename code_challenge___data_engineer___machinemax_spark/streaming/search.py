@@ -45,8 +45,10 @@ def maintain_inverted_index(
     queries only probe.
 
     Returns the StreamingQuery; callers stop() it (or processAllAvailable()
-    in tests). Exactly-once per batch: the checkpoint tracks which article
-    files have been indexed.
+    in tests). At-least-once per batch: the checkpoint tracks which article
+    files have been indexed, but ``foreachBatch`` replays a batch whose
+    commit did not land, and the replay appends its postings again (which
+    doubles those rows' ``df`` and term scores).
     """
     from ..operators.search import append_to_inverted_index
 

@@ -6,7 +6,10 @@ broadcast, aggs have partial phases, and top-k avoids global sorts.
 
 With ``--tag``, write one ``<query>_<tag>.txt`` per query into ``--out``
 (default ``plans/latest``) — the before/after evidence for a plan change.
-Queries default to every bench headline query when no names are given.
+Each file holds the frame's formatted plan, then the physical plan of every
+SQL execution started while the query built its frame (the plans below a
+``localCheckpoint`` pin run there, not in the frame's own plan). Queries
+default to every bench headline query when no names are given.
 
 Usage:
     python scripts/dump_plans.py
@@ -28,7 +31,7 @@ sys.path.insert(0, _ROOT)
 
 from bench import HEADLINE  # noqa: E402
 from code_challenge___data_engineer___machinemax_spark import plans  # noqa: E402
-from code_challenge___data_engineer___machinemax_spark.session import get_spark  # noqa: E402
+from code_challenge___data_engineer___machinemax_spark.session import get_spark, sql_executions  # noqa: E402
 
 
 def main() -> None:
@@ -79,8 +82,13 @@ def _write_tagged(spark, qs, sf_dir: str, tag: str, out: str, names) -> None:
     out_dir = os.path.join(_ROOT, out)
     os.makedirs(out_dir, exist_ok=True)
     for name in names or HEADLINE:
+        before = max((i for i, _ in sql_executions(spark)), default=-1)
+        text = _formatted(qs[name], spark, sf_dir)
+        built = [plan for i, plan in sql_executions(spark) if i > before]
+        for n, plan in enumerate(built, 1):
+            text += f"\n== SQL execution {n} of {len(built)} started while the frame was built ==\n{plan}"
         with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
-            f.write(_formatted(qs[name], spark, sf_dir))
+            f.write(text)
         print(f"wrote {os.path.join(out, f'{name}_{tag}.txt')}")
 
 

@@ -942,3 +942,54 @@ def test_lsh_band_planner_knee_tradeoff(spark, sf_dir):
     for g in grid:
         assert 0 <= rows[g].exp_detected_e6 <= 1_000_000 * rows[g].n_target_pairs
         assert 0 <= rows[g].exp_false_cand_e6 <= 1_000_000 * rows[g].n_background_pairs
+
+
+def test_bucket_pairs_contract(spark):
+    """The one bucket-collision join: a pair sharing two buckets comes out
+    once, self mode yields only id_a < id_b, cross mode caps only b's hot
+    buckets, and a riding column comes out once per side."""
+    from code_challenge___data_engineer___machinemax_spark.operators.dedup import (
+        _bucket_pairs,
+    )
+
+    schema = "doc_id int, band int, band_key string, fp long"
+    a = spark.createDataFrame(
+        [(1, 0, "x", 10), (1, 1, "y", 10), (2, 0, "x", 20), (2, 1, "y", 20),
+         (3, 0, "z", 30)],
+        schema,
+    )
+    got = _bucket_pairs(a, None, "doc_id", ["band", "band_key"])
+    assert got.columns == ["id_a", "id_b", "fp_a", "fp_b"]
+    assert sorted(tuple(r) for r in got.collect()) == [(1, 2, 10, 20)]
+
+    # cross mode: no order on the ids; bucket (0, "x") holds 3 rows of b
+    b = spark.createDataFrame(
+        [(0, 0, "x", 0), (9, 0, "x", 0), (8, 0, "x", 0), (7, 1, "y", 0)], schema
+    ).drop("fp")
+    cross = _bucket_pairs(a.drop("fp"), b, "doc_id", ["band", "band_key"])
+    assert sorted(tuple(r) for r in cross.collect()) == [
+        (1, 0), (1, 7), (1, 8), (1, 9), (2, 0), (2, 7), (2, 8), (2, 9)
+    ]
+    # a's own (0, "x") bucket holds 2 rows: a cap of 2 keeps it on a's
+    # side, while b's 3-row bucket is dropped
+    capped = _bucket_pairs(a.drop("fp"), b, "doc_id", ["band", "band_key"], 1)
+    assert sorted(tuple(r) for r in capped.collect()) == [(1, 7), (2, 7)]
+
+
+def test_containment_tokens_tokenize_once(spark):
+    """The token-less drop must not become a Filter that Catalyst pushes
+    below the tokenizing projection (each document tokenized twice)."""
+    from code_challenge___data_engineer___machinemax_spark.operators.dedup import (
+        _containment_tokens,
+    )
+
+    from tests.test_plans import explain_text
+
+    d = spark.createDataFrame(
+        [(1, "a b c b"), (2, ""), (3, None), (4, "b d")], "doc_id int, text string"
+    )
+    toks = _containment_tokens(d, "doc_id", "text")
+    assert explain_text(toks).count("split(") == 1
+    assert sorted((r[0], sorted(r[1]), r[2]) for r in toks.collect()) == [
+        (1, ["a", "b", "c"], 3), (4, ["b", "d"], 2)
+    ]

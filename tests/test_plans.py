@@ -11,6 +11,7 @@ import re
 from pyspark.sql import functions as F
 
 from code_challenge___data_engineer___machinemax_spark import plans
+from code_challenge___data_engineer___machinemax_spark.session import sql_executions
 from code_challenge___data_engineer___machinemax_spark.tables import load_table
 
 _QS = plans.all_queries()
@@ -287,17 +288,6 @@ def test_dsir_scoring_join_broadcasts_model(spark, sf_dir):
     assert "CartesianProduct" not in txt
 
 
-def _sql_executions(spark) -> list[tuple[int, str]]:
-    """(id, physical plan) of each SQL execution the status store retains."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
-    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
-    out = []
-    while it.hasNext():
-        e = it.next()
-        out.append((e.executionId(), e.physicalPlanDescription()))
-    return out
-
-
 def test_perplexity_terciles_have_no_global_window(spark, sf_dir):
     # the corpus-wide NTILE must be the scalable_ntile plan (range
     # exchange + partitioned local ranks), never a single-partition window.
@@ -305,9 +295,9 @@ def test_perplexity_terciles_have_no_global_window(spark, sf_dir):
     # in the SQL executions started while the frame is built, and the
     # frame's own plan starts at the checkpointed rows. Executions are
     # selected by id: the store drops its oldest beyond retainedExecutions.
-    before = max((i for i, _ in _sql_executions(spark)), default=-1)
+    before = max((i for i, _ in sql_executions(spark)), default=-1)
     df = _QS["perplexity_tercile_mix"](spark, sf_dir)
-    built = [plan for i, plan in _sql_executions(spark) if i > before]
+    built = [plan for i, plan in sql_executions(spark) if i > before]
     txt = explain_text(df)
     assert "rangepartitioning" in "\n".join([*built, txt]).lower()
     assert "ntile(" not in txt.lower()  # tile comes from rank arithmetic
