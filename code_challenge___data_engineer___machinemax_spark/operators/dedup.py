@@ -830,10 +830,8 @@ def simhash_pairs_from_fingerprints(
     ``tests/test_dedup.py`` pins equality with the full pipeline; SCALE.md
     measures the A/B.
     """
-    pairs = _bucket_pairs(
-        _simhash_bands(fp, id_col, bits, bands), None, id_col, ["band", "band_val"],
-        max_bucket_size,
-    )
+    banded = _simhash_bands(fp, id_col, bits, bands)
+    pairs = _bucket_pairs(banded, None, id_col, ["band", "band_val"], max_bucket_size)
     return _within_hamming(pairs, max_hamming)
 
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import _bucket_pairs
 from ..operators.multimodal import decode_features, sample_frames, synth_media
 from ..tables import load_table
 from .registry import query
@@ -288,10 +289,10 @@ def image_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pigeonhole completeness: hamming <= 2 over 64 bits split into 4 bands
     of 16 means at least two bands are equal — the band join cannot miss
     a qualifying pair, so banded output == all-pairs output exactly.
-    Scale: band keys are (int, int16-domain) — hot bands (the synthetic
-    gradient collapses many dims onto one hash) take the same hot-bucket
-    cap as every other banded generator; the verify join carries two
-    BIGINTs per side."""
+    Scale: band keys are (int, int16-domain); the candidate join is the
+    banded generators' one collision join (``dedup._bucket_pairs``) with
+    the two hash words riding. No hot-bucket cap: a capped bucket would
+    drop qualifying pairs and break the exact all-pairs equality above."""
     from ..operators.multimodal import ahash_images, synth_png_media
 
     d = load_table(spark, sf_dir, "documents")
@@ -309,25 +310,8 @@ def image_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("b"),
     ).select("media_id", "ahash_hi", "ahash_lo", "b.band", "b.val")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .select(
-            F.col("a.media_id").alias("id_a"),
-            F.col("b.media_id").alias("id_b"),
-            F.col("a.ahash_hi").alias("hi_a"),
-            F.col("a.ahash_lo").alias("lo_a"),
-            F.col("b.ahash_hi").alias("hi_b"),
-            F.col("b.ahash_lo").alias("lo_b"),
-        )
-        .distinct()
-    )
-    ham = F.expr("bit_count(hi_a ^ hi_b) + bit_count(lo_a ^ lo_b)")
+    cand = _bucket_pairs(bands, None, "media_id", ["band", "val"])
+    ham = F.expr("bit_count(ahash_hi_a ^ ahash_hi_b) + bit_count(ahash_lo_a ^ ahash_lo_b)")
     return (
         cand.withColumn("hamming", ham.cast("int"))
         .filter(F.col("hamming") <= 2)
